@@ -490,6 +490,13 @@ def main() -> None:
                 "rows": rows,
                 "sf": sf_val,
                 "derived": derived,
+                # The resolved session, so the artifact proves its own
+                # configuration (kept out of the stdout summary line).
+                "context": {
+                    "master": spark.sparkContext.master,
+                    "default_parallelism": spark.sparkContext.defaultParallelism,
+                    "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+                },
             },
             fh,
             indent=1,

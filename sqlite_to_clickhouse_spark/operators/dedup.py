@@ -366,10 +366,7 @@ def minhash_bands_tokens(
       token hashes as array<int> for the exact-Jaccard verify stage
       (4 B/element in Tungsten, half the shuffle bytes of longs).
     """
-    if hash_mode is None:
-        hash_mode = df.sparkSession.conf.get("spark.graft.minhash.hash", "md5")
-    if hash_mode not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown minhash hash_mode: {hash_mode!r}")
+    hash_mode = _resolve_hash_mode(df, hash_mode)
     _base_hash, _band_key = _minhash_family(hash_mode)
 
     rows_per_band = n_hashes // n_bands
@@ -1789,6 +1786,40 @@ def dedup_simhash_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return intra.unionByName(singles)
 
 
+def _driver_components(rows: list, node_t, spark: SparkSession) -> "DataFrame | None":
+    """Union-find over collected (s, d) edge rows: (node, component_id)
+    with component_id the minimum member, or None when a NULL endpoint
+    needs the distributed loop's semantics."""
+    from pyspark.sql import types as T
+
+    if not all(r[0] is not None and r[1] is not None for r in rows):
+        return None
+    parent: dict = {}
+
+    def _find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for r in rows:
+        s_v, d_v = r[0], r[1]
+        parent.setdefault(s_v, s_v)
+        parent.setdefault(d_v, d_v)
+        rs, rd = _find(s_v), _find(d_v)
+        if rs != rd:
+            if rd < rs:
+                rs, rd = rd, rs
+            parent[rd] = rs  # root stays the component minimum
+
+    out_schema = T.StructType(
+        [T.StructField("node", node_t), T.StructField("component_id", node_t)]
+    )
+    return spark.createDataFrame([(n, _find(n)) for n in parent], out_schema)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -1813,8 +1844,9 @@ def connected_components(
 
     Execution shape (r12 A/B-tuned; identical output on every variant):
 
-    - ``und`` is hash-repartitioned on ``s`` and then lazily
-      checkpointed, so every round's edges⨝labels join reuses the one
+    - ``und`` is hash-repartitioned on ``s`` and then checkpointed
+      (from the sizing cache when the driver path was tried, else
+      lazily), so every round's edges⨝labels join reuses the one
       materialized layout of the edge table instead of re-exchanging it
       per round (guide §2.4), and the caller's edge lineage is cut out
       of every round's analysis (see the in-body comment).
@@ -1837,16 +1869,6 @@ def connected_components(
     """
     fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     und = fwd.union(fwd.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
-    # localCheckpoint, not persist (r12): persist caches the DATA but the
-    # LOGICAL plan keeps the caller's full edge lineage (LSH candidate
-    # joins, Levenshtein verifies, contraction joins, ...), and Catalyst
-    # re-analyzes that whole tree every round — measured ~0.3-0.6 s/round
-    # of pure planning on deep-lineage inputs (er_index_append's
-    # contracted CC: 4.1 s → 1.6 s standalone).  The lazy checkpoint
-    # truncates the plan to a leaf at first materialization (the labels
-    # count that must run anyway) while keeping the repartition's hash
-    # layout on the materialized blocks.
-    und = und.repartition("s").localCheckpoint(eager=False)
     # Driver fast path (r12, guide §1.2 — first-principles): the
     # distributed loop costs a fixed 3-8 driver-sequential rounds of
     # (join + checkpoint + count) jobs REGARDLESS of graph size — ~0.3 s
@@ -1859,9 +1881,9 @@ def connected_components(
     # codepoint order == Spark's UTF8 binary order (UTF-8 preserves
     # codepoint order), so the rows are bit-identical to the loop's
     # fixpoint (pinned in tests/test_cc_property.py).  The sizing agg is
-    # the same materializing action the loop's first convergence count
-    # would run, and it is GATED on the cap being enabled so disabled
-    # (cap=0) and store-scale callers pay no extra job (ADVICE r12).
+    # the same materializing action the loop's edge checkpoint would
+    # run, and it is GATED on the cap being enabled so disabled (cap=0)
+    # and store-scale callers pay no extra job (ADVICE r12).
     # Cap is edge-rows collected (both directions) AND estimated collect
     # bytes (VERDICT r12: 200k edges of long string names is unbounded
     # driver memory in row units), both env-overridable; 0 disables.
@@ -1880,53 +1902,42 @@ def connected_components(
     _DRIVER_TYPES = (
         T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType,
     )
+    # localCheckpoint, not persist, for the loop (r12): persist caches the
+    # DATA but the LOGICAL plan keeps the caller's full edge lineage (LSH
+    # candidate joins, Levenshtein verifies, contraction joins, ...), and
+    # Catalyst re-analyzes that whole tree every round — measured
+    # ~0.3-0.6 s/round of pure planning on deep-lineage inputs
+    # (er_index_append's contracted CC: 4.1 s → 1.6 s standalone).  The
+    # checkpoint truncates the plan to a leaf while keeping the
+    # repartition's hash layout on the materialized blocks.
     if driver_cap > 0 and byte_cap > 0 and isinstance(node_t, _DRIVER_TYPES):
         if isinstance(node_t, T.StringType):
             row_bytes = F.octet_length("s") + F.octet_length("d") + F.lit(64)
         else:
             row_bytes = F.lit(80)  # two boxed numerics + Row overhead
-        stats = und.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(row_bytes), F.lit(0)).alias("b"),
-        ).collect()[0]
-        n_edges, est_bytes = int(stats["n"]), int(stats["b"])
+        # The sizing agg and the collect (or, past the caps, the loop's
+        # edge checkpoint) read ONE cached materialization of the caller's
+        # lineage, released before returning: a driver-path call leaves no
+        # blocks behind.
+        cached = und.persist()
+        try:
+            stats = cached.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.sum(row_bytes), F.lit(0)).alias("b"),
+            ).collect()[0]
+            if int(stats["n"]) <= driver_cap and int(stats["b"]) <= byte_cap:
+                # bounded by driver_cap rows / byte_cap bytes
+                comp = _driver_components(
+                    cached.collect(), node_t, edges.sparkSession
+                )
+                if comp is not None:
+                    return comp
+            und = cached.repartition("s").localCheckpoint(eager=True)
+        finally:
+            cached.unpersist()
     else:
-        n_edges, est_bytes = None, None
-    if n_edges is not None and n_edges <= driver_cap and est_bytes <= byte_cap:
-        rows = und.collect()  # bounded by driver_cap rows / byte_cap bytes
-        if all(r[0] is not None and r[1] is not None for r in rows):
-            parent: dict = {}
-
-            def _find(x):
-                root = x
-                while parent[root] != root:
-                    root = parent[root]
-                while parent[x] != root:
-                    parent[x], x = root, parent[x]
-                return root
-
-            for r in rows:
-                s_v, d_v = r[0], r[1]
-                parent.setdefault(s_v, s_v)
-                parent.setdefault(d_v, d_v)
-                rs, rd = _find(s_v), _find(d_v)
-                if rs != rd:
-                    if rd < rs:
-                        rs, rd = rd, rs
-                    parent[rd] = rs  # root stays the component minimum
-
-            from pyspark.sql import types as T
-
-            node_t = und.schema["s"].dataType
-            out_schema = T.StructType(
-                [
-                    T.StructField("node", node_t),
-                    T.StructField("component_id", node_t),
-                ]
-            )
-            return edges.sparkSession.createDataFrame(
-                [(n, _find(n)) for n in parent], out_schema
-            )
+        # Lazy: materialized once, by the labels count that must run anyway.
+        und = und.repartition("s").localCheckpoint(eager=False)
     labels = (
         und.select(F.col("s").alias("node")).distinct().withColumn("label", F.col("node"))
     ).localCheckpoint(eager=False)

@@ -946,6 +946,8 @@ def er_index_append(
     nothing) and every nm-keyed join in the lifecycle (blocking,
     re-label, un-tombstone) would silently never match it, so admitting
     it would create an unreachable tombstone/entities row."""
+    from pyspark.sql import Window
+
     from sqlite_to_clickhouse_spark import io as gio
     from sqlite_to_clickhouse_spark.operators.dedup import connected_components
 
@@ -959,160 +961,167 @@ def er_index_append(
     owned_cur = cur is None
     if owned_cur:
         cur = er_index_entities(spark, path).persist()
-    postings = _er_read(spark, path, "postings", _ER_POST_SCHEMA)
-    tomb = gio.read_relation(spark, path, "tombstones", _ER_TOMB_SCHEMA)
-    if tomb is not None:
-        postings = postings.join(tomb, "nm", "left_anti")
-    stop = _er_read(spark, path, "stopkeys", _ER_STOP_SCHEMA)
+    persisted: list = []
+    try:
+        postings = _er_read(spark, path, "postings", _ER_POST_SCHEMA)
+        tomb = gio.read_relation(spark, path, "tombstones", _ER_TOMB_SCHEMA)
+        if tomb is not None:
+            postings = postings.join(tomb, "nm", "left_anti")
+        stop = _er_read(spark, path, "stopkeys", _ER_STOP_SCHEMA)
 
-    bwords = (
-        bat.select("nm", F.explode(F.split("nm", " ")).alias("w"))
-        .filter(F.col("w") != "")
-        .distinct()
-    )
-    known = postings.select("w").distinct()
-    # Genuinely-new words: in no stored posting AND not capped out.
-    # Admitted at batch df <= cap (union df == batch df: by definition a
-    # new word occurs in no catalog name).
-    new_w = (
-        bwords.join(F.broadcast(known), "w", "left_anti")
-        .join(F.broadcast(stop), "w", "left_anti")
-        .groupBy("w")
-        .agg(F.count("*").alias("df"))
-    )
-    new_keys = new_w.filter(F.col("df") <= _ER_BLOCK_DF_CAP).select("w")
-    new_stop = new_w.filter(F.col("df") > _ER_BLOCK_DF_CAP).select("w")
-    # The batch's posting rows: stored keys + admitted new keys.  The
-    # key set is vocabulary-sized (no contract bound), so no forced
-    # broadcast — AQE picks the strategy; the semi-shape join keys on w.
-    bat_postings = bwords.join(
-        known.unionByName(new_keys).distinct(), "w"
-    ).select("w", "nm")
-
-    # Candidates: batch × catalog (stored postings) ∪ batch × batch.
-    cat_cand = (
-        bwords.join(postings.select("w", F.col("nm").alias("cname")), "w")
-        .select(F.col("nm").alias("bname"), "cname")
-        .distinct()
-    )
-    bb = bat_postings.select(F.col("nm").alias("bname"), "w")
-    bat_cand = (
-        bb.alias("x")
-        .join(
-            bb.alias("y"),
-            (F.col("x.w") == F.col("y.w")) & (F.col("x.bname") < F.col("y.bname")),
+        bwords = (
+            bat.select("nm", F.explode(F.split("nm", " ")).alias("w"))
+            .filter(F.col("w") != "")
+            .distinct()
         )
-        .select(
-            F.col("x.bname").alias("bname"), F.col("y.bname").alias("cname")
-        )
-        .distinct()
-    )
-    # Persisted: consumed by the re-label clustering below AND the
-    # edges/ write — without the persist the candidate joins + edit-
-    # distance verify re-run per consumer (CC caches only its derived
-    # undirected table and drops it before returning).
-    new_edges = (
-        cat_cand.unionByName(bat_cand)
-        .select(
-            F.least("bname", "cname").alias("name_a"),
-            F.greatest("bname", "cname").alias("name_b"),
-        )
-        .distinct()
-        .filter(_lev("name_a", "name_b", _ER_MAXDIST) >= 0)
-    ).persist()
-
-    # Re-label on the CONTRACTED graph (r12, guide §1.2): only components
-    # touched by a new edge can change, so instead of running CC over the
-    # catalog's star edges ∪ new edges (catalog-sized input, several
-    # catalog-wide shuffles per round), map each new-edge endpoint to its
-    # CURRENT entity id (batch names, absent from the live view, map to
-    # themselves) and run CC on those contracted edges — O(new pairs)
-    # nodes.  Equivalence to the full-graph run is exact: an entity_id is
-    # by construction the MIN member name of its component, so the min
-    # label over a merged set of contracted nodes {entity ids ∪ batch
-    # names} equals the min over all member names of the merged
-    # component; untouched entities never appear and keep their label.
-    # Every new edge has ≥1 batch endpoint (candidates are batch×catalog
-    # ∪ batch×batch) and batch names are live-disjoint by contract, so
-    # contraction produces no self-loops and every endpoint lands in the
-    # CC output.
-    ends = (
-        new_edges.select(F.col("name_a").alias("nm"))
-        .unionByName(new_edges.select(F.col("name_b").alias("nm")))
-        .distinct()
-    )
-    emap = ends.join(cur, "nm", "left").select(
-        "nm", F.coalesce(F.col("entity_id"), F.col("nm")).alias("cnode")
-    )
-    cedges = (
-        new_edges.join(
-            emap.select(F.col("nm").alias("name_a"), F.col("cnode").alias("src")),
-            "name_a",
-        )
-        .join(
-            emap.select(F.col("nm").alias("name_b"), F.col("cnode").alias("dst")),
-            "name_b",
-        )
-        .select("src", "dst")
-    )
-    # relabel: contracted node (old entity id or batch name) → merged id.
-    relabel = connected_components(cedges).select(
-        F.col("node").alias("cnode"), F.col("component_id").alias("eid")
-    )
-    gen = _er_next_gen(spark, path)
-    # Changed catalog rows: members of a touched entity whose merged id
-    # differs.  The catalog's NULL-name row (er_index_build admits it;
-    # only append/delete batches filter NULLs) carries entity_id NULL,
-    # never matches the relabel join, and is therefore never re-written
-    # (ADVICE r11 — write amplification of a row nothing can change).
-    cat_changed = (
-        cur.join(relabel, cur["entity_id"] == relabel["cnode"])
-        .filter(F.col("eid") != F.col("entity_id"))
-        .select("nm", F.col("eid").alias("entity_id"))
-    )
-    # Every batch name gets a row: its merged label when it has edges,
-    # itself when isolated — batch names are NULL-filtered at entry.
-    bat_changed = bat.join(relabel, bat["nm"] == relabel["cnode"], "left").select(
-        "nm", F.coalesce(F.col("eid"), F.col("nm")).alias("entity_id")
-    )
-    changed = cat_changed.unionByName(bat_changed).withColumn("gen", F.lit(gen))
-    # Un-tombstone re-arrived names: rewrite the tombstone relation
-    # (minus the batch) in the same commit.  The existence probe is one
-    # limit-1 job over the tombstone relation — deleted-names-sized, not
-    # catalog-sized.
-    untomb = tomb is not None and tomb.join(bat, "nm", "semi").limit(1).count() > 0
-    with gio.manifest_append(
-        path,
-        list(_ER_IDX_RELATIONS),
-        meta={**(meta or {}), "gen": gen},
-        replace=["tombstones"] if untomb else (),
-    ):
-        # Independent relation appends — overlap the jobs (guide §2.6);
-        # the manifest diff runs after all of them, atomicity unchanged.
-        jobs = [
-            lambda: changed.write.mode("append").parquet(
-                os.path.join(path, "entities")
-            ),
-            lambda: bat_postings.write.mode("append").parquet(
-                os.path.join(path, "postings")
-            ),
-            lambda: new_stop.write.mode("append").parquet(
-                os.path.join(path, "stopkeys")
-            ),
-            lambda: new_edges.write.mode("append").parquet(
-                os.path.join(path, "edges")
-            ),
-        ]
-        if untomb:
-            jobs.append(
-                lambda: tomb.join(bat, "nm", "left_anti")
-                .write.mode("append")
-                .parquet(os.path.join(path, "tombstones"))
+        # Classify every batch word once: a STORED key stays a key; a
+        # capped-out word stays out; a genuinely-new word (in no stored
+        # posting and not capped out) is admitted at batch df <= cap
+        # (union df == batch df: by definition a new word occurs in no
+        # catalog name) and otherwise joins the stop keys.  The key set
+        # is vocabulary-sized (no contract bound), so no forced broadcast
+        # — AQE picks the strategy.  Persisted: the postings/stopkeys
+        # writes and the candidate join all read this batch-bounded frame
+        # instead of re-running the classification.
+        pw = postings.select("w")
+        stored = bwords.join(pw, "w", "left_semi").withColumn("kind", F.lit("key"))
+        fresh = (
+            bwords.join(pw, "w", "left_anti")
+            .join(stop, "w", "left_anti")
+            .withColumn("df", F.count("*").over(Window.partitionBy("w")))
+            .select(
+                "nm",
+                "w",
+                F.when(F.col("df") <= _ER_BLOCK_DF_CAP, "key")
+                .otherwise("new_stop")
+                .alias("kind"),
             )
-        gio.run_jobs(*jobs)
-    if owned_cur:
-        cur.unpersist()
-    new_edges.unpersist()
+        )
+        bw = stored.unionByName(fresh).persist()
+        persisted.append(bw)
+        # The batch's posting rows: stored keys + admitted new keys.
+        bat_postings = bw.filter(F.col("kind") == "key").select("w", "nm")
+        new_stop = bw.filter(F.col("kind") == "new_stop").select("w").distinct()
+
+        # Candidates: batch key words against (stored ∪ batch) postings in
+        # ONE join, which yields batch × catalog and both orientations of
+        # batch × batch; least/greatest + one distinct fold those into the
+        # unordered pair set.
+        pairs = (
+            bat_postings.select(F.col("nm").alias("bname"), "w")
+            .join(
+                postings.unionByName(bat_postings).select(
+                    "w", F.col("nm").alias("cname")
+                ),
+                "w",
+            )
+            .filter(F.col("bname") != F.col("cname"))
+            .select(
+                F.least("bname", "cname").alias("name_a"),
+                F.greatest("bname", "cname").alias("name_b"),
+            )
+            .distinct()
+            .filter(_lev("name_a", "name_b", _ER_MAXDIST) >= 0)
+        )
+        # Re-label on the CONTRACTED graph (r12, guide §1.2): only
+        # components touched by a new edge can change, so instead of
+        # running CC over the catalog's star edges ∪ new edges
+        # (catalog-sized input, several catalog-wide shuffles per round),
+        # map each new-edge endpoint to its CURRENT entity id (batch
+        # names, absent from the live view, map to themselves) and run CC
+        # on those contracted edges — O(new pairs) nodes.  Equivalence to
+        # the full-graph run is exact: an entity_id is by construction the
+        # MIN member name of its component, so the min label over a merged
+        # set of contracted nodes {entity ids ∪ batch names} equals the min
+        # over all member names of the merged component; untouched
+        # entities never appear and keep their label.  Every new edge has
+        # ≥1 batch endpoint (candidates are batch×catalog ∪ batch×batch)
+        # and batch names are live-disjoint by contract, so contraction
+        # produces no self-loops and every endpoint lands in the CC output.
+        # The live view holds one row per name, so the two lookups keep
+        # one row per edge.
+        ea, eb = cur.alias("ea"), cur.alias("eb")
+        # Persisted and materialized before the relabel: the CC run and
+        # the edges/ write then read this batch-bounded cached frame
+        # instead of re-planning the candidate join, the edit-distance
+        # verify and the entity lookups per consumer.
+        new_edges = (
+            pairs.join(ea, F.col("name_a") == F.col("ea.nm"), "left")
+            .join(eb, F.col("name_b") == F.col("eb.nm"), "left")
+            .select(
+                "name_a",
+                "name_b",
+                F.coalesce(F.col("ea.entity_id"), F.col("name_a")).alias("src"),
+                F.coalesce(F.col("eb.entity_id"), F.col("name_b")).alias("dst"),
+            )
+        ).persist()
+        persisted.append(new_edges)
+        new_edges.count()
+        # relabel: contracted node (old entity id or batch name) → merged id.
+        # Its nodes are endpoints of batch-bounded edges, so it broadcasts
+        # by contract into both joins below.
+        relabel = F.broadcast(
+            connected_components(new_edges.select("src", "dst")).select(
+                F.col("node").alias("cnode"), F.col("component_id").alias("eid")
+            )
+        )
+        gen = _er_next_gen(spark, path)
+        # Changed catalog rows: members of a touched entity whose merged id
+        # differs.  The catalog's NULL-name row (er_index_build admits it;
+        # only append/delete batches filter NULLs) carries entity_id NULL,
+        # never matches the relabel join, and is therefore never re-written
+        # (ADVICE r11 — write amplification of a row nothing can change).
+        cat_changed = (
+            cur.join(relabel, cur["entity_id"] == relabel["cnode"])
+            .filter(F.col("eid") != F.col("entity_id"))
+            .select("nm", F.col("eid").alias("entity_id"))
+        )
+        # Every batch name gets a row: its merged label when it has edges,
+        # itself when isolated — batch names are NULL-filtered at entry.
+        bat_changed = bat.join(relabel, bat["nm"] == relabel["cnode"], "left").select(
+            "nm", F.coalesce(F.col("eid"), F.col("nm")).alias("entity_id")
+        )
+        changed = cat_changed.unionByName(bat_changed).withColumn("gen", F.lit(gen))
+        # Un-tombstone re-arrived names: rewrite the tombstone relation
+        # (minus the batch) in the same commit.  The existence probe is one
+        # limit-1 job over the tombstone relation — deleted-names-sized,
+        # not catalog-sized.
+        untomb = tomb is not None and tomb.join(bat, "nm", "semi").limit(1).count() > 0
+        with gio.manifest_append(
+            path,
+            list(_ER_IDX_RELATIONS),
+            meta={**(meta or {}), "gen": gen},
+            replace=["tombstones"] if untomb else (),
+        ):
+            # Independent relation appends — overlap the jobs (guide §2.6);
+            # the manifest diff runs after all of them, atomicity unchanged.
+            jobs = [
+                lambda: changed.write.mode("append").parquet(
+                    os.path.join(path, "entities")
+                ),
+                lambda: bat_postings.write.mode("append").parquet(
+                    os.path.join(path, "postings")
+                ),
+                lambda: new_stop.write.mode("append").parquet(
+                    os.path.join(path, "stopkeys")
+                ),
+                lambda: new_edges.select("name_a", "name_b")
+                .write.mode("append")
+                .parquet(os.path.join(path, "edges")),
+            ]
+            if untomb:
+                jobs.append(
+                    lambda: tomb.join(bat, "nm", "left_anti")
+                    .write.mode("append")
+                    .parquet(os.path.join(path, "tombstones"))
+                )
+            gio.run_jobs(*jobs)
+    finally:
+        # A failed write must not leak MEMORY_AND_DISK blocks.
+        if owned_cur:
+            cur.unpersist()
+        for frame in persisted:
+            frame.unpersist()
 
 
 def er_index_delete(spark: SparkSession, del_names: DataFrame, path: str) -> None:
@@ -1136,53 +1145,55 @@ def er_index_delete(spark: SparkSession, del_names: DataFrame, path: str) -> Non
     # be un-tombstone-able forever — drop it at entry.
     dels = del_names.select("nm").filter(F.col("nm").isNotNull()).distinct().persist()
     cur = er_index_entities(spark, path).persist()
-    # Affected clusters: those holding a deleted name.
-    hit_eids = (
-        cur.join(dels, "nm")
-        .select(F.col("entity_id").alias("eid"))
-        .distinct()
-    )
-    survivors = (
-        cur.join(F.broadcast(hit_eids), cur["entity_id"] == hit_eids["eid"])
-        .select("nm")
-        .join(dels, "nm", "left_anti")
-    )
-    edges = _er_read(spark, path, "edges", _ER_EDGE_SCHEMA)
-    sub_edges = (
-        edges.join(
-            survivors.select(F.col("nm").alias("name_a")).distinct(), "name_a", "semi"
+    try:
+        # Affected clusters: those holding a deleted name.
+        hit_eids = (
+            cur.join(dels, "nm")
+            .select(F.col("entity_id").alias("eid"))
+            .distinct()
         )
-        .join(
-            survivors.select(F.col("nm").alias("name_b")).distinct(), "name_b", "semi"
+        survivors = (
+            cur.join(F.broadcast(hit_eids), cur["entity_id"] == hit_eids["eid"])
+            .select("nm")
+            .join(dels, "nm", "left_anti")
         )
-    )
-    comp = connected_components(
-        sub_edges.select(F.col("name_a").alias("src"), F.col("name_b").alias("dst"))
-    ).select(F.col("node").alias("nm"), F.col("component_id").alias("eid"))
-    new_map = survivors.join(comp, "nm", "left").select(
-        "nm", F.coalesce(F.col("eid"), F.col("nm")).alias("entity_id")
-    )
-    gen = _er_next_gen(spark, path)
-    changed = (
-        new_map.alias("n")
-        .join(cur.alias("c"), "nm")
-        .filter(F.col("n.entity_id") != F.col("c.entity_id"))
-        .select("nm", F.col("n.entity_id").alias("entity_id"), F.lit(gen).alias("gen"))
-    )
-    with gio.manifest_append(
-        path, ["entities", "tombstones"], meta={"gen": gen}
-    ):
-        # Independent appends — overlap the two jobs (guide §2.6).
-        gio.run_jobs(
-            lambda: changed.write.mode("append").parquet(
-                os.path.join(path, "entities")
-            ),
-            lambda: dels.write.mode("append").parquet(
-                os.path.join(path, "tombstones")
-            ),
+        edges = _er_read(spark, path, "edges", _ER_EDGE_SCHEMA)
+        sub_edges = (
+            edges.join(
+                survivors.select(F.col("nm").alias("name_a")).distinct(), "name_a", "semi"
+            )
+            .join(
+                survivors.select(F.col("nm").alias("name_b")).distinct(), "name_b", "semi"
+            )
         )
-    dels.unpersist()
-    cur.unpersist()
+        comp = connected_components(
+            sub_edges.select(F.col("name_a").alias("src"), F.col("name_b").alias("dst"))
+        ).select(F.col("node").alias("nm"), F.col("component_id").alias("eid"))
+        new_map = survivors.join(comp, "nm", "left").select(
+            "nm", F.coalesce(F.col("eid"), F.col("nm")).alias("entity_id")
+        )
+        gen = _er_next_gen(spark, path)
+        changed = (
+            new_map.alias("n")
+            .join(cur.alias("c"), "nm")
+            .filter(F.col("n.entity_id") != F.col("c.entity_id"))
+            .select("nm", F.col("n.entity_id").alias("entity_id"), F.lit(gen).alias("gen"))
+        )
+        with gio.manifest_append(
+            path, ["entities", "tombstones"], meta={"gen": gen}
+        ):
+            # Independent appends — overlap the two jobs (guide §2.6).
+            gio.run_jobs(
+                lambda: changed.write.mode("append").parquet(
+                    os.path.join(path, "entities")
+                ),
+                lambda: dels.write.mode("append").parquet(
+                    os.path.join(path, "tombstones")
+                ),
+            )
+    finally:
+        dels.unpersist()
+        cur.unpersist()
 
 
 def er_index_compact(spark: SparkSession, path: str, dst: str) -> None:

@@ -38,99 +38,6 @@ class RegisteredQuery:
 
 _REGISTRY: dict[str, RegisteredQuery] = {}
 
-# The driver's correctness gate verifies the FIRST 50 entries of ``queries()``
-# (registration order).  To rotate driver-side verification across the whole
-# registry over successive rounds, ``all_queries()`` emits the names below
-# first, then the rest in registration order.  History: r1 verified the
-# relational/join/agg family; r2-r3 the LLM-pipeline family; r4 the r3
-# regressions + fn_*/stream_*/udf_* batteries (49/50 green).  Round 5's
-# window = ALL 32 never-driver-verified ops (scans/sinks, sort/limit/set
-# algebra, the remaining fn_* extensions, merge/migrate/maintenance, and the
-# three ⊘ rows-only ops) + the 3 rows whose latest driver record is red
-# (fn_math — oracle SIGN type-tag fixed this round; agg_approx_distinct /
-# agg_approx_percentile — r1 "no_oracle", reworked in r4 into bound-as-result
-# gates that have never been driver-exercised) + 15 freshness re-certs of the
-# oldest r1-green §2b rows (two fixture regenerations old).  After this
-# window, every registered op has been driver-checked at least once
-# (ever-verified 133 → 165/165).
-_PRIORITY: list[str] = [
-    # -- never-verified: sources / sinks / migrate --
-    "scan_jdbc",
-    "sink_parquet",
-    "migrate_sqlite_roundtrip",
-    "scan_csv",
-    "scan_json",
-    "scan_orc",
-    "scan_range",
-    "scan_schema_evolution",
-    "sink_partitioned_parquet",
-    "sink_sorted_clustered",
-    "catalog_scan",
-    "maintenance_delete_rows",
-    # -- never-verified: sort / limit / set algebra --
-    "limit_offset",
-    "topk",
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except",
-    "set_except_all",
-    # -- never-verified: scalar-function extensions --
-    "fn_date_extra",
-    "fn_json_struct",
-    "fn_math_advanced",
-    "fn_regex",
-    "fn_struct",
-    "fn_try_arith",
-    # -- never-verified: merge / CDC / keys / DPP --
-    "merge_upsert",
-    "merge_scd2",
-    "etl_surrogate_keys",
-    "join_dynamic_partition_pruning",
-    # -- never-verified: ⊘ rows-only.  sim_ann_ivf (recall-tested locally)
-    #    takes a slot; sink_jdbc_clickhouse / stream_watermark_late are the
-    #    two BY-DESIGN ⊘ rows the r4 verdict exempts from driver-green —
-    #    their slots go to oracle-bearing round-5 ops instead and they
-    #    rotate in r6. --
-    "sim_ann_ivf",
-    # -- red re-certs: fn_math oracle SIGN→DOUBLE cast landed this round;
-    #    approx sketches' bound-as-result gates first driver exposure --
-    "fn_math",
-    "agg_approx_distinct",
-    "agg_approx_percentile",
-    # -- new round-5 ops: first driver certification.  New ops outrank
-    #    freshness re-certs of r1-green rows: after this window EVERY
-    #    registered op has at least one driver record. --
-    "text_pii_scrub",
-    "window_distribution",
-    "agg_mode",
-    "embedding_normalize",
-    "text_quality_score",
-    "sample_temperature",
-    "sim_ivfpq_search",
-    "query_promo_revenue",
-    "query_small_qty_revenue",
-    "query_disjunctive_revenue",
-    "query_dormant_customers",
-    "sample_domain_mix",
-    "dedup_keep_best",
-    "embedding_outlier",
-    "agg_sketch_union",
-    "fn_variant",
-    "join_runtime_bloom",
-    # The round-5 window = 37 never-driver-verified backlog ops + the 3
-    # latest-red rows + the 10 new round-5 ops = 50.  The two by-design ⊘
-    # rows, the freshness re-certs of the r1-green cohort (join_asof
-    # first — its library code changed post-r4), and the late round-5
-    # additions that missed this full window (incl. the seventh batch:
-    # text_ngram_novelty, set_intersect_all, join_bucketed_colocated,
-    # sink_partition_overwrite_dynamic) rotate from r6 on via
-    # compute_rotation(), which ranks
-    # never-verified ops first; all were locally driver-simulated green
-    # at sf0.01 this round (closing full-registry drives 247/247 and
-    # 248/248, plus individual drives of the late additions).
-]
-
 
 def register(name: str, oracle: Optional[str] = None, tags: tuple[str, ...] = ()):
     """Decorator: register a query callable under ``name``.
@@ -173,8 +80,8 @@ def compute_rotation(
 ) -> tuple[list[str], int]:
     """Derive the next driver-verification window from the recorded
     ``CORRECTNESS_r*.json`` history (VERDICT r4 item 4: keep every row
-    inside a bounded freshness window without hand-editing ``_PRIORITY``
-    each round).
+    inside a bounded freshness window without a hand-curated priority
+    list each round).
 
     Policy, in order (VERDICT r5 item 3: an unclosed failure must never
     wait behind the backlog; VERDICT r10 item 1: a five-round-stale green
@@ -255,14 +162,13 @@ def all_queries() -> dict[str, RegisteredQuery]:
     # modules, operator modules import this registry).
     import sqlite_to_clickhouse_spark.plans  # noqa: F401
 
-    # Round 5's window was hand-curated (``_PRIORITY``); once the round-5
-    # correctness file lands, later rounds derive the window from the
-    # recorded history instead, so rotation never goes stale by omission.
-    rotation, latest_round = compute_rotation()
-    priority = rotation if latest_round >= 5 else _PRIORITY
+    # The driver verifies the FIRST 50 entries (registration order); the
+    # window is derived from the recorded history, so rotation never goes
+    # stale by omission.
+    rotation, _latest_round = compute_rotation()
 
     ordered: dict[str, RegisteredQuery] = {}
-    for name in priority:
+    for name in rotation:
         if name in _REGISTRY:
             ordered[name] = _REGISTRY[name]
     for name, q in _REGISTRY.items():

@@ -2,9 +2,10 @@
 
 Single place that encodes the 100 TB design defaults (SURVEY.md §4):
 AQE on (partition coalescing + skew-join split), Arrow for every
-Python↔JVM exchange, shuffle partitions sized for the local harness but
-overridable via env for a real cluster, broadcast threshold generous enough
-that every TPC-H-ish dimension table broadcasts.
+Python↔JVM exchange, shuffle partitions sized to the session's
+``defaultParallelism`` (the cores of a local master, the executor cores
+of a cluster) with AQE coalescing down from there, broadcast threshold
+generous enough that every TPC-H-ish dimension table broadcasts.
 """
 
 from __future__ import annotations
@@ -20,7 +21,6 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    shuffle_partitions = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -31,8 +31,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Arrow batches for every pandas-UDF / toPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Sized for local[32] at sf<=0.1; a real cluster overrides via env.
-        .config("spark.sql.shuffle.partitions", shuffle_partitions)
         # Dimension tables (region/nation/customer/supplier/part) stay far
         # below this at any SF that fits a single node; on a cluster the
         # 100 TB fact side never broadcasts, which is what we want.
@@ -43,6 +41,15 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for key, val in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    for key, val in extra_conf.items():
         builder = builder.config(key, val)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # Shuffle width follows the host: one reduce partition per core, which
+    # AQE coalesces further for small stages.  A fixed width either idles
+    # cores on a big host or multiplies tiny tasks on a small one.
+    if "spark.sql.shuffle.partitions" not in extra_conf:
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
+    return spark

@@ -71,29 +71,15 @@ def run_to_memory(sdf: DataFrame, output_mode: str) -> DataFrame:
     and return the result table. The memory sink is a test/driver harness
     device only — production sinks are foreachBatch/parquet/kafka."""
     name = f"stream_result_{next(_MEM_COUNTER)}"
-    spark = sdf.sparkSession
-    # Stateful streaming allocates one state store per shuffle partition
-    # for the QUERY LIFETIME (chosen at first start, sticky in the
-    # checkpoint). The batch-tuned 32 partitions mean 32 state stores ×
-    # commit files per micro-batch — pure overhead at these state sizes.
-    # 8 keeps state ops parallel while quartering the per-batch commit
-    # fan-out; a production job sizes this to expected state volume, not
-    # to the batch shuffle width. Restored after start() — the setting is
-    # read at stream planning time.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q = (
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination()
-    return spark.table(name)
+    return sdf.sparkSession.table(name)
 
 
 @register(
@@ -674,18 +660,6 @@ def _incr_dedup_handler(spark: SparkSession, idx: str, out: str):
         minhash_index_dedup,
     )
 
-    # Shuffle width for the handler's per-batch jobs (r13, guide §2.2
-    # "fewer, larger reduce partitions"): every relation the handler
-    # shuffles is MICRO-BATCH-bounded (the batch's set keys, bands,
-    # candidate pairs — the corpus-side stores ride partition-pruned
-    # scans and AQE-broadcast joins), so the session's corpus-tuned
-    # width only multiplies tiny tasks and AQE stage jobs — measured
-    # 6.05 s → 4.65 s per lookup+append cycle at sf0.1 (interleaved
-    # same-process A/B, 32 → 8).  Env-tunable for deployments whose
-    # micro-batches are large (size to batch bytes / target partition
-    # size, NOT to core count); restored after every batch.
-    batch_shuffle = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "8")
-
     def handle(bdf: DataFrame, epoch_id: int) -> None:
         # Batch-scoped persisted frames are handed back and unpersisted per
         # micro-batch: a production stream runs this loop indefinitely, and
@@ -702,8 +676,6 @@ def _incr_dedup_handler(spark: SparkSession, idx: str, out: str):
         # from the index side, reproducing the pre-append lookup exactly
         # (pinned by test_retry_after_committed_append_is_byte_identical).
         applied = int(epoch_id) in manifest_applied_meta(idx, "epoch")
-        prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", batch_shuffle)
         try:
             pairs = minhash_index_dedup(
                 spark, toks, "doc_id", "tk", idx,
@@ -739,7 +711,6 @@ def _incr_dedup_handler(spark: SparkSession, idx: str, out: str):
                 )
             gio.run_jobs(*jobs)
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
             for frame in batch_persists:
                 frame.unpersist()
 

@@ -179,3 +179,39 @@ def test_golden_incremental_merge_algebra(spark, sf_dir):
     for r in rows:
         assert r.min_price <= r.max_price
         assert r.n_variants >= 1
+
+
+def _persisted_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize("op", ["append", "delete"])
+def test_failed_index_write_releases_persisted_frames(spark, tmp_path, monkeypatch, op):
+    """A write that dies inside the manifest commit must not leak the
+    MEMORY_AND_DISK frames the index op persisted (the live entity view,
+    the batch words and new edges, the delete set).  The store keeps its
+    pre-op snapshot either way; only block lifetimes are under test.
+    Compared as RDD-id sets, so an unrelated frame the context cleaner
+    drops meanwhile cannot mask a leak."""
+    from sqlite_to_clickhouse_spark import io as gio
+    from sqlite_to_clickhouse_spark.operators import entity as E
+
+    def names(ns):
+        return spark.createDataFrame([(n,) for n in ns], "nm string")
+
+    idx = str(tmp_path / "idx")
+    E.er_index_build(names(["aaaa pp", "aabb pp", "bbbb pp", "zzzz qq"]), idx)
+    before = _persisted_rdds(spark)
+
+    def fail(*jobs):
+        raise RuntimeError("injected write failure")
+
+    monkeypatch.setattr(gio, "run_jobs", fail)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        if op == "append":
+            E.er_index_append(spark, names(["aaab pp", "zzzy qq"]), idx)
+        else:
+            E.er_index_delete(spark, names(["aabb pp"]), idx)
+    after = _persisted_rdds(spark)
+    assert after - before == set()
+    assert len(after) <= len(before)
