@@ -33,7 +33,7 @@ if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
 from sqlite_to_clickhouse_spark.registry import all_queries  # noqa: E402
-from sqlite_to_clickhouse_spark.session import get_spark  # noqa: E402
+from sqlite_to_clickhouse_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 # Headline set: one per major operator family — scan+agg, join, window,
 # set/sort, scalar fns, UDF surface, streaming, ETL/migration, multimodal,
@@ -412,6 +412,9 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     rows: dict[str, int] = {}
+    # Generated classes each timed call compiled, one entry per pass: a
+    # second-pass figure above 0 means the code cache missed a recurring plan.
+    compiles: dict[str, list[int]] = {}
     cold_total = 0.0
     for pass_no in (1, 2):
         for name in names:
@@ -419,10 +422,12 @@ def main() -> None:
             if name in _PROD_HASH_OPS:
                 spark.conf.set("spark.graft.minhash.hash", "xxhash64")
             try:
+                c0 = codegen_compiles(spark)
                 t0 = time.perf_counter()
                 df = fn(spark, sf_dir)
                 n = df.count()
                 dt = time.perf_counter() - t0
+                compiles.setdefault(name, []).append(codegen_compiles(spark) - c0)
             finally:
                 if name in _PROD_HASH_OPS:
                     spark.conf.unset("spark.graft.minhash.hash")
@@ -488,6 +493,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "rows": rows,
+                "codegen_compiles": compiles,
                 "sf": sf_val,
                 "derived": derived,
                 # The resolved session, so the artifact proves its own
@@ -496,6 +502,10 @@ def main() -> None:
                     "master": spark.sparkContext.master,
                     "default_parallelism": spark.sparkContext.defaultParallelism,
                     "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+                    "codegen_cache_max_entries": spark.conf.get(
+                        "spark.sql.codegen.cache.maxEntries"
+                    ),
+                    "codegen_compiles_total": codegen_compiles(spark),
                 },
             },
             fh,

@@ -784,6 +784,50 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+# Parquet schema inference runs one Spark job per read (a footer scan, ~70 ms
+# on a 4-core host), and a query mix reads the same tables again and again.
+# Inferred schemas are kept per local path, keyed by the size and mtime of
+# every file under it and by the confs that change inference, so a
+# rewritten table is inferred afresh.
+_SCHEMAS: dict = {}
+_SCHEMAS_MAX = 256
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _files_signature(path: str) -> tuple:
+    """(path, size, mtime) of every file at or under a local path."""
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+    return tuple((f, (st := os.stat(f)).st_size, st.st_mtime_ns) for f in files)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a local path's schema once
+    per version of its files; other paths go straight to Spark."""
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    key = (
+        path,
+        tuple(spark.conf.get(k, None) for k in _INFER_CONFS),
+        _files_signature(path),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if len(_SCHEMAS) >= _SCHEMAS_MAX:
+        _SCHEMAS.clear()
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one fixture table (reference R3's engine analog)."""
     if name not in TABLES:
@@ -794,7 +838,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Tolerate TIMESTAMP(NANOS) fixtures (Spark refuses them by default with
     # PARQUET_TYPE_ILLEGAL); harmless when the fixture is already micros.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_events_ts(df)
     else:

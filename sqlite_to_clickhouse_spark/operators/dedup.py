@@ -794,58 +794,59 @@ def minhash_index_build(
     reproduce minhash_lsh_pairs bit-for-bit."""
     hash_mode = _resolve_hash_mode(df, hash_mode)
     base_hash, _ = _minhash_family(hash_mode)
-    from pyspark.storagelevel import StorageLevel
 
     keyed = _set_keyed(df, id_col, tokens_col, base_hash)
-    # sets feeds the sets/ write AND the membership join; members feeds
-    # the rep filter AND the tokens/ write — persist both so the
-    # array-keyed aggregation runs once per build (the _clusters lesson).
-    sets = (
-        keyed.groupBy("__set")
-        .agg(F.min("__id").alias("__rep"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    members = (
-        keyed.join(sets, "__set")
-        .select("__id", "__rep")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    rep_ids = members.filter(F.col("__id") == F.col("__rep")).select("__rep")
-    bands, _ = minhash_bands_tokens(
-        _rep_subset(df, id_col, rep_ids), id_col, tokens_col, hash_mode=hash_mode
-    )
-    # Cluster by pb BEFORE the partitioned write (one shuffle of a thin
-    # (bk, doc_id, pb) frame): a map-side partitionBy write emits one file
-    # per (task × pb value) — ~700 KB-size files at 22 upstream tasks × 32
-    # buckets — and every later lookup/append/compact pays the per-file
-    # open cost (guide §6 small-files; measured: the corpus-bands scan ran
-    # 538 tasks before, ≤32 row-group-sized files after).  Same layout the
-    # compactor produces, so a fresh build now starts compact.
-    # The three relation writes are independent jobs — submit them from
-    # driver threads so each job's scheduling/commit tail back-fills the
-    # others' idle cores (guide §2.6; sets/members are persisted, so the
-    # shared aggregation still runs once, guarded by the block manager).
-    gio.run_jobs(
-        lambda: (
-            _band_frame(bands)
-            .repartition("pb")
-            .write.partitionBy("pb")
-            .option("maxRecordsPerFile", 5_000_000)
-            .parquet(os.path.join(path, "bands"))
-        ),
-        lambda: _member_tokens(df, id_col, tokens_col, members, hash_mode)
-        .write.parquet(os.path.join(path, "tokens")),
-        lambda: sets.select(
-            F.col("__set").alias("skey"), F.col("__rep").alias("rep_id")
-        ).write.parquet(os.path.join(path, "sets")),
-    )
-    # Publish the initial snapshot: one atomic manifest listing every
-    # relation's files — from here on, readers resolve manifests, never
-    # directory listings (io.py manifest protocol, VERDICT r9 item 4).
-    gio.manifest_commit(
-        path,
-        {rel: gio.relation_data_files(path, rel) for rel in _IDX_RELATIONS},
-    )
+    persisted: list = []
+    try:
+        # sets feeds the sets/ write AND the membership join; members feeds
+        # the rep filter AND the tokens/ write — persist both so the
+        # array-keyed aggregation runs once per build (the _clusters lesson).
+        sets = _persist_md(
+            keyed.groupBy("__set").agg(F.min("__id").alias("__rep")), persisted
+        )
+        members = _persist_md(
+            keyed.join(sets, "__set").select("__id", "__rep"), persisted
+        )
+        rep_ids = members.filter(F.col("__id") == F.col("__rep")).select("__rep")
+        bands, _ = minhash_bands_tokens(
+            _rep_subset(df, id_col, rep_ids), id_col, tokens_col, hash_mode=hash_mode
+        )
+        # Cluster by pb BEFORE the partitioned write (one shuffle of a thin
+        # (bk, doc_id, pb) frame): a map-side partitionBy write emits one file
+        # per (task × pb value) — ~700 KB-size files at 22 upstream tasks × 32
+        # buckets — and every later lookup/append/compact pays the per-file
+        # open cost (guide §6 small-files; measured: the corpus-bands scan ran
+        # 538 tasks before, ≤32 row-group-sized files after).  Same layout the
+        # compactor produces, so a fresh build now starts compact.
+        # The three relation writes are independent jobs — submit them from
+        # driver threads so each job's scheduling/commit tail back-fills the
+        # others' idle cores (guide §2.6; sets/members are persisted, so the
+        # shared aggregation still runs once, guarded by the block manager).
+        gio.run_jobs(
+            lambda: (
+                _band_frame(bands)
+                .repartition("pb")
+                .write.partitionBy("pb")
+                .option("maxRecordsPerFile", 5_000_000)
+                .parquet(os.path.join(path, "bands"))
+            ),
+            lambda: _member_tokens(df, id_col, tokens_col, members, hash_mode)
+            .write.parquet(os.path.join(path, "tokens")),
+            lambda: sets.select(
+                F.col("__set").alias("skey"), F.col("__rep").alias("rep_id")
+            ).write.parquet(os.path.join(path, "sets")),
+        )
+        # Publish the initial snapshot: one atomic manifest listing every
+        # relation's files — from here on, readers resolve manifests, never
+        # directory listings (io.py manifest protocol, VERDICT r9 item 4).
+        gio.manifest_commit(
+            path,
+            {rel: gio.relation_data_files(path, rel) for rel in _IDX_RELATIONS},
+        )
+    finally:
+        # Released after a failed write as well as after a commit.
+        for frame in persisted:
+            frame.unpersist()
 
 
 def minhash_index_append(
@@ -895,62 +896,72 @@ def minhash_index_append(
         else None
     )
     keyed = pre["keyed"] if pre else _set_keyed(df_new, id_col, tokens_col, base_hash)
-    idx_sets = _read_idx(spark, path, "sets", _IDX_SETS_SCHEMA)
-    # The matched/fresh split re-reads this subtree four ways (members
-    # union, new sets, rep filter, tokens write) — persist the joined
-    # frame once (the _clusters lesson; batch-sized, two longs + the key
-    # array per row).
-    m = _persist_md(
-        keyed.join(idx_sets, keyed["__set"] == idx_sets["skey"], "left"),
-        persisted_out,
-    )
-    matched = m.filter(F.col("rep_id").isNotNull()).select(
-        "__id", F.col("rep_id").alias("__rep")
-    )
-    fresh_keyed = m.filter(F.col("rep_id").isNull()).select("__id", "__set")
-    new_sets = _persist_md(
-        fresh_keyed.groupBy("__set").agg(F.min("__id").alias("__rep")),
-        persisted_out,
-    )
-    new_members = fresh_keyed.join(new_sets, "__set").select("__id", "__rep")
-    members = matched.unionByName(new_members)
-    rep_ids = new_members.filter(F.col("__id") == F.col("__rep")).select("__rep")
-    if pre is not None:
-        # Fresh-set representatives are a subset of the lookup's batch
-        # representatives with identical ids (both min-id per distinct
-        # set), and band keys depend only on the token set — so the
-        # lookup's persisted band frame, semi-joined to the fresh reps,
-        # IS this append's band frame, with no second kernel pass.
-        bands = pre["rep_bands"].join(
-            rep_ids, F.col("__id") == F.col("__rep"), "semi"
+    # Frames persisted here go to the caller's persisted_out when given (it
+    # releases them after its batch); otherwise this call owns them.
+    persisted = [] if persisted_out is None else persisted_out
+    try:
+        idx_sets = _read_idx(spark, path, "sets", _IDX_SETS_SCHEMA)
+        # The matched/fresh split re-reads this subtree four ways (members
+        # union, new sets, rep filter, tokens write) — persist the joined
+        # frame once (the _clusters lesson; batch-sized, two longs + the key
+        # array per row).
+        m = _persist_md(
+            keyed.join(idx_sets, keyed["__set"] == idx_sets["skey"], "left"),
+            persisted,
         )
-    else:
-        bands, _ = minhash_bands_tokens(
-            _rep_subset(df_new, id_col, rep_ids), id_col, tokens_col,
-            hash_mode=hash_mode,
+        matched = m.filter(F.col("rep_id").isNotNull()).select(
+            "__id", F.col("rep_id").alias("__rep")
         )
-    with gio.manifest_append(path, list(_IDX_RELATIONS), meta=meta):
-        # Same pb-clustering as the build write: an append lands one file
-        # per pb partition it touches instead of (tasks × partitions)
-        # shards, bounding the small-file growth rate per micro-batch.
-        # Concurrent independent writes (guide §2.6): the manifest diff
-        # runs after ALL of them complete, and a failure in any aborts
-        # the commit (run_jobs re-raises), so atomicity is unchanged.
-        gio.run_jobs(
-            lambda: _band_frame(bands)
-            .repartition("pb")
-            .write.partitionBy("pb")
-            .mode("append")
-            .parquet(os.path.join(path, "bands")),
-            lambda: _member_tokens(df_new, id_col, tokens_col, members, hash_mode)
-            .write.mode("append")
-            .parquet(os.path.join(path, "tokens")),
-            lambda: new_sets.select(
-                F.col("__set").alias("skey"), F.col("__rep").alias("rep_id")
+        fresh_keyed = m.filter(F.col("rep_id").isNull()).select("__id", "__set")
+        new_sets = _persist_md(
+            fresh_keyed.groupBy("__set").agg(F.min("__id").alias("__rep")),
+            persisted,
+        )
+        new_members = fresh_keyed.join(new_sets, "__set").select("__id", "__rep")
+        members = matched.unionByName(new_members)
+        rep_ids = new_members.filter(F.col("__id") == F.col("__rep")).select("__rep")
+        if pre is not None:
+            # Fresh-set representatives are a subset of the lookup's batch
+            # representatives with identical ids (both min-id per distinct
+            # set), and band keys depend only on the token set — so the
+            # lookup's persisted band frame, semi-joined to the fresh reps,
+            # IS this append's band frame, with no second kernel pass.
+            bands = pre["rep_bands"].join(
+                rep_ids, F.col("__id") == F.col("__rep"), "semi"
             )
-            .write.mode("append")
-            .parquet(os.path.join(path, "sets")),
-        )
+        else:
+            bands, _ = minhash_bands_tokens(
+                _rep_subset(df_new, id_col, rep_ids), id_col, tokens_col,
+                hash_mode=hash_mode,
+            )
+        with gio.manifest_append(path, list(_IDX_RELATIONS), meta=meta):
+            # Same pb-clustering as the build write: an append lands one file
+            # per pb partition it touches instead of (tasks × partitions)
+            # shards, bounding the small-file growth rate per micro-batch.
+            # Concurrent independent writes (guide §2.6): the manifest diff
+            # runs after ALL of them complete, and a failure in any aborts
+            # the commit (run_jobs re-raises), so atomicity is unchanged.
+            gio.run_jobs(
+                lambda: _band_frame(bands)
+                .repartition("pb")
+                .write.partitionBy("pb")
+                .mode("append")
+                .parquet(os.path.join(path, "bands")),
+                lambda: _member_tokens(df_new, id_col, tokens_col, members, hash_mode)
+                .write.mode("append")
+                .parquet(os.path.join(path, "tokens")),
+            )
+            # The sets/ write runs last and alone: its commit re-caches every
+            # cached frame that reads sets/ (m, new_sets), and a write still
+            # scanning them would rebuild the dropped cache, which no handle
+            # can then release.
+            new_sets.select(
+                F.col("__set").alias("skey"), F.col("__rep").alias("rep_id")
+            ).write.mode("append").parquet(os.path.join(path, "sets"))
+    finally:
+        if persisted_out is None:
+            for frame in persisted:
+                frame.unpersist()
 
 
 _IDX_TOMB_SCHEMA = "doc_id long"

@@ -52,12 +52,12 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the events fixture with the same ts handling as
     the batch loader — delegates to io.normalize_events_ts so batch and
     stream stay in lockstep when the driver regenerates fixtures."""
-    from sqlite_to_clickhouse_spark.io import normalize_events_ts
+    from sqlite_to_clickhouse_spark.io import normalize_events_ts, read_parquet
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     # The file stream source wants a directory to monitor, and the fixture
     # dir holds every table; stage a per-sf temp dir with a symlink to the
     # one events file (no data copy) and stream that.

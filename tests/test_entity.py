@@ -215,3 +215,42 @@ def test_failed_index_write_releases_persisted_frames(spark, tmp_path, monkeypat
     after = _persisted_rdds(spark)
     assert after - before == set()
     assert len(after) <= len(before)
+
+
+@pytest.mark.parametrize("fails", [False, True], ids=["ok", "failed"])
+@pytest.mark.parametrize("op", ["build", "append"])
+def test_minhash_index_write_releases_persisted_frames(spark, tmp_path, monkeypatch, op, fails):
+    """The MinHash build and a direct append release the frames they
+    persist (the set clusters and memberships, the matched/fresh split),
+    whether the write lands or dies inside the manifest commit."""
+    from sqlite_to_clickhouse_spark import io as gio
+    from sqlite_to_clickhouse_spark.operators import dedup as D
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, tk array<string>")
+
+    a, b = ["a", "x", "y"], ["b", "p"]
+    corpus = docs([(0, a), (1, a), (2, b)])
+    idx = str(tmp_path / "idx")
+    if op == "append":
+        D.minhash_index_build(corpus, "doc_id", "tk", idx)
+    before = _persisted_rdds(spark)
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("injected write failure")
+
+    if fails:
+        # After the data writes, so the persisted frames are materialized.
+        monkeypatch.setattr(gio, "manifest_commit", fail)
+    try:
+        if op == "build":
+            D.minhash_index_build(corpus, "doc_id", "tk", idx)
+        else:
+            D.minhash_index_append(docs([(10, a), (11, ["d", "z"])]), "doc_id", "tk", idx)
+    except RuntimeError as exc:
+        assert fails and "injected write failure" in str(exc)
+    else:
+        assert not fails
+    after = _persisted_rdds(spark)
+    assert after - before == set()
+    assert len(after) <= len(before)

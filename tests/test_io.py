@@ -427,3 +427,28 @@ def test_ensure_generation_racing_builders(tmp_path, monkeypatch):
 
     base = os.path.dirname(next(iter(gens)))
     assert read_marker(os.path.join(base, "SERIAL")) == "1"
+
+
+def _last_job(spark) -> int:
+    """Id of the newest finished-or-running job outside any job group."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup() or [-1])
+
+
+def test_parquet_schema_is_inferred_once_per_file_version(spark, tmp_path):
+    """A re-read of an unchanged table skips the schema-inference job; a
+    rewritten file at the same path is inferred afresh."""
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}), path)
+    io.read_parquet(spark, path)
+    before = _last_job(spark)
+    assert io.read_parquet(spark, path).columns == ["a"]
+    assert _last_job(spark) == before
+    pq.write_table(
+        pa.table({"a": pa.array([1, 2, 3], pa.int64()), "b": pa.array(["x", "y", "z"])}),
+        path,
+    )
+    df = io.read_parquet(spark, path)
+    assert _last_job(spark) > before
+    assert df.columns == ["a", "b"]
+    assert df.count() == 3
