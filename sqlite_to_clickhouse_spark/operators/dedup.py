@@ -340,51 +340,42 @@ def _minhash_family(hash_mode: str):
     return _base_hash, _band_key
 
 
-def minhash_bands_tokens(
-    df: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    *,
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
-    hash_mode: str | None = None,
-):
-    """Signature/banding front half of the MinHash-LSH pipeline, shared by
-    the one-shot pair search (minhash_lsh_pairs) and the persisted-index
-    incremental path (minhash_index_build / minhash_index_dedup) — one
-    implementation, so the two paths can never band differently.
-
-    Returns ``(bands, tokh)``:
-
-    - ``bands``: one row per (doc, band) — ``(__id, bk)`` with ``bk`` the
-      8-byte band key.  Token-less documents (blank/whitespace text) are
-      dropped here: their all-null signatures would otherwise share the
-      constant empty-band keys and form ONE quadratic hot bucket (the
-      classic LSH blank-document blowup), and their pairs are
-      verify-stage no-ops anyway (NULL Jaccard).
-    - ``tokh``: ``(__id, __tk32)`` — the doc's distinct 31-bit-masked
-      token hashes as array<int> for the exact-Jaccard verify stage
-      (4 B/element in Tungsten, half the shuffle bytes of longs).
-    """
-    hash_mode = _resolve_hash_mode(df, hash_mode)
-    _base_hash, _band_key = _minhash_family(hash_mode)
-
-    rows_per_band = n_hashes // n_bands
-    toks = df.select(
+def _hashed_tokens(df: DataFrame, id_col: str, tokens_col: str, base_hash) -> DataFrame:
+    """(__id, __tk, __tkh): the tokens and their base hashes (one per token,
+    shared by the kernel, the set key and the verify tokens)."""
+    return df.select(
         F.col(id_col).alias("__id"), F.col(tokens_col).alias("__tk")
-    ).withColumn("__tkh", F.transform(F.col("__tk"), _base_hash))
-    # Affine minhash over the md5-derived base hash: per seed s,
-    # min((2s+1)·(h mod M31) + b_s mod M31). One md5 per token total
-    # (shared with the verify stage's __tkh); the n_hashes mins are an
-    # Arrow-batched pandas UDF doing the same exact int64 arithmetic as a
-    # (seeds × tokens) numpy broadcast. The previous JVM spelling — an
-    # n_hashes-wide array(array_min(transform(...))) tree — is evaluated
-    # as interpreted higher-order functions (never whole-stage codegen)
-    # and cost more to analyze+compile than to run at any SF; the kernel
-    # is bit-identical (intermediates < 2^38, no int64 overflow) so the
-    # DuckDB oracle is unchanged.
+    ).withColumn("__tkh", F.transform(F.col("__tk"), base_hash))
+
+
+def _tk32() -> "F.Column":
+    """Verify tokens of a _hashed_tokens row: distinct 31-bit-masked hashes
+    as array<int> (4 B/element in Tungsten, half the bytes of longs)."""
+    return F.array_distinct(
+        F.transform("__tkh", lambda h: h.bitwiseAND(F.lit(MERSENNE31)).cast("int"))
+    )
+
+
+def _with_band_keys(
+    toks: DataFrame, band_key, n_hashes: int = N_HASHES, n_bands: int = N_BANDS
+) -> DataFrame:
+    """The non-blank rows of a _hashed_tokens frame plus ``bks``, the doc's
+    n_bands 8-byte band keys.  The one signature kernel: the corpus path
+    (minhash_bands_tokens) and the serving path (_batch_frame) both call
+    it, so they can never band differently.
+
+    Affine minhash over the base hash: per seed s,
+    min((2s+1)·(h mod M31) + b_s mod M31).  The n_hashes mins are an
+    Arrow-batched pandas UDF doing the same exact int64 arithmetic as a
+    (seeds × tokens) numpy broadcast.  The previous JVM spelling — an
+    n_hashes-wide array(array_min(transform(...))) tree — is evaluated as
+    interpreted higher-order functions (never whole-stage codegen) and
+    cost more to analyze+compile than to run at any SF; the kernel is
+    bit-identical (intermediates < 2^38, no int64 overflow) so the DuckDB
+    oracle is unchanged."""
     from pyspark.sql import types as T
 
+    rows_per_band = n_hashes // n_bands
     seeds = np.arange(n_hashes, dtype=np.int64)
     mults = 2 * seeds + 1
     offs = (seeds * AFFINE_MULT) % MERSENNE31
@@ -420,7 +411,7 @@ def minhash_bands_tokens(
     )
     band_keys = F.array(
         *[
-            _band_key(
+            band_key(
                 i,
                 [
                     F.element_at("sig", i * rows_per_band + r + 1)
@@ -430,6 +421,36 @@ def minhash_bands_tokens(
             for i in range(n_bands)
         ]
     )
+    return sigs.withColumn("bks", band_keys).drop("sig")
+
+
+def minhash_bands_tokens(
+    df: DataFrame,
+    id_col: str,
+    tokens_col: str,
+    *,
+    n_hashes: int = N_HASHES,
+    n_bands: int = N_BANDS,
+    hash_mode: str | None = None,
+):
+    """Signature/banding front half of the MinHash-LSH pipeline over a
+    corpus, shared by the one-shot pair search (minhash_lsh_pairs) and
+    the index build (minhash_index_build).  The kernel and band keys come
+    from _with_band_keys, which the serving path's batch frame calls too.
+
+    Returns ``(bands, tokh)``:
+
+    - ``bands``: one row per (doc, band) — ``(__id, bk)`` with ``bk`` the
+      8-byte band key.  Token-less documents (blank/whitespace text) are
+      dropped here: their all-null signatures would otherwise share the
+      constant empty-band keys and form ONE quadratic hot bucket (the
+      classic LSH blank-document blowup), and their pairs are
+      verify-stage no-ops anyway (NULL Jaccard).
+    - ``tokh``: ``(__id, __tk32)`` — the doc's verify tokens (_tk32).
+    """
+    hash_mode = _resolve_hash_mode(df, hash_mode)
+    base_hash, band_key = _minhash_family(hash_mode)
+    toks = _hashed_tokens(df, id_col, tokens_col, base_hash)
     # No persist: the band table feeds both sides of the self-join, and the
     # r1-era persist here was a 4× win when signatures were an interpreted
     # md5-per-seed expression tree. After the affine+Arrow kernel rework the
@@ -437,15 +458,10 @@ def minhash_bands_tokens(
     # persist at 73 s vs 32 s without (materialization + InMemoryRelation
     # scan costs dominate recompute; at 1× the difference is noise). Let
     # both join branches pipeline from the scan.
-    bands = sigs.select("__id", F.explode(band_keys).alias("bk"))
-    tokh = toks.select(
-        "__id",
-        F.array_distinct(
-            F.transform(
-                "__tkh", lambda h: h.bitwiseAND(F.lit(MERSENNE31)).cast("int")
-            )
-        ).alias("__tk32"),
+    bands = _with_band_keys(toks, band_key, n_hashes, n_bands).select(
+        "__id", F.explode("bks").alias("bk")
     )
+    tokh = toks.select("__id", _tk32().alias("__tk32"))
     return bands, tokh
 
 
@@ -507,7 +523,6 @@ def _verify_jaccard(
     cand: DataFrame,
     tokh: DataFrame,
     threshold: float,
-    tokh_b: "DataFrame | None" = None,
 ) -> DataFrame:
     """Exact-Jaccard verification of a slim candidate list against the
     (__id, __tk32) token store: join the candidates back to the tokens
@@ -517,13 +532,8 @@ def _verify_jaccard(
     31-bit int arrays (4 B/element) rather than longs halves the bytes
     hauled through this join's shuffle — the one stage that spilled at
     the 100× scale check (SURVEY §6.1).  The mask + distinct is mirrored
-    in the DuckDB oracle (hashed32 CTE).
-
-    ``tokh_b``: optional separate token store for the id_b side (the
-    index-lookup path, where id_a is a batch doc and id_b an index
-    doc); defaults to ``tokh`` for the symmetric self-join case."""
-    ta = tokh.alias("ta")
-    tb = (tokh if tokh_b is None else tokh_b).alias("tb")
+    in the DuckDB oracle (hashed32 CTE)."""
+    ta, tb = tokh.alias("ta"), tokh.alias("tb")
     pairs = (
         cand.join(ta, F.col("id_a") == F.col("ta.__id"))
         .join(tb, F.col("id_b") == F.col("tb.__id"))
@@ -585,7 +595,7 @@ def _persist_md(df: DataFrame, persisted_out: "list | None" = None) -> DataFrame
     return df
 
 
-def _clusters(keyed: DataFrame, persisted_out: "list | None" = None) -> DataFrame:
+def _clusters(keyed: DataFrame) -> DataFrame:
     """(__id, __rep) membership: representative = min id per distinct
     set.  groupBy gets map-side partial aggregation (a boilerplate
     cluster collapses before the wire); the join back is doc-linear.
@@ -603,8 +613,7 @@ def _clusters(keyed: DataFrame, persisted_out: "list | None" = None) -> DataFram
     share one cache entry across invocations, and eviction is safe (it
     recomputes)."""
     reps = keyed.groupBy("__set").agg(F.min("__id").alias("__rep"))
-    return _persist_md(keyed.join(reps, "__set").select("__id", "__rep"),
-                       persisted_out)
+    return _persist_md(keyed.join(reps, "__set").select("__id", "__rep"))
 
 
 def minhash_lsh_pairs(
@@ -725,6 +734,14 @@ def minhash_lsh_pairs(
 # representative pairs to member pairs through `tokens/` (output-bound
 # joins on 8-byte ids).  Lossless by the same theorem as the in-memory
 # collapse: identical sets share signature and band keys.
+#
+# Serving a batch: the lookup and the append both start from ONE persisted
+# batch frame (_batch_frame), so the batch is scanned, tokenized and run
+# through the signature kernel once.  The lookup finds batch×index and
+# batch×batch candidates in one join, verifies and expands them once; the
+# append joins the frame to `sets/` once and writes all three relations
+# from that join.  After a lookup the append reads the lookup's cached
+# frame (same plan) and releases it.
 # ---------------------------------------------------------------------------
 
 MINHASH_IDX_BUCKETS = 32  # on-disk partitions of the band table (pb = bk mod B)
@@ -759,6 +776,23 @@ def _band_frame(bands: DataFrame) -> DataFrame:
     )
 
 
+def _batch_frame(df: DataFrame, id_col: str, tokens_col: str, hash_mode: str) -> DataFrame:
+    """``(__id, __set, __rep, bks, __tk32)`` per non-blank batch doc: set
+    key (as _set_keyed), batch representative (min id per set), band keys
+    and verify tokens.  The kernel runs on every doc BEFORE the
+    representative exchange, so its Python evaluation stays in the
+    batch-scan stage (one worker per scan task, not one per shuffle
+    partition); members of one set repeat it, a batch-bounded cost."""
+    base_hash, band_key = _minhash_family(hash_mode)
+    keyed = _with_band_keys(_hashed_tokens(df, id_col, tokens_col, base_hash), band_key)
+    return keyed.select(
+        "__id",
+        F.array_sort(F.array_distinct("__tkh")).alias("__set"),
+        "bks",
+        _tk32().alias("__tk32"),
+    ).withColumn("__rep", F.min("__id").over(Window.partitionBy("__set")))
+
+
 def _member_tokens(df, id_col, tokens_col, members, hash_mode) -> DataFrame:
     """tokens/ rows for the given membership: (doc_id, tk32, rep_id).
     Only banded (non-blank) members — blank docs never verify, and
@@ -773,11 +807,6 @@ def _member_tokens(df, id_col, tokens_col, members, hash_mode) -> DataFrame:
             F.col("__rep").alias("rep_id"),
         )
     )
-
-
-def _rep_subset(df: DataFrame, id_col: str, rep_ids: DataFrame) -> DataFrame:
-    """Filter ``df`` to representative rows (rep_ids: one __rep column)."""
-    return df.join(rep_ids, F.col(id_col) == F.col("__rep")).drop("__rep")
 
 
 def minhash_index_build(
@@ -809,7 +838,8 @@ def minhash_index_build(
         )
         rep_ids = members.filter(F.col("__id") == F.col("__rep")).select("__rep")
         bands, _ = minhash_bands_tokens(
-            _rep_subset(df, id_col, rep_ids), id_col, tokens_col, hash_mode=hash_mode
+            df.join(rep_ids, F.col(id_col) == F.col("__rep")).drop("__rep"),
+            id_col, tokens_col, hash_mode=hash_mode,
         )
         # Cluster by pb BEFORE the partitioned write (one shuffle of a thin
         # (bk, doc_id, pb) frame): a map-side partitionBy write emits one file
@@ -871,93 +901,70 @@ def minhash_index_append(
     window.  ``meta`` (e.g. ``{"epoch": id}``) rides the commit for
     retried-writer idempotence checks.
 
-    Cluster maintenance: each new doc's set key is joined against
-    ``sets/`` — a doc identical to an INDEXED set becomes a member of
-    that cluster (one tokens/ row, no new bands); genuinely new sets
-    cluster among themselves and append their representative's bands +
-    sets rows.  Caller contract: the batch's ids are not already in the
-    index (dedup first, then append the keepers).
+    Cluster maintenance: the batch frame (_batch_frame) is joined to
+    ``sets/`` once on the set key.  A doc identical to an INDEXED set
+    becomes a member of that cluster (one tokens/ row, no new bands);
+    the other docs keep their batch representative — the min id of a
+    set the index has never seen, since a set matches ``sets/`` whole or
+    not at all — and each such representative appends its bands/ and
+    sets/ rows from the frame's band keys.  No second kernel pass, no
+    re-scan of the batch.  Caller contract: the batch's ids are not
+    already in the index (dedup first, then append the keepers).
 
-    ``precomputed``: the ``shared_out`` dict a minhash_index_dedup call
-    over the SAME batch just filled (guide §1.2) — reuses the lookup's
-    persisted set-key frame and its representative band frame instead of
-    re-running the token scan and the signature kernel.  Sound because
-    banding is a pure function of the token set and append
-    representatives (min id per fresh distinct set) are a subset of
-    lookup representatives (min id per batch distinct set); guarded on
-    matching hash_mode, ignored otherwise."""
+    Frame lifetime: the batch frame is persisted here and released in
+    ``finally`` (or handed to ``persisted_out``).  After a
+    minhash_index_dedup over the same batch the frame plan is the
+    lookup's, so Spark serves it from the lookup's cached copy, and the
+    release here frees that copy too.  ``precomputed``: the
+    ``shared_out`` dict of such a lookup (the streaming handler's path);
+    its ``keyed`` frame is used directly and stays the caller's to
+    release.  Guarded on matching hash_mode, ignored otherwise."""
     hash_mode = _resolve_hash_mode(df_new, hash_mode)
-    base_hash, _ = _minhash_family(hash_mode)
     spark = df_new.sparkSession
-
-    pre = (
-        precomputed
-        if precomputed and precomputed.get("hash_mode") == hash_mode
-        else None
-    )
-    keyed = pre["keyed"] if pre else _set_keyed(df_new, id_col, tokens_col, base_hash)
     # Frames persisted here go to the caller's persisted_out when given (it
     # releases them after its batch); otherwise this call owns them.
     persisted = [] if persisted_out is None else persisted_out
     try:
-        idx_sets = _read_idx(spark, path, "sets", _IDX_SETS_SCHEMA)
-        # The matched/fresh split re-reads this subtree four ways (members
-        # union, new sets, rep filter, tokens write) — persist the joined
-        # frame once (the _clusters lesson; batch-sized, two longs + the key
-        # array per row).
-        m = _persist_md(
-            keyed.join(idx_sets, keyed["__set"] == idx_sets["skey"], "left"),
-            persisted,
-        )
-        matched = m.filter(F.col("rep_id").isNotNull()).select(
-            "__id", F.col("rep_id").alias("__rep")
-        )
-        fresh_keyed = m.filter(F.col("rep_id").isNull()).select("__id", "__set")
-        new_sets = _persist_md(
-            fresh_keyed.groupBy("__set").agg(F.min("__id").alias("__rep")),
-            persisted,
-        )
-        new_members = fresh_keyed.join(new_sets, "__set").select("__id", "__rep")
-        members = matched.unionByName(new_members)
-        rep_ids = new_members.filter(F.col("__id") == F.col("__rep")).select("__rep")
-        if pre is not None:
-            # Fresh-set representatives are a subset of the lookup's batch
-            # representatives with identical ids (both min-id per distinct
-            # set), and band keys depend only on the token set — so the
-            # lookup's persisted band frame, semi-joined to the fresh reps,
-            # IS this append's band frame, with no second kernel pass.
-            bands = pre["rep_bands"].join(
-                rep_ids, F.col("__id") == F.col("__rep"), "semi"
-            )
+        if precomputed and precomputed.get("hash_mode") == hash_mode:
+            batch = precomputed["keyed"]
         else:
-            bands, _ = minhash_bands_tokens(
-                _rep_subset(df_new, id_col, rep_ids), id_col, tokens_col,
-                hash_mode=hash_mode,
+            batch = _persist_md(
+                _batch_frame(df_new, id_col, tokens_col, hash_mode), persisted
             )
+        idx_sets = _read_idx(spark, path, "sets", _IDX_SETS_SCHEMA)
+        m = batch.join(idx_sets, batch["__set"] == idx_sets["skey"], "left")
+        fresh_reps = m.filter(
+            F.col("rep_id").isNull() & (F.col("__id") == F.col("__rep"))
+        )
         with gio.manifest_append(path, list(_IDX_RELATIONS), meta=meta):
-            # Same pb-clustering as the build write: an append lands one file
-            # per pb partition it touches instead of (tasks × partitions)
-            # shards, bounding the small-file growth rate per micro-batch.
+            # tokens/ first and alone: it reads every frame row, so a cold
+            # call materializes the batch frame here once instead of in
+            # each of the concurrent writes below.
+            m.select(
+                F.col("__id").alias("doc_id"),
+                F.col("__tk32").alias("tk32"),
+                F.coalesce("rep_id", "__rep").alias("rep_id"),
+            ).write.mode("append").parquet(os.path.join(path, "tokens"))
             # Concurrent independent writes (guide §2.6): the manifest diff
             # runs after ALL of them complete, and a failure in any aborts
             # the commit (run_jobs re-raises), so atomicity is unchanged.
+            # One writer task for the batch-bounded bands rows lands one
+            # file per pb partition the append touches — the build's
+            # pb-clustered layout — without a shuffle.
             gio.run_jobs(
-                lambda: _band_frame(bands)
-                .repartition("pb")
+                lambda: _band_frame(
+                    fresh_reps.select("__id", F.explode("bks").alias("bk"))
+                )
+                .coalesce(1)
                 .write.partitionBy("pb")
                 .mode("append")
                 .parquet(os.path.join(path, "bands")),
-                lambda: _member_tokens(df_new, id_col, tokens_col, members, hash_mode)
+                lambda: fresh_reps.select(
+                    F.col("__set").alias("skey"), F.col("__rep").alias("rep_id")
+                )
                 .write.mode("append")
-                .parquet(os.path.join(path, "tokens")),
+                .parquet(os.path.join(path, "sets")),
             )
-            # The sets/ write runs last and alone: its commit re-caches every
-            # cached frame that reads sets/ (m, new_sets), and a write still
-            # scanning them would rebuild the dropped cache, which no handle
-            # can then release.
-            new_sets.select(
-                F.col("__set").alias("skey"), F.col("__rep").alias("rep_id")
-            ).write.mode("append").parquet(os.path.join(path, "sets"))
     finally:
         if persisted_out is None:
             for frame in persisted:
@@ -1015,26 +1022,30 @@ def minhash_index_dedup(
     minhash_lsh_pairs over (index corpus ∪ batch) and keeping the pairs
     that involve >= 1 batch doc (pinned by the append-twice property
     test): banding is deterministic and shared, so the candidate set
-    decomposes exactly into batch×index (bucket join against the pruned
-    index partitions) ∪ batch×batch (self-join of the small batch).
+    decomposes exactly into batch×index ∪ batch×batch.
 
-    Scale shape: both sides are COLLAPSED to cluster representatives —
-    the index on disk (schema v2), the batch in-flight — so the bucket
-    join carries one row per distinct set per band, the verify stage
-    intersects token arrays once per representative pair, and member
-    pairs materialize only in the final output-bound expansion joins on
-    8-byte ids.  The probed pb set is collected driver-side (bounded by
-    MINHASH_IDX_BUCKETS, a few ints) and lands in the bands scan as a
-    static partition filter.  Nothing rescans the corpus text.
+    Plan shape: ONE persisted batch frame (_batch_frame) feeds three
+    views — members, rep bands, rep tokens.  Candidates come from ONE
+    join of the batch reps' bands against (pruned index bands ∪ batch
+    reps' bands), ordered with least/greatest into one packed distinct;
+    one _verify_jaccard runs against (batch ∪ index) rep tokens, and one
+    output-bound expansion goes through (batch ∪ index) members.  Both
+    sides are COLLAPSED to cluster representatives, so the join carries
+    one row per distinct set per band.  The probed pb set is collected
+    driver-side from the cached frame (bounded by MINHASH_IDX_BUCKETS, a
+    few ints) and lands in the bands scan as a static partition filter.
+    Nothing rescans the corpus text.
 
-    ``shared_out`` (r12, guide §1.2 "don't compute things twice"): when a
+    Frame lifetime: the batch frame goes to ``persisted_out`` when given;
+    otherwise it stays cached — one batch-sized frame — until a
+    minhash_index_append of the same batch, which builds the same plan,
+    reads it from the cache and releases it.
+
+    ``shared_out`` (guide §1.2 "don't compute things twice"): when a
     caller is about to APPEND the same batch right after this lookup (the
     streaming ingest handler), pass a dict and hand it to
-    ``minhash_index_append(precomputed=...)`` — the batch's set-key pass
-    and the signature-kernel banding of its representatives are computed
-    once here and reused there (banding is a pure function of the token
-    set, and append representatives are a subset of lookup
-    representatives — both are min-id per distinct set).
+    ``minhash_index_append(precomputed=...)``: it receives ``hash_mode``,
+    the batch frame as ``keyed`` and the rep band frame as ``rep_bands``.
 
     ``exclude_ids`` (r13, VERDICT r12 item 7 — the streaming retry
     window): a one-column frame of doc ids to treat as ABSENT from the
@@ -1046,90 +1057,70 @@ def minhash_index_dedup(
     only ever add the batch's own rows).  None (the default) leaves the
     common-path plan untouched."""
     hash_mode = _resolve_hash_mode(df_new, hash_mode)
-    base_hash, _ = _minhash_family(hash_mode)
-    keyed = _set_keyed(df_new, id_col, tokens_col, base_hash)
-    if shared_out is not None:
-        # shared_out hands PERSISTED frames to a follow-up append, so the
-        # caller must also take the unpersist handles — a looping caller
+    if shared_out is not None and persisted_out is None:
+        # shared_out hands a PERSISTED frame to a follow-up append, so the
+        # caller must also take the unpersist handle — a looping caller
         # using shared_out alone would leak disk-backed cached blocks per
         # batch (ADVICE r12).
-        if persisted_out is None:
-            raise ValueError("shared_out requires persisted_out (unpersist handles)")
-        # Persisted so the append's reuse doesn't re-run the token
-        # scan + set-key pass (batch-sized; handed back for unpersist).
-        keyed = _persist_md(keyed, persisted_out)
-    b_members = _clusters(keyed, persisted_out)
-    rep_ids = b_members.filter(F.col("__id") == F.col("__rep")).select("__rep")
-    new_bands, new_tokh = minhash_bands_tokens(
-        _rep_subset(df_new, id_col, rep_ids), id_col, tokens_col,
-        hash_mode=hash_mode,
+        raise ValueError("shared_out requires persisted_out (unpersist handles)")
+    # BATCH-sized and fanned into every join below: persisted, which
+    # inverts the corpus-side no-persist rule (minhash_bands_tokens) —
+    # the exact asymmetry of the serving path.
+    batch = _persist_md(
+        _batch_frame(df_new, id_col, tokens_col, hash_mode), persisted_out
     )
-    # BATCH-sized frames fanned into 2-3 joins each (index join + self
-    # join + two verifies): persist them so the rep filter + sig kernel
-    # run once per lookup.  This inverts the corpus-side no-persist rule
-    # (minhash_bands_tokens docstring) because these are bounded by the
-    # BATCH, not the corpus — the exact asymmetry of the serving path.
-    new_bands = _persist_md(new_bands, persisted_out)
-    new_tokh = _persist_md(new_tokh, persisted_out)
+    reps = batch.filter(F.col("__id") == F.col("__rep"))
+    rep_bands = reps.select("__id", F.explode("bks").alias("bk"))
     if shared_out is not None:
-        shared_out.update(hash_mode=hash_mode, keyed=keyed, rep_bands=new_bands)
+        shared_out.update(hash_mode=hash_mode, keyed=batch, rep_bands=rep_bands)
     probed = [
         int(r["pb"])
-        for r in new_bands.select(
+        for r in rep_bands.select(
             F.pmod(F.col("bk"), F.lit(MINHASH_IDX_BUCKETS)).cast("int").alias("pb")
         )
+        .coalesce(1)  # batch-sized: dedup in one task, no shuffle
         .distinct()
         .collect()  # bounded: <= MINHASH_IDX_BUCKETS values
     ]
-    idx_tok = _read_idx(spark, path, "tokens", _IDX_TOKENS_SCHEMA)
-    if exclude_ids is not None:
-        # Retry-after-committed-append (see docstring): drop the batch's
-        # own rows from the member store.  Bands rows of excluded reps
-        # may still generate candidates, but they cannot verify (their
-        # rep has no surviving tokens row) nor expand (the member side
-        # is this anti-joined store), so the output is exactly the
-        # pre-append lookup's.
-        idx_tok = idx_tok.join(
-            exclude_ids.select(F.col(exclude_ids.columns[0]).alias("doc_id")),
-            "doc_id",
-            "left_anti",
-        )
-    # Tombstone-aware lookup (GDPR-shape deletes, VERDICT r8 item 4): a
-    # deleted doc must vanish from every output pair WITHOUT an index
-    # rewrite.  ``tombstones/`` (written by minhash_index_delete) is
-    # anti-joined against the member store, so deleted members never
-    # expand into pairs; when a cluster REPRESENTATIVE is deleted the
-    # verify side re-elects min live member per cluster — sound because a
-    # v2 cluster IS a distinct token set, so every member's tk32 is
-    # identical to the rep's by construction.  Bands rows key clusters by
-    # the ORIGINAL rep id; that id stays valid as a cluster label (band
-    # keys derive from the token set, not the id), and fully-deleted
-    # clusters drop out in the verify inner join.  Compaction
-    # (minhash_index_compact) physically drops tombstoned rows and
-    # re-labels clusters by their live minimum.
-    tomb = _read_tombstones(spark, path)
-    if tomb is not None:
-        idx_tok = idx_tok.join(tomb, "doc_id", "left_anti")
-
-    # batch-rep × index-rep candidates (sides kept distinct: id_a = batch
-    # rep, id_b = index rep — the token stores and expansions differ).
-    vs_pairs = None
+    # The three stores the candidates meet: bands to join, rep tokens to
+    # verify, members to expand — batch rows, plus index rows below.
+    other_bands = rep_bands
+    rep_tok = reps.select("__id", "__tk32")
+    members = batch.select("__rep", "__id")
     if probed:
-        idx_b = (
+        idx_tok = _read_idx(spark, path, "tokens", _IDX_TOKENS_SCHEMA)
+        if exclude_ids is not None:
+            # Retry-after-committed-append (see docstring): drop the batch's
+            # own rows from the member store.  Bands rows of excluded reps
+            # still generate candidates, but those reps are batch reps (an
+            # append's fresh reps are its batch reps), so the pairs are ones
+            # the batch bands find anyway, verified and expanded through the
+            # batch rows only: the output is exactly the pre-append lookup's.
+            idx_tok = idx_tok.join(
+                exclude_ids.select(F.col(exclude_ids.columns[0]).alias("doc_id")),
+                "doc_id",
+                "left_anti",
+            )
+        # Tombstone-aware lookup (GDPR-shape deletes, VERDICT r8 item 4): a
+        # deleted doc must vanish from every output pair WITHOUT an index
+        # rewrite.  ``tombstones/`` (written by minhash_index_delete) is
+        # anti-joined against the member store, so deleted members never
+        # expand into pairs; when a cluster REPRESENTATIVE is deleted the
+        # verify side re-elects min live member per cluster — sound because
+        # a v2 cluster IS a distinct token set, so every member's tk32 is
+        # identical to the rep's by construction.  Bands rows key clusters
+        # by the ORIGINAL rep id; that id stays valid as a cluster label
+        # (band keys derive from the token set, not the id), and
+        # fully-deleted clusters drop out in the verify inner join.
+        # Compaction (minhash_index_compact) physically drops tombstoned
+        # rows and re-labels clusters by their live minimum.
+        tomb = _read_tombstones(spark, path)
+        if tomb is not None:
+            idx_tok = idx_tok.join(tomb, "doc_id", "left_anti")
+        other_bands = other_bands.unionByName(
             _read_idx(spark, path, "bands", _IDX_BANDS_SCHEMA, partitioned=True)
             .filter(F.col("pb").isin(probed))  # static partition pruning
-            .alias("ib")
-        )
-        nb = new_bands.alias("nb")
-        cand_vs = _packed_distinct(
-            nb.join(idx_b, F.col("nb.bk") == F.col("ib.bk"))
-            # Defensive: a batch id already present in the index (contract
-            # violation) must not emit a self-pair.
-            .filter(F.col("nb.__id") != F.col("ib.doc_id"))
-            .select(
-                F.col("nb.__id").alias("id_a"),
-                F.col("ib.doc_id").alias("id_b"),
-            )
+            .select(F.col("doc_id").alias("__id"), "bk")
         )
         idx_rep_tok = idx_tok.filter(F.col("doc_id") == F.col("rep_id")).select(
             F.col("doc_id").alias("__id"), F.col("tk32").alias("__tk32")
@@ -1156,37 +1147,42 @@ def minhash_index_dedup(
                 )
             )
             idx_rep_tok = idx_rep_tok.unionByName(reelected)
-        vs_pairs = _verify_jaccard(cand_vs, new_tokh, threshold, idx_rep_tok)
+        rep_tok = rep_tok.unionByName(idx_rep_tok)
+        members = members.unionByName(
+            idx_tok.select(F.col("rep_id").alias("__rep"), F.col("doc_id").alias("__id"))
+        )
 
-    # batch-rep × batch-rep candidates (one bucket pass, see _bucket_pairs).
-    cand_bb = _packed_distinct(_bucket_pairs(new_bands))
-    bb_pairs = _verify_jaccard(cand_bb, new_tokh, threshold)
+    # Candidate rep pairs, unordered, in one join: every pair has a batch
+    # rep on the left, an index or batch rep on the right.  The inequality
+    # drops each batch rep's match with itself, and — defensively — a
+    # batch id already present in the index (contract violation).
+    nb, ob = rep_bands.alias("nb"), other_bands.alias("ob")
+    cand = _packed_distinct(
+        nb.join(ob, F.col("nb.bk") == F.col("ob.bk"))
+        .filter(F.col("nb.__id") != F.col("ob.__id"))
+        .select(
+            F.least("nb.__id", "ob.__id").alias("id_a"),
+            F.greatest("nb.__id", "ob.__id").alias("id_b"),
+        )
+    )
+    rep_pairs = _verify_jaccard(cand, rep_tok, threshold)
 
-    # Expansions: representative pairs -> member pairs (output-bound).
-    ba = b_members.select(F.col("__rep").alias("id_a"), F.col("__id").alias("__a"))
-    bb = b_members.select(F.col("__rep").alias("id_b"), F.col("__id").alias("__b"))
+    # Expansion: representative pairs -> member pairs (output-bound; clusters
+    # are disjoint, so no duplicates), plus within-cluster batch pairs
+    # analytically at J=1.0 (index×index pairs are never output).
+    ma = members.select(F.col("__rep").alias("id_a"), F.col("__id").alias("__a"))
+    mb = members.select(F.col("__rep").alias("id_b"), F.col("__id").alias("__b"))
     out = (
-        bb_pairs.join(ba, "id_a")
-        .join(bb, "id_b")
+        rep_pairs.join(ma, "id_a")
+        .join(mb, "id_b")
         .select(
             F.least("__a", "__b").alias("id_a"),
             F.greatest("__a", "__b").alias("id_b"),
             "jaccard",
         )
     )
-    if vs_pairs is not None:
-        im = idx_tok.select(F.col("rep_id").alias("id_b"), F.col("doc_id").alias("__b"))
-        out = out.unionByName(
-            vs_pairs.join(ba, "id_a")
-            .join(im, "id_b")
-            .select(
-                F.least("__a", "__b").alias("id_a"),
-                F.greatest("__a", "__b").alias("id_b"),
-                "jaccard",
-            )
-        )
     within = _bucket_pairs(
-        b_members.select("__id", F.col("__rep").alias("bk"))
+        batch.select("__id", F.col("__rep").alias("bk"))
     ).select("id_a", "id_b", F.lit(1.0).alias("jaccard")).filter(
         F.lit(1.0) >= F.lit(threshold)
     )

@@ -1836,7 +1836,7 @@ def ann_index_query(
     state comes from — parquet, not a per-call refit."""
     from pyspark.sql import types as T
 
-    q = _load_quantizer(spark, path)
+    q = _load_quantizer(path)
     if q is None:  # index built over an empty corpus -> zero results
         return spark.createDataFrame(
             [], f"{probe_id_col} bigint, {id_col} bigint, cosine double"
@@ -1931,29 +1931,30 @@ def ann_index_query(
     )
 
 
-def _load_quantizer(spark: SparkSession, path: str):
+def _load_quantizer(path: str):
     """Driver-side quantizer state of a persisted IVF-PQ index:
     ``(books, cent_ids, C)`` numpy arrays, or ``None`` when the index was
-    built over an empty corpus (no codebook rows).  Bounded by contract:
-    m×k codebook rows + k centroid rows — the same tiny collect
-    ann_index_query has always done."""
-    books_df = gio.read_relation(spark, path, "codebooks")
-    brows = books_df.collect() if books_df is not None else []
-    if not brows:
+    built over an empty corpus (no codebook rows).  ann_index_build writes
+    ``codebooks/`` and ``centroids/`` with pyarrow from the driver and
+    they are tiny by contract (m×k codebook rows + k centroid rows), so
+    they are read back the same way from the manifest's file lists —
+    no Spark job on the query and append paths that load them."""
+    import pyarrow.parquet as papq
+
+    def read(rel):
+        files = gio.manifest_relation_files(path, rel)
+        return papq.read_table(files) if files else None
+
+    bt = read("codebooks")
+    if bt is None or bt.num_rows == 0:
         return None
-    m = 1 + max(r["j"] for r in brows)
-    kk = 1 + max(r["c"] for r in brows)
-    sub = len(brows[0]["sub"])
-    books = np.empty((m, kk, sub))
-    for r in brows:
-        books[r["j"], r["c"]] = r["sub"]
-    cents_df = gio.read_relation(spark, path, "centroids")
-    cent_rows = sorted(
-        cents_df.collect() if cents_df is not None else [],
-        key=lambda r: r[0],
-    )
-    cent_ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-    C = np.array([r[1] for r in cent_rows], dtype=np.float64)
+    j, c = bt.column("j").to_numpy(), bt.column("c").to_numpy()
+    sub = np.array(bt.column("sub").to_pylist(), dtype=np.float64)
+    books = np.empty((j.max() + 1, c.max() + 1, sub.shape[1]))
+    books[j, c] = sub
+    ct = read("centroids").sort_by("cent_id")
+    cent_ids = ct.column("cent_id").to_numpy().astype(np.int64)
+    C = np.array(ct.column("c_emb").to_pylist(), dtype=np.float64)
     return books, cent_ids, C
 
 
@@ -1998,7 +1999,7 @@ def ann_index_append(
     IS the rebuild trigger."""
     from pyspark.sql import types as T
 
-    q = _load_quantizer(spark, path)
+    q = _load_quantizer(path)
     if q is None:
         raise ValueError(
             "ann_index_append: index has no quantizer state (empty-corpus "
@@ -2237,7 +2238,7 @@ def sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _clone_incr_ann_index(spark, sf_dir)
     pre_files = _code_files(idx)
     pre_state = _state_digest(idx)
-    if _load_quantizer(spark, idx) is None:
+    if _load_quantizer(idx) is None:
         # Empty corpus: the append IS a rebuild (see docstring).
         ann_index_build(spark, batch, idx).collect()
         pre_files = set()  # a rebuild replaces the (empty) file set
@@ -2272,7 +2273,7 @@ def sim_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_llm_ops.py."""
     idx = _clone_incr_ann_index(spark, sf_dir)
     batch = table(spark, sf_dir, "embeddings").filter(_ann_batch_pred())
-    if _load_quantizer(spark, idx) is None:
+    if _load_quantizer(idx) is None:
         ann_index_build(spark, batch, idx).collect()  # empty-corpus rebuild
     elif batch.limit(1).count():
         ann_index_append(spark, batch, idx)
@@ -2459,7 +2460,7 @@ def sim_index_retrain_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     is trivially rebuild-needed; all three checks report False (pinned
     in tests/test_llm_ops.py, never reachable on a driver fixture)."""
     idx = _ensure_incr_ann_index(spark, sf_dir)
-    q = _load_quantizer(spark, idx)
+    q = _load_quantizer(idx)
     e = table(spark, sf_dir, "embeddings")
     batch = e.filter(_ann_batch_pred())
     if q is None:

@@ -254,3 +254,24 @@ def test_minhash_index_write_releases_persisted_frames(spark, tmp_path, monkeypa
     after = _persisted_rdds(spark)
     assert after - before == set()
     assert len(after) <= len(before)
+
+
+def test_minhash_lookup_then_append_releases_batch_frame(spark, tmp_path):
+    """A consumed lookup followed by an append of the same batch leaves no
+    cached frame: the lookup keeps one batch frame cached, the append
+    builds the same plan, reads that copy and releases it."""
+    from sqlite_to_clickhouse_spark.operators import dedup as D
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, tk array<string>")
+
+    a, b = ["a", "x", "y"], ["b", "p"]
+    idx = str(tmp_path / "idx")
+    D.minhash_index_build(docs([(0, a), (1, a), (2, b)]), "doc_id", "tk", idx)
+    batch = docs([(10, a), (11, ["d", "z"]), (12, ["d", "z"]), (13, [])])
+    before = _persisted_rdds(spark)
+    D.minhash_index_dedup(spark, batch, "doc_id", "tk", idx).collect()
+    assert len(_persisted_rdds(spark) - before) == 1
+    D.minhash_index_append(batch, "doc_id", "tk", idx)
+    after = _persisted_rdds(spark)
+    assert after - before == set()
