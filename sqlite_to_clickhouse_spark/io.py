@@ -12,6 +12,7 @@ from __future__ import annotations
 import contextlib
 import fcntl
 import os
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -279,8 +280,8 @@ def ensure_generation(kind: str, key: str, fp: str, build, *, force: bool = Fals
 #     double-append nor the ADVICE-r10 silent-drop window exists.
 #
 # File paths inside a manifest are RELATIVE to the store root, so a
-# file-level clone of the whole store (shutil.copytree — how the streaming
-# ops snapshot the shared cached index) remains a valid store at its new
+# file-level clone of the whole store (clone_store — how the lifecycle
+# ops snapshot a shared cached index) remains a valid store at its new
 # location, manifests included.  (Absolute paths are also honored — they
 # resolve verbatim — which is how a shallow clone references another
 # table's files without copying them.)
@@ -295,6 +296,13 @@ def ensure_generation(kind: str, key: str, fp: str, build, *, force: bool = Fals
 # multi-writer deployment passes ``manifest_append(..., exclusive=True)``
 # on every writer, which serializes commits the way Delta does — the
 # append lock held across the whole step (see the docstring).
+#
+# IndexStore (below) declares each persisted index — the MinHash band
+# index, the IVF-PQ codes, the ER catalog — once: its relations' schemas,
+# partition columns and tombstone key.  All three keep the reference
+# sink's contract (append rows, tombstone deletes, compact as the merge),
+# so the declaration owns the reads, tombstones, snapshot commits and the
+# compaction write; the index modules keep only their algorithms.
 # ---------------------------------------------------------------------------
 
 MANIFEST_DIRNAME = "_manifests"
@@ -712,6 +720,133 @@ def read_relation(
     if partitioned:
         reader = reader.option("basePath", os.path.join(root, relation))
     return reader.parquet(*files)
+
+
+@dataclass(frozen=True)
+class IndexStore:
+    """``schemas``: relation → DDL schema; the relation list of every
+    commit.  ``partitions``: relation → its on-disk partition column.
+    ``tombstone``: the tombstone key, one ``"name type"`` DDL column.
+    ``inferred``: relations read with the schema their files carry (ANN
+    codes: the id column is the caller's and the bucket type is
+    inferred); their DDL is only the shape of an empty read."""
+
+    schemas: "dict[str, str]"
+    tombstone: str
+    partitions: "dict[str, str]" = field(default_factory=dict)
+    inferred: "frozenset[str]" = frozenset()
+
+    def read(self, spark: SparkSession, root: str, rel: str) -> DataFrame:
+        """Manifest-resolved scan of one relation.  A relation with no
+        committed files (an empty partitioned write emits none) reads as
+        an empty frame of the declared schema."""
+        ddl = self.schemas[rel]
+        df = read_relation(
+            spark, root, rel, None if rel in self.inferred else ddl,
+            partitioned=rel in self.partitions,
+        )
+        return df if df is not None else spark.createDataFrame([], ddl)
+
+    def tombstones(self, spark: SparkSession, root: str) -> "DataFrame | None":
+        """The tombstone relation, or None when no delete was ever
+        committed — the None keeps the no-delete plans unchanged.  An
+        uncommitted delete is invisible, like an uncommitted append."""
+        return read_relation(spark, root, "tombstones", self.tombstone)
+
+    def delete(
+        self,
+        ids: DataFrame,
+        root: str,
+        *,
+        appends: "dict[str, DataFrame] | None" = None,
+        meta: "dict | None" = None,
+    ) -> None:
+        """Tombstone the ids in ``ids``'s one column (cast to the key) in
+        one atomic commit; nothing committed is rewritten.  ``appends``:
+        rows of other relations that must land in the same snapshot (the
+        ER relabel of a delete's survivors)."""
+        from pyspark.sql import functions as F
+
+        key, dtype = self.tombstone.split()
+        frames = {
+            **(appends or {}),
+            "tombstones": ids.select(F.col(ids.columns[0]).cast(dtype).alias(key)),
+        }
+
+        def job(rel: str, df: DataFrame):
+            return lambda: df.write.mode("append").parquet(os.path.join(root, rel))
+
+        with manifest_append(root, list(frames), meta=meta):
+            run_jobs(*[job(rel, df) for rel, df in frames.items()])
+
+    def commit(
+        self, root: str, *, meta: "dict | None" = None, applied_from: "str | None" = None
+    ) -> str:
+        """Publish every relation's files under ``root`` as one snapshot
+        (a build's or a compaction's first commit).  ``applied_from``: a
+        source store whose applied-epoch chain the new snapshot inherits,
+        so a stream swapped onto a compacted store still skips the epochs
+        it already ingested."""
+        return manifest_commit(
+            root,
+            {rel: relation_data_files(root, rel) for rel in self.schemas},
+            meta=meta,
+            applied_seed=manifest_applied_chain(applied_from) if applied_from else None,
+        )
+
+    def rewrite(
+        self,
+        dst: str,
+        frames: "dict[str, DataFrame]",
+        *,
+        meta: "dict | None" = None,
+        applied_from: str,
+    ) -> str:
+        """The compaction write: each frame lands under ``dst`` by one
+        layout rule — a partitioned relation is clustered by its column
+        (one shuffle, one file per partition value per writer), any other
+        is coalesced to 8 writers — with a row-group-sized file cap.  The
+        writes run concurrently, then one commit inherits the source's
+        applied chain.  Tombstones are applied by the caller, so the new
+        snapshot lists no tombstone relation."""
+
+        def job(rel: str, df: DataFrame):
+            col = self.partitions.get(rel)
+            w = df.repartition(col).write.partitionBy(col) if col else df.coalesce(8).write
+            w = w.option("maxRecordsPerFile", 5_000_000)
+            return lambda: w.parquet(os.path.join(dst, rel))
+
+        run_jobs(*[job(rel, df) for rel, df in frames.items()])
+        return self.commit(dst, meta=meta, applied_from=applied_from)
+
+
+def clone_store(src: str, prefix: str) -> str:
+    """Private writable copy of a store under a fresh temp dir: a file
+    clone, valid because manifests hold root-relative paths.  Appends and
+    deletes mutate a store, so a shared cached generation is cloned
+    before either."""
+    import shutil
+    import tempfile
+
+    dst = os.path.join(tempfile.mkdtemp(prefix=prefix), "idx")
+    shutil.copytree(src, dst)
+    return dst
+
+
+def file_fingerprint(*paths: str) -> str:
+    """``size:mtime_ns`` of each file (``missing`` when absent), joined by
+    ``|`` — the generation key of a cache built from those files, so a
+    regenerated fixture builds a new generation instead of serving the
+    old one."""
+
+    def one(p: str) -> str:
+        try:
+            st = os.stat(p)
+        except OSError:
+            return "missing"
+        return f"{st.st_size}:{st.st_mtime_ns}"
+
+    return "|".join(one(p) for p in paths)
 
 
 TABLES = (

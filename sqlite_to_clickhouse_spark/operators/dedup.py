@@ -750,22 +750,16 @@ INCR_MOD, INCR_REM = 10, 7  # registered split: batch = doc_id % 10 == 7
 _IDX_BANDS_SCHEMA = "bk long, doc_id long, pb int"
 _IDX_TOKENS_SCHEMA = "doc_id long, tk32 array<int>, rep_id long"
 _IDX_SETS_SCHEMA = "skey array<bigint>, rep_id long"
-_IDX_RELATIONS = ("bands", "tokens", "sets")
-
-
-def _read_idx(
-    spark: SparkSession,
-    path: str,
-    rel: str,
-    schema: str,
-    *,
-    partitioned: bool = False,
-) -> DataFrame:
-    """Manifest-resolved scan of one index relation; an unwritten
-    relation (empty-corpus build: an empty partitionBy write emits no
-    files) reads as an empty frame with the declared schema."""
-    df = gio.read_relation(spark, path, rel, schema, partitioned=partitioned)
-    return df if df is not None else spark.createDataFrame([], schema)
+_IDX_TOMB_SCHEMA = "doc_id long"
+_IDX_STORE = gio.IndexStore(
+    schemas={
+        "bands": _IDX_BANDS_SCHEMA,
+        "tokens": _IDX_TOKENS_SCHEMA,
+        "sets": _IDX_SETS_SCHEMA,
+    },
+    partitions={"bands": "pb"},
+    tombstone=_IDX_TOMB_SCHEMA,
+)
 
 
 def _band_frame(bands: DataFrame) -> DataFrame:
@@ -866,13 +860,7 @@ def minhash_index_build(
                 F.col("__set").alias("skey"), F.col("__rep").alias("rep_id")
             ).write.parquet(os.path.join(path, "sets")),
         )
-        # Publish the initial snapshot: one atomic manifest listing every
-        # relation's files — from here on, readers resolve manifests, never
-        # directory listings (io.py manifest protocol, VERDICT r9 item 4).
-        gio.manifest_commit(
-            path,
-            {rel: gio.relation_data_files(path, rel) for rel in _IDX_RELATIONS},
-        )
+        _IDX_STORE.commit(path)
     finally:
         # Released after a failed write as well as after a commit.
         for frame in persisted:
@@ -888,7 +876,6 @@ def minhash_index_append(
     hash_mode: str | None = None,
     persisted_out: "list | None" = None,
     meta: "dict | None" = None,
-    precomputed: "dict | None" = None,
 ) -> None:
     """Fold a processed batch INTO the index: parquet append of the
     batch's rows, then ONE atomic manifest publish covering all three
@@ -915,28 +902,22 @@ def minhash_index_append(
     ``finally`` (or handed to ``persisted_out``).  After a
     minhash_index_dedup over the same batch the frame plan is the
     lookup's, so Spark serves it from the lookup's cached copy, and the
-    release here frees that copy too.  ``precomputed``: the
-    ``shared_out`` dict of such a lookup (the streaming handler's path);
-    its ``keyed`` frame is used directly and stays the caller's to
-    release.  Guarded on matching hash_mode, ignored otherwise."""
+    release here frees that copy too."""
     hash_mode = _resolve_hash_mode(df_new, hash_mode)
     spark = df_new.sparkSession
     # Frames persisted here go to the caller's persisted_out when given (it
     # releases them after its batch); otherwise this call owns them.
     persisted = [] if persisted_out is None else persisted_out
     try:
-        if precomputed and precomputed.get("hash_mode") == hash_mode:
-            batch = precomputed["keyed"]
-        else:
-            batch = _persist_md(
-                _batch_frame(df_new, id_col, tokens_col, hash_mode), persisted
-            )
-        idx_sets = _read_idx(spark, path, "sets", _IDX_SETS_SCHEMA)
+        batch = _persist_md(
+            _batch_frame(df_new, id_col, tokens_col, hash_mode), persisted
+        )
+        idx_sets = _IDX_STORE.read(spark, path, "sets")
         m = batch.join(idx_sets, batch["__set"] == idx_sets["skey"], "left")
         fresh_reps = m.filter(
             F.col("rep_id").isNull() & (F.col("__id") == F.col("__rep"))
         )
-        with gio.manifest_append(path, list(_IDX_RELATIONS), meta=meta):
+        with gio.manifest_append(path, list(_IDX_STORE.schemas), meta=meta):
             # tokens/ first and alone: it reads every frame row, so a cold
             # call materializes the batch frame here once instead of in
             # each of the concurrent writes below.
@@ -971,18 +952,6 @@ def minhash_index_append(
                 frame.unpersist()
 
 
-_IDX_TOMB_SCHEMA = "doc_id long"
-
-
-def _read_tombstones(spark: SparkSession, path: str) -> "DataFrame | None":
-    """The index's tombstone relation, or None when no delete has ever
-    been COMMITTED (the overwhelmingly common case — the None keeps the
-    no-delete lookup plan byte-identical to pre-tombstone rounds).
-    Manifest-resolved: a delete whose manifest publish didn't land is
-    invisible, exactly like an uncommitted append."""
-    return gio.read_relation(spark, path, "tombstones", _IDX_TOMB_SCHEMA)
-
-
 def minhash_index_delete(ids: DataFrame, path: str, *, id_col: str = "doc_id") -> None:
     """Delete docs from the index by TOMBSTONE — the GDPR-shape
     counterpart of maintenance_delete_rows (etl.py) for the dedup index:
@@ -997,10 +966,7 @@ def minhash_index_delete(ids: DataFrame, path: str, *, id_col: str = "doc_id") -
     (minhash_index_compact) physically drops tombstoned rows and clears
     the tombstone relation.  Contract: doc ids are never reused — a
     tombstone is forever until compaction."""
-    with gio.manifest_append(path, ["tombstones"]):
-        ids.select(F.col(id_col).cast("long").alias("doc_id")).write.mode(
-            "append"
-        ).parquet(os.path.join(path, "tombstones"))
+    _IDX_STORE.delete(ids.select(id_col), path)
 
 
 def minhash_index_dedup(
@@ -1013,7 +979,6 @@ def minhash_index_dedup(
     threshold: float = JACCARD_T,
     hash_mode: str | None = None,
     persisted_out: "list | None" = None,
-    shared_out: "dict | None" = None,
     exclude_ids: "DataFrame | None" = None,
 ) -> DataFrame:
     """Near-dup pairs of a NEW batch against the persisted index plus
@@ -1041,12 +1006,6 @@ def minhash_index_dedup(
     minhash_index_append of the same batch, which builds the same plan,
     reads it from the cache and releases it.
 
-    ``shared_out`` (guide §1.2 "don't compute things twice"): when a
-    caller is about to APPEND the same batch right after this lookup (the
-    streaming ingest handler), pass a dict and hand it to
-    ``minhash_index_append(precomputed=...)``: it receives ``hash_mode``,
-    the batch frame as ``keyed`` and the rep band frame as ``rep_bands``.
-
     ``exclude_ids`` (r13, VERDICT r12 item 7 — the streaming retry
     window): a one-column frame of doc ids to treat as ABSENT from the
     index side.  A foreachBatch retry whose append already COMMITTED
@@ -1057,12 +1016,6 @@ def minhash_index_dedup(
     only ever add the batch's own rows).  None (the default) leaves the
     common-path plan untouched."""
     hash_mode = _resolve_hash_mode(df_new, hash_mode)
-    if shared_out is not None and persisted_out is None:
-        # shared_out hands a PERSISTED frame to a follow-up append, so the
-        # caller must also take the unpersist handle — a looping caller
-        # using shared_out alone would leak disk-backed cached blocks per
-        # batch (ADVICE r12).
-        raise ValueError("shared_out requires persisted_out (unpersist handles)")
     # BATCH-sized and fanned into every join below: persisted, which
     # inverts the corpus-side no-persist rule (minhash_bands_tokens) —
     # the exact asymmetry of the serving path.
@@ -1071,8 +1024,6 @@ def minhash_index_dedup(
     )
     reps = batch.filter(F.col("__id") == F.col("__rep"))
     rep_bands = reps.select("__id", F.explode("bks").alias("bk"))
-    if shared_out is not None:
-        shared_out.update(hash_mode=hash_mode, keyed=batch, rep_bands=rep_bands)
     probed = [
         int(r["pb"])
         for r in rep_bands.select(
@@ -1088,7 +1039,7 @@ def minhash_index_dedup(
     rep_tok = reps.select("__id", "__tk32")
     members = batch.select("__rep", "__id")
     if probed:
-        idx_tok = _read_idx(spark, path, "tokens", _IDX_TOKENS_SCHEMA)
+        idx_tok = _IDX_STORE.read(spark, path, "tokens")
         if exclude_ids is not None:
             # Retry-after-committed-append (see docstring): drop the batch's
             # own rows from the member store.  Bands rows of excluded reps
@@ -1114,11 +1065,11 @@ def minhash_index_dedup(
         # fully-deleted clusters drop out in the verify inner join.
         # Compaction (minhash_index_compact) physically drops tombstoned
         # rows and re-labels clusters by their live minimum.
-        tomb = _read_tombstones(spark, path)
+        tomb = _IDX_STORE.tombstones(spark, path)
         if tomb is not None:
             idx_tok = idx_tok.join(tomb, "doc_id", "left_anti")
         other_bands = other_bands.unionByName(
-            _read_idx(spark, path, "bands", _IDX_BANDS_SCHEMA, partitioned=True)
+            _IDX_STORE.read(spark, path, "bands")
             .filter(F.col("pb").isin(probed))  # static partition pruning
             .select(F.col("doc_id").alias("__id"), "bk")
         )
@@ -1208,12 +1159,7 @@ def _incr_index_path(
     CURRENT swings, concurrent readers of the old one are untouched)."""
     from sqlite_to_clickhouse_spark.io import ensure_generation
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fp = "missing"
+    fp = gio.file_fingerprint(os.path.join(sf_dir, "documents.parquet"))
     # "|m1": manifest-committed layout (r10) — a cached pre-manifest
     # generation fingerprints differently and is rebuilt, never half-read.
     # "|c1": pb-clustered bands layout (r12) — a cached generation built
@@ -1228,6 +1174,20 @@ def _incr_index_path(
         )
 
     return ensure_generation("minhash_idx", sf_dir, fp, _build, force=force)
+
+
+def _relation_counts(spark: SparkSession, path: str) -> DataFrame:
+    """One row of the index's three relation sizes, counted by independent
+    jobs run concurrently (io.run_jobs)."""
+    counts = gio.run_jobs(
+        *[
+            (lambda r: lambda: _IDX_STORE.read(spark, path, r).count())(rel)
+            for rel in _IDX_STORE.schemas
+        ]
+    )
+    return spark.createDataFrame(
+        [tuple(counts)], "band_rows bigint, token_rows bigint, set_rows bigint"
+    )
 
 
 @register(
@@ -1259,13 +1219,7 @@ def dedup_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     (not just in-memory) breaks the gate."""
     hash_mode = spark.conf.get("spark.graft.minhash.hash", "md5")
     path = _incr_index_path(spark, sf_dir, hash_mode, force=True)
-    band_rows = _read_idx(spark, path, "bands", _IDX_BANDS_SCHEMA, partitioned=True).count()
-    token_rows = _read_idx(spark, path, "tokens", _IDX_TOKENS_SCHEMA).count()
-    set_rows = _read_idx(spark, path, "sets", _IDX_SETS_SCHEMA).count()
-    return spark.createDataFrame(
-        [(band_rows, token_rows, set_rows)],
-        "band_rows bigint, token_rows bigint, set_rows bigint",
-    )
+    return _relation_counts(spark, path)
 
 
 @register(
@@ -1315,10 +1269,10 @@ def minhash_index_compact(spark: SparkSession, path: str, dst: str) -> None:
     after which the compacted index carries no tombstone relation at all
     and is bit-identical to an index built on the corpus minus the
     deleted docs (pinned in tests/test_minhash_property.py)."""
-    bands = _read_idx(spark, path, "bands", _IDX_BANDS_SCHEMA, partitioned=True)
-    tokens = _read_idx(spark, path, "tokens", _IDX_TOKENS_SCHEMA)
-    sets = _read_idx(spark, path, "sets", _IDX_SETS_SCHEMA)
-    tomb = _read_tombstones(spark, path)
+    bands, tokens, sets = (
+        _IDX_STORE.read(spark, path, rel) for rel in _IDX_STORE.schemas
+    )
+    tomb = _IDX_STORE.tombstones(spark, path)
     if tomb is not None:
         tokens = tokens.join(tomb, "doc_id", "left_anti")
         # old cluster label -> min live member (re-election); inner joins
@@ -1333,33 +1287,8 @@ def minhash_index_compact(spark: SparkSession, path: str, dst: str) -> None:
         sets = sets.join(remap, "rep_id").select(
             "skey", F.col("__new").alias("rep_id")
         )
-    def _write_rel(rel: str, df: DataFrame):
-        return lambda: (
-            df.coalesce(8)
-            .write.option("maxRecordsPerFile", 5_000_000)
-            .parquet(os.path.join(dst, rel))
-        )
-
-    # The three compacted-relation rewrites are independent jobs —
-    # overlap them from driver threads (guide §2.6).
-    gio.run_jobs(
-        lambda: (
-            bands.repartition("pb")
-            .write.partitionBy("pb")
-            .option("maxRecordsPerFile", 5_000_000)
-            .parquet(os.path.join(dst, "bands"))
-        ),
-        _write_rel("tokens", tokens),
-        _write_rel("sets", sets),
-    )
-    # The compacted store's initial snapshot: tombstones physically
-    # applied, so the manifest lists no tombstone relation at all.  The
-    # source's applied-epoch chain carries over — a stream swapped onto
-    # the compacted store must still skip epochs it already ingested.
-    gio.manifest_commit(
-        dst,
-        {rel: gio.relation_data_files(dst, rel) for rel in _IDX_RELATIONS},
-        applied_seed=gio.manifest_applied_chain(path),
+    _IDX_STORE.rewrite(
+        dst, {"bands": bands, "tokens": tokens, "sets": sets}, applied_from=path
     )
 
 
@@ -1399,59 +1328,26 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed set must join that cluster, never spawn a duplicate
     representative); file-count collapse and lookup-equality are pinned
     in tests/test_minhash_property.py."""
-    import tempfile
-
-    import shutil
-
     hash_mode = spark.conf.get("spark.graft.minhash.hash", "md5")
     docs = table(spark, sf_dir, "documents")
     toks = _doc_tokens(docs)
-    base = tempfile.mkdtemp(prefix="graft_idx_compact_")
-    grown = os.path.join(base, "grown")
-    compacted = os.path.join(base, "compacted")
     # Clone the shared corpus generation (appends below mutate it); a
     # file clone is the production snapshot, not a re-band of the corpus.
-    shutil.copytree(_incr_index_path(spark, sf_dir, hash_mode), grown)
+    grown = gio.clone_store(
+        _incr_index_path(spark, sf_dir, hash_mode), "graft_idx_compact_"
+    )
+    compacted = os.path.join(os.path.dirname(grown), "compacted")
     minhash_index_append(
         toks.filter(_incr_batch_pred()), "doc_id", "tk", grown,
         hash_mode=hash_mode,
     )
     minhash_index_compact(spark, grown, compacted)
-    # Three independent count jobs over the compacted relations — overlap
-    # them from driver threads (guide §2.6) instead of paying three
-    # sequential job scheduling/teardown tails.
-    counts = gio.run_jobs(
-        *[
-            (lambda r, s: lambda: spark.read.schema(s)
-             .parquet(os.path.join(compacted, r)).count())(rel, schema)
-            for rel, schema in (
-                ("bands", _IDX_BANDS_SCHEMA),
-                ("tokens", _IDX_TOKENS_SCHEMA),
-                ("sets", _IDX_SETS_SCHEMA),
-            )
-        ]
-    )
-    return spark.createDataFrame(
-        [tuple(counts)], "band_rows bigint, token_rows bigint, set_rows bigint"
-    )
+    return _relation_counts(spark, compacted)
 
 
 DEL_MOD, DEL_REM = 30, 3  # registered delete set: corpus docs, doc_id % 30 == 3
 # (30·k + 3) % 10 ∈ {3} ≠ 7, so the deleted set never intersects the
 # ingest batch (doc_id % 10 == 7) — deletes target only INDEXED docs.
-
-
-def _clone_incr_index(spark: SparkSession, sf_dir: str, hash_mode: str) -> str:
-    """Private mutable copy of the shared corpus index generation (file
-    clone — the production snapshot analog): deletes and appends mutate,
-    so the cached generation other ops reuse must never be the target."""
-    import shutil
-    import tempfile
-
-    src = _incr_index_path(spark, sf_dir, hash_mode)
-    dst = os.path.join(tempfile.mkdtemp(prefix="graft_idx_del_"), "idx")
-    shutil.copytree(src, dst)
-    return dst
 
 
 def _deleted_ids(docs: DataFrame) -> DataFrame:
@@ -1484,7 +1380,7 @@ def dedup_incremental_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs with no deleted endpoint: delete-then-lookup must be
     bit-identical to rebuild-without-the-deleted."""
     hash_mode = spark.conf.get("spark.graft.minhash.hash", "md5")
-    idx = _clone_incr_index(spark, sf_dir, hash_mode)
+    idx = gio.clone_store(_incr_index_path(spark, sf_dir, hash_mode), "graft_idx_del_")
     docs = table(spark, sf_dir, "documents")
     minhash_index_delete(_deleted_ids(docs), idx)
     batch = docs.filter(_incr_batch_pred())
@@ -1530,27 +1426,12 @@ def dedup_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     hash_mode = spark.conf.get("spark.graft.minhash.hash", "md5")
-    idx = _clone_incr_index(spark, sf_dir, hash_mode)
+    idx = gio.clone_store(_incr_index_path(spark, sf_dir, hash_mode), "graft_idx_del_")
     docs = table(spark, sf_dir, "documents")
     minhash_index_delete(_deleted_ids(docs), idx)
     compacted = os.path.join(tempfile.mkdtemp(prefix="graft_idx_delc_"), "idx")
     minhash_index_compact(spark, idx, compacted)
-    # Independent count jobs, overlapped (guide §2.6) — same as
-    # dedup_index_compact's closing counts.
-    counts = gio.run_jobs(
-        *[
-            (lambda r, s: lambda: spark.read.schema(s)
-             .parquet(os.path.join(compacted, r)).count())(rel, schema)
-            for rel, schema in (
-                ("bands", _IDX_BANDS_SCHEMA),
-                ("tokens", _IDX_TOKENS_SCHEMA),
-                ("sets", _IDX_SETS_SCHEMA),
-            )
-        ]
-    )
-    return spark.createDataFrame(
-        [tuple(counts)], "band_rows bigint, token_rows bigint, set_rows bigint"
-    )
+    return _relation_counts(spark, compacted)
 
 
 def _simhash_expr(tokens_col):

@@ -44,6 +44,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sqlite_to_clickhouse_spark import io as gio
 from sqlite_to_clickhouse_spark.io import table
 from sqlite_to_clickhouse_spark.registry import register
 
@@ -752,19 +753,20 @@ def er_golden_record_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every sf, not by fixture luck.
 # ---------------------------------------------------------------------------
 
-_ER_IDX_RELATIONS = ("entities", "postings", "stopkeys", "edges")
 _ER_ENT_SCHEMA = "nm string, entity_id string, gen int"
 _ER_POST_SCHEMA = "w string, nm string"
 _ER_STOP_SCHEMA = "w string"
 _ER_EDGE_SCHEMA = "name_a string, name_b string"
 _ER_TOMB_SCHEMA = "nm string"
-
-
-def _er_read(spark, path, rel, schema):
-    from sqlite_to_clickhouse_spark import io as gio
-
-    df = gio.read_relation(spark, path, rel, schema)
-    return df if df is not None else spark.createDataFrame([], schema)
+_ER_STORE = gio.IndexStore(
+    schemas={
+        "entities": _ER_ENT_SCHEMA,
+        "postings": _ER_POST_SCHEMA,
+        "stopkeys": _ER_STOP_SCHEMA,
+        "edges": _ER_EDGE_SCHEMA,
+    },
+    tombstone=_ER_TOMB_SCHEMA,
+)
 
 
 def er_index_build(names: DataFrame, path: str) -> None:
@@ -773,20 +775,17 @@ def er_index_build(names: DataFrame, path: str) -> None:
     the entity map from ONE connected-components run — the clustering
     cost er_incremental_match used to pay per call, paid once here.
     Publishes the initial snapshot via one atomic manifest commit."""
-    from sqlite_to_clickhouse_spark import io as gio
     from sqlite_to_clickhouse_spark.operators.dedup import connected_components
 
-    spark = names.sparkSession
     names = names.select("nm").distinct()
+    # The same plan as blocked_name_pairs' persisted words, so its persist
+    # is a cache hit on this frame and the finally below releases both.
     words = (
         names.select("nm", F.explode(F.split(F.col("nm"), " ")).alias("w"))
         .filter(F.col("w") != "")
         .distinct()
+        .persist()
     )
-    dfc = words.groupBy("w").agg(F.count("*").alias("df"))
-    keys = dfc.filter(F.col("df") <= _ER_BLOCK_DF_CAP).select("w")
-    stop = dfc.filter(F.col("df") > _ER_BLOCK_DF_CAP).select("w")
-    postings = words.join(F.broadcast(stop), "w", "left_anti").select("w", "nm")
     # The verified pair graph is the build's most expensive subtree
     # (blocking joins + per-candidate edit distance) and is consumed
     # TWICE — by the clustering below and by the edges/ write.  CC
@@ -794,27 +793,30 @@ def er_index_build(names: DataFrame, path: str) -> None:
     # before returning, so without this persist the edges write would
     # re-run the whole blocking+verify pipeline from scratch.
     pairs = blocked_name_pairs(names).select("name_a", "name_b").persist()
-    comp = connected_components(
-        pairs.select(F.col("name_a").alias("src"), F.col("name_b").alias("dst"))
-    ).select(F.col("node").alias("nm"), F.col("component_id").alias("eid"))
-    entities = names.join(comp, "nm", "left").select(
-        "nm",
-        F.coalesce(F.col("eid"), F.col("nm")).alias("entity_id"),
-        F.lit(0).alias("gen"),
-    )
-    # Independent relation writes — overlap the jobs (guide §2.6).
-    gio.run_jobs(
-        lambda: entities.write.parquet(os.path.join(path, "entities")),
-        lambda: postings.write.parquet(os.path.join(path, "postings")),
-        lambda: stop.write.parquet(os.path.join(path, "stopkeys")),
-        lambda: pairs.write.parquet(os.path.join(path, "edges")),
-    )
-    pairs.unpersist()
-    gio.manifest_commit(
-        path,
-        {rel: gio.relation_data_files(path, rel) for rel in _ER_IDX_RELATIONS},
-        meta={"gen": 0},
-    )
+    try:
+        dfc = words.groupBy("w").agg(F.count("*").alias("df"))
+        stop = dfc.filter(F.col("df") > _ER_BLOCK_DF_CAP).select("w")
+        postings = words.join(F.broadcast(stop), "w", "left_anti").select("w", "nm")
+        comp = connected_components(
+            pairs.select(F.col("name_a").alias("src"), F.col("name_b").alias("dst"))
+        ).select(F.col("node").alias("nm"), F.col("component_id").alias("eid"))
+        entities = names.join(comp, "nm", "left").select(
+            "nm",
+            F.coalesce(F.col("eid"), F.col("nm")).alias("entity_id"),
+            F.lit(0).alias("gen"),
+        )
+        # Independent relation writes, run concurrently.
+        gio.run_jobs(
+            lambda: entities.write.parquet(os.path.join(path, "entities")),
+            lambda: postings.write.parquet(os.path.join(path, "postings")),
+            lambda: stop.write.parquet(os.path.join(path, "stopkeys")),
+            lambda: pairs.write.parquet(os.path.join(path, "edges")),
+        )
+        _ER_STORE.commit(path, meta={"gen": 0})
+    finally:
+        # Released after a failed write as well as after a commit.
+        words.unpersist()
+        pairs.unpersist()
 
 
 def er_index_entities(spark: SparkSession, path: str) -> DataFrame:
@@ -824,16 +826,14 @@ def er_index_entities(spark: SparkSession, path: str) -> DataFrame:
     is one shuffle of a distinct-names-sized relation."""
     from pyspark.sql import Window
 
-    from sqlite_to_clickhouse_spark import io as gio
-
-    ent = _er_read(spark, path, "entities", _ER_ENT_SCHEMA)
+    ent = _ER_STORE.read(spark, path, "entities")
     w = Window.partitionBy("nm").orderBy(F.col("gen").desc())
     cur = (
         ent.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select("nm", "entity_id")
     )
-    tomb = gio.read_relation(spark, path, "tombstones", _ER_TOMB_SCHEMA)
+    tomb = _ER_STORE.tombstones(spark, path)
     if tomb is not None:
         cur = cur.join(tomb, "nm", "left_anti")
     return cur
@@ -842,8 +842,6 @@ def er_index_entities(spark: SparkSession, path: str) -> DataFrame:
 def _er_next_gen(spark: SparkSession, path: str) -> int:
     """Next entities generation number, from the commit metadata (one
     manifest read, no data scan)."""
-    from sqlite_to_clickhouse_spark import io as gio
-
     m = gio.manifest_read(path) or {}
     return int(m.get("meta", {}).get("gen", 0)) + 1
 
@@ -860,11 +858,9 @@ def er_index_match(
     resolve (anti-joined at the posting read)."""
     from pyspark.sql import Window
 
-    from sqlite_to_clickhouse_spark import io as gio
-
     bat = batch_names.select("nm").distinct()
-    postings = _er_read(spark, path, "postings", _ER_POST_SCHEMA)
-    tomb = gio.read_relation(spark, path, "tombstones", _ER_TOMB_SCHEMA)
+    postings = _ER_STORE.read(spark, path, "postings")
+    tomb = _ER_STORE.tombstones(spark, path)
     if tomb is not None:
         postings = postings.join(tomb, "nm", "left_anti")
     bwords = (
@@ -948,7 +944,6 @@ def er_index_append(
     it would create an unreachable tombstone/entities row."""
     from pyspark.sql import Window
 
-    from sqlite_to_clickhouse_spark import io as gio
     from sqlite_to_clickhouse_spark.operators.dedup import connected_components
 
     bat = new_names.select("nm").filter(F.col("nm").isNotNull()).distinct()
@@ -963,11 +958,11 @@ def er_index_append(
         cur = er_index_entities(spark, path).persist()
     persisted: list = []
     try:
-        postings = _er_read(spark, path, "postings", _ER_POST_SCHEMA)
-        tomb = gio.read_relation(spark, path, "tombstones", _ER_TOMB_SCHEMA)
+        postings = _ER_STORE.read(spark, path, "postings")
+        tomb = _ER_STORE.tombstones(spark, path)
         if tomb is not None:
             postings = postings.join(tomb, "nm", "left_anti")
-        stop = _er_read(spark, path, "stopkeys", _ER_STOP_SCHEMA)
+        stop = _ER_STORE.read(spark, path, "stopkeys")
 
         bwords = (
             bat.select("nm", F.explode(F.split("nm", " ")).alias("w"))
@@ -1089,7 +1084,7 @@ def er_index_append(
         untomb = tomb is not None and tomb.join(bat, "nm", "semi").limit(1).count() > 0
         with gio.manifest_append(
             path,
-            list(_ER_IDX_RELATIONS),
+            list(_ER_STORE.schemas),
             meta={**(meta or {}), "gen": gen},
             replace=["tombstones"] if untomb else (),
         ):
@@ -1136,8 +1131,6 @@ def er_index_delete(spark: SparkSession, del_names: DataFrame, path: str) -> Non
     (tombstone-bounded, never catalog-bounded), and every survivor whose
     entity changed gets a fresh entities row at the next gen — all
     published in the same atomic commit as the tombstones."""
-    from sqlite_to_clickhouse_spark import io as gio
-
     from sqlite_to_clickhouse_spark.operators.dedup import connected_components
 
     # NULL is not an entity name (same contract as er_index_append,
@@ -1157,7 +1150,7 @@ def er_index_delete(spark: SparkSession, del_names: DataFrame, path: str) -> Non
             .select("nm")
             .join(dels, "nm", "left_anti")
         )
-        edges = _er_read(spark, path, "edges", _ER_EDGE_SCHEMA)
+        edges = _ER_STORE.read(spark, path, "edges")
         sub_edges = (
             edges.join(
                 survivors.select(F.col("nm").alias("name_a")).distinct(), "name_a", "semi"
@@ -1179,18 +1172,7 @@ def er_index_delete(spark: SparkSession, del_names: DataFrame, path: str) -> Non
             .filter(F.col("n.entity_id") != F.col("c.entity_id"))
             .select("nm", F.col("n.entity_id").alias("entity_id"), F.lit(gen).alias("gen"))
         )
-        with gio.manifest_append(
-            path, ["entities", "tombstones"], meta={"gen": gen}
-        ):
-            # Independent appends — overlap the two jobs (guide §2.6).
-            gio.run_jobs(
-                lambda: changed.write.mode("append").parquet(
-                    os.path.join(path, "entities")
-                ),
-                lambda: dels.write.mode("append").parquet(
-                    os.path.join(path, "tombstones")
-                ),
-            )
+        _ER_STORE.delete(dels, path, appends={"entities": changed}, meta={"gen": gen})
     finally:
         dels.unpersist()
         cur.unpersist()
@@ -1203,13 +1185,11 @@ def er_index_compact(spark: SparkSession, path: str, dst: str) -> None:
     stopkeys copy over, and the compacted snapshot lists no tombstone
     relation at all — bit-identical reads to the tombstoned store
     (pinned by the registered delete_compact gate)."""
-    from sqlite_to_clickhouse_spark import io as gio
-
     cur = er_index_entities(spark, path)  # LWW + tombstones applied
-    postings = _er_read(spark, path, "postings", _ER_POST_SCHEMA)
-    edges = _er_read(spark, path, "edges", _ER_EDGE_SCHEMA)
-    stop = _er_read(spark, path, "stopkeys", _ER_STOP_SCHEMA)
-    tomb = gio.read_relation(spark, path, "tombstones", _ER_TOMB_SCHEMA)
+    postings, stop, edges = (
+        _ER_STORE.read(spark, path, rel) for rel in ("postings", "stopkeys", "edges")
+    )
+    tomb = _ER_STORE.tombstones(spark, path)
     if tomb is not None:
         postings = postings.join(tomb, "nm", "left_anti")
         edges = (
@@ -1217,22 +1197,16 @@ def er_index_compact(spark: SparkSession, path: str, dst: str) -> None:
                 tomb.select(F.col("nm").alias("name_a")), "name_a", "left_anti"
             ).join(tomb.select(F.col("nm").alias("name_b")), "name_b", "left_anti")
         ).select("name_a", "name_b")
-    # Independent compacted-relation rewrites — overlap the jobs
-    # (guide §2.6; all four read committed files, no shared lineage).
-    gio.run_jobs(
-        lambda: cur.select("nm", "entity_id", F.lit(0).alias("gen"))
-        .write.parquet(os.path.join(dst, "entities")),
-        lambda: postings.write.parquet(os.path.join(dst, "postings")),
-        lambda: stop.write.parquet(os.path.join(dst, "stopkeys")),
-        lambda: edges.write.parquet(os.path.join(dst, "edges")),
-    )
-    # applied_seed: the compacted store inherits the source's applied-
-    # epoch chain, so a writer swapped onto it keeps exactly-once.
-    gio.manifest_commit(
+    _ER_STORE.rewrite(
         dst,
-        {rel: gio.relation_data_files(dst, rel) for rel in _ER_IDX_RELATIONS},
+        {
+            "entities": cur.select("nm", "entity_id", F.lit(0).alias("gen")),
+            "postings": postings,
+            "stopkeys": stop,
+            "edges": edges,
+        },
         meta={"gen": 0},
-        applied_seed=gio.manifest_applied_chain(path),
+        applied_from=path,
     )
 
 
@@ -1264,12 +1238,7 @@ def _er_index_path(spark: SparkSession, sf_dir: str, *, force: bool = False) -> 
     point of the store)."""
     from sqlite_to_clickhouse_spark.io import ensure_generation
 
-    src = os.path.join(sf_dir, "part.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fp = "missing"
+    fp = gio.file_fingerprint(os.path.join(sf_dir, "part.parquet"))
     fp = (
         f"{fp}|cap{_ER_BLOCK_DF_CAP}|d{_ER_MAXDIST}"
         f"|nmb{_ER_IDX_BUCKET_MOD}r{_ER_IDX_BUCKET_REM}|v2"
@@ -1279,18 +1248,6 @@ def _er_index_path(spark: SparkSession, sf_dir: str, *, force: bool = False) -> 
         er_index_build(_er_catalog_names(spark, sf_dir), gen)
 
     return ensure_generation("er_idx", sf_dir, fp, _build, force=force)
-
-
-def _clone_er_index(spark: SparkSession, sf_dir: str) -> str:
-    """Private mutable copy of the shared catalog index generation
-    (appends/deletes mutate; the cached generation must stay clean)."""
-    import shutil
-    import tempfile
-
-    src = _er_index_path(spark, sf_dir)
-    dst = os.path.join(tempfile.mkdtemp(prefix="er_idx_"), "idx")
-    shutil.copytree(src, dst)
-    return dst
 
 
 _ER_SETMATCH_T = 0.5  # token-set Jaccard acceptance threshold
@@ -1500,7 +1457,7 @@ def er_index_build_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _er_index_path(spark, sf_dir, force=True)
     ents = er_index_entities(spark, path)
     pw = (
-        _er_read(spark, path, "postings", _ER_POST_SCHEMA)
+        _ER_STORE.read(spark, path, "postings")
         .groupBy("nm")
         .agg(F.count(F.lit(1)).alias("nw"))
     )
@@ -1591,7 +1548,7 @@ def er_index_append_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge re-labeling, last-write-wins read) is exact at any sf.
     The catalog is never re-paired: the relabel runs over the stored
     map's star edges plus the batch's verified pairs only."""
-    idx = _clone_er_index(spark, sf_dir)
+    idx = gio.clone_store(_er_index_path(spark, sf_dir), "er_idx_")
     # One LWW window for both consumers (r13): the live-name filter and
     # the append's relabel share the same pre-append entity view.
     cur = er_index_entities(spark, idx).persist()
@@ -1656,7 +1613,7 @@ def er_index_delete_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     sole BRIDGE name splits its cluster) are both hash-gated; the
     deterministic bridge-split synthetic is additionally pinned in
     tests/test_er_index.py."""
-    idx = _clone_er_index(spark, sf_dir)
+    idx = gio.clone_store(_er_index_path(spark, sf_dir), "er_idx_")
     er_index_delete(spark, _er_registered_dels(spark, sf_dir), idx)
     ents = er_index_entities(spark, idx)
     return ents.select(
@@ -1687,9 +1644,7 @@ def er_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions via exceptAll), the compacted snapshot must list no
     tombstone relation, and the surviving name/entity counts are
     differentially gated against the stored-edge delete oracle."""
-    from sqlite_to_clickhouse_spark import io as gio
-
-    idx = _clone_er_index(spark, sf_dir)
+    idx = gio.clone_store(_er_index_path(spark, sf_dir), "er_idx_")
     er_index_delete(spark, _er_registered_dels(spark, sf_dir), idx)
     import tempfile
 

@@ -884,14 +884,11 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
-    from sqlite_to_clickhouse_spark.io import ensure_generation
+    from sqlite_to_clickhouse_spark.io import ensure_generation, file_fingerprint
     from sqlite_to_clickhouse_spark.sources.sinks import write_bucketed
 
-    fp = "|".join(
-        (lambda st: f"{st.st_size}:{st.st_mtime_ns}")(
-            os.stat(os.path.join(sf_dir, f"{t}.parquet"))
-        )
-        for t in ("orders", "lineitem")
+    fp = file_fingerprint(
+        *(os.path.join(sf_dir, f"{t}.parquet") for t in ("orders", "lineitem"))
     )
 
     def _build(gen: str) -> None:

@@ -1645,7 +1645,7 @@ def ann_index_build(
                       "sub": pa.array([], pa.list_(pa.float64()))}),
             os.path.join(path, "codebooks", "part-0.parquet"),
         )
-        _commit_ann_snapshot(path)
+        _ANN_STORE.commit(path)
         return spark.createDataFrame(
             [("codes", 0), ("centroids", 0), ("codebooks", 0)],
             "component STRING, n_rows BIGINT",
@@ -1706,51 +1706,29 @@ def ann_index_build(
         os.path.join(path, "codebooks", "part-0.parquet"),
     )
 
-    _commit_ann_snapshot(path)
+    _ANN_STORE.commit(path)
     report = [
-        ("codes", _read_ann_codes(spark, path).count()),
+        ("codes", _ANN_STORE.read(spark, path, "codes").count()),
         ("centroids", len(cent_ids)),
         ("codebooks", m * kk),
     ]
     return spark.createDataFrame(report, "component STRING, n_rows BIGINT")
 
 
-_ANN_RELATIONS = ("codes", "centroids", "codebooks")
-
-
-def _commit_ann_snapshot(path: str, applied_from: "str | None" = None) -> None:
-    """Publish the store's initial manifest: one atomic commit listing
-    every relation's files (io.py manifest protocol, VERDICT r9 item 4).
-    From here on readers resolve manifests, never directory listings.
-    ``applied_from`` carries a source store's applied-epoch chain into
-    the fresh manifest (compaction)."""
-    gio.manifest_commit(
-        path,
-        {rel: gio.relation_data_files(path, rel) for rel in _ANN_RELATIONS},
-        applied_seed=(
-            gio.manifest_applied_chain(applied_from) if applied_from else None
-        ),
-    )
-
-
-def _read_ann_codes(spark: SparkSession, path: str) -> DataFrame:
-    """Manifest-resolved scan of the codes relation (``basePath`` so the
-    ``bucket=`` partition column survives the explicit file-list read —
-    partition-type inference behaves exactly as the directory scan did)."""
-    df = gio.read_relation(spark, path, "codes", partitioned=True)
-    if df is None:  # no committed snapshot / no code files
-        return spark.createDataFrame([], "vec_id bigint, bucket bigint, pq_code bigint")
-    return df
-
-
-def _read_ann_tombstones(
-    spark: SparkSession, path: str, id_col: str
-) -> "DataFrame | None":
-    """The ANN index's tombstone relation, or None when no delete has
-    ever been COMMITTED (the common case — the None keeps the no-delete
-    query plan unchanged).  Manifest-resolved: an uncommitted delete is
-    invisible, exactly like an uncommitted append."""
-    return gio.read_relation(spark, path, "tombstones", f"{id_col} long")
+# codes/ is read with the schema its files carry (the id column is the
+# caller's id_col; the bucket partition type is inferred, as a directory
+# scan would); the quantizer relations are read with pyarrow
+# (_load_quantizer).  Tombstones always key on vec_id.
+_ANN_STORE = gio.IndexStore(
+    schemas={
+        "codes": "vec_id bigint, bucket bigint, pq_code bigint",
+        "centroids": "cent_id bigint, c_emb array<double>",
+        "codebooks": "j int, c int, sub array<double>",
+    },
+    partitions={"codes": "bucket"},
+    tombstone="vec_id long",
+    inferred=frozenset({"codes"}),
+)
 
 
 def ann_index_delete(ids: DataFrame, path: str, *, id_col: str = "vec_id") -> None:
@@ -1765,10 +1743,7 @@ def ann_index_delete(ids: DataFrame, path: str, *, id_col: str = "vec_id") -> No
     and every surviving code row are untouched.  ann_index_compact
     physically drops tombstoned rows and clears the relation.  Contract:
     vector ids are never reused."""
-    with gio.manifest_append(path, ["tombstones"]):
-        ids.select(F.col(id_col).cast("long").alias(id_col)).write.mode(
-            "append"
-        ).parquet(os.path.join(path, "tombstones"))
+    _ANN_STORE.delete(ids.select(id_col), path)
 
 
 def ann_index_compact(
@@ -1787,29 +1762,21 @@ def ann_index_compact(
     undisturbed."""
     import shutil
 
-    codes = _read_ann_codes(spark, path)
-    tomb = _read_ann_tombstones(spark, path, id_col)
+    codes = _ANN_STORE.read(spark, path, "codes")
+    tomb = _ANN_STORE.tombstones(spark, path)
     if tomb is not None:
-        codes = codes.join(tomb, id_col, "left_anti")
+        codes = codes.join(tomb, codes[id_col] == tomb["vec_id"], "left_anti")
+    for rel in ("centroids", "codebooks"):
+        shutil.copytree(os.path.join(path, rel), os.path.join(dst, rel))
     if codes.limit(1).count() == 0:
         # An empty partitioned write emits no parquet footer, leaving the
         # compacted codes dir schema-less for readers — write the empty
         # relation unpartitioned (schema embedded), like ann_index_build's
         # empty-corpus branch.
         codes.write.mode("overwrite").parquet(os.path.join(dst, "codes"))
+        _ANN_STORE.commit(dst, applied_from=path)
     else:
-        (
-            codes.repartition("bucket")
-            .write.partitionBy("bucket")
-            .option("maxRecordsPerFile", 5_000_000)
-            .parquet(os.path.join(dst, "codes"))
-        )
-    for rel in ("centroids", "codebooks"):
-        shutil.copytree(os.path.join(path, rel), os.path.join(dst, rel))
-    # Compacted store's initial snapshot: tombstones physically applied,
-    # so no tombstone relation in the manifest at all; the source's
-    # applied-epoch chain carries over.
-    _commit_ann_snapshot(dst, applied_from=path)
+        _ANN_STORE.rewrite(dst, {"codes": codes}, applied_from=path)
 
 
 def ann_index_query(
@@ -1879,7 +1846,7 @@ def ann_index_query(
 
     # Static partition pruning: the IN-list reaches the scan as a
     # PartitionFilters entry, so only the routed bucket files are read.
-    codes = _read_ann_codes(spark, path).filter(
+    codes = _ANN_STORE.read(spark, path, "codes").filter(
         F.col("bucket").isin(sorted(wanted))
     )
     # Tombstone-aware serving (ann_index_delete): deleted vectors drop out
@@ -1889,9 +1856,9 @@ def ann_index_query(
     # same ADC ranking over the survivors; pinned in tests/test_llm_ops.py
     # against ann_index_compact's physical rewrite).  No tombstones → the
     # plan is byte-identical to pre-delete rounds.
-    tomb = _read_ann_tombstones(spark, path, id_col)
+    tomb = _ANN_STORE.tombstones(spark, path)
     if tomb is not None:
-        codes = codes.join(tomb, id_col, "left_anti")
+        codes = codes.join(tomb, codes[id_col] == tomb["vec_id"], "left_anti")
     w_rerank = Window.partitionBy(probe_id_col).orderBy(
         F.desc("adc"), F.asc(id_col)
     )
@@ -2023,22 +1990,6 @@ def ann_index_append(
         )
 
 
-def _source_fingerprint(sf_dir: str) -> str:
-    """(size, mtime) fingerprint of the embeddings parquet the index was
-    built from — the fixture REGENERATES between driver rounds while /tmp
-    may persist, and a stale index would silently serve neighbors of the
-    previous corpus generation."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fp = "missing"
-    # "|m1": manifest-committed layout (r10) — a cached pre-manifest
-    # generation fingerprints differently and is rebuilt, never half-read.
-    return fp + "|m1"
-
-
 def _ensure_index(spark: SparkSession, sf_dir: str, *, force: bool = False):
     """Valid persisted IVF-PQ index path for ``sf_dir``, building a FRESH
     immutable generation if none matches the source fingerprint
@@ -2051,7 +2002,11 @@ def _ensure_index(spark: SparkSession, sf_dir: str, *, force: bool = False):
     was reused (no build, no manifest)."""
     from sqlite_to_clickhouse_spark.io import ensure_generation
 
-    fp = _source_fingerprint(sf_dir)
+    # The embeddings fixture regenerates while /tmp may persist: a stale
+    # index would serve neighbors of the previous corpus.  "|m1":
+    # manifest-committed layout (r10) — a cached pre-manifest generation
+    # fingerprints differently and is rebuilt, never half-read.
+    fp = gio.file_fingerprint(os.path.join(sf_dir, "embeddings.parquet")) + "|m1"
     manifest: dict = {}
 
     def _build(gen: str) -> None:
@@ -2162,8 +2117,8 @@ def _ensure_incr_ann_index(spark: SparkSession, sf_dir: str) -> str:
     from sqlite_to_clickhouse_spark.io import ensure_generation
 
     fp = (
-        _source_fingerprint(sf_dir)
-        + f"|annincr|mod{ANN_INCR_MOD}r{ANN_INCR_REM}"
+        gio.file_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
+        + f"|m1|annincr|mod{ANN_INCR_MOD}r{ANN_INCR_REM}"
     )
 
     def _build(gen: str) -> None:
@@ -2171,19 +2126,6 @@ def _ensure_incr_ann_index(spark: SparkSession, sf_dir: str) -> str:
         ann_index_build(spark, corpus, gen).collect()
 
     return ensure_generation("ann_incr_idx", sf_dir, fp, _build)
-
-
-def _clone_incr_ann_index(spark: SparkSession, sf_dir: str) -> str:
-    """Private mutable copy of the corpus ANN index (file clone — the
-    production snapshot analog, near-free copy-on-write on object
-    stores)."""
-    import shutil
-    import tempfile
-
-    src = _ensure_incr_ann_index(spark, sf_dir)
-    dst = os.path.join(tempfile.mkdtemp(prefix="ann_incr_idx_"), "idx")
-    shutil.copytree(src, dst)
-    return dst
 
 
 @register(
@@ -2235,7 +2177,7 @@ def sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     batch = e.filter(_ann_batch_pred())
     n_all = e.count()
-    idx = _clone_incr_ann_index(spark, sf_dir)
+    idx = gio.clone_store(_ensure_incr_ann_index(spark, sf_dir), "ann_incr_idx_")
     pre_files = _code_files(idx)
     pre_state = _state_digest(idx)
     if _load_quantizer(idx) is None:
@@ -2245,7 +2187,7 @@ def sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         pre_state = _state_digest(idx)
     elif batch.limit(1).count():
         ann_index_append(spark, batch, idx)
-    post = _read_ann_codes(spark, idx).count() if n_all else 0
+    post = _ANN_STORE.read(spark, idx, "codes").count() if n_all else 0
     checks = [
         ("codes_rows_eq_corpus_plus_batch", post == n_all),
         ("quantizer_frozen", _state_digest(idx) == pre_state),
@@ -2271,7 +2213,7 @@ def sim_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe-visible (the exact rerank reads the raw vectors table).
     Append-twice-equals-once and append≡frozen-encode-of-union are pinned
     in tests/test_llm_ops.py."""
-    idx = _clone_incr_ann_index(spark, sf_dir)
+    idx = gio.clone_store(_ensure_incr_ann_index(spark, sf_dir), "ann_incr_idx_")
     batch = table(spark, sf_dir, "embeddings").filter(_ann_batch_pred())
     if _load_quantizer(idx) is None:
         ann_index_build(spark, batch, idx).collect()  # empty-corpus rebuild
@@ -2288,19 +2230,6 @@ def sim_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_DEL_MOD, ANN_DEL_REM = 30, 3  # registered delete set: vec_id % 30 == 3
-
-
-def _clone_full_index(spark: SparkSession, sf_dir: str) -> str:
-    """Private mutable copy of the shared full-corpus index generation
-    (deletes mutate; the cached generation other ops reuse must never be
-    the target)."""
-    import shutil
-    import tempfile
-
-    src, _ = _ensure_index(spark, sf_dir)
-    dst = os.path.join(tempfile.mkdtemp(prefix="ann_del_idx_"), "idx")
-    shutil.copytree(src, dst)
-    return dst
 
 
 @register(
@@ -2322,7 +2251,7 @@ def sim_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the live corpus, both break the gate.  Tombstoned-query ≡
     physically-compacted-query bit-equality is pinned in
     tests/test_llm_ops.py."""
-    idx = _clone_full_index(spark, sf_dir)
+    idx = gio.clone_store(_ensure_index(spark, sf_dir)[0], "ann_del_idx_")
     e = table(spark, sf_dir, "embeddings")
     ann_index_delete(
         e.filter(F.col("vec_id") % ANN_DEL_MOD == ANN_DEL_REM).select("vec_id"),
@@ -2369,7 +2298,7 @@ def sim_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
                     h.update(fh.read())
         return h.hexdigest()
 
-    idx = _clone_full_index(spark, sf_dir)
+    idx = gio.clone_store(_ensure_index(spark, sf_dir)[0], "ann_del_idx_")
     e = table(spark, sf_dir, "embeddings")
     ann_index_delete(
         e.filter(F.col("vec_id") % ANN_DEL_MOD == ANN_DEL_REM).select("vec_id"),
@@ -2377,7 +2306,7 @@ def sim_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     compacted = os.path.join(tempfile.mkdtemp(prefix="ann_delc_"), "idx")
     ann_index_compact(spark, idx, compacted)
-    codes_rows = _read_ann_codes(spark, compacted).count()
+    codes_rows = _ANN_STORE.read(spark, compacted, "codes").count()
     return spark.createDataFrame(
         [
             (

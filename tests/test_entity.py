@@ -185,33 +185,43 @@ def _persisted_rdds(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
-@pytest.mark.parametrize("op", ["append", "delete"])
+@pytest.mark.parametrize("op", ["append", "delete", "build-ok", "build-failed"])
 def test_failed_index_write_releases_persisted_frames(spark, tmp_path, monkeypatch, op):
     """A write that dies inside the manifest commit must not leak the
     MEMORY_AND_DISK frames the index op persisted (the live entity view,
-    the batch words and new edges, the delete set).  The store keeps its
-    pre-op snapshot either way; only block lifetimes are under test.
-    Compared as RDD-id sets, so an unrelated frame the context cleaner
-    drops meanwhile cannot mask a leak."""
+    the batch words and new edges, the delete set, the build's words and
+    pairs); a build that lands must not leak them either.  The store
+    keeps its pre-op snapshot either way; only block lifetimes are under
+    test.  Compared as RDD-id sets, so an unrelated frame the context
+    cleaner drops meanwhile cannot mask a leak."""
     from sqlite_to_clickhouse_spark import io as gio
     from sqlite_to_clickhouse_spark.operators import entity as E
 
     def names(ns):
         return spark.createDataFrame([(n,) for n in ns], "nm string")
 
+    catalog = names(["aaaa pp", "aabb pp", "bbbb pp", "zzzz qq"])
     idx = str(tmp_path / "idx")
-    E.er_index_build(names(["aaaa pp", "aabb pp", "bbbb pp", "zzzz qq"]), idx)
+    if not op.startswith("build"):
+        E.er_index_build(catalog, idx)
     before = _persisted_rdds(spark)
 
     def fail(*jobs):
         raise RuntimeError("injected write failure")
 
-    monkeypatch.setattr(gio, "run_jobs", fail)
-    with pytest.raises(RuntimeError, match="injected write failure"):
+    if op != "build-ok":
+        monkeypatch.setattr(gio, "run_jobs", fail)
+    try:
         if op == "append":
             E.er_index_append(spark, names(["aaab pp", "zzzy qq"]), idx)
-        else:
+        elif op == "delete":
             E.er_index_delete(spark, names(["aabb pp"]), idx)
+        else:
+            E.er_index_build(catalog, idx)
+    except RuntimeError as exc:
+        assert op != "build-ok" and "injected write failure" in str(exc)
+    else:
+        assert op == "build-ok"
     after = _persisted_rdds(spark)
     assert after - before == set()
     assert len(after) <= len(before)

@@ -174,7 +174,7 @@ def test_registered_append_batch_triggers_merges(spark, sf):
 
     if not os.path.isdir(sf):
         pytest.skip(f"fixture dir missing: {sf}")
-    idx = E._clone_er_index(spark, sf)
+    idx = gio.clone_store(E._er_index_path(spark, sf), "er_idx_")
     pre = E.er_index_entities(spark, idx).persist()
     fresh = E._er_batch_names(spark, sf).join(pre.select("nm"), "nm", "left_anti")
     E.er_index_append(spark, fresh, idx)

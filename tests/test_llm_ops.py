@@ -774,14 +774,14 @@ def test_ann_incremental_query_finds_appended_vectors(spark, sf_dir):
 
     from sqlite_to_clickhouse_spark.operators.similarity import (
         _ann_batch_pred,
-        _clone_incr_ann_index,
+        _ensure_incr_ann_index,
         ann_index_append,
     )
-    from sqlite_to_clickhouse_spark.io import table
+    from sqlite_to_clickhouse_spark.io import clone_store, table
 
     e = table(spark, sf_dir, "embeddings")
     batch = e.filter(_ann_batch_pred())
-    idx = _clone_incr_ann_index(spark, sf_dir)
+    idx = clone_store(_ensure_incr_ann_index(spark, sf_dir), "ann_incr_idx_")
     ann_index_append(spark, batch, idx)
     got = {
         r["vec_id"]
@@ -841,20 +841,20 @@ def test_ann_tombstoned_query_equals_compacted_query(spark, sf_dir):
     a deleted id, and the compacted copy carries no tombstone relation."""
     import os
 
-    from sqlite_to_clickhouse_spark.io import table
+    from sqlite_to_clickhouse_spark.io import clone_store, table
     from sqlite_to_clickhouse_spark.operators.similarity import (
         ANN_DEL_MOD,
         ANN_DEL_REM,
         NPROBE,
         TOP_K,
-        _clone_full_index,
+        _ensure_index,
         ann_index_compact,
         ann_index_delete,
         ann_index_query,
     )
 
     e, probes = _ann_probes(spark, sf_dir)
-    idx = _clone_full_index(spark, sf_dir)
+    idx = clone_store(_ensure_index(spark, sf_dir)[0], "ann_del_idx_")
     deleted = e.filter(F.col("vec_id") % ANN_DEL_MOD == ANN_DEL_REM)
     ann_index_delete(deleted.select("vec_id"), idx)
     import tempfile
@@ -892,18 +892,19 @@ def test_ann_tombstoned_query_keeps_pruning_and_broadcasts_antijoin(
     import contextlib
     import io as _io
 
+    from sqlite_to_clickhouse_spark.io import clone_store
     from sqlite_to_clickhouse_spark.operators.similarity import (
         ANN_DEL_MOD,
         ANN_DEL_REM,
         NPROBE,
         TOP_K,
-        _clone_full_index,
+        _ensure_index,
         ann_index_delete,
         ann_index_query,
     )
 
     e, probes = _ann_probes(spark, sf_dir)
-    idx = _clone_full_index(spark, sf_dir)
+    idx = clone_store(_ensure_index(spark, sf_dir)[0], "ann_del_idx_")
     ann_index_delete(
         e.filter(F.col("vec_id") % ANN_DEL_MOD == ANN_DEL_REM).select("vec_id"),
         idx,

@@ -224,21 +224,18 @@ def test_incremental_index_append_twice_equals_once(spark, sf_dir, tmp_path):
     assert one_shot, "fixture produced no near-dup pairs touching a batch"
 
 
-def test_append_with_precomputed_equals_plain_append(spark, sf_dir, tmp_path):
-    """r12 optimization pin: an append that REUSES the preceding lookup's
-    shared set-key/band frames (minhash_index_dedup(shared_out=...) →
-    minhash_index_append(precomputed=...), the streaming handler's path)
-    must write a store bit-identical in content to a plain append — same
-    rows in every relation, same follow-up lookup pairs."""
+def test_append_after_lookup_equals_plain_append(spark, sf_dir, tmp_path):
+    """An append that follows a lookup of the same batch (the streaming
+    handler's order: the append builds the lookup's batch-frame plan, so
+    Spark serves it from the lookup's cached copy) must write a store
+    identical in content to a plain append — same rows in every relation,
+    same lookup pairs."""
     import pyspark.sql.functions as F
 
     from sqlite_to_clickhouse_spark.io import table
     from sqlite_to_clickhouse_spark.operators.dedup import (
-        _IDX_BANDS_SCHEMA,
-        _IDX_SETS_SCHEMA,
-        _IDX_TOKENS_SCHEMA,
+        _IDX_STORE,
         _doc_tokens,
-        _read_idx,
         minhash_index_append,
         minhash_index_build,
         minhash_index_dedup,
@@ -247,48 +244,38 @@ def test_append_with_precomputed_equals_plain_append(spark, sf_dir, tmp_path):
     toks = _doc_tokens(table(spark, sf_dir, "documents"))
     corpus = toks.filter(F.col("doc_id") % 5 >= 2)
     b1 = toks.filter(F.col("doc_id") % 5 == 0)
-    b2 = toks.filter(F.col("doc_id") % 5 == 1)
 
     p_pre = str(tmp_path / "idx_pre")
     p_plain = str(tmp_path / "idx_plain")
     minhash_index_build(corpus, "doc_id", "tk", p_pre)
     minhash_index_build(corpus, "doc_id", "tk", p_plain)
 
-    shared: dict = {}
-    handles: list = []  # shared_out requires the unpersist hand-back (r13)
+    handles: list = []
     pre_pairs = _pairs(
-        minhash_index_dedup(
-            spark, b1, "doc_id", "tk", p_pre,
-            shared_out=shared, persisted_out=handles,
-        )
+        minhash_index_dedup(spark, b1, "doc_id", "tk", p_pre, persisted_out=handles)
     )
-    assert {"hash_mode", "keyed", "rep_bands"} <= set(shared)
-    minhash_index_append(b1, "doc_id", "tk", p_pre, precomputed=shared)
+    minhash_index_append(b1, "doc_id", "tk", p_pre, persisted_out=handles)
+    for frame in handles:
+        frame.unpersist()
 
-    plain_pairs = _pairs(minhash_index_dedup(spark, b1, "doc_id", "tk", p_plain))
+    # The plain side releases its lookup's frame first, so its append
+    # computes the batch frame afresh.
+    handles = []
+    plain_pairs = _pairs(
+        minhash_index_dedup(spark, b1, "doc_id", "tk", p_plain, persisted_out=handles)
+    )
+    for frame in handles:
+        frame.unpersist()
     minhash_index_append(b1, "doc_id", "tk", p_plain)
     assert pre_pairs == plain_pairs
 
-    for rel, schema, key in (
-        ("bands", _IDX_BANDS_SCHEMA, ("bk", "doc_id", "pb")),
-        ("tokens", _IDX_TOKENS_SCHEMA, None),
-        ("sets", _IDX_SETS_SCHEMA, None),
-    ):
-        a = _read_idx(spark, p_pre, rel, schema, partitioned=rel == "bands")
-        b = _read_idx(spark, p_plain, rel, schema, partitioned=rel == "bands")
+    for rel, key in (("bands", ("bk", "doc_id", "pb")), ("tokens", None), ("sets", None)):
+        a = _IDX_STORE.read(spark, p_pre, rel)
+        b = _IDX_STORE.read(spark, p_plain, rel)
         cols = list(key) if key else a.columns
         ra = sorted(map(tuple, a.select(*cols).collect()))
         rb = sorted(map(tuple, b.select(*cols).collect()))
-        assert ra == rb, f"relation {rel} diverged under precomputed append"
-
-    # A mismatched hash_mode marker must be IGNORED (fall back to plain
-    # recompute), never silently reuse frames from the other family.
-    stale = dict(shared, hash_mode="xxhash64" if shared["hash_mode"] == "md5" else "md5")
-    minhash_index_append(b2, "doc_id", "tk", p_pre, precomputed=stale)
-    minhash_index_append(b2, "doc_id", "tk", p_plain)
-    fa = _read_idx(spark, p_pre, "sets", _IDX_SETS_SCHEMA)
-    fb = _read_idx(spark, p_plain, "sets", _IDX_SETS_SCHEMA)
-    assert sorted(map(tuple, fa.collect())) == sorted(map(tuple, fb.collect()))
+        assert ra == rb, f"relation {rel} diverged under lookup-then-append"
 
 
 def test_incremental_lookup_prunes_band_partitions(spark, sf_dir, tmp_path):

@@ -1,14 +1,16 @@
 """Per-op Spark profile of the index_ingest tick: lookup and append on the
 MinHash, IVF-PQ and ER stores, one batch at a time.
 
-    python tools/profile_ingest.py --seed N --ticks K [--cold]
+    python tools/profile_ingest.py --seed N --ticks K [--cold] [--maint]
 
 Generates the benchmark's ingest corpus for seed N (``perfbench/gen.py``,
 imported read-only), builds the three stores from its initial corpus, then
 runs K ticks the way the benchmark does: the cache is cleared before each
 tick, each lookup's result is collected, and each append follows its
 store's lookup.  ``--cold`` clears the cache before every op instead, so no
-op can reuse a frame an earlier one cached.
+op can reuse a frame an earlier one cached.  ``--maint`` then runs the
+traced benchmark's maintenance: one tombstone delete per store (the seed's
+delete ids), then one compaction per store, each after a cache clear.
 
 For every op it prints the wall time and what the op cost Spark: jobs,
 stages that ran (skipped ones excluded), tasks and generated-code compiles
@@ -89,6 +91,7 @@ def main(argv=None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--ticks", type=int, default=1)
     ap.add_argument("--cold", action="store_true", help="clear the cache before every op")
+    ap.add_argument("--maint", action="store_true", help="profile one delete and one compact per store after the ticks")
     args = ap.parse_args(argv)
 
     work = tempfile.mkdtemp(prefix="profile_ingest_")
@@ -111,7 +114,7 @@ def _run(args, work: str) -> int:
     counter = JobCounter(spark)
     sz = gen.INGEST_SIZES
     cdir = os.path.join(work, "corpus")
-    gen.make_corpus(cdir, args.seed)
+    plan = gen.make_corpus(cdir, args.seed)
     docs = spark.read.parquet(os.path.join(cdir, "docs.parquet"))
     vecs = spark.read.parquet(os.path.join(cdir, "vectors.parquet"))
     names = spark.read.parquet(os.path.join(cdir, "names.parquet"))
@@ -158,11 +161,31 @@ def _run(args, work: str) -> int:
             fn()
             rows.append({"tick": b, "op": op, **counter.stop(mark)})
 
+    if args.maint:
+        dels = plan["deletes"]
+        del_ids = spark.createDataFrame([(i,) for i in dels], "id long")
+        import pyarrow.parquet as papq
+
+        nms = papq.read_table(os.path.join(cdir, "names.parquet")).column("nm").to_pylist()
+        maint = {
+            "dedup.delete": lambda: D.minhash_index_delete(del_ids.withColumnRenamed("id", "doc_id"), path["dedup"]),
+            "similarity.delete": lambda: S.ann_index_delete(del_ids.withColumnRenamed("id", "vec_id"), path["similarity"]),
+            "entity.delete": lambda: E.er_index_delete(spark, spark.createDataFrame([(nms[i],) for i in dels], "nm string"), path["entity"]),
+            "dedup.compact": lambda: D.minhash_index_compact(spark, path["dedup"], path["dedup"] + "-c"),
+            "similarity.compact": lambda: S.ann_index_compact(spark, path["similarity"], path["similarity"] + "-c"),
+            "entity.compact": lambda: E.er_index_compact(spark, path["entity"], path["entity"] + "-c"),
+        }
+        for op, fn in maint.items():
+            spark.catalog.clearCache()
+            mark = counter.start()
+            fn()
+            rows.append({"tick": "m", "op": op, **counter.stop(mark)})
+
     cols = ("wall_s", "jobs", "stages", "tasks", "compiles")
     print(f"{'tick':>4}  {'op':18s}" + "".join(f"{c:>10s}" for c in cols))
     for r in rows:
         print(f"{r['tick']!s:>4}  {r['op']:18s}" + "".join(f"{r[c]!s:>10s}" for c in cols))
-    print(json.dumps({"seed": args.seed, "cold": args.cold, "ops": rows}))
+    print(json.dumps({"seed": args.seed, "cold": args.cold, "maint": args.maint, "ops": rows}))
     spark.stop()
     return 0
 
