@@ -8,8 +8,10 @@ materialized) after a warm-up of the session; timings are per-query wall
 clock, min of two passes: the first pass pays JVM JIT (C2 compilation of
 whole-stage-codegen classes) and OS page-cache population, which vary
 3-10s run-to-run on a shared host — the second pass measures the engine,
-not the JVM lifecycle. The first-pass total is reported as
-``derived.cold_total_sec`` for transparency.
+not the JVM lifecycle. The first pass also builds the cached index
+generations, in a private TMPDIR that no earlier run has filled. The
+first-pass total is reported as ``derived.cold_total_sec`` for
+transparency.
 
 Output-size contract (VERDICT r5 item 2/7): the driver records only the
 LAST 2000 bytes of output and parses the final JSON line — round 5's
@@ -23,9 +25,12 @@ under ``derived`` and the complete per-query map written to
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
@@ -371,6 +376,13 @@ def host_speed_probe_mt(mib: int = 64, passes: int = 3, threads: int = 8) -> flo
 
 
 def main() -> None:
+    # A private temp root, removed at exit: the engine's temp dirs and index
+    # generation caches (io.cache_base) live under TMPDIR, so the cold pass
+    # builds its own generations instead of reusing an earlier run's.
+    tmp = tempfile.mkdtemp(prefix="graft_bench_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    os.environ["TMPDIR"] = tmp
+    tempfile.tempdir = None
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
     host_probe = host_speed_probe()
@@ -392,24 +404,6 @@ def main() -> None:
     # Warm-up: JVM + codegen + parquet footer caches, not measured.
     registry[names[0]].fn(spark, sf_dir).count()
 
-    # The minhash-family ops are TIMED under the xxhash64 production
-    # spelling (VERDICT r7 item 5: the headline number should be the
-    # deployable one) — the md5 gate spelling is re-timed into
-    # derived.minhash_md5_sec below.  Correctness parity between the two
-    # families is pinned by tests/test_minhash_property.py.
-    _PROD_HASH_OPS = {
-        "dedup_fuzzy_minhash",
-        "dedup_index_build",
-        "dedup_incremental",
-        "dedup_index_compact",
-        "stream_incremental_dedup",
-        "dedup_cluster_stats",
-        "dedup_threshold_sweep",
-        "dedup_incremental_deletes",
-        "dedup_index_delete_compact",
-        "stream_incremental_dedup_deletes",
-    }
-
     timings: dict[str, float] = {}
     rows: dict[str, int] = {}
     # Generated classes each timed call compiled, one entry per pass: a
@@ -419,18 +413,12 @@ def main() -> None:
     for pass_no in (1, 2):
         for name in names:
             fn = registry[name].fn
-            if name in _PROD_HASH_OPS:
-                spark.conf.set("spark.graft.minhash.hash", "xxhash64")
-            try:
-                c0 = codegen_compiles(spark)
-                t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
-                n = df.count()
-                dt = time.perf_counter() - t0
-                compiles.setdefault(name, []).append(codegen_compiles(spark) - c0)
-            finally:
-                if name in _PROD_HASH_OPS:
-                    spark.conf.unset("spark.graft.minhash.hash")
+            c0 = codegen_compiles(spark)
+            t0 = time.perf_counter()
+            df = fn(spark, sf_dir)
+            n = df.count()
+            dt = time.perf_counter() - t0
+            compiles.setdefault(name, []).append(codegen_compiles(spark) - c0)
             if pass_no == 1:
                 cold_total += dt
             if name not in timings or dt < timings[name]:
@@ -454,22 +442,6 @@ def main() -> None:
         derived["migrate_rows_per_s"] = round(
             rows["migrate_sqlite_roundtrip"] / timings["migrate_sqlite_roundtrip"]
         )
-
-    # A/B of the minhash hash family: since r8 the pinned
-    # dedup_fuzzy_minhash timing above IS the xxhash64 production
-    # spelling (the deployable number); this re-times the same pipeline
-    # under the md5 gate flag, so the r4-r7 md5-timed history stays
-    # comparable via derived.minhash_md5_sec.  Same warm JVM, min of two
-    # passes, identical plan shape — the delta is the md5 parity tax.
-    if "dedup_fuzzy_minhash" in timings:
-        md5_best = None
-        for _ in (1, 2):
-            t0 = time.perf_counter()
-            registry["dedup_fuzzy_minhash"].fn(spark, sf_dir).count()
-            dt = time.perf_counter() - t0
-            md5_best = dt if md5_best is None else min(md5_best, dt)
-        derived["minhash_md5_sec"] = round(md5_best, 4)
-        derived["minhash_xxhash64_sec"] = timings["dedup_fuzzy_minhash"]
 
     derived.update(derived_ratios(timings))
 

@@ -12,12 +12,9 @@ Scale design:
   band_key) buckets, and the exact-Jaccard verification runs on candidate
   pairs, never all pairs. All-pairs O(n²) appears ONLY in the DuckDB
   oracle (which must enumerate ground truth at toy scale).
-- Hash family is switchable (``spark.graft.minhash.hash``): md5 (default)
-  is bit-identical in Spark and DuckDB, which is what lets the LSH
-  pipeline be differentially tested end-to-end; xxhash64 is the
-  production spelling (codegen'd intrinsic, no digest-string decode,
-  same plan shape — tests/test_minhash_property.py pins exact-dup
-  recovery and plan-shape parity, bench.py A/Bs the two).
+- One hash family: md5 truncated to 60 bits, bit-identical in Spark and
+  DuckDB, which is what lets the LSH pipeline be differentially tested
+  end-to-end.
 
 MinHash/LSH parameters: 48 hash functions, 4 bands × 12 rows, Jaccard
 threshold 0.95. Band-collision probability is J¹², so a J=0.99 pair is
@@ -312,40 +309,26 @@ def dedup_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_family(hash_mode: str):
-    """The switchable base/band hash closures — the ONLY thing that
-    differs between the md5 gate spelling and the xxhash64 production
-    spelling (see minhash_lsh_pairs docstring)."""
-    if hash_mode == "md5":
-
-        def _base_hash(t):
-            return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-
-        def _band_key(i, parts):
-            return F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("|", F.lit(str(i)), *parts)), 1, 15
-                ),
-                16,
-                10,
-            ).cast("long")
-    else:
-
-        def _base_hash(t):
-            return F.xxhash64(t)
-
-        def _band_key(i, parts):
-            return F.xxhash64(F.lit(i), *parts)
-
-    return _base_hash, _band_key
+def _base_hash(t):
+    """A token's 60-bit base hash: md5 truncated to 15 hex digits."""
+    return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
 
 
-def _hashed_tokens(df: DataFrame, id_col: str, tokens_col: str, base_hash) -> DataFrame:
+def _band_key(i, parts):
+    """Band i's 8-byte key over its signature rows ``parts``."""
+    return F.conv(
+        F.substring(F.md5(F.concat_ws("|", F.lit(str(i)), *parts)), 1, 15),
+        16,
+        10,
+    ).cast("long")
+
+
+def _hashed_tokens(df: DataFrame, id_col: str, tokens_col: str) -> DataFrame:
     """(__id, __tk, __tkh): the tokens and their base hashes (one per token,
     shared by the kernel, the set key and the verify tokens)."""
     return df.select(
         F.col(id_col).alias("__id"), F.col(tokens_col).alias("__tk")
-    ).withColumn("__tkh", F.transform(F.col("__tk"), base_hash))
+    ).withColumn("__tkh", F.transform(F.col("__tk"), _base_hash))
 
 
 def _tk32() -> "F.Column":
@@ -356,27 +339,24 @@ def _tk32() -> "F.Column":
     )
 
 
-def _with_band_keys(
-    toks: DataFrame, band_key, n_hashes: int = N_HASHES, n_bands: int = N_BANDS
-) -> DataFrame:
+def _with_band_keys(toks: DataFrame) -> DataFrame:
     """The non-blank rows of a _hashed_tokens frame plus ``bks``, the doc's
-    n_bands 8-byte band keys.  The one signature kernel: the corpus path
+    N_BANDS 8-byte band keys.  The one signature kernel: the corpus path
     (minhash_bands_tokens) and the serving path (_batch_frame) both call
     it, so they can never band differently.
 
     Affine minhash over the base hash: per seed s,
-    min((2s+1)·(h mod M31) + b_s mod M31).  The n_hashes mins are an
+    min((2s+1)·(h mod M31) + b_s mod M31).  The N_HASHES mins are an
     Arrow-batched pandas UDF doing the same exact int64 arithmetic as a
     (seeds × tokens) numpy broadcast.  The previous JVM spelling — an
-    n_hashes-wide array(array_min(transform(...))) tree — is evaluated as
+    N_HASHES-wide array(array_min(transform(...))) tree — is evaluated as
     interpreted higher-order functions (never whole-stage codegen) and
     cost more to analyze+compile than to run at any SF; the kernel is
     bit-identical (intermediates < 2^38, no int64 overflow) so the DuckDB
     oracle is unchanged."""
     from pyspark.sql import types as T
 
-    rows_per_band = n_hashes // n_bands
-    seeds = np.arange(n_hashes, dtype=np.int64)
+    seeds = np.arange(N_HASHES, dtype=np.int64)
     mults = 2 * seeds + 1
     offs = (seeds * AFFINE_MULT) % MERSENNE31
 
@@ -411,28 +391,20 @@ def _with_band_keys(
     )
     band_keys = F.array(
         *[
-            band_key(
+            _band_key(
                 i,
                 [
-                    F.element_at("sig", i * rows_per_band + r + 1)
-                    for r in range(rows_per_band)
+                    F.element_at("sig", i * ROWS_PER_BAND + r + 1)
+                    for r in range(ROWS_PER_BAND)
                 ],
             )
-            for i in range(n_bands)
+            for i in range(N_BANDS)
         ]
     )
     return sigs.withColumn("bks", band_keys).drop("sig")
 
 
-def minhash_bands_tokens(
-    df: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    *,
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
-    hash_mode: str | None = None,
-):
+def minhash_bands_tokens(df: DataFrame, id_col: str, tokens_col: str):
     """Signature/banding front half of the MinHash-LSH pipeline over a
     corpus, shared by the one-shot pair search (minhash_lsh_pairs) and
     the index build (minhash_index_build).  The kernel and band keys come
@@ -448,9 +420,7 @@ def minhash_bands_tokens(
       verify-stage no-ops anyway (NULL Jaccard).
     - ``tokh``: ``(__id, __tk32)`` — the doc's verify tokens (_tk32).
     """
-    hash_mode = _resolve_hash_mode(df, hash_mode)
-    base_hash, band_key = _minhash_family(hash_mode)
-    toks = _hashed_tokens(df, id_col, tokens_col, base_hash)
+    toks = _hashed_tokens(df, id_col, tokens_col)
     # No persist: the band table feeds both sides of the self-join, and the
     # r1-era persist here was a 4× win when signatures were an interpreted
     # md5-per-seed expression tree. After the affine+Arrow kernel rework the
@@ -458,9 +428,7 @@ def minhash_bands_tokens(
     # persist at 73 s vs 32 s without (materialization + InMemoryRelation
     # scan costs dominate recompute; at 1× the difference is noise). Let
     # both join branches pipeline from the scan.
-    bands = _with_band_keys(toks, band_key, n_hashes, n_bands).select(
-        "__id", F.explode("bks").alias("bk")
-    )
+    bands = _with_band_keys(toks).select("__id", F.explode("bks").alias("bk"))
     tokh = toks.select("__id", _tk32().alias("__tk32"))
     return bands, tokh
 
@@ -504,7 +472,7 @@ def _bucket_pairs(bands: DataFrame) -> DataFrame:
 def _packed_distinct(pairs: DataFrame) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b in, ids < 2^32): pack the
     pair into ONE long so the dedup shuffle hashes a single 8-byte key —
-    a pair can collide in up to n_bands bands, so rows entering the
+    a pair can collide in up to N_BANDS bands, so rows entering the
     distinct are multiplied, and this stage's bytes dominate the LSH
     shuffle."""
     return (
@@ -554,15 +522,7 @@ def _verify_jaccard(
     )
 
 
-def _resolve_hash_mode(df: DataFrame, hash_mode: "str | None") -> str:
-    if hash_mode is None:
-        hash_mode = df.sparkSession.conf.get("spark.graft.minhash.hash", "md5")
-    if hash_mode not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown minhash hash_mode: {hash_mode!r}")
-    return hash_mode
-
-
-def _set_keyed(df: DataFrame, id_col: str, tokens_col: str, base_hash) -> DataFrame:
+def _set_keyed(df: DataFrame, id_col: str, tokens_col: str) -> DataFrame:
     """(__id, __set) for every non-blank doc, where __set is the doc's
     FULL sorted distinct token-hash array — the exact cluster key of the
     round-8 collapse.  Same token SET ⟹ same __set ⟹ same minhash
@@ -573,7 +533,7 @@ def _set_keyed(df: DataFrame, id_col: str, tokens_col: str, base_hash) -> DataFr
     return df.select(
         F.col(id_col).alias("__id"),
         F.array_sort(
-            F.array_distinct(F.transform(F.col(tokens_col), base_hash))
+            F.array_distinct(F.transform(F.col(tokens_col), _base_hash))
         ).alias("__set"),
     ).filter(F.size("__set") > 0)
 
@@ -621,34 +581,15 @@ def minhash_lsh_pairs(
     id_col: str,
     tokens_col: str,
     *,
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
     threshold: float = JACCARD_T,
-    hash_mode: str | None = None,
 ) -> DataFrame:
     """Generic MinHash-LSH near-dup pairs (library API): rows (id, token
     array) in, verified pairs (id_a, id_b, jaccard >= threshold) out.
 
     Requires ids < 2^32 (pairs are packed into one 64-bit key for the
     dedup shuffle). Plan shape and rationale: see dedup_fuzzy_minhash.
-
-    ``hash_mode`` picks the base/band hash family — the ONLY thing that
-    changes; the plan (scan → sig kernel → band explode → bucket
-    self-join → distinct → verify join) is identical either way:
-
-    - ``"md5"`` (default): md5 truncated to a 60-bit long.  Bit-identical
-      in DuckDB, which is what lets the whole LSH path be differentially
-      gate-tested — the correctness spelling.
-    - ``"xxhash64"``: Spark's codegen'd 64-bit xxHash intrinsic — no
-      digest string, no substring/conv decode, ~5× cheaper per token.
-      The production spelling for a 100 TB corpus, where the md5 forest
-      is pure gate tax; not DuckDB-reproducible, so it is covered by the
-      exact-dup-recovery + plan-shape-parity tests and the bench A/B
-      (bench.py ``derived.minhash_md5_sec``) instead of the oracle.
-
-    When ``hash_mode`` is None it resolves from the session conf key
-    ``spark.graft.minhash.hash`` (default ``md5``), so a deployment flips
-    the fleet with one conf line and the gate keeps the md5 default.
+    Tokens hash with md5 truncated to a 60-bit long, bit-identical in
+    DuckDB, so the whole LSH path is differentially gate-tested.
 
     **Exact-set collapse (round 8).** Identical token SETS share the
     signature, the band keys, AND the Jaccard against every third doc —
@@ -668,16 +609,10 @@ def minhash_lsh_pairs(
     bit-identical to the uncollapsed plan (pinned by the property tests
     and the unchanged DuckDB oracle, which still enumerates the
     uncollapsed construction)."""
-    hash_mode = _resolve_hash_mode(df, hash_mode)
-    _base_hash, _ = _minhash_family(hash_mode)
-
-    members = _clusters(_set_keyed(df, id_col, tokens_col, _base_hash))
+    members = _clusters(_set_keyed(df, id_col, tokens_col))
     rep_ids = members.filter(F.col("__id") == F.col("__rep")).select("__rep")
     rep_df = df.join(rep_ids, F.col(id_col) == F.col("__rep")).drop("__rep")
-    bands, tokh = minhash_bands_tokens(
-        rep_df, id_col, tokens_col,
-        n_hashes=n_hashes, n_bands=n_bands, hash_mode=hash_mode,
-    )
+    bands, tokh = minhash_bands_tokens(rep_df, id_col, tokens_col)
     cand = _packed_distinct(_bucket_pairs(bands))
     rep_pairs = _verify_jaccard(cand, tokh, threshold)
 
@@ -770,15 +705,14 @@ def _band_frame(bands: DataFrame) -> DataFrame:
     )
 
 
-def _batch_frame(df: DataFrame, id_col: str, tokens_col: str, hash_mode: str) -> DataFrame:
+def _batch_frame(df: DataFrame, id_col: str, tokens_col: str) -> DataFrame:
     """``(__id, __set, __rep, bks, __tk32)`` per non-blank batch doc: set
     key (as _set_keyed), batch representative (min id per set), band keys
     and verify tokens.  The kernel runs on every doc BEFORE the
     representative exchange, so its Python evaluation stays in the
     batch-scan stage (one worker per scan task, not one per shuffle
     partition); members of one set repeat it, a batch-bounded cost."""
-    base_hash, band_key = _minhash_family(hash_mode)
-    keyed = _with_band_keys(_hashed_tokens(df, id_col, tokens_col, base_hash), band_key)
+    keyed = _with_band_keys(_hashed_tokens(df, id_col, tokens_col))
     return keyed.select(
         "__id",
         F.array_sort(F.array_distinct("__tkh")).alias("__set"),
@@ -787,11 +721,11 @@ def _batch_frame(df: DataFrame, id_col: str, tokens_col: str, hash_mode: str) ->
     ).withColumn("__rep", F.min("__id").over(Window.partitionBy("__set")))
 
 
-def _member_tokens(df, id_col, tokens_col, members, hash_mode) -> DataFrame:
+def _member_tokens(df, id_col, tokens_col, members) -> DataFrame:
     """tokens/ rows for the given membership: (doc_id, tk32, rep_id).
     Only banded (non-blank) members — blank docs never verify, and
     storing them would recreate the blank hot bucket ON DISK."""
-    _, tokh = minhash_bands_tokens(df, id_col, tokens_col, hash_mode=hash_mode)
+    _, tokh = minhash_bands_tokens(df, id_col, tokens_col)
     return (
         tokh.join(members, "__id")
         .filter(F.size("__tk32") > 0)
@@ -803,22 +737,12 @@ def _member_tokens(df, id_col, tokens_col, members, hash_mode) -> DataFrame:
     )
 
 
-def minhash_index_build(
-    df: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    path: str,
-    *,
-    hash_mode: str | None = None,
-) -> None:
+def minhash_index_build(df: DataFrame, id_col: str, tokens_col: str, path: str) -> None:
     """Persist the MinHash signature index for a corpus at ``path`` (see
     the schema-v2 comment above).  Uses the SAME banding front half as
     the one-shot search (minhash_bands_tokens), so index lookups
     reproduce minhash_lsh_pairs bit-for-bit."""
-    hash_mode = _resolve_hash_mode(df, hash_mode)
-    base_hash, _ = _minhash_family(hash_mode)
-
-    keyed = _set_keyed(df, id_col, tokens_col, base_hash)
+    keyed = _set_keyed(df, id_col, tokens_col)
     persisted: list = []
     try:
         # sets feeds the sets/ write AND the membership join; members feeds
@@ -832,8 +756,7 @@ def minhash_index_build(
         )
         rep_ids = members.filter(F.col("__id") == F.col("__rep")).select("__rep")
         bands, _ = minhash_bands_tokens(
-            df.join(rep_ids, F.col(id_col) == F.col("__rep")).drop("__rep"),
-            id_col, tokens_col, hash_mode=hash_mode,
+            df.join(rep_ids, F.col(id_col) == F.col("__rep")).drop("__rep"), id_col, tokens_col
         )
         # Cluster by pb BEFORE the partitioned write (one shuffle of a thin
         # (bk, doc_id, pb) frame): a map-side partitionBy write emits one file
@@ -854,7 +777,7 @@ def minhash_index_build(
                 .option("maxRecordsPerFile", 5_000_000)
                 .parquet(os.path.join(path, "bands"))
             ),
-            lambda: _member_tokens(df, id_col, tokens_col, members, hash_mode)
+            lambda: _member_tokens(df, id_col, tokens_col, members)
             .write.parquet(os.path.join(path, "tokens")),
             lambda: sets.select(
                 F.col("__set").alias("skey"), F.col("__rep").alias("rep_id")
@@ -873,7 +796,6 @@ def minhash_index_append(
     tokens_col: str,
     path: str,
     *,
-    hash_mode: str | None = None,
     persisted_out: "list | None" = None,
     meta: "dict | None" = None,
 ) -> None:
@@ -903,15 +825,12 @@ def minhash_index_append(
     minhash_index_dedup over the same batch the frame plan is the
     lookup's, so Spark serves it from the lookup's cached copy, and the
     release here frees that copy too."""
-    hash_mode = _resolve_hash_mode(df_new, hash_mode)
     spark = df_new.sparkSession
     # Frames persisted here go to the caller's persisted_out when given (it
     # releases them after its batch); otherwise this call owns them.
     persisted = [] if persisted_out is None else persisted_out
     try:
-        batch = _persist_md(
-            _batch_frame(df_new, id_col, tokens_col, hash_mode), persisted
-        )
+        batch = _persist_md(_batch_frame(df_new, id_col, tokens_col), persisted)
         idx_sets = _IDX_STORE.read(spark, path, "sets")
         m = batch.join(idx_sets, batch["__set"] == idx_sets["skey"], "left")
         fresh_reps = m.filter(
@@ -977,7 +896,6 @@ def minhash_index_dedup(
     path: str,
     *,
     threshold: float = JACCARD_T,
-    hash_mode: str | None = None,
     persisted_out: "list | None" = None,
     exclude_ids: "DataFrame | None" = None,
 ) -> DataFrame:
@@ -1015,13 +933,10 @@ def minhash_index_dedup(
     expansions), restoring exactly the pre-append lookup state (appends
     only ever add the batch's own rows).  None (the default) leaves the
     common-path plan untouched."""
-    hash_mode = _resolve_hash_mode(df_new, hash_mode)
     # BATCH-sized and fanned into every join below: persisted, which
     # inverts the corpus-side no-persist rule (minhash_bands_tokens) —
     # the exact asymmetry of the serving path.
-    batch = _persist_md(
-        _batch_frame(df_new, id_col, tokens_col, hash_mode), persisted_out
-    )
+    batch = _persist_md(_batch_frame(df_new, id_col, tokens_col), persisted_out)
     reps = batch.filter(F.col("__id") == F.col("__rep"))
     rep_bands = reps.select("__id", F.explode("bks").alias("bk"))
     probed = [
@@ -1148,30 +1063,27 @@ def _doc_tokens(d: DataFrame) -> DataFrame:
     return d.select("doc_id", F.array_distinct(_tokens(F.col("text"))).alias("tk"))
 
 
-def _incr_index_path(
-    spark: SparkSession, sf_dir: str, hash_mode: str, *, force: bool = False
-) -> str:
+def _incr_index_path(spark: SparkSession, sf_dir: str, *, force: bool = False) -> str:
     """Valid persisted corpus index for the registered incremental ops,
-    built once per (documents fingerprint, hash family, split, schema
-    version) into an immutable generation dir (io.ensure_generation) and
-    reused across invocations — amortizing the build is the point of the
-    index.  ``force=True``: a build is a fresh build (new generation,
+    built once per (documents fingerprint, split, schema version) into an
+    immutable generation dir (io.ensure_generation) and reused across
+    invocations — amortizing the build is the point of the index.  ``force=True``: a build is a fresh build (new generation,
     CURRENT swings, concurrent readers of the old one are untouched)."""
     from sqlite_to_clickhouse_spark.io import ensure_generation
 
     fp = gio.file_fingerprint(os.path.join(sf_dir, "documents.parquet"))
+    # "|md5": the hash family; a cached generation built with it keeps its
+    # fingerprint and is reused.
     # "|m1": manifest-committed layout (r10) — a cached pre-manifest
     # generation fingerprints differently and is rebuilt, never half-read.
     # "|c1": pb-clustered bands layout (r12) — a cached generation built
     # with the old map-side partitionBy write (tasks × 32 tiny files)
     # rebuilds once into the compact layout every later scan assumes.
-    fp = f"{fp}|{hash_mode}|mod{INCR_MOD}r{INCR_REM}|v2|m1|c1"
+    fp = f"{fp}|md5|mod{INCR_MOD}r{INCR_REM}|v2|m1|c1"
 
     def _build(gen: str) -> None:
         corpus = table(spark, sf_dir, "documents").filter(~_incr_batch_pred())
-        minhash_index_build(
-            _doc_tokens(corpus), "doc_id", "tk", gen, hash_mode=hash_mode
-        )
+        minhash_index_build(_doc_tokens(corpus), "doc_id", "tk", gen)
 
     return ensure_generation("minhash_idx", sf_dir, fp, _build, force=force)
 
@@ -1217,8 +1129,7 @@ def dedup_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-blank doc one tokens/ row, and blank/NULL docs contribute
     nothing — so a banding/clustering/filter drift on the WRITTEN files
     (not just in-memory) breaks the gate."""
-    hash_mode = spark.conf.get("spark.graft.minhash.hash", "md5")
-    path = _incr_index_path(spark, sf_dir, hash_mode, force=True)
+    path = _incr_index_path(spark, sf_dir, force=True)
     return _relation_counts(spark, path)
 
 
@@ -1238,12 +1149,9 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw documents table in DuckDB, so the whole persisted path — write,
     pruned read, bucket join, verify, cluster expansion — is
     differentially gated)."""
-    hash_mode = spark.conf.get("spark.graft.minhash.hash", "md5")
-    path = _incr_index_path(spark, sf_dir, hash_mode)
+    path = _incr_index_path(spark, sf_dir)
     batch = table(spark, sf_dir, "documents").filter(_incr_batch_pred())
-    return minhash_index_dedup(
-        spark, _doc_tokens(batch), "doc_id", "tk", path, hash_mode=hash_mode
-    ).select(
+    return minhash_index_dedup(spark, _doc_tokens(batch), "doc_id", "tk", path).select(
         F.col("id_a").alias("doc_a"),
         F.col("id_b").alias("doc_b"),
         "jaccard",
@@ -1328,19 +1236,13 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed set must join that cluster, never spawn a duplicate
     representative); file-count collapse and lookup-equality are pinned
     in tests/test_minhash_property.py."""
-    hash_mode = spark.conf.get("spark.graft.minhash.hash", "md5")
     docs = table(spark, sf_dir, "documents")
     toks = _doc_tokens(docs)
     # Clone the shared corpus generation (appends below mutate it); a
     # file clone is the production snapshot, not a re-band of the corpus.
-    grown = gio.clone_store(
-        _incr_index_path(spark, sf_dir, hash_mode), "graft_idx_compact_"
-    )
+    grown = gio.clone_store(_incr_index_path(spark, sf_dir), "graft_idx_compact_")
     compacted = os.path.join(os.path.dirname(grown), "compacted")
-    minhash_index_append(
-        toks.filter(_incr_batch_pred()), "doc_id", "tk", grown,
-        hash_mode=hash_mode,
-    )
+    minhash_index_append(toks.filter(_incr_batch_pred()), "doc_id", "tk", grown)
     minhash_index_compact(spark, grown, compacted)
     return _relation_counts(spark, compacted)
 
@@ -1379,14 +1281,11 @@ def dedup_incremental_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes ground truth from the raw documents table restricted to
     pairs with no deleted endpoint: delete-then-lookup must be
     bit-identical to rebuild-without-the-deleted."""
-    hash_mode = spark.conf.get("spark.graft.minhash.hash", "md5")
-    idx = gio.clone_store(_incr_index_path(spark, sf_dir, hash_mode), "graft_idx_del_")
+    idx = gio.clone_store(_incr_index_path(spark, sf_dir), "graft_idx_del_")
     docs = table(spark, sf_dir, "documents")
     minhash_index_delete(_deleted_ids(docs), idx)
     batch = docs.filter(_incr_batch_pred())
-    return minhash_index_dedup(
-        spark, _doc_tokens(batch), "doc_id", "tk", idx, hash_mode=hash_mode
-    ).select(
+    return minhash_index_dedup(spark, _doc_tokens(batch), "doc_id", "tk", idx).select(
         F.col("id_a").alias("doc_a"),
         F.col("id_b").alias("doc_b"),
         "jaccard",
@@ -1425,8 +1324,7 @@ def dedup_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     to rebuild-without are pinned in tests/test_minhash_property.py."""
     import tempfile
 
-    hash_mode = spark.conf.get("spark.graft.minhash.hash", "md5")
-    idx = gio.clone_store(_incr_index_path(spark, sf_dir, hash_mode), "graft_idx_del_")
+    idx = gio.clone_store(_incr_index_path(spark, sf_dir), "graft_idx_del_")
     docs = table(spark, sf_dir, "documents")
     minhash_index_delete(_deleted_ids(docs), idx)
     compacted = os.path.join(tempfile.mkdtemp(prefix="graft_idx_delc_"), "idx")
@@ -1438,13 +1336,12 @@ def _simhash_expr(tokens_col):
     """SimHash over SIMHASH_BITS bits of the 60-bit md5-derived token hash:
     bit b of the fingerprint is the sign of sum over tokens of ±1 by that
     token's hash bit. Entirely JVM-side expression tree."""
-    tok_hash = lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")  # noqa: E731
 
     def _vote_merge(mask: int):
         # Bound via factory: PySpark introspects lambda arity, so default
         # args would be mistaken for extra lambda variables.
         return lambda acc, t: acc + F.when(
-            tok_hash(t).bitwiseAND(F.lit(mask)) != 0, 1
+            _base_hash(t).bitwiseAND(F.lit(mask)) != 0, 1
         ).otherwise(-1)
 
     fp = F.lit(0).cast("long")
@@ -1576,10 +1473,7 @@ def dedup_simhash_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.array_distinct(_tokens(F.col("text")))
     base = d.where(F.size(toks) > 0).select(
         "doc_id",
-        F.transform(
-            toks,
-            lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
-        ).alias("__tkh"),
+        F.transform(toks, _base_hash).alias("__tkh"),
     )
 
     bits = np.arange(SIMHASH_NN_BITS, dtype=np.int64)
@@ -1708,12 +1602,19 @@ def _driver_components(rows: list, node_t, spark: SparkSession) -> "DataFrame | 
     return spark.createDataFrame([(n, _find(n)) for n in parent], out_schema)
 
 
+# connected_components: driver fast-path caps (collected edge rows, estimated
+# collect bytes), the loop's round limit, and the round pointer jumping
+# starts from.
+_CC_DRIVER_EDGES = 200_000
+_CC_DRIVER_BYTES = 64 << 20
+_CC_MAX_ITER = 25
+_CC_JUMP_FROM = 3
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
-    jump_from: int = 3,
     driver_edge_cap: "int | None" = None,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation (library
@@ -1741,12 +1642,12 @@ def connected_components(
     - checkpoints are LAZY (``eager=False``): each round's label table is
       materialized exactly once, by the convergence count that must run
       anyway, instead of once eagerly and once by the count.
-    - from round ``jump_from`` the update also adopts label-of-label
+    - from round ``_CC_JUMP_FROM`` the update also adopts label-of-label
       (pointer jumping / path halving), cutting rounds from O(diameter)
       to O(log diameter) on chain-shaped dup graphs.  The extra
       label⨝label join costs one small-table shuffle per round, which
-      loses on shallow graphs — so the first ``jump_from - 1`` rounds run
-      plain.  Measured at sf0.1: ER name graph (diameter ~4) unchanged,
+      loses on shallow graphs — so the first ``_CC_JUMP_FROM - 1`` rounds
+      run plain.  Measured at sf0.1: ER name graph (diameter ~4) unchanged,
       MinHash doc graph 11 rounds → 8, CC wall 10.5 s → 5.8 s.
       Adopting min(neighbor label, label-of-label) preserves the
       invariant that a node's label is always the id of some node in its
@@ -1774,16 +1675,11 @@ def connected_components(
     # and store-scale callers pay no extra job (ADVICE r12).
     # Cap is edge-rows collected (both directions) AND estimated collect
     # bytes (VERDICT r12: 200k edges of long string names is unbounded
-    # driver memory in row units), both env-overridable; 0 disables.
+    # driver memory in row units); a cap of 0 disables the fast path.
     # Fast path is restricted to integral/string node types: Python and
     # Spark agree on `<` for those, while float NaN diverges (Spark
     # orders NaN greatest; Python NaN comparisons are all False).
-    driver_cap = (
-        driver_edge_cap
-        if driver_edge_cap is not None
-        else int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "200000"))
-    )
-    byte_cap = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_BYTES", str(64 << 20)))
+    driver_cap = _CC_DRIVER_EDGES if driver_edge_cap is None else driver_edge_cap
     from pyspark.sql import types as T
 
     node_t = und.schema["s"].dataType
@@ -1798,7 +1694,7 @@ def connected_components(
     # (er_index_append's contracted CC: 4.1 s → 1.6 s standalone).  The
     # checkpoint truncates the plan to a leaf while keeping the
     # repartition's hash layout on the materialized blocks.
-    if driver_cap > 0 and byte_cap > 0 and isinstance(node_t, _DRIVER_TYPES):
+    if driver_cap > 0 and _CC_DRIVER_BYTES > 0 and isinstance(node_t, _DRIVER_TYPES):
         if isinstance(node_t, T.StringType):
             row_bytes = F.octet_length("s") + F.octet_length("d") + F.lit(64)
         else:
@@ -1813,8 +1709,8 @@ def connected_components(
                 F.count(F.lit(1)).alias("n"),
                 F.coalesce(F.sum(row_bytes), F.lit(0)).alias("b"),
             ).collect()[0]
-            if int(stats["n"]) <= driver_cap and int(stats["b"]) <= byte_cap:
-                # bounded by driver_cap rows / byte_cap bytes
+            if int(stats["n"]) <= driver_cap and int(stats["b"]) <= _CC_DRIVER_BYTES:
+                # bounded by driver_cap rows / _CC_DRIVER_BYTES bytes
                 comp = _driver_components(
                     cached.collect(), node_t, edges.sparkSession
                 )
@@ -1829,7 +1725,7 @@ def connected_components(
     labels = (
         und.select(F.col("s").alias("node")).distinct().withColumn("label", F.col("node"))
     ).localCheckpoint(eager=False)
-    for i in range(max_iter):
+    for i in range(_CC_MAX_ITER):
         nbr_min = (
             und.join(labels, und["s"] == labels["node"])
             .groupBy(und["d"].alias("node2"))
@@ -1839,7 +1735,7 @@ def connected_components(
         # the checkpoint) instead of a separate new-vs-old join per round.
         cand = F.coalesce(F.col("nbr_label"), F.col("label"))
         joined = labels.join(nbr_min, labels["node"] == nbr_min["node2"], "left")
-        if i + 1 >= jump_from:
+        if i + 1 >= _CC_JUMP_FROM:
             lol = labels.select(
                 F.col("node").alias("jnode"), F.col("label").alias("jlabel")
             )
@@ -2307,13 +2203,7 @@ def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumeration; runs ahead of the LSH pass to size it.  Uses the same
     _set_keyed cluster key as the collapse/index machinery, so its
     numbers are exactly the clusters those paths exploit."""
-    hash_mode = _resolve_hash_mode(
-        table(spark, sf_dir, "documents"), None
-    )
-    base_hash, _ = _minhash_family(hash_mode)
-    keyed = _set_keyed(
-        _doc_tokens(table(spark, sf_dir, "documents")), "doc_id", "tk", base_hash
-    )
+    keyed = _set_keyed(_doc_tokens(table(spark, sf_dir, "documents")), "doc_id", "tk")
     sizes = keyed.groupBy("__set").agg(F.count(F.lit(1)).alias("c"))
     return sizes.groupBy("c").agg(
         F.col("c").alias("cluster_size"),
@@ -2412,17 +2302,14 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the exact side is the prefix-filtered plan (hot tokens
     never enter prefixes — no posting-list blowup), the caught side is
     the collapsed LSH plan; two count aggregates cross-joined into one
-    row.  md5 space on both sides by construction (the gate spelling);
-    the xxhash64 production family has its own recall pinned by
-    tests/test_minhash_property.py instead."""
+    row.  md5 space on both sides by construction."""
     d = table(spark, sf_dir, "documents")
     toks = _doc_tokens(d)
-    base_hash, _ = _minhash_family("md5")
     t32 = toks.select(
         "doc_id",
         F.array_distinct(
             F.transform(
-                F.transform("tk", base_hash),
+                F.transform("tk", _base_hash),
                 lambda h: h.bitwiseAND(F.lit(MERSENNE31)),
             )
         ).alias("tk32"),
@@ -2445,7 +2332,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         cand.join(ta, "doc_a").join(tb, "doc_b").filter(jac >= JACCARD_T)
     )
-    caught = minhash_lsh_pairs(toks, "doc_id", "tk", hash_mode="md5")
+    caught = minhash_lsh_pairs(toks, "doc_id", "tk")
     ex = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     ca = caught.agg(F.count(F.lit(1)).alias("n_caught"))
     return ex.crossJoin(ca).select(

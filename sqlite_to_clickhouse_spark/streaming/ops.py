@@ -587,8 +587,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _table(spark, sf_dir, "documents")
-    hash_mode = spark.conf.get("spark.graft.minhash.hash", "md5")
-    idx = gio.clone_store(_incr_index_path(spark, sf_dir, hash_mode), "stream_incr_idx_")
+    idx = gio.clone_store(_incr_index_path(spark, sf_dir), "stream_incr_idx_")
     batch = docs.filter(_incr_batch_pred())
     stage = os.path.join(tempfile.mkdtemp(prefix="stream_incr_stage_"), "in")
     out, ckpt = [None], [None]
@@ -778,8 +777,7 @@ def stream_incremental_dedup_deletes(spark: SparkSession, sf_dir: str) -> DataFr
     from sqlite_to_clickhouse_spark import io as gio
 
     docs = _table(spark, sf_dir, "documents")
-    hash_mode = spark.conf.get("spark.graft.minhash.hash", "md5")
-    idx = gio.clone_store(_incr_index_path(spark, sf_dir, hash_mode), "stream_incr_idx_")
+    idx = gio.clone_store(_incr_index_path(spark, sf_dir), "stream_incr_idx_")
     batch = docs.filter(_incr_batch_pred())
     stage = os.path.join(tempfile.mkdtemp(prefix="stream_incrdel_stage_"), "in")
     out, ckpt = [None], [None]

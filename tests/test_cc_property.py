@@ -95,17 +95,18 @@ def test_cc_byte_cap_forces_the_loop(spark, monkeypatch):
     forces the distributed loop (bit-identical labels); a roomy one
     takes the driver path; cap=0 disables the driver path outright
     (ADVICE r12: an empty/tiny graph must not satisfy a disabled cap)."""
+    from sqlite_to_clickhouse_spark.operators import dedup as D
     from sqlite_to_clickhouse_spark.operators.dedup import connected_components
 
     edges = [("aa" * 50, "bb" * 50), ("bb" * 50, "cc" * 50), ("x", "y")]
     df = spark.createDataFrame(edges, "src: string, dst: string")
     want = {r.node: r.component_id for r in connected_components(df).collect()}
 
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_BYTES", "64")  # < one edge row
+    monkeypatch.setattr(D, "_CC_DRIVER_BYTES", 64)  # < one edge row
     got_loop = {r.node: r.component_id for r in connected_components(df).collect()}
     assert got_loop == want
 
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_BYTES", "0")  # 0 disables too
+    monkeypatch.setattr(D, "_CC_DRIVER_BYTES", 0)  # 0 disables too
     got_disabled = {
         r.node: r.component_id for r in connected_components(df).collect()
     }

@@ -115,3 +115,23 @@ def test_clone_is_a_valid_store_independent_of_its_source(spark, tmp_path, case)
     assert gio.manifest_versions(src) == [src_manifest["version"]]
     assert gio.manifest_current(clone) != src_manifest["version"]
     assert sorted(store.read(spark, src, rel).select(col).collect()) == src_rows
+
+
+def test_minhash_lookup_ignores_a_stray_hash_conf(spark, tmp_path):
+    """The persisted index records no hash family, so the lookup must hash
+    exactly as the build did whatever the session conf says: a stray
+    ``spark.graft.minhash.hash=xxhash64`` must not hide an exact duplicate
+    of an indexed doc."""
+    from sqlite_to_clickhouse_spark.operators import dedup as D
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, tk array<string>")
+
+    path = str(tmp_path / "idx")
+    D.minhash_index_build(docs([(0, ["b", "p"]), (1, ["a", "x", "y"])]), "doc_id", "tk", path)
+    spark.conf.set("spark.graft.minhash.hash", "xxhash64")
+    try:
+        got = D.minhash_index_dedup(spark, docs([(10, ["y", "a", "x"])]), "doc_id", "tk", path)
+        assert [tuple(r) for r in got.collect()] == [(1, 10, 1.0)]
+    finally:
+        spark.conf.unset("spark.graft.minhash.hash")

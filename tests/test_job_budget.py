@@ -147,7 +147,7 @@ def test_lifecycle_op_job_budget(spark, sf_dir, built_stores, op):
     if op == "stream_incremental_dedup":
         # The shared corpus generation is built once per fixture; its build
         # jobs are not the stream's.
-        D._incr_index_path(spark, sf_dir, spark.conf.get("spark.graft.minhash.hash", "md5"))
+        D._incr_index_path(spark, sf_dir)
     spark.catalog.clearCache()
     jobs = _jobs(spark, run)
     assert jobs <= budget, (op, jobs)

@@ -79,100 +79,6 @@ def test_minhash_pairs_precise_and_exact_dupes_never_missed(spark, docs):
                 assert (i, j) in got, f"identical docs {i},{j} missed"
 
 
-def test_xxhash64_mode_recovers_exact_dups_and_rejects_disjoint(spark):
-    """The production hash family (hash_mode='xxhash64') keeps the two
-    hard guarantees the md5 gate spelling has: identical token sets are
-    always paired at jaccard 1.0 (identical signatures ⇒ candidate in
-    every band) and token-disjoint docs are never paired (the verify
-    stage computes true Jaccard — zero here — regardless of banding)."""
-    docs = [
-        (0, ["a", "b", "c", "d"]),
-        (1, ["a", "b", "c", "d"]),          # exact dup of 0
-        (2, ["d", "c", "b", "a", "a"]),     # same SET as 0 (order/mult differ)
-        (3, ["x", "y", "z"]),               # disjoint
-        (4, ["p", "q", "r", "s", "t"]),     # disjoint
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, tokens array<string>")
-    got = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in minhash_lsh_pairs(
-            df, "doc_id", "tokens", hash_mode="xxhash64"
-        ).collect()
-    }
-    assert got == {(0, 1): 1.0, (0, 2): 1.0, (1, 2): 1.0}
-
-
-def test_hash_modes_plan_identical_and_conf_resolved(spark):
-    """Flipping spark.graft.minhash.hash must change ONLY the hash
-    expressions: same exchanges, same joins, same aggregates — the flag
-    never alters the distributed shape. Also pins conf resolution (the
-    deployment path) against the explicit-argument path."""
-    import re
-
-    df = spark.createDataFrame(
-        [(i, [f"w{i}", f"w{i+1}", "c"]) for i in range(6)],
-        "doc_id long, tokens array<string>",
-    )
-
-    def _shape(d):
-        plan = d._jdf.queryExecution().executedPlan().toString()
-        return {
-            op: len(re.findall(rf"\b{op}\b", plan))
-            for op in ("Exchange", "SortMergeJoin", "BroadcastHashJoin",
-                       "HashAggregate", "Generate", "ArrowEvalPython")
-        }
-    md5_shape = _shape(minhash_lsh_pairs(df, "doc_id", "tokens", hash_mode="md5"))
-    xx_shape = _shape(
-        minhash_lsh_pairs(df, "doc_id", "tokens", hash_mode="xxhash64")
-    )
-    assert md5_shape == xx_shape
-
-    spark.conf.set("spark.graft.minhash.hash", "xxhash64")
-    try:
-        via_conf = minhash_lsh_pairs(df, "doc_id", "tokens")
-        explicit = minhash_lsh_pairs(df, "doc_id", "tokens", hash_mode="xxhash64")
-        assert sorted(map(tuple, via_conf.collect())) == sorted(
-            map(tuple, explicit.collect())
-        )
-    finally:
-        spark.conf.unset("spark.graft.minhash.hash")
-
-
-def test_hash_modes_agree_on_fixture_pairs(spark, sf_dir):
-    """The two hash families are INDEPENDENT LSH draws: at the 0.95
-    threshold the 4×12 band curve gives ≈0.955 per-pair recall per
-    mode, so the expected mutual overlap is ≈0.95² ≈ 0.91 on a corpus
-    whose near-dup mass sits at the threshold boundary (this fixture's
-    does). Assert the same ≥0.90 floor the exact-vs-LSH recall test
-    uses — flipping the production flag must move recall by the band
-    curve's noise, never collapse it."""
-    from pyspark.sql import functions as F
-
-    from sqlite_to_clickhouse_spark.io import table
-
-    d = table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.array_distinct(
-            F.filter(F.split(F.col("text"), " "), lambda t: t != "")
-        ).alias("tk"),
-    )
-    md5_pairs = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(toks, "doc_id", "tk", hash_mode="md5").collect()
-    }
-    xx_pairs = {
-        (r.id_a, r.id_b)
-        for r in minhash_lsh_pairs(
-            toks, "doc_id", "tk", hash_mode="xxhash64"
-        ).collect()
-    }
-    assert md5_pairs and xx_pairs
-    overlap = len(md5_pairs & xx_pairs)
-    assert overlap / len(md5_pairs) >= 0.90, (len(md5_pairs), len(xx_pairs))
-    assert overlap / len(xx_pairs) >= 0.90, (len(md5_pairs), len(xx_pairs))
-
-
 def _pairs(df):
     return {(r.id_a, r.id_b): r.jaccard for r in df.collect()}
 
