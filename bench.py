@@ -37,6 +37,7 @@ REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
+from sqlite_to_clickhouse_spark import io as gio  # noqa: E402
 from sqlite_to_clickhouse_spark.registry import all_queries  # noqa: E402
 from sqlite_to_clickhouse_spark.session import codegen_compiles, get_spark  # noqa: E402
 
@@ -402,7 +403,8 @@ def main() -> None:
 
     names = [n for n in HEADLINE if n in registry]
     # Warm-up: JVM + codegen + parquet footer caches, not measured.
-    registry[names[0]].fn(spark, sf_dir).count()
+    with gio.scope():
+        registry[names[0]].fn(spark, sf_dir).count()
 
     timings: dict[str, float] = {}
     rows: dict[str, int] = {}
@@ -413,11 +415,14 @@ def main() -> None:
     for pass_no in (1, 2):
         for name in names:
             fn = registry[name].fn
-            c0 = codegen_compiles(spark)
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            n = df.count()
-            dt = time.perf_counter() - t0
+            # The scope releases the call's cached frames and temp dirs
+            # after the timed region, so no call reads another's leftovers.
+            with gio.scope():
+                c0 = codegen_compiles(spark)
+                t0 = time.perf_counter()
+                df = fn(spark, sf_dir)
+                n = df.count()
+                dt = time.perf_counter() - t0
             compiles.setdefault(name, []).append(codegen_compiles(spark) - c0)
             if pass_no == 1:
                 cold_total += dt
@@ -478,6 +483,10 @@ def main() -> None:
                         "spark.sql.codegen.cache.maxEntries"
                     ),
                     "codegen_compiles_total": codegen_compiles(spark),
+                    # What the run left behind: cached RDDs, and entries in
+                    # its private TMPDIR (the index generations included).
+                    "persisted_rdds_left": spark.sparkContext._jsc.getPersistentRDDs().size(),
+                    "tmp_entries_left": len(os.listdir(tmp)),
                 },
             },
             fh,

@@ -5,13 +5,29 @@ All driver tables are one parquet file per table under an sf dir
 pruning, and (on a partitioned layout) partition pruning for free — the
 callers just declare filters/projections and the scan narrows itself
 (verify with ``df.explain``: ``PushedFilters`` / ``ReadSchema``).
+
+Lifetime of cached frames and temp dirs: every frame the package caches
+goes through ``persist`` and every per-call temp dir through ``tempdir``;
+both register with the open ``scope``, also from ``run_jobs`` threads.
+Only the outermost open scope owns anything: on exit it unpersists the
+frames and removes the dirs registered inside it.  Functions that return
+None (index builds, appends, deletes) wrap their body in a scope, so they
+clean up however they are called.  Functions that return a lazy frame
+never open one, because the frame may still read what they made; their
+caller wraps the call and the consumption of its result in one scope.
+With no scope open nothing is tracked.  Process-lifetime state (the
+``cache_base`` generations, memoized staged inputs) stays on plain
+``tempfile``.
 """
 
 from __future__ import annotations
 
 import contextlib
+import contextvars
 import fcntl
 import os
+import shutil
+import tempfile
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,7 +89,9 @@ def run_jobs(*thunks) -> list:
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        # Each thunk runs in a copy of the caller's context, so what it
+        # persists or makes lands in the caller's scope.
+        futures = [pool.submit(contextvars.copy_context().run, t) for t in thunks]
         results, first_err = [], None
         for f in futures:
             try:
@@ -84,6 +102,52 @@ def run_jobs(*thunks) -> list:
         if first_err is not None:
             raise first_err
         return results
+
+
+# The open scope's release list (see the module docstring).
+_SCOPE: "contextvars.ContextVar[list | None]" = contextvars.ContextVar(
+    "graft_scope", default=None
+)
+
+
+@contextlib.contextmanager
+def scope():
+    """Release every frame ``persist`` cached and every dir ``tempdir``
+    made inside the block when it exits, normally or by an exception.  A
+    scope opened inside another one is a no-op: the outermost scope owns
+    everything."""
+    if _SCOPE.get() is not None:
+        yield
+        return
+    owned: list = []
+    token = _SCOPE.set(owned)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        for release in owned:
+            release()
+
+
+def _own(release) -> None:
+    owned = _SCOPE.get()
+    if owned is not None:
+        owned.append(release)
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()`` at the default storage level, released by the open
+    scope (if any)."""
+    df = df.persist()
+    _own(df.unpersist)
+    return df
+
+
+def tempdir(prefix: str) -> str:
+    """A fresh temp dir, removed by the open scope (if any)."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _own(lambda: shutil.rmtree(d, ignore_errors=True))
+    return d
 
 
 def read_marker(marker: str) -> "str | None":
@@ -134,7 +198,6 @@ def cache_base(kind: str, key: str) -> str:
     structurally impossible — ADVICE r7."""
     import getpass
     import hashlib
-    import tempfile
 
     tag = hashlib.md5(key.encode()).hexdigest()[:12]
     try:
@@ -154,7 +217,6 @@ def _gc_generations(base: str, keep: str) -> None:
     the read-grace window: a generation is deleted only long after any
     scan that started against it has finished, so GC never races a
     reader the way rebuild-in-place did."""
-    import shutil
     import time
 
     now = time.time()
@@ -192,7 +254,6 @@ def ensure_generation(kind: str, key: str, fp: str, build, *, force: bool = Fals
     Returns the absolute path of the valid generation directory.
     """
     import hashlib
-    import shutil
 
     base = cache_base(kind, key)
     os.makedirs(base, exist_ok=True)
@@ -825,10 +886,7 @@ def clone_store(src: str, prefix: str) -> str:
     clone, valid because manifests hold root-relative paths.  Appends and
     deletes mutate a store, so a shared cached generation is cloned
     before either."""
-    import shutil
-    import tempfile
-
-    dst = os.path.join(tempfile.mkdtemp(prefix=prefix), "idx")
+    dst = os.path.join(tempdir(prefix), "idx")
     shutil.copytree(src, dst)
     return dst
 

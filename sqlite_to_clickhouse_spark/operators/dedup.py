@@ -538,23 +538,6 @@ def _set_keyed(df: DataFrame, id_col: str, tokens_col: str) -> DataFrame:
     ).filter(F.size("__set") > 0)
 
 
-def _persist_md(df: DataFrame, persisted_out: "list | None" = None) -> DataFrame:
-    """MEMORY_AND_DISK persist that optionally RECORDS the persisted frame
-    in ``persisted_out`` so a looping caller (stream_incremental_dedup's
-    foreachBatch — one lookup+append per micro-batch, for the lifetime of
-    a production stream) can unpersist batch-scoped frames after each
-    batch materializes.  Disk-backed blocks are not auto-evicted, so
-    without the hand-back a long-running stream accumulates cached blocks
-    unboundedly (ADVICE r8).  One-shot callers pass nothing and rely on
-    session teardown, as before."""
-    from pyspark.storagelevel import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if persisted_out is not None:
-        persisted_out.append(df)
-    return df
-
-
 def _clusters(keyed: DataFrame) -> DataFrame:
     """(__id, __rep) membership: representative = min id per distinct
     set.  groupBy gets map-side partial aggregation (a boilerplate
@@ -564,7 +547,7 @@ def _clusters(keyed: DataFrame) -> DataFrame:
     and came out a wash locally while adding a full array-key SORT for
     corpus-scale callers, so the hash-aggregation shape stays.)
 
-    PERSISTED (memory-and-disk): every caller fans the membership into
+    PERSISTED (gio.persist): every caller fans the membership into
     3-5 downstream joins (rep filter, two expansion sides, within-pairs
     expansion), and each re-evaluation would repeat the array-keyed
     groupBy+join over the full token-hash arrays — measured 2x whole-op
@@ -573,7 +556,7 @@ def _clusters(keyed: DataFrame) -> DataFrame:
     share one cache entry across invocations, and eviction is safe (it
     recomputes)."""
     reps = keyed.groupBy("__set").agg(F.min("__id").alias("__rep"))
-    return _persist_md(keyed.join(reps, "__set").select("__id", "__rep"))
+    return gio.persist(keyed.join(reps, "__set").select("__id", "__rep"))
 
 
 def minhash_lsh_pairs(
@@ -675,8 +658,10 @@ def minhash_lsh_pairs(
 # through the signature kernel once.  The lookup finds batch×index and
 # batch×batch candidates in one join, verifies and expands them once; the
 # append joins the frame to `sets/` once and writes all three relations
-# from that join.  After a lookup the append reads the lookup's cached
-# frame (same plan) and releases it.
+# from that join.  The lookup's frame is released by its caller's scope
+# (io.scope); an append of the same batch builds the same plan, so inside
+# one scope it reads the lookup's cached copy, and on its own it releases
+# that copy with its own frame.
 # ---------------------------------------------------------------------------
 
 MINHASH_IDX_BUCKETS = 32  # on-disk partitions of the band table (pb = bk mod B)
@@ -743,17 +728,12 @@ def minhash_index_build(df: DataFrame, id_col: str, tokens_col: str, path: str) 
     the one-shot search (minhash_bands_tokens), so index lookups
     reproduce minhash_lsh_pairs bit-for-bit."""
     keyed = _set_keyed(df, id_col, tokens_col)
-    persisted: list = []
-    try:
+    with gio.scope():
         # sets feeds the sets/ write AND the membership join; members feeds
         # the rep filter AND the tokens/ write — persist both so the
         # array-keyed aggregation runs once per build (the _clusters lesson).
-        sets = _persist_md(
-            keyed.groupBy("__set").agg(F.min("__id").alias("__rep")), persisted
-        )
-        members = _persist_md(
-            keyed.join(sets, "__set").select("__id", "__rep"), persisted
-        )
+        sets = gio.persist(keyed.groupBy("__set").agg(F.min("__id").alias("__rep")))
+        members = gio.persist(keyed.join(sets, "__set").select("__id", "__rep"))
         rep_ids = members.filter(F.col("__id") == F.col("__rep")).select("__rep")
         bands, _ = minhash_bands_tokens(
             df.join(rep_ids, F.col(id_col) == F.col("__rep")).drop("__rep"), id_col, tokens_col
@@ -784,10 +764,6 @@ def minhash_index_build(df: DataFrame, id_col: str, tokens_col: str, path: str) 
             ).write.parquet(os.path.join(path, "sets")),
         )
         _IDX_STORE.commit(path)
-    finally:
-        # Released after a failed write as well as after a commit.
-        for frame in persisted:
-            frame.unpersist()
 
 
 def minhash_index_append(
@@ -796,7 +772,6 @@ def minhash_index_append(
     tokens_col: str,
     path: str,
     *,
-    persisted_out: "list | None" = None,
     meta: "dict | None" = None,
 ) -> None:
     """Fold a processed batch INTO the index: parquet append of the
@@ -820,17 +795,14 @@ def minhash_index_append(
     re-scan of the batch.  Caller contract: the batch's ids are not
     already in the index (dedup first, then append the keepers).
 
-    Frame lifetime: the batch frame is persisted here and released in
-    ``finally`` (or handed to ``persisted_out``).  After a
-    minhash_index_dedup over the same batch the frame plan is the
-    lookup's, so Spark serves it from the lookup's cached copy, and the
-    release here frees that copy too."""
+    Frame lifetime: the batch frame is persisted in this call's scope
+    (io.scope), released when the call returns or fails, or by the
+    caller's scope when one is open.  After a minhash_index_dedup over
+    the same batch the frame plan is the lookup's, so Spark serves it
+    from the lookup's cached copy, and the release frees that copy too."""
     spark = df_new.sparkSession
-    # Frames persisted here go to the caller's persisted_out when given (it
-    # releases them after its batch); otherwise this call owns them.
-    persisted = [] if persisted_out is None else persisted_out
-    try:
-        batch = _persist_md(_batch_frame(df_new, id_col, tokens_col), persisted)
+    with gio.scope():
+        batch = gio.persist(_batch_frame(df_new, id_col, tokens_col))
         idx_sets = _IDX_STORE.read(spark, path, "sets")
         m = batch.join(idx_sets, batch["__set"] == idx_sets["skey"], "left")
         fresh_reps = m.filter(
@@ -865,10 +837,6 @@ def minhash_index_append(
                 .write.mode("append")
                 .parquet(os.path.join(path, "sets")),
             )
-    finally:
-        if persisted_out is None:
-            for frame in persisted:
-                frame.unpersist()
 
 
 def minhash_index_delete(ids: DataFrame, path: str, *, id_col: str = "doc_id") -> None:
@@ -896,7 +864,6 @@ def minhash_index_dedup(
     path: str,
     *,
     threshold: float = JACCARD_T,
-    persisted_out: "list | None" = None,
     exclude_ids: "DataFrame | None" = None,
 ) -> DataFrame:
     """Near-dup pairs of a NEW batch against the persisted index plus
@@ -919,10 +886,12 @@ def minhash_index_dedup(
     few ints) and lands in the bands scan as a static partition filter.
     Nothing rescans the corpus text.
 
-    Frame lifetime: the batch frame goes to ``persisted_out`` when given;
-    otherwise it stays cached — one batch-sized frame — until a
-    minhash_index_append of the same batch, which builds the same plan,
-    reads it from the cache and releases it.
+    Frame lifetime: the returned pairs read the cached batch frame, so
+    the lookup opens no scope; the caller's scope (io.scope) releases the
+    frame after the pairs are consumed.  With no scope open it stays
+    cached — one batch-sized frame — until a minhash_index_append of the
+    same batch, which builds the same plan, reads it from the cache and
+    releases it.
 
     ``exclude_ids`` (r13, VERDICT r12 item 7 — the streaming retry
     window): a one-column frame of doc ids to treat as ABSENT from the
@@ -936,7 +905,7 @@ def minhash_index_dedup(
     # BATCH-sized and fanned into every join below: persisted, which
     # inverts the corpus-side no-persist rule (minhash_bands_tokens) —
     # the exact asymmetry of the serving path.
-    batch = _persist_md(_batch_frame(df_new, id_col, tokens_col), persisted_out)
+    batch = gio.persist(_batch_frame(df_new, id_col, tokens_col))
     reps = batch.filter(F.col("__id") == F.col("__rep"))
     rep_bands = reps.select("__id", F.explode("bks").alias("bk"))
     probed = [
@@ -1322,12 +1291,10 @@ def dedup_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs excluded — a leak of any tombstoned row (or loss of any live
     one) breaks the gate.  Tombstone-clearing and bit-level equivalence
     to rebuild-without are pinned in tests/test_minhash_property.py."""
-    import tempfile
-
     idx = gio.clone_store(_incr_index_path(spark, sf_dir), "graft_idx_del_")
     docs = table(spark, sf_dir, "documents")
     minhash_index_delete(_deleted_ids(docs), idx)
-    compacted = os.path.join(tempfile.mkdtemp(prefix="graft_idx_delc_"), "idx")
+    compacted = os.path.join(gio.tempdir("graft_idx_delc_"), "idx")
     minhash_index_compact(spark, idx, compacted)
     return _relation_counts(spark, compacted)
 
@@ -1502,7 +1469,7 @@ def dedup_simhash_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once each (both band-join sides via reps, the intra branch, the
     # singles branch).  Six scalars per doc; one kernel pass + one window
     # shuffle total with the persist.
-    docs = _persist_md(
+    docs = gio.persist(
         fps.select(
             "doc_id",
             "fp",

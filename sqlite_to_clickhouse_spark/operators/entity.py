@@ -140,18 +140,17 @@ def blocked_name_pairs(names: DataFrame) -> DataFrame:
     The blocking keys (words) are df-capped before the self-join; the
     pair relation is DISTINCT on (name_a, name_b) so names sharing two
     words don't emit twice."""
-    words = (
+    # PERSISTED (r13, guide §1.2): three consumers — the df cap agg and
+    # BOTH sides of the blocked self-join — re-ran the names-scan +
+    # explode + distinct once each; the frame is (name, word) pairs,
+    # vocabulary-bounded.
+    words = gio.persist(
         names.select("nm", F.explode(F.split(F.col("nm"), " ")).alias("w"))
         .filter(F.col("w") != "")
         # Dedupe (nm, w): a repeated word within one name ("red red
         # widget") must count its tokens' df ONCE, so the stop-key cap is
         # a true distinct-name document frequency (ADVICE r9).
         .distinct()
-        # PERSISTED (r13, guide §1.2): three consumers — the df cap agg
-        # and BOTH sides of the blocked self-join — re-ran the
-        # names-scan + explode + distinct once each; the frame is
-        # (name, word) pairs, vocabulary-bounded.
-        .persist()
     )
     # Stop-key filter: df over DISTINCT names (names is already distinct,
     # and words is distinct on (nm, w)).
@@ -486,11 +485,10 @@ def _serving_state(spark: SparkSession, sf_dir: str):
     # so the df cap counts distinct names, not word occurrences
     # (ADVICE r9).  Persisted: fanned into the keys agg, two self-join
     # sides, and the batch cand join; name-vocabulary-sized.
-    cwords = (
+    cwords = gio.persist(
         cat.select("nm", F.explode(F.split(F.col("nm"), " ")).alias("w"))
         .filter(F.col("w") != "")
         .distinct()
-        .persist()
     )
     ckeys = (
         cwords.groupBy("w")
@@ -680,7 +678,7 @@ def er_golden_record_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # entity rollup) re-evaluated the whole merge tree — serving state,
     # two partial passes, the union — once each; the frame is
     # (entity, name, brand)-grain scalars.
-    merged = (
+    merged = gio.persist(
         _partials(cat_rows, cat_map)
         .unionAll(_partials(bat_rows, bat_map))
         .groupBy("entity_id", "p_name", "p_brand")
@@ -690,7 +688,6 @@ def er_golden_record_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("mx").alias("mx"),
             F.max("ms").alias("ms"),
         )
-        .persist()
     )
     votes = merged.groupBy("entity_id", "p_brand").agg(F.sum("cnt").alias("votes"))
     rk = Window.partitionBy("entity_id").orderBy(
@@ -778,22 +775,21 @@ def er_index_build(names: DataFrame, path: str) -> None:
     from sqlite_to_clickhouse_spark.operators.dedup import connected_components
 
     names = names.select("nm").distinct()
-    # The same plan as blocked_name_pairs' persisted words, so its persist
-    # is a cache hit on this frame and the finally below releases both.
-    words = (
-        names.select("nm", F.explode(F.split(F.col("nm"), " ")).alias("w"))
-        .filter(F.col("w") != "")
-        .distinct()
-        .persist()
-    )
-    # The verified pair graph is the build's most expensive subtree
-    # (blocking joins + per-candidate edit distance) and is consumed
-    # TWICE — by the clustering below and by the edges/ write.  CC
-    # persists only its derived undirected table and unpersists it
-    # before returning, so without this persist the edges write would
-    # re-run the whole blocking+verify pipeline from scratch.
-    pairs = blocked_name_pairs(names).select("name_a", "name_b").persist()
-    try:
+    with gio.scope():
+        # The same plan as blocked_name_pairs' persisted words, so its
+        # persist is a cache hit on this frame; the scope releases both.
+        words = gio.persist(
+            names.select("nm", F.explode(F.split(F.col("nm"), " ")).alias("w"))
+            .filter(F.col("w") != "")
+            .distinct()
+        )
+        # The verified pair graph is the build's most expensive subtree
+        # (blocking joins + per-candidate edit distance) and is consumed
+        # TWICE — by the clustering below and by the edges/ write.  CC
+        # persists only its derived undirected table and unpersists it
+        # before returning, so without this persist the edges write would
+        # re-run the whole blocking+verify pipeline from scratch.
+        pairs = gio.persist(blocked_name_pairs(names).select("name_a", "name_b"))
         dfc = words.groupBy("w").agg(F.count("*").alias("df"))
         stop = dfc.filter(F.col("df") > _ER_BLOCK_DF_CAP).select("w")
         postings = words.join(F.broadcast(stop), "w", "left_anti").select("w", "nm")
@@ -813,10 +809,6 @@ def er_index_build(names: DataFrame, path: str) -> None:
             lambda: pairs.write.parquet(os.path.join(path, "edges")),
         )
         _ER_STORE.commit(path, meta={"gen": 0})
-    finally:
-        # Released after a failed write as well as after a commit.
-        words.unpersist()
-        pairs.unpersist()
 
 
 def er_index_entities(spark: SparkSession, path: str) -> DataFrame:
@@ -911,7 +903,6 @@ def er_index_append(
     path: str,
     *,
     meta: "dict | None" = None,
-    cur: "DataFrame | None" = None,
 ) -> None:
     """Fold NEW names into the index under frozen-key semantics, then
     publish one atomic manifest commit: new names block against the
@@ -947,17 +938,12 @@ def er_index_append(
     from sqlite_to_clickhouse_spark.operators.dedup import connected_components
 
     bat = new_names.select("nm").filter(F.col("nm").isNotNull()).distinct()
-    # ``cur`` (r13, VERDICT r12 item 4): callers that already computed the
-    # CURRENT entity view (er_index_entities — one LWW window over the
-    # entities relation) pass it in, persisted, so the append does not
-    # re-run the window per consumer; the caller keeps ownership of the
-    # persist.  Contract: it must be the live view of ``path`` with no
-    # append between.  When absent the append computes (and owns) it.
-    owned_cur = cur is None
-    if owned_cur:
-        cur = er_index_entities(spark, path).persist()
-    persisted: list = []
-    try:
+    with gio.scope():
+        # The CURRENT entity view (one LWW window over the entities
+        # relation), persisted so its consumers do not re-run the window.
+        # A caller that filtered the batch against the same view reads
+        # this cached copy: the plans match.
+        cur = gio.persist(er_index_entities(spark, path))
         postings = _ER_STORE.read(spark, path, "postings")
         tomb = _ER_STORE.tombstones(spark, path)
         if tomb is not None:
@@ -992,8 +978,7 @@ def er_index_append(
                 .alias("kind"),
             )
         )
-        bw = stored.unionByName(fresh).persist()
-        persisted.append(bw)
+        bw = gio.persist(stored.unionByName(fresh))
         # The batch's posting rows: stored keys + admitted new keys.
         bat_postings = bw.filter(F.col("kind") == "key").select("w", "nm")
         new_stop = bw.filter(F.col("kind") == "new_stop").select("w").distinct()
@@ -1040,7 +1025,7 @@ def er_index_append(
         # the edges/ write then read this batch-bounded cached frame
         # instead of re-planning the candidate join, the edit-distance
         # verify and the entity lookups per consumer.
-        new_edges = (
+        new_edges = gio.persist(
             pairs.join(ea, F.col("name_a") == F.col("ea.nm"), "left")
             .join(eb, F.col("name_b") == F.col("eb.nm"), "left")
             .select(
@@ -1049,8 +1034,7 @@ def er_index_append(
                 F.coalesce(F.col("ea.entity_id"), F.col("name_a")).alias("src"),
                 F.coalesce(F.col("eb.entity_id"), F.col("name_b")).alias("dst"),
             )
-        ).persist()
-        persisted.append(new_edges)
+        )
         new_edges.count()
         # relabel: contracted node (old entity id or batch name) → merged id.
         # Its nodes are endpoints of batch-bounded edges, so it broadcasts
@@ -1111,12 +1095,6 @@ def er_index_append(
                     .parquet(os.path.join(path, "tombstones"))
                 )
             gio.run_jobs(*jobs)
-    finally:
-        # A failed write must not leak MEMORY_AND_DISK blocks.
-        if owned_cur:
-            cur.unpersist()
-        for frame in persisted:
-            frame.unpersist()
 
 
 def er_index_delete(spark: SparkSession, del_names: DataFrame, path: str) -> None:
@@ -1136,9 +1114,9 @@ def er_index_delete(spark: SparkSession, del_names: DataFrame, path: str) -> Non
     # NULL is not an entity name (same contract as er_index_append,
     # ADVICE r11): a NULL tombstone row would anti-join-mask nothing and
     # be un-tombstone-able forever — drop it at entry.
-    dels = del_names.select("nm").filter(F.col("nm").isNotNull()).distinct().persist()
-    cur = er_index_entities(spark, path).persist()
-    try:
+    with gio.scope():
+        dels = gio.persist(del_names.select("nm").filter(F.col("nm").isNotNull()).distinct())
+        cur = gio.persist(er_index_entities(spark, path))
         # Affected clusters: those holding a deleted name.
         hit_eids = (
             cur.join(dels, "nm")
@@ -1173,9 +1151,6 @@ def er_index_delete(spark: SparkSession, del_names: DataFrame, path: str) -> Non
             .select("nm", F.col("n.entity_id").alias("entity_id"), F.lit(gen).alias("gen"))
         )
         _ER_STORE.delete(dels, path, appends={"entities": changed}, meta={"gen": gen})
-    finally:
-        dels.unpersist()
-        cur.unpersist()
 
 
 def er_index_compact(spark: SparkSession, path: str, dst: str) -> None:
@@ -1549,14 +1524,12 @@ def er_index_append_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     The catalog is never re-paired: the relabel runs over the stored
     map's star edges plus the batch's verified pairs only."""
     idx = gio.clone_store(_er_index_path(spark, sf_dir), "er_idx_")
-    # One LWW window for both consumers (r13): the live-name filter and
-    # the append's relabel share the same pre-append entity view.
-    cur = er_index_entities(spark, idx).persist()
+    # One LWW window for both consumers (r13): the live-name filter is
+    # evaluated inside the append, which caches this same entity view.
     fresh = _er_batch_names(spark, sf_dir).join(
-        cur.select("nm"), "nm", "left_anti"
+        er_index_entities(spark, idx).select("nm"), "nm", "left_anti"
     )
-    er_index_append(spark, fresh, idx, cur=cur)
-    cur.unpersist()
+    er_index_append(spark, fresh, idx)
     ents = er_index_entities(spark, idx)
     return ents.select(
         F.col("nm").alias("name"),
@@ -1644,20 +1617,20 @@ def er_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions via exceptAll), the compacted snapshot must list no
     tombstone relation, and the surviving name/entity counts are
     differentially gated against the stored-edge delete oracle."""
-    idx = gio.clone_store(_er_index_path(spark, sf_dir), "er_idx_")
-    er_index_delete(spark, _er_registered_dels(spark, sf_dir), idx)
-    import tempfile
-
-    dst = os.path.join(tempfile.mkdtemp(prefix="er_compact_"), "idx")
-    er_index_compact(spark, idx, dst)
-    # Both entity views fan into multiple verification jobs (two
-    # exceptAll directions + two aggregates) and each evaluation repeats
-    # the LWW collapse window — persist them once, and run the four
-    # INDEPENDENT verification jobs overlapped (guide §2.6) instead of
-    # paying four sequential job tails.
-    before = er_index_entities(spark, idx).persist()
-    after = er_index_entities(spark, dst).persist()
-    try:
+    # The result is local rows, so this op releases its own stores and
+    # frames (io.scope) before it returns.
+    with gio.scope():
+        idx = gio.clone_store(_er_index_path(spark, sf_dir), "er_idx_")
+        er_index_delete(spark, _er_registered_dels(spark, sf_dir), idx)
+        dst = os.path.join(gio.tempdir("er_compact_"), "idx")
+        er_index_compact(spark, idx, dst)
+        # Both entity views fan into multiple verification jobs (two
+        # exceptAll directions + two aggregates) and each evaluation
+        # repeats the LWW collapse window — persist them once, and run the
+        # four INDEPENDENT verification jobs overlapped (guide §2.6)
+        # instead of paying four sequential job tails.
+        before = gio.persist(er_index_entities(spark, idx))
+        after = gio.persist(er_index_entities(spark, dst))
         # countDistinct, not distinct().count(): a NULL-name survivor
         # maps to a NULL entity, which DuckDB's count(DISTINCT ...)
         # excludes while Spark's distinct().count() would count as a row
@@ -1669,18 +1642,8 @@ def er_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda: after.count(),
             lambda: after.agg(F.countDistinct("entity_id")).collect()[0][0],
         )
-    finally:
-        before.unpersist()
-        after.unpersist()
-    views_equal = d_ab == 0 and d_ba == 0
+        cleared = not gio.manifest_relation_files(dst, "tombstones")
     return spark.createDataFrame(
-        [
-            (
-                n_names,
-                n_entities,
-                views_equal,
-                not gio.manifest_relation_files(dst, "tombstones"),
-            )
-        ],
+        [(n_names, n_entities, d_ab == 0 and d_ba == 0, cleared)],
         "n_names bigint, n_entities bigint, views_equal boolean, tombstones_cleared boolean",
     )

@@ -136,7 +136,7 @@ def sink_parquet_op(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="sink_parquet_"), "out")
+    path = os.path.join(gio.tempdir("sink_parquet_"), "out")
     sinks.sink_parquet(out, path, partition_by=["l_returnflag"])
     # Explicit schema on read-back: an EMPTY write leaves no data files
     # to infer from (only _SUCCESS), and empty inputs must round-trip to
@@ -185,7 +185,7 @@ def migrate_sqlite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     that a full migration is value-lossless modulo the documented
     coercions."""
     db = _stage_sqlite(sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="migrate_out_")
+    out_dir = gio.tempdir("migrate_out_")
     reports = migrate_sqlite(spark, db, out_dir, tables=["customer", "nation"])
     assert reports["customer"].deduped and reports["customer"].pk == ["c_custkey"]
     return spark.read.parquet(reports["customer"].target).select(
@@ -202,6 +202,7 @@ def _stage_format(spark: SparkSession, sf_dir: str, fmt: str) -> str:
     full write+read round trip of the format."""
     key = (sf_dir, fmt)
     if key not in _STAGED_FMT:
+        # Process-lifetime (memoized), so on plain tempfile, not gio.tempdir.
         path = os.path.join(tempfile.mkdtemp(prefix=f"scan_{fmt}_"), "nation")
         n = table(spark, sf_dir, "nation")
         if fmt == "csv":
@@ -265,6 +266,7 @@ def scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per process, read back as `value: string`, and re-typed."""
     key = sf_dir
     if key not in _TEXT_STAGED:
+        # Process-lifetime (memoized), so on plain tempfile, not gio.tempdir.
         path = os.path.join(tempfile.mkdtemp(prefix="scan_text_"), "nation")
         table(spark, sf_dir, "nation").select(
             F.concat_ws(
@@ -312,6 +314,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning makes per-key queries O(selected partition)."""
     key = sf_dir
     if key not in _PART_STAGED:
+        # Process-lifetime (memoized), so on plain tempfile, not gio.tempdir.
         path = os.path.join(tempfile.mkdtemp(prefix="sink_part_"), "orders")
         (
             table(spark, sf_dir, "orders")
@@ -360,7 +363,7 @@ def sink_partition_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFr
     """
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"]
     o = table(spark, sf_dir, "orders").select(*cols)
-    path = os.path.join(tempfile.mkdtemp(prefix="part_dyn_"), "orders")
+    path = os.path.join(gio.tempdir("part_dyn_"), "orders")
     o.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
     corrected = o.filter(F.col("o_orderpriority") == "1-URGENT").withColumn(
         "o_totalprice", F.col("o_totalprice") + 1000
@@ -533,7 +536,7 @@ def maintenance_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 2) < "0d"
     ).select("o_orderkey")
     remaining = o.join(F.broadcast(dels), "o_orderkey", "left_anti")
-    path = os.path.join(tempfile.mkdtemp(prefix="delete_rows_"), "orders")
+    path = os.path.join(gio.tempdir("delete_rows_"), "orders")
     remaining.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path).select("o_orderkey", "o_custkey", "o_totalprice")
 
@@ -558,7 +561,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged schema in a metastore; the per-read merge is the
     exploration-time path."""
     n = table(spark, sf_dir, "nation")
-    base = tempfile.mkdtemp(prefix="schema_evo_")
+    base = gio.tempdir("schema_evo_")
     n.select("n_nationkey", "n_name", F.lit("v1").alias("batch")).write.mode(
         "overwrite"
     ).parquet(os.path.join(base, "b1"))
@@ -589,7 +592,7 @@ def sink_sorted_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction of the files — the layout primitive for key-range analytics
     at 100 TB."""
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    path = os.path.join(tempfile.mkdtemp(prefix="sorted_clustered_"), "orders")
+    path = os.path.join(gio.tempdir("sorted_clustered_"), "orders")
     (
         o.repartitionByRange(8, "o_custkey")
         .sortWithinPartitions("o_custkey", "o_orderkey")
@@ -745,7 +748,7 @@ def maintenance_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    base = tempfile.mkdtemp(prefix="compact_")
+    base = gio.tempdir("compact_")
     small = os.path.join(base, "small")
     compacted = os.path.join(base, "compacted")
     li.repartition(64).write.mode("overwrite").parquet(small)
@@ -837,7 +840,7 @@ def migrate_verify_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra = base.filter(F.col("h") >= "f8").select(
         (F.col("o_orderkey") + 100000000).alias("o_orderkey"), "cents"
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="verify_diff_"), "orders")
+    path = os.path.join(gio.tempdir("verify_diff_"), "orders")
     kept.unionByName(extra).write.mode("overwrite").parquet(path)
     m = spark.read.parquet(path)
 
@@ -982,7 +985,7 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trippable decimal text (Java ``Double.toString``).  The write
     is one narrow pass per partition; no shuffle either direction."""
     out = _sink_text_projection(spark, sf_dir)
-    path = os.path.join(tempfile.mkdtemp(prefix="sink_csv_"), "out")
+    path = os.path.join(gio.tempdir("sink_csv_"), "out")
     out.write.mode("overwrite").option("header", True).csv(path)
     return spark.read.schema(out.schema).option("header", True).csv(path)
 
@@ -995,7 +998,7 @@ def sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Explicit schema on read-back for the same reason: inference samples
     the data and can narrow types run-to-run."""
     out = _sink_text_projection(spark, sf_dir)
-    path = os.path.join(tempfile.mkdtemp(prefix="sink_json_"), "out")
+    path = os.path.join(gio.tempdir("sink_json_"), "out")
     out.write.mode("overwrite").json(path)
     return spark.read.schema(out.schema).json(path)
 
@@ -1042,7 +1045,7 @@ def maintenance_ttl_partition_drop(spark: SparkSession, sf_dir: str) -> DataFram
         "o_orderkey", "o_totalprice", "o_orderdate",
         F.date_format("o_orderdate", "yyyy-MM").alias("ym"),
     )
-    base = os.path.join(tempfile.mkdtemp(prefix="ttl_drop_"), "orders")
+    base = os.path.join(gio.tempdir("ttl_drop_"), "orders")
     # Clustered by ym for the same reason as maintenance_partition_compact:
     # parallel file creation, same one-file-per-month layout.
     o.repartition("ym").write.mode("overwrite").partitionBy("ym").parquet(base)
@@ -1120,7 +1123,7 @@ def sink_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish through, not a parallel implementation."""
 
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    base = tempfile.mkdtemp(prefix="time_travel_")
+    base = gio.tempdir("time_travel_")
     d1 = os.path.join(base, "data", "add-0001")
     d2 = os.path.join(base, "data", "add-0002")
     o.filter(F.col("o_orderkey") % 3 != 0).write.parquet(d1)
@@ -1189,7 +1192,7 @@ def maintenance_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     protocol supports unchanged — v3 would list rewritten files for the
     compacted partitions and v2's originals for the rest."""
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    base = tempfile.mkdtemp(prefix="snapshot_vacuum_")
+    base = gio.tempdir("snapshot_vacuum_")
     ddir = os.path.join(base, "data")
     d1 = os.path.join(ddir, "add-0001")
     d2 = os.path.join(ddir, "add-0002")
@@ -1288,7 +1291,7 @@ def maintenance_partition_compact(spark: SparkSession, sf_dir: str) -> DataFrame
         "o_orderkey", "o_totalprice",
         F.date_format("o_orderdate", "yyyy-MM").alias("ym"),
     )
-    base = tempfile.mkdtemp(prefix="part_compact_")
+    base = gio.tempdir("part_compact_")
     orig = os.path.join(base, "orig")
     comp = os.path.join(base, "comp")
     # repartition on the partition key: the orders scan is one input
@@ -1405,7 +1408,7 @@ def sink_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
 
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    base = tempfile.mkdtemp(prefix="shallow_clone_")
+    base = gio.tempdir("shallow_clone_")
     d_src = os.path.join(base, "data", "src-0001")
     d_cln = os.path.join(base, "data", "cln-0001")
     t_src = os.path.join(base, "tbl_source")
@@ -1485,7 +1488,7 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = sorted(n.collect(), key=lambda r: (r[0] is None, r[0]))
     assert len(rows) < 100_000, "dimension staging must stay bounded"
-    base = tempfile.mkdtemp(prefix="csv_permissive_")
+    base = gio.tempdir("csv_permissive_")
     path = os.path.join(base, "nation.csv")
     def _field(v) -> str:
         # NULL stages as the literal empty field so the CSV round-trips

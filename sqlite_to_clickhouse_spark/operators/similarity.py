@@ -2288,7 +2288,6 @@ def sim_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_llm_ops.py."""
     import glob as _glob
     import hashlib
-    import tempfile
 
     def _state_digest(p: str) -> str:
         h = hashlib.md5()
@@ -2304,7 +2303,7 @@ def sim_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("vec_id") % ANN_DEL_MOD == ANN_DEL_REM).select("vec_id"),
         idx,
     )
-    compacted = os.path.join(tempfile.mkdtemp(prefix="ann_delc_"), "idx")
+    compacted = os.path.join(gio.tempdir("ann_delc_"), "idx")
     ann_index_compact(spark, idx, compacted)
     codes_rows = _ANN_STORE.read(spark, compacted, "codes").count()
     return spark.createDataFrame(

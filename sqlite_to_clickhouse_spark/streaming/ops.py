@@ -32,6 +32,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sqlite_to_clickhouse_spark import io as gio
 from sqlite_to_clickhouse_spark.registry import register
 
 _MEM_COUNTER = itertools.count()
@@ -283,8 +284,8 @@ def stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("cnt"), F.round(F.sum("value"), 2).alias("sum_value")
     )
-    out_dir = tempfile.mkdtemp(prefix="stream_foreach_sink_")
-    ckpt = tempfile.mkdtemp(prefix="stream_foreach_ckpt_")
+    out_dir = gio.tempdir("stream_foreach_sink_")
+    ckpt = gio.tempdir("stream_foreach_ckpt_")
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(os.path.join(out_dir, "result"))
@@ -579,7 +580,6 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     invocation builds its own index copy in a temp dir: appends mutate
     the index, so the shared cached generation (which dedup_incremental
     reuses) must never be the append target."""
-    from sqlite_to_clickhouse_spark import io as gio
     from sqlite_to_clickhouse_spark.io import table as _table
     from sqlite_to_clickhouse_spark.operators.dedup import (
         _incr_batch_pred,
@@ -589,7 +589,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _table(spark, sf_dir, "documents")
     idx = gio.clone_store(_incr_index_path(spark, sf_dir), "stream_incr_idx_")
     batch = docs.filter(_incr_batch_pred())
-    stage = os.path.join(tempfile.mkdtemp(prefix="stream_incr_stage_"), "in")
+    stage = os.path.join(gio.tempdir("stream_incr_stage_"), "in")
     out, ckpt = [None], [None]
 
     def _mk_dirs():
@@ -609,12 +609,12 @@ _PAIR_SCHEMA = "doc_a bigint, doc_b bigint, jaccard double"
 
 
 def _incr_stream_dirs(spark: SparkSession) -> tuple:
-    out = os.path.join(tempfile.mkdtemp(prefix="stream_incr_out_"), "pairs")
+    out = os.path.join(gio.tempdir("stream_incr_out_"), "pairs")
     # Pre-create so an empty batch (zero micro-batches) still reads back.
     spark.createDataFrame([], _PAIR_SCHEMA).write.parquet(
         os.path.join(out, "ep-init")
     )
-    return out, tempfile.mkdtemp(prefix="stream_incr_ckpt_")
+    return out, gio.tempdir("stream_incr_ckpt_")
 
 
 def _incr_dedup_handler(spark: SparkSession, idx: str, out: str):
@@ -639,7 +639,6 @@ def _incr_dedup_handler(spark: SparkSession, idx: str, out: str):
     double-append nor the silent-drop window exists, and the per-batch
     idempotence check is ONE JSON read however long the stream runs
     (pre-r11 it re-parsed every committed manifest per micro-batch)."""
-    from sqlite_to_clickhouse_spark import io as gio
     from sqlite_to_clickhouse_spark.io import manifest_applied_meta
     from sqlite_to_clickhouse_spark.operators.dedup import (
         _doc_tokens,
@@ -648,10 +647,6 @@ def _incr_dedup_handler(spark: SparkSession, idx: str, out: str):
     )
 
     def handle(bdf: DataFrame, epoch_id: int) -> None:
-        # Batch-scoped persisted frames are handed back and unpersisted per
-        # micro-batch: a production stream runs this loop indefinitely, and
-        # disk-backed cached blocks are never auto-evicted (ADVICE r8).
-        batch_persists: list = []
         toks = _doc_tokens(bdf)
         # The applied-epoch check runs BEFORE the lookup plan is built
         # (VERDICT r12 item 7): when this epoch's append already COMMITTED
@@ -662,10 +657,15 @@ def _incr_dedup_handler(spark: SparkSession, idx: str, out: str):
         # from the index side, reproducing the pre-append lookup exactly
         # (pinned by test_retry_after_committed_append_is_byte_identical).
         applied = int(epoch_id) in manifest_applied_meta(idx, "epoch")
-        try:
+        # One scope per micro-batch releases the batch's cached frames (the
+        # lookup's, which the append reads too) when the batch ends: a
+        # production stream runs this loop indefinitely, and disk-backed
+        # cached blocks are never auto-evicted (ADVICE r8).  foreachBatch
+        # calls this on a thread with a fresh context, so the scope is the
+        # outermost one even when the stream was started inside another.
+        with gio.scope():
             pairs = minhash_index_dedup(
                 spark, toks, "doc_id", "tk", idx,
-                persisted_out=batch_persists,
                 exclude_ids=toks.select("doc_id") if applied else None,
             ).select(
                 F.col("id_a").alias("doc_a"),
@@ -688,15 +688,10 @@ def _incr_dedup_handler(spark: SparkSession, idx: str, out: str):
             if not applied:
                 jobs.append(
                     lambda: minhash_index_append(
-                        toks, "doc_id", "tk", idx,
-                        persisted_out=batch_persists,
-                        meta={"epoch": int(epoch_id)},
+                        toks, "doc_id", "tk", idx, meta={"epoch": int(epoch_id)}
                     )
                 )
             gio.run_jobs(*jobs)
-        finally:
-            for frame in batch_persists:
-                frame.unpersist()
 
     return handle
 
@@ -774,12 +769,10 @@ def stream_incremental_dedup_deletes(spark: SparkSession, sf_dir: str) -> DataFr
         minhash_index_delete,
     )
 
-    from sqlite_to_clickhouse_spark import io as gio
-
     docs = _table(spark, sf_dir, "documents")
     idx = gio.clone_store(_incr_index_path(spark, sf_dir), "stream_incr_idx_")
     batch = docs.filter(_incr_batch_pred())
-    stage = os.path.join(tempfile.mkdtemp(prefix="stream_incrdel_stage_"), "in")
+    stage = os.path.join(gio.tempdir("stream_incrdel_stage_"), "in")
     out, ckpt = [None], [None]
 
     def _mk_dirs():

@@ -452,3 +452,69 @@ def test_parquet_schema_is_inferred_once_per_file_version(spark, tmp_path):
     assert _last_job(spark) > before
     assert df.columns == ["a", "b"]
     assert df.count() == 3
+
+
+def test_scope_releases_frames_and_dirs_of_the_outermost_scope_only(spark):
+    """The lifetime rule of io.scope: a nested scope defers to the
+    outermost one, a persist made on a run_jobs thread is released by the
+    caller's scope, and with no scope open a persisted frame stays cached
+    and a temp dir stays on disk."""
+
+    def cached() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def frame(n: int):
+        # A distinct plan per frame, so no two share one cache entry.
+        return spark.range(n).selectExpr("id * 2 AS v")
+
+    before = cached()
+    with io.scope():
+        outer_dir = io.tempdir("scope_test_")
+        with io.scope():
+            inner = io.persist(frame(11))
+            inner.count()
+            inner_dir = io.tempdir("scope_test_")
+        # The nested scope released nothing.
+        assert len(cached() - before) == 1
+        assert os.path.isdir(inner_dir)
+        # Two thunks, so both run on pool threads.
+        threaded, thread_dir = io.run_jobs(
+            lambda: io.persist(frame(12)), lambda: io.tempdir("scope_test_")
+        )
+        threaded.count()
+        assert len(cached() - before) == 2
+    assert cached() - before == set()
+    for d in (outer_dir, inner_dir, thread_dir):
+        assert not os.path.exists(d)
+
+    loose = io.persist(frame(13))
+    loose.count()
+    loose_dir = io.tempdir("scope_test_")
+    try:
+        assert len(cached() - before) == 1
+        assert os.path.isdir(loose_dir)
+    finally:
+        loose.unpersist()
+        os.rmdir(loose_dir)
+
+
+def test_scope_keeps_every_registration_from_concurrent_threads(tmp_path, monkeypatch):
+    """run_jobs threads register into one scope's release list at once; a
+    lost registration would leave its temp dir behind."""
+    import sys
+    import tempfile
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)  # re-resolve from TMPDIR
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with io.scope():
+            made = io.run_jobs(
+                *[lambda: [io.tempdir("race_") for _ in range(50)]] * 16
+            )
+            assert len(os.listdir(tmp_path)) == 16 * 50
+    finally:
+        sys.setswitchinterval(interval)
+    assert sum(len(m) for m in made) == 16 * 50
+    assert os.listdir(tmp_path) == []

@@ -2,13 +2,21 @@
 (500 docs, 500 vectors).  A job costs scheduling and a stage barrier
 whatever its size, and at batch scale these ops are bound by exactly that,
 so each pinned count is the op's current count plus 2: a change that adds
-jobs to the serving path fails here before it shows in the benchmark."""
+jobs to the serving path fails here before it shows in the benchmark.
+
+The same ops, and the registry ops that used to leave cached frames or
+temp dirs behind, run inside one io.scope and must leave no persisted RDD
+and no new TMPDIR entry once it exits."""
 
 from __future__ import annotations
+
+import os
+import tempfile
 
 import pyspark.sql.functions as F
 import pytest
 
+from sqlite_to_clickhouse_spark import io as gio
 from sqlite_to_clickhouse_spark.io import table
 
 
@@ -24,6 +32,32 @@ def _jobs(spark, fn) -> int:
     before = last()
     fn()
     return last() - before
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _private_tmpdir(tmp_path_factory):
+    """A TMPDIR of this module's own, so the temp-dir deltas below count only
+    what this process made (the shared index generations are rebuilt in it)."""
+    d = tmp_path_factory.mktemp("tmpdir")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("TMPDIR", str(d))
+        mp.setattr(tempfile, "tempdir", None)  # re-resolve from TMPDIR
+        yield
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _tmp_entries(sf_dir: str) -> set:
+    """TMPDIR entries, less the shared index generations (the io.cache_base
+    roots of ``sf_dir`` and their lock files), which live for the process."""
+    tag = gio.cache_base("", sf_dir).rsplit("_", 1)[1]
+    return {
+        n
+        for n in os.listdir(tempfile.gettempdir())
+        if not (n.startswith("graft_") and n.split(".")[0].endswith(tag))
+    }
 
 
 def test_minhash_lookup_and_append_job_budget(spark, sf_dir, tmp_path):
@@ -104,14 +138,32 @@ _LIFECYCLE_BUDGETS = {
 
 @pytest.mark.parametrize("op", sorted(_LIFECYCLE_BUDGETS))
 def test_lifecycle_op_job_budget(spark, sf_dir, built_stores, op):
-    from sqlite_to_clickhouse_spark.io import clone_store
+    from sqlite_to_clickhouse_spark.operators.dedup import _incr_index_path
+
+    store, budget = _LIFECYCLE_BUDGETS[op]
+    if op == "stream_incremental_dedup":
+        # The shared corpus generation is built once per fixture; its build
+        # jobs are not the stream's.
+        _incr_index_path(spark, sf_dir)
+    rdds, entries = _persisted(spark), _tmp_entries(sf_dir)
+    with gio.scope():
+        run = _lifecycle_op(spark, sf_dir, built_stores, op, store)
+        spark.catalog.clearCache()
+        jobs = _jobs(spark, run)
+    assert jobs <= budget, (op, jobs)
+    assert _persisted(spark) - rdds == set(), op
+    assert _tmp_entries(sf_dir) - entries == set(), op
+
+
+def _lifecycle_op(spark, sf_dir, built_stores, op, store):
+    """The op's timed call, after its setup: a private clone of the store,
+    and for a compaction the delete it compacts."""
     from sqlite_to_clickhouse_spark.operators import dedup as D
     from sqlite_to_clickhouse_spark.operators import entity as E
     from sqlite_to_clickhouse_spark.operators import similarity as S
     from sqlite_to_clickhouse_spark.streaming.ops import stream_incremental_dedup
 
-    store, budget = _LIFECYCLE_BUDGETS[op]
-    idx = clone_store(built_stores[store], "job_budget_") if store else None
+    idx = gio.clone_store(built_stores[store], "job_budget_") if store else None
     docs = table(spark, sf_dir, "documents")
     vecs = table(spark, sf_dir, "embeddings")
     deletes = {
@@ -131,23 +183,52 @@ def test_lifecycle_op_job_budget(spark, sf_dir, built_stores, op):
     }
     if op.endswith("_compact"):
         deletes[store]()
-        run = lambda: compact[store](spark, idx, idx + "-c")  # noqa: E731
-    elif op.endswith("_delete"):
-        run = deletes[store]
-    else:
-        run = {
-            "ann_query": lambda: S.ann_index_query(
-                spark, vecs, idx, probes, k=S.TOP_K, nprobe=S.ANN_INCR_NPROBE
-            ).collect(),
-            "ann_append": lambda: S.ann_index_append(spark, vecs.filter(S._ann_batch_pred()), idx),
-            "er_match": lambda: E.er_index_match(spark, E._er_batch_names(spark, sf_dir), idx).collect(),
-            "er_append": lambda: E.er_index_append(spark, E._er_batch_names(spark, sf_dir), idx),
-            "stream_incremental_dedup": lambda: stream_incremental_dedup(spark, sf_dir).collect(),
-        }[op]
-    if op == "stream_incremental_dedup":
-        # The shared corpus generation is built once per fixture; its build
-        # jobs are not the stream's.
-        D._incr_index_path(spark, sf_dir)
+        return lambda: compact[store](spark, idx, idx + "-c")
+    if op.endswith("_delete"):
+        return deletes[store]
+    return {
+        "ann_query": lambda: S.ann_index_query(
+            spark, vecs, idx, probes, k=S.TOP_K, nprobe=S.ANN_INCR_NPROBE
+        ).collect(),
+        "ann_append": lambda: S.ann_index_append(spark, vecs.filter(S._ann_batch_pred()), idx),
+        "er_match": lambda: E.er_index_match(spark, E._er_batch_names(spark, sf_dir), idx).collect(),
+        "er_append": lambda: E.er_index_append(spark, E._er_batch_names(spark, sf_dir), idx),
+        "stream_incremental_dedup": lambda: stream_incremental_dedup(spark, sf_dir).collect(),
+    }[op]
+
+
+# Registry ops that left cached frames behind before io.scope (the first
+# fourteen), and ops that make and consume temp dirs or cloned stores.
+_LEAK_OPS = [
+    "dedup_fuzzy_minhash",
+    "dedup_incremental",
+    "dedup_incremental_deletes",
+    "dedup_simhash_nn",
+    "dedup_connected_components",
+    "dedup_corpus_apply",
+    "dedup_keep_best",
+    "dedup_threshold_sweep",
+    "dedup_lsh_recall",
+    "er_blocked_pairs",
+    "er_clusters",
+    "er_golden_record",
+    "er_incremental_match",
+    "er_golden_record_incremental",
+    "dedup_index_delete_compact",
+    "er_index_delete_compact",
+    "stream_incremental_dedup",
+    "sink_parquet",
+]
+
+
+@pytest.mark.parametrize("name", _LEAK_OPS)
+def test_registry_op_leaves_nothing_in_scope(spark, sf_dir, name):
+    from sqlite_to_clickhouse_spark.registry import all_queries
+
+    fn = all_queries()[name].fn
     spark.catalog.clearCache()
-    jobs = _jobs(spark, run)
-    assert jobs <= budget, (op, jobs)
+    rdds, entries = _persisted(spark), _tmp_entries(sf_dir)
+    with gio.scope():
+        assert fn(spark, sf_dir).count() >= 0
+    assert _persisted(spark) - rdds == set(), name
+    assert _tmp_entries(sf_dir) - entries == set(), name

@@ -138,6 +138,7 @@ def test_append_after_lookup_equals_plain_append(spark, sf_dir, tmp_path):
     same lookup pairs."""
     import pyspark.sql.functions as F
 
+    from sqlite_to_clickhouse_spark import io as gio
     from sqlite_to_clickhouse_spark.io import table
     from sqlite_to_clickhouse_spark.operators.dedup import (
         _IDX_STORE,
@@ -156,22 +157,14 @@ def test_append_after_lookup_equals_plain_append(spark, sf_dir, tmp_path):
     minhash_index_build(corpus, "doc_id", "tk", p_pre)
     minhash_index_build(corpus, "doc_id", "tk", p_plain)
 
-    handles: list = []
-    pre_pairs = _pairs(
-        minhash_index_dedup(spark, b1, "doc_id", "tk", p_pre, persisted_out=handles)
-    )
-    minhash_index_append(b1, "doc_id", "tk", p_pre, persisted_out=handles)
-    for frame in handles:
-        frame.unpersist()
+    with gio.scope():
+        pre_pairs = _pairs(minhash_index_dedup(spark, b1, "doc_id", "tk", p_pre))
+        minhash_index_append(b1, "doc_id", "tk", p_pre)
 
     # The plain side releases its lookup's frame first, so its append
     # computes the batch frame afresh.
-    handles = []
-    plain_pairs = _pairs(
-        minhash_index_dedup(spark, b1, "doc_id", "tk", p_plain, persisted_out=handles)
-    )
-    for frame in handles:
-        frame.unpersist()
+    with gio.scope():
+        plain_pairs = _pairs(minhash_index_dedup(spark, b1, "doc_id", "tk", p_plain))
     minhash_index_append(b1, "doc_id", "tk", p_plain)
     assert pre_pairs == plain_pairs
 

@@ -14,8 +14,11 @@ delete ids), then one compaction per store, each after a cache clear.
 
 For every op it prints the wall time and what the op cost Spark: jobs,
 stages that ran (skipped ones excluded), tasks and generated-code compiles
-(``session.codegen_compiles``).  Job ids are read just before and just after
-each call, so the store builds' jobs never count against the first lookup.
+(``session.codegen_compiles``), and ``cached``: how many more RDDs are
+persisted after the call than before it (a lookup's batch frame shows +1
+until the append of the same batch releases it).  Job ids are read just
+before and just after each call, so the store builds' jobs never count
+against the first lookup.
 The last line is the same table as one JSON object.  Scratch files live in
 a temp dir that is removed on exit.
 """
@@ -40,9 +43,9 @@ STORES = ("dedup", "similarity", "entity")
 
 
 class JobCounter:
-    """Jobs, stages, tasks and compiles between two reads of the status
-    tracker.  Job ids are dense per context, so the newest id before a call
-    bounds the jobs the call started."""
+    """Jobs, stages, tasks, compiles and persisted RDDs between two reads of
+    the status tracker.  Job ids are dense per context, so the newest id
+    before a call bounds the jobs the call started."""
 
     def __init__(self, spark):
         self.spark = spark
@@ -52,15 +55,18 @@ class JobCounter:
         self.sc._jsc.sc().listenerBus().waitUntilEmpty()
         return max(self.sc.statusTracker().getJobIdsForGroup() or [-1])
 
+    def _cached(self) -> int:
+        return self.sc._jsc.getPersistentRDDs().size()
+
     def start(self):
         from sqlite_to_clickhouse_spark.session import codegen_compiles
 
-        return self._last_job(), codegen_compiles(self.spark), time.perf_counter()
+        return self._last_job(), codegen_compiles(self.spark), self._cached(), time.perf_counter()
 
     def stop(self, mark) -> dict:
         from sqlite_to_clickhouse_spark.session import codegen_compiles
 
-        wall = time.perf_counter() - mark[2]
+        wall = time.perf_counter() - mark[3]
         last = self._last_job()
         store = self.sc._jsc.sc().statusStore()
         tracker = self.sc.statusTracker()
@@ -83,6 +89,7 @@ class JobCounter:
             "stages": stages,
             "tasks": tasks,
             "compiles": codegen_compiles(self.spark) - mark[1],
+            "cached": self._cached() - mark[2],
         }
 
 
@@ -181,7 +188,7 @@ def _run(args, work: str) -> int:
             fn()
             rows.append({"tick": "m", "op": op, **counter.stop(mark)})
 
-    cols = ("wall_s", "jobs", "stages", "tasks", "compiles")
+    cols = ("wall_s", "jobs", "stages", "tasks", "compiles", "cached")
     print(f"{'tick':>4}  {'op':18s}" + "".join(f"{c:>10s}" for c in cols))
     for r in rows:
         print(f"{r['tick']!s:>4}  {r['op']:18s}" + "".join(f"{r[c]!s:>10s}" for c in cols))
