@@ -16,8 +16,8 @@ clean up however they are called.  Functions that return a lazy frame
 never open one, because the frame may still read what they made; their
 caller wraps the call and the consumption of its result in one scope.
 With no scope open nothing is tracked.  Process-lifetime state (the
-``cache_base`` generations, memoized staged inputs) stays on plain
-``tempfile``.
+``cache_base`` generations, staged fixture copies among them) stays on
+plain ``tempfile``.
 """
 
 from __future__ import annotations
@@ -140,6 +140,17 @@ def persist(df: DataFrame) -> DataFrame:
     scope (if any)."""
     df = df.persist()
     _own(df.unpersist)
+    return df
+
+
+def checkpoint(df: DataFrame, *, eager: bool = False) -> DataFrame:
+    """``df.localCheckpoint(eager)``, whose checkpoint RDD the open scope
+    unpersists (if any).  The frame reads those blocks, so they can go
+    only when the scope exits, not when the checkpointing call returns."""
+    df = df.localCheckpoint(eager=eager)
+    if _SCOPE.get() is not None:
+        rdd = df._jdf.queryExecution().logical().rdd()
+        _own(lambda: rdd.unpersist(False))
     return df
 
 
@@ -312,6 +323,18 @@ def ensure_generation(kind: str, key: str, fp: str, build, *, force: bool = Fals
         write_atomic(cur_file, name)  # atomic pointer swap
         _gc_generations(base, keep=name)
     return gen
+
+
+def staged(kind: str, sf_dir: str, tables: "tuple[str, ...]", name: str, write) -> str:
+    """Path of a copy of fixture ``tables`` staged in another layout (a
+    SQLite db, a CSV or text dir, a stream source dir): ``write(path)``
+    makes it, once per version of the tables' parquet files, as ``name``
+    inside an ``ensure_generation`` generation.  A reader listing the
+    copy's directory never sees the generation marker, and a regenerated
+    fixture gets a fresh generation instead of the stale copy."""
+    fp = file_fingerprint(*(os.path.join(sf_dir, f"{t}.parquet") for t in tables))
+    gen = ensure_generation(kind, sf_dir, fp, lambda g: write(os.path.join(g, name)))
+    return os.path.join(gen, name)
 
 
 # ---------------------------------------------------------------------------
@@ -787,25 +810,18 @@ def read_relation(
 class IndexStore:
     """``schemas``: relation → DDL schema; the relation list of every
     commit.  ``partitions``: relation → its on-disk partition column.
-    ``tombstone``: the tombstone key, one ``"name type"`` DDL column.
-    ``inferred``: relations read with the schema their files carry (ANN
-    codes: the id column is the caller's and the bucket type is
-    inferred); their DDL is only the shape of an empty read."""
+    ``tombstone``: the tombstone key, one ``"name type"`` DDL column."""
 
     schemas: "dict[str, str]"
     tombstone: str
     partitions: "dict[str, str]" = field(default_factory=dict)
-    inferred: "frozenset[str]" = frozenset()
 
     def read(self, spark: SparkSession, root: str, rel: str) -> DataFrame:
         """Manifest-resolved scan of one relation.  A relation with no
         committed files (an empty partitioned write emits none) reads as
         an empty frame of the declared schema."""
         ddl = self.schemas[rel]
-        df = read_relation(
-            spark, root, rel, None if rel in self.inferred else ddl,
-            partitioned=rel in self.partitions,
-        )
+        df = read_relation(spark, root, rel, ddl, partitioned=rel in self.partitions)
         return df if df is not None else spark.createDataFrame([], ddl)
 
     def tombstones(self, spark: SparkSession, root: str) -> "DataFrame | None":
@@ -979,9 +995,9 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
 # Parquet schema inference runs one Spark job per read (a footer scan, ~70 ms
 # on a 4-core host), and a query mix reads the same tables again and again.
-# Inferred schemas are kept per local path, keyed by the size and mtime of
-# every file under it and by the confs that change inference, so a
-# rewritten table is inferred afresh.
+# The schemas it finds are kept per local path, keyed by the size and mtime
+# of every file under it and by the confs that change inference, so a
+# rewritten table's schema is read afresh.
 _SCHEMAS: dict = {}
 _SCHEMAS_MAX = 256
 _INFER_CONFS = (

@@ -1660,7 +1660,8 @@ def connected_components(
     # ~0.3-0.6 s/round of pure planning on deep-lineage inputs
     # (er_index_append's contracted CC: 4.1 s → 1.6 s standalone).  The
     # checkpoint truncates the plan to a leaf while keeping the
-    # repartition's hash layout on the materialized blocks.
+    # repartition's hash layout on the materialized blocks.  The open
+    # io.scope releases the checkpoint blocks (gio.checkpoint).
     if driver_cap > 0 and _CC_DRIVER_BYTES > 0 and isinstance(node_t, _DRIVER_TYPES):
         if isinstance(node_t, T.StringType):
             row_bytes = F.octet_length("s") + F.octet_length("d") + F.lit(64)
@@ -1683,15 +1684,15 @@ def connected_components(
                 )
                 if comp is not None:
                     return comp
-            und = cached.repartition("s").localCheckpoint(eager=True)
+            und = gio.checkpoint(cached.repartition("s"), eager=True)
         finally:
             cached.unpersist()
     else:
         # Lazy: materialized once, by the labels count that must run anyway.
-        und = und.repartition("s").localCheckpoint(eager=False)
-    labels = (
+        und = gio.checkpoint(und.repartition("s"))
+    labels = gio.checkpoint(
         und.select(F.col("s").alias("node")).distinct().withColumn("label", F.col("node"))
-    ).localCheckpoint(eager=False)
+    )
     for i in range(_CC_MAX_ITER):
         nbr_min = (
             und.join(labels, und["s"] == labels["node"])
@@ -1708,13 +1709,13 @@ def connected_components(
             )
             joined = joined.join(lol, labels["label"] == lol["jnode"], "left")
             cand = F.least(cand, F.coalesce(F.col("jlabel"), F.col("label")))
-        stepped = (
+        stepped = gio.checkpoint(
             joined.select(
                 "node",
                 F.least(F.col("label"), cand).alias("new_label"),
                 (cand < F.col("label")).alias("chg"),
             )
-        ).localCheckpoint(eager=False)
+        )
         changed = stepped.filter(F.col("chg")).count()
         labels = stepped.select("node", F.col("new_label").alias("label"))
         if changed == 0:

@@ -2,9 +2,10 @@
 sink_parquet, sink_jdbc_clickhouse + the full R1→R15 migration pipeline).
 
 The driver fixtures are parquet-only, so the SQLite-side ops stage a real
-SQLite database in /tmp (built once per sf from the same parquet the
-oracle reads) and run the genuine extract path against it — catalog,
-PRAGMA introspection, partitioned ranged reads, cast battery, pk dedup.
+SQLite database in /tmp (built once per fixture version from the same
+parquet the oracle reads) and run the genuine extract path against it —
+catalog, PRAGMA introspection, partitioned ranged reads, cast battery, pk
+dedup.
 What is asserted is therefore the whole migration pipeline's semantics:
 SQLite values in, oracle-identical typed rows out.
 """
@@ -13,7 +14,6 @@ from __future__ import annotations
 
 import os
 import sqlite3
-import tempfile
 
 import pyarrow.parquet as pq
 
@@ -42,43 +42,39 @@ _SQLITE_DDL = {
     ),
 }
 
-_DB_CACHE: dict[str, str] = {}
-
 
 def _stage_sqlite(sf_dir: str) -> str:
-    """Build (once per sf per process) a SQLite db holding customer+nation
-    copied from the fixture parquet, with ~100 duplicate customer rows
-    re-inserted so the migration path has real last-write-wins work."""
-    if sf_dir in _DB_CACHE:
-        return _DB_CACHE[sf_dir]
-    fd, path = tempfile.mkstemp(prefix="graft_sqlite_", suffix=".db")
-    os.close(fd)
-    os.unlink(path)
-    con = sqlite3.connect(path)
-    try:
-        for t, ddl in _SQLITE_DDL.items():
-            con.execute(ddl)
-            rows = pq.read_table(f"{sf_dir}/{t}.parquet").to_pylist()
-            if not rows:
-                # Empty source table: the DDL alone is the staging (an
-                # INSERT with zero columns is a SQLite syntax error even
-                # under executemany-with-no-rows, which prepares first).
-                continue
-            cols = list(rows[0])
-            placeholders = ", ".join("?" for _ in cols)
-            stmt = f"INSERT OR REPLACE INTO {t} ({', '.join(cols)}) VALUES ({placeholders})"
-            con.executemany(stmt, [[r[c] for c in cols] for r in rows])
-            if t == "customer":
-                # Re-insert the first 100 rows. INSERT OR REPLACE gives the
-                # replacements fresh (higher) rowids, so the migration's
-                # last-write-wins-by-rowid dedup sees realistic version
-                # churn while the final value set stays oracle-identical.
-                con.executemany(stmt, [[r[c] for c in cols] for r in rows[:100]])
-        con.commit()
-    finally:
-        con.close()
-    _DB_CACHE[sf_dir] = path
-    return path
+    """A SQLite db holding customer+nation copied from the fixture
+    parquet, with ~100 duplicate customer rows re-inserted so the
+    migration path has real last-write-wins work (staged once per
+    fixture version, io.staged)."""
+
+    def write(path: str) -> None:
+        con = sqlite3.connect(path)
+        try:
+            for t, ddl in _SQLITE_DDL.items():
+                con.execute(ddl)
+                rows = pq.read_table(f"{sf_dir}/{t}.parquet").to_pylist()
+                if not rows:
+                    # Empty source table: the DDL alone is the staging (an
+                    # INSERT with zero columns is a SQLite syntax error even
+                    # under executemany-with-no-rows, which prepares first).
+                    continue
+                cols = list(rows[0])
+                placeholders = ", ".join("?" for _ in cols)
+                stmt = f"INSERT OR REPLACE INTO {t} ({', '.join(cols)}) VALUES ({placeholders})"
+                con.executemany(stmt, [[r[c] for c in cols] for r in rows])
+                if t == "customer":
+                    # Re-insert the first 100 rows. INSERT OR REPLACE gives the
+                    # replacements fresh (higher) rowids, so the migration's
+                    # last-write-wins-by-rowid dedup sees realistic version
+                    # churn while the final value set stays oracle-identical.
+                    con.executemany(stmt, [[r[c] for c in cols] for r in rows[:100]])
+            con.commit()
+        finally:
+            con.close()
+
+    return gio.staged("stage_sqlite", sf_dir, tuple(_SQLITE_DDL), "stage.db", write)
 
 
 _CUSTOMER_ORACLE = """
@@ -193,26 +189,22 @@ def migrate_sqlite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STAGED_FMT: dict[tuple, str] = {}
-
-
 def _stage_format(spark: SparkSession, sf_dir: str, fmt: str) -> str:
-    """Write the nation fixture out as CSV/JSON once per process — the
-    staged copy is what scan_csv/scan_json read back, so the op covers the
-    full write+read round trip of the format."""
-    key = (sf_dir, fmt)
-    if key not in _STAGED_FMT:
-        # Process-lifetime (memoized), so on plain tempfile, not gio.tempdir.
-        path = os.path.join(tempfile.mkdtemp(prefix=f"scan_{fmt}_"), "nation")
-        n = table(spark, sf_dir, "nation")
+    """The nation fixture written out as CSV/JSON/ORC (staged once per
+    fixture version, io.staged) — the staged copy is what
+    scan_csv/scan_json/scan_orc read back, so the op covers the full
+    write+read round trip of the format."""
+
+    def write(path: str) -> None:
+        w = table(spark, sf_dir, "nation").write.mode("overwrite")
         if fmt == "csv":
-            n.write.mode("overwrite").option("header", "true").csv(path)
+            w.option("header", "true").csv(path)
         elif fmt == "orc":
-            n.write.mode("overwrite").orc(path)
+            w.orc(path)
         else:
-            n.write.mode("overwrite").json(path)
-        _STAGED_FMT[key] = path
-    return _STAGED_FMT[key]
+            w.json(path)
+
+    return gio.staged(f"stage_{fmt}", sf_dir, ("nation",), "nation", write)
 
 
 _NATION_ORACLE = "SELECT n_nationkey, n_name, n_regionkey FROM nation"
@@ -252,9 +244,6 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.orc(path).select("n_nationkey", "n_name", "n_regionkey")
 
 
-_TEXT_STAGED: dict[str, str] = {}
-
-
 @register("scan_text_lines", oracle=_NATION_ORACLE, tags=("source", "etl"))
 def scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Plain-text line source (``spark.read.text``) — the last built-in
@@ -263,11 +252,10 @@ def scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     each line is one record, parsing is an explicit projection (split +
     casts) that stays in whole-stage codegen rather than a per-row
     Python loop. Round trip: nation is staged as pipe-delimited lines
-    once per process, read back as `value: string`, and re-typed."""
-    key = sf_dir
-    if key not in _TEXT_STAGED:
-        # Process-lifetime (memoized), so on plain tempfile, not gio.tempdir.
-        path = os.path.join(tempfile.mkdtemp(prefix="scan_text_"), "nation")
+    once per fixture version (io.staged), read back as `value: string`,
+    and re-typed."""
+
+    def write(path: str) -> None:
         table(spark, sf_dir, "nation").select(
             F.concat_ws(
                 "|",
@@ -276,16 +264,16 @@ def scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_regionkey").cast("string"),
             ).alias("value")
         ).write.mode("overwrite").text(path)
-        _TEXT_STAGED[key] = path
+
+    path = gio.staged("stage_text", sf_dir, ("nation",), "nation", write)
     parts = F.split(F.col("value"), "\\|")
-    return spark.read.text(_TEXT_STAGED[key]).select(
+    return spark.read.text(path).select(
         parts.getItem(0).cast("int").alias("n_nationkey"),
         parts.getItem(1).alias("n_name"),
         parts.getItem(2).cast("int").alias("n_regionkey"),
     )
 
 
-_PART_STAGED: dict[str, str] = {}
 # Declared schema for the partitioned-orders staging read-backs: an empty
 # write leaves nothing to infer from, and schema inference on a big
 # partitioned layout costs a file-listing sample anyway.
@@ -293,6 +281,24 @@ _PART_SCHEMA = (
     "o_orderkey bigint, o_custkey bigint, o_totalprice double, "
     "o_orderpriority string"
 )
+
+
+def _staged_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The orders fixture staged as a Hive layout partitioned by
+    o_orderpriority (once per fixture version, io.staged), read with the
+    declared schema."""
+
+    def write(path: str) -> None:
+        (
+            table(spark, sf_dir, "orders")
+            .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
+            .write.mode("overwrite")
+            .partitionBy("o_orderpriority")
+            .parquet(path)
+        )
+
+    path = gio.staged("stage_part", sf_dir, ("orders",), "orders", write)
+    return spark.read.schema(_PART_SCHEMA).parquet(path)
 
 
 @register(
@@ -312,21 +318,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the scan never opens the other partitions' files. This layout is the
     100 TB table-organization primitive: low-cardinality key -> directories,
     pruning makes per-key queries O(selected partition)."""
-    key = sf_dir
-    if key not in _PART_STAGED:
-        # Process-lifetime (memoized), so on plain tempfile, not gio.tempdir.
-        path = os.path.join(tempfile.mkdtemp(prefix="sink_part_"), "orders")
-        (
-            table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
-            .write.mode("overwrite")
-            .partitionBy("o_orderpriority")
-            .parquet(path)
-        )
-        _PART_STAGED[key] = path
-    got = spark.read.schema(_PART_SCHEMA).parquet(_PART_STAGED[key]).filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
+    got = _staged_orders(spark, sf_dir).filter(F.col("o_orderpriority") == "1-URGENT")
     return got.select(
         "o_orderkey",
         "o_custkey",
@@ -477,8 +469,7 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     tests/test_plans.py), so only 2 of 5 partition directories are read.
     At 100 TB this is THE mechanism that turns dim-filtered star joins
     into partial-table scans."""
-    sink_partitioned_parquet(spark, sf_dir)  # ensure staged
-    fact = spark.read.schema(_PART_SCHEMA).parquet(_PART_STAGED[sf_dir])
+    fact = _staged_orders(spark, sf_dir)
     dim = spark.createDataFrame(
         [("1-URGENT", 1), ("2-HIGH", 2), ("3-MEDIUM", 3),
          ("4-NOT SPECIFIED", 4), ("5-LOW", 5)],

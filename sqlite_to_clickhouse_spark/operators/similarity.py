@@ -12,10 +12,11 @@ Scale paths:
   side is never shuffled except for the final k rows per probe.
 - `sim_ann_ivf` is the 100 TB path: a deterministic centroid set
   partitions vectors into buckets (IVF coarse quantizer); probes search
-  only their nprobe nearest buckets. The bucket assignment is a broadcast
-  join + argmax — the full table is read once and shuffled only by the
+  only their nprobe nearest buckets. The bucket assignment is a numpy
+  argmax kernel — the full table is read once and shuffled only by the
   final per-probe top-k (k rows per partition). Recall vs brute force is
-  asserted in tests/test_llm_ops.py.
+  asserted in tests/test_llm_ops.py. The IVF-PQ searches (inline and
+  persisted) share one quantizer, encoder, router and ADC rerank.
 - `dedup_embedding_cosine` finds near-duplicate vector pairs above a
   cosine threshold — brute force within the oracle-checked query; the
   LSH-bucketed variant for scale is the IVF bucket join (pairs within a
@@ -673,8 +674,7 @@ def kmeans_centroids_np(
             vectors, id_col=id_col, vec_col=vec_col, train_cap=train_cap,
             site="kmeans_centroids",
         )
-    else:
-        _check_driver_fit(train_cap, _probe_dim(vectors, vec_col), "kmeans_centroids")
+    else:  # already on the driver: nothing left to budget-check
         sample_rows = sample_rows[:train_cap]
     if not sample_rows:
         return np.empty(0, dtype=np.int64), np.empty((0, 0))
@@ -708,61 +708,64 @@ def kmeans_centroids_np(
     return cent_ids, C
 
 
-def ivf_topk(
-    vectors: DataFrame,
-    probes: DataFrame,
-    *,
-    k: int,
-    nprobe: int,
-    init_every: int = CENTROID_EVERY,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    probe_vec_col: str = "p_emb",
-) -> DataFrame:
-    """IVF approximate top-k (library API): learned coarse quantizer
-    (kmeans_centroids), per-probe routing to nprobe buckets, exact search
-    within routed buckets only.
+def _vectors(v: pd.Series) -> np.ndarray:
+    """An Arrow batch of embeddings as one float64 matrix."""
+    return np.array(list(v), dtype=np.float64)
 
-    Assignment and routing are Arrow-batched pandas UDFs doing one numpy
+
+def _bucket(cent_ids, C):
+    """Pandas UDF: each vector's IVF bucket, argmax dot against the
+    closure-shipped unit centroids (argmax dot == argmax cosine on unit
+    rows).  np.argmax takes the first max, and the rows of C ascend by
+    cent_id, so ties go to the lowest cent_id."""
+
+    @F.pandas_udf("long")
+    def bucket(v: pd.Series) -> pd.Series:
+        return pd.Series(cent_ids[np.argmax(_vectors(v) @ C.T, axis=1)])
+
+    return bucket
+
+
+def _route(probes: DataFrame, cent_ids, C, nprobe: int):
+    """Route every probe to its ``nprobe`` nearest buckets (descending
+    dot, ties to the lowest cent_id) on the driver: probes are bounded by
+    contract, the assumption every probe-broadcast search here makes.
+    Returns ``(pids, P, routed, buckets)``: the probe ids and vectors as
+    numpy, the routed ``(probe_id, bucket)`` pairs as a frame, and the
+    sorted set of routed buckets."""
+    rows = probes.select("probe_id", "p_emb").collect()
+    pids = np.array([r[0] for r in rows], dtype=np.int64)
+    P = np.array([r[1] for r in rows], dtype=np.float64).reshape(len(rows), C.shape[1])
+    pairs = [
+        (int(p), int(b))
+        for p, row in zip(pids, P @ C.T)
+        for b in cent_ids[np.lexsort((cent_ids, -row))[:nprobe]]
+    ]
+    routed = probes.sparkSession.createDataFrame(pairs, "probe_id LONG, bucket LONG")
+    return pids, P, routed, sorted({b for _, b in pairs})
+
+
+def ivf_topk(vectors: DataFrame, probes: DataFrame, *, k: int, nprobe: int) -> DataFrame:
+    """IVF approximate top-k (library API): learned coarse quantizer
+    (kmeans_centroids), per-probe routing to nprobe buckets (_route),
+    exact search within routed buckets only.
+
+    Assignment is an Arrow-batched pandas UDF (_bucket) doing one numpy
     matmul per batch against the (tiny, closure-shipped) unit-norm
-    centroid matrix — argmax dot == argmax cosine on unit centroids, ties
-    to the lowest cent_id. An earlier revision spelled assignment as
+    centroid matrix.  An earlier revision spelled assignment as
     crossJoin(broadcast(centroids)) + an interpreted array-fold dot per
     (vector, centroid) pair; that is O(n·k) interpreted lambda evals, and
     a 10× scale check (tools/scale_check.py: n and k both grow) measured
     it ~15× — the matmul kernel does the identical O(n·k) flops in BLAS,
     map-side, with zero shuffle before the bucket join.
     """
-    from pyspark.sql import types as T
-
     # The centroid fit is driver-resident by contract (bounded by
     # train_cap/init_every); take it as numpy directly and ship it inside
     # the kernels instead of round-tripping through a Spark relation.
-    cent_ids, C = kmeans_centroids_np(
-        vectors, id_col=id_col, vec_col=vec_col, init_every=init_every, iters=iters
-    )  # cent_ids ascending; C unit-norm
-
-    @F.pandas_udf(T.LongType())
-    def _bucket(v: pd.Series) -> pd.Series:
-        V = np.array(list(v), dtype=np.float64)
-        # np.argmax takes the first max → lowest cent_id on ties (rows of
-        # C are sorted by cent_id).
-        return pd.Series(cent_ids[np.argmax(V @ C.T, axis=1)])
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _route(v: pd.Series) -> pd.Series:
-        V = np.array(list(v), dtype=np.float64)
-        S = V @ C.T
-        out = []
-        for row in S:
-            idx = np.lexsort((cent_ids, -row))[:nprobe]  # desc dot, asc id
-            out.append(cent_ids[idx])
-        return pd.Series(out)
-
+    cent_ids, C = kmeans_centroids_np(vectors)  # cent_ids ascending; C unit-norm
+    _, _, routed, _ = _route(probes, cent_ids, C, nprobe)
     assigned = vectors.select(
-        id_col, vec_col, _bucket(F.col(vec_col)).alias("bucket")
+        "vec_id", "embedding", _bucket(cent_ids, C)(F.col("embedding")).alias("bucket")
     )
     # The probe side pre-binds its double vector + norm (_bind_vec); the
     # corpus side stays raw — only vectors in ROUTED buckets become
@@ -770,26 +773,20 @@ def ivf_topk(
     # evaluated per candidate pair, not per corpus row. Per-pair lambda
     # work drops ~2× vs the unbound _cosine (which re-derived the probe
     # norm and both casts inside every pair).
-    pd_ = _dbl(F.col(probe_vec_col))
-    routed = probes.select(
-        probe_id_col,
-        F.explode(_route(F.col(probe_vec_col))).alias("bucket"),
-        pd_.alias("__ivf_p"),
-        F.sqrt(_sqnorm(pd_)).alias("__ivf_pn"),
-    )
-    # Search only within routed buckets.
-    vd = _dbl(F.col(vec_col))
+    bound = _bind_vec(probes, "p_emb", ["probe_id"], "__ivf_p", "__ivf_pn")
+    vd = _dbl(F.col("embedding"))
     cos_pv = _dot(F.col("__ivf_p"), vd) / (
         F.col("__ivf_pn") * F.sqrt(_sqnorm(vd))
     )
-    w_topk = Window.partitionBy(probe_id_col).orderBy(F.desc("cos"), F.asc(id_col))
+    w_topk = Window.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
-        routed.join(assigned, "bucket")
-        .filter(F.col(id_col) != F.col(probe_id_col))
-        .select(probe_id_col, id_col, cos_pv.alias("cos"))
+        routed.join(F.broadcast(bound), "probe_id")
+        .join(assigned, "bucket")
+        .filter(F.col("vec_id") != F.col("probe_id"))
+        .select("probe_id", "vec_id", cos_pv.alias("cos"))
         .withColumn("rn", F.row_number().over(w_topk))
         .filter(F.col("rn") <= k)
-        .select(probe_id_col, id_col, F.round("cos", 6).alias("cosine"))
+        .select("probe_id", "vec_id", F.round("cos", 6).alias("cosine"))
     )
 
 
@@ -904,10 +901,11 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEARNED centroids (deterministic seeds + 2 Lloyd rounds, see
     kmeans_centroids), search only each probe's nprobe buckets.
 
-    Plan shape at 100 TB: centroids broadcast twice (assignment +
-    probe routing); the vector table is scanned once, shuffled only by
-    the final top-k window on (probe_id). The candidate set per probe is
-    |bucket| × nprobe instead of n.
+    Plan shape at 100 TB: the centroids ship inside the assignment
+    kernel and the (bounded) probes are routed on the driver; the vector
+    table is scanned once, shuffled only by the final top-k window on
+    (probe_id). The candidate set per probe is |bucket| × nprobe instead
+    of n.
 
     Gate rendering: routing is quantizer-dependent, so the registered
     shape is the recall bound (see _recall_gate) — the raw neighbor rows
@@ -1066,8 +1064,7 @@ def pq_codebooks(
             vectors, id_col=id_col, vec_col=vec_col, train_cap=train_cap,
             site="pq_codebooks",
         )
-    else:
-        _check_driver_fit(train_cap, _probe_dim(vectors, vec_col), "pq_codebooks")
+    else:  # already on the driver: nothing left to budget-check
         rows = sample_rows[:train_cap]
     if not rows:
         # Empty vector table: there is nothing to fit. Callers treat a
@@ -1093,6 +1090,23 @@ def pq_codebooks(
     return books
 
 
+def _pq_kernel(V: np.ndarray, books):
+    """The PQ encoder every path shares: rows ``V`` → their packed codes
+    (m 4-bit per-block argmin indices in one int64) and the cosine of each
+    row with its reconstruction (0 for a zero row or reconstruction)."""
+    m, _, sub = books.shape
+    codes = np.zeros(len(V), dtype=np.int64)
+    recon = np.empty_like(V)
+    for j in range(m):
+        X = V[:, j * sub : (j + 1) * sub]
+        idx = np.argmin(((X[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2), axis=1)
+        codes |= idx.astype(np.int64) << (4 * j)
+        recon[:, j * sub : (j + 1) * sub] = books[j][idx]
+    num = (V * recon).sum(axis=1)
+    den = np.linalg.norm(V, axis=1) * np.linalg.norm(recon, axis=1)
+    return codes, np.where(den > 0, num / np.maximum(den, 1e-300), 0.0)
+
+
 def pq_encode(
     vectors: DataFrame,
     books,
@@ -1104,71 +1118,23 @@ def pq_encode(
     cosine (library API). The code packs m 4-bit sub-quantizer indices
     into one BIGINT — 64 floats become 4 bytes, a 64× compression that is
     what makes billion-scale ANN indexes fit in memory at all (the IVF-PQ
-    layout: ivf_topk routes, codes rank). One Arrow-batched numpy kernel,
-    map-side, zero shuffle."""
-    import pandas as _pd
-    from pyspark.sql import types as T
-
+    layout: ivf_topk routes, codes rank). One Arrow-batched numpy kernel
+    (_pq_kernel), map-side, zero shuffle."""
     if books is None:
         return vectors.sparkSession.createDataFrame(
             [], f"{id_col} bigint, pq_code bigint, recon_cosine double"
         )
-    m, k, sub = books.shape
-    B = books  # closure-shipped, m*k*sub doubles
 
-    @F.pandas_udf(
-        T.StructType(
-            [
-                T.StructField("pq_code", T.LongType()),
-                T.StructField("recon_cosine", T.DoubleType()),
-            ]
-        )
-    )
+    @F.pandas_udf("pq_code long, recon_cosine double")
     def _enc(v: pd.Series) -> pd.DataFrame:
-        V = np.array(list(v), dtype=np.float64)
-        nrow = V.shape[0]
-        codes = np.zeros(nrow, dtype=np.int64)
-        recon = np.empty_like(V)
-        for j in range(m):
-            X = V[:, j * sub : (j + 1) * sub]
-            d2 = ((X[:, None, :] - B[j][None, :, :]) ** 2).sum(axis=2)
-            idx = np.argmin(d2, axis=1)
-            codes |= idx.astype(np.int64) << (4 * j)
-            recon[:, j * sub : (j + 1) * sub] = B[j][idx]
-        num = (V * recon).sum(axis=1)
-        den = np.linalg.norm(V, axis=1) * np.linalg.norm(recon, axis=1)
-        cos = np.where(den > 0, num / np.maximum(den, 1e-300), 0.0)
-        return _pd.DataFrame({"pq_code": codes, "recon_cosine": cos})
+        codes, cos = _pq_kernel(_vectors(v), books)
+        return pd.DataFrame({"pq_code": codes, "recon_cosine": cos})
 
     enc = _enc(F.col(vec_col)).alias("_pq")
     return vectors.select(id_col, enc).select(
         id_col, F.col("_pq.pq_code").alias("pq_code"),
         F.col("_pq.recon_cosine").alias("recon_cosine"),
     )
-
-
-def _pq_code_col(books):
-    """Column-factory variant of :func:`pq_encode`: returns a pandas UDF
-    computing only the packed PQ code, so a caller can evaluate code +
-    other per-vector columns (e.g. the IVF bucket) in ONE Arrow pass of
-    one projection instead of joining two derived DataFrames."""
-    import pandas as _pd
-    from pyspark.sql import types as T
-
-    m, k, sub = books.shape
-    B = books
-
-    @F.pandas_udf(T.LongType())
-    def _code(v: pd.Series) -> pd.Series:
-        V = np.array(list(v), dtype=np.float64)
-        codes = np.zeros(V.shape[0], dtype=np.int64)
-        for j in range(m):
-            X = V[:, j * sub : (j + 1) * sub]
-            d2 = ((X[:, None, :] - B[j][None, :, :]) ** 2).sum(axis=2)
-            codes |= np.argmin(d2, axis=1).astype(np.int64) << (4 * j)
-        return _pd.Series(codes)
-
-    return _code
 
 
 @register(
@@ -1329,87 +1295,81 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ivfpq_topk(
-    vectors: DataFrame,
-    probes: DataFrame,
-    *,
-    k: int,
-    nprobe: int,
-    rerank: int = 100,
-    init_every: int = CENTROID_EVERY,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    probe_vec_col: str = "p_emb",
-) -> DataFrame:
-    """IVF-PQ approximate top-k with ADC ranking and exact rerank (library
-    API) — the full billion-scale ANN layout (the FAISS IVFPQ shape:
-    coarse quantizer routes, 4-bit PQ codes rank, a small exact rerank
-    restores precision).
+# ---------------------------------------------------------------------------
+# IVF-PQ search: one construction behind the inline search (ivfpq_topk)
+# and the persisted index (ann_index_*).  The quantizer is one value,
+# ``(books, cent_ids, C)``: PQ codebooks plus the unit IVF centroids in
+# ascending cent_id order, fit by _fit_quantizer or read back from an
+# index by _load_quantizer.  Each vector is encoded once to
+# (vec_id, bucket, pq_code) (_encode); probes are routed driver-side
+# (_route); _ivfpq_search ranks the routed buckets' codes by ADC and
+# exact-reranks the shortlist.  The two entry points differ only in where
+# the quantizer and the candidate codes come from: a fresh fit and encode,
+# or the manifest-pruned, tombstone-filtered store.
+# ---------------------------------------------------------------------------
 
-    Plan, in 100 TB order of importance:
-    1. One map-side pass over the vector table produces (id, bucket,
-       pq_code): bucket = argmax dot against the closure-shipped unit
-       centroid matrix, code = per-block argmin against the PQ codebooks —
-       both Arrow-batched numpy matmuls, zero shuffle. The 512-byte float
-       vector is DROPPED here; everything that crosses the bucket join's
-       wire is an 8-byte code.
-    2. Probes explode to their nprobe nearest buckets and join the coded
-       table on bucket. Candidate ranking is ADC: per probe the m×k table
-       of (probe sub-vector · centroid) dots and the per-centroid sqnorms
-       are precomputed driver-side (m·k doubles per probe — tiny), so
-       scoring a candidate is m table gathers, vectorized over the whole
-       Arrow batch after unpacking the 4-bit fields.
-    3. Per-probe ADC top-`rerank` (window, per-partition top-k — only
-       rerank rows per probe cross the final shuffles), then join those
-       few ids back to the vector table for exact cosines and keep top-k
-       (ties to lowest id, same contract as ivf_topk).
+ANN_RERANK = 100  # per-probe ADC shortlist the exact rerank rescores
 
-    Recall vs brute force is asserted in tests/test_llm_ops.py; results
-    carry TRUE cosines for every returned pair (the rerank is exact)."""
-    from pyspark.sql import types as T
 
-    sample = train_sample(vectors, id_col=id_col, vec_col=vec_col)
-    books = pq_codebooks(vectors, id_col=id_col, vec_col=vec_col,
-                         sample_rows=sample)
-    if books is None:  # empty vector table -> no neighbors, not a crash
-        return vectors.sparkSession.createDataFrame(
-            [], f"{probe_id_col} bigint, {id_col} bigint, cosine double"
-        )
-    m, kk, sub = books.shape
-    # Per-centroid squared norms: |recon(v)|^2 = sum_j |B[j][code_j]|^2
-    # (blocks concatenate), so the ADC cosine denominator is m gathers too.
-    bsq = (books**2).sum(axis=2)  # (m, k)
+def _fit_quantizer(vectors: DataFrame):
+    """Fit the IVF-PQ quantizer ``(books, cent_ids, C)`` on ONE
+    train_sample (hash order: the codebooks and the centroids see the
+    same rows), or None on an empty corpus."""
+    sample = train_sample(vectors)
+    books = pq_codebooks(vectors, sample_rows=sample)
+    if books is None:
+        return None
+    return (books, *kmeans_centroids_np(vectors, sample_rows=sample))
 
-    cent_ids, C = kmeans_centroids_np(
-        vectors, id_col=id_col, vec_col=vec_col,
-        init_every=init_every, sample_rows=sample,
+
+def _encode(vectors: DataFrame, q) -> DataFrame:
+    """``(vec_id, bucket, pq_code)`` of every vector under quantizer ``q``
+    in ONE Arrow pass of one projection: the IVF bucket (_bucket) and the
+    packed PQ code (_pq_kernel), both Arrow-batched numpy, map-side, zero
+    shuffle.  The 512-byte float vector is dropped here; what crosses the
+    bucket join (or lands in the index) is an 8-byte code."""
+    books, cent_ids, C = q
+
+    @F.pandas_udf("long")
+    def code(v: pd.Series) -> pd.Series:
+        return pd.Series(_pq_kernel(_vectors(v), books)[0])
+
+    e = F.col("embedding")
+    return vectors.select(
+        "vec_id", _bucket(cent_ids, C)(e).alias("bucket"), code(e).alias("pq_code")
     )
 
-    probe_rows = probes.select(probe_id_col, probe_vec_col).collect()
-    pids = np.array([r[0] for r in probe_rows], dtype=np.int64)
-    P = np.array([r[1] for r in probe_rows], dtype=np.float64)
+
+def _ivfpq_search(vectors: DataFrame, probes: DataFrame, q, codes, *, k: int, nprobe: int):
+    """Top-k per probe under quantizer ``q`` (None: an empty corpus, zero
+    rows).  ``codes(buckets)`` returns the ``(vec_id, bucket, pq_code)``
+    candidates; it may read only the routed ``buckets``.
+
+    1. _route sends each probe to its nprobe nearest buckets.
+    2. Candidates are ranked by ADC: per probe, the m×k table of
+       (probe sub-vector · centroid) dots and the per-centroid sqnorms
+       are precomputed driver-side (m·k doubles per probe), so scoring a
+       code is m table gathers, vectorized over the Arrow batch.
+    3. Per-probe ADC top-ANN_RERANK (window, per-partition top-k — only
+       that many rows per probe cross the final shuffles), then the
+       shortlist joins the vector table for exact cosines and keeps top-k
+       (ties to the lowest id).  Every returned cosine is exact."""
+    if q is None:
+        return vectors.sparkSession.createDataFrame(
+            [], "probe_id bigint, vec_id bigint, cosine double"
+        )
+    books, cent_ids, C = q
+    m, kk, sub = books.shape
+    pids, P, routed, buckets = _route(probes, cent_ids, C, nprobe)
     pnorm = np.linalg.norm(P, axis=1)
-    # ADC dot tables: DT[p, j, c] = P[p, j-th block] . books[j, c]
+    # ADC dot tables: DT[p, j, c] = P[p, j-th block] . books[j, c].
+    # |recon(v)|^2 = sum_j |B[j][code_j]|^2 (blocks concatenate), so the
+    # ADC cosine denominator is m gathers too.
     DT = np.einsum("pjs,jcs->pjc", P.reshape(len(P), m, sub), books)
+    bsq = (books**2).sum(axis=2)  # (m, k)
     prow = {int(p): i for i, p in enumerate(pids)}
 
-    @F.pandas_udf(T.LongType())
-    def _bucket(v: pd.Series) -> pd.Series:
-        V = np.array(list(v), dtype=np.float64)
-        return pd.Series(cent_ids[np.argmax(V @ C.T, axis=1)])
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _route(v: pd.Series) -> pd.Series:
-        V = np.array(list(v), dtype=np.float64)
-        S = V @ C.T
-        out = []
-        for row in S:
-            idx = np.lexsort((cent_ids, -row))[:nprobe]
-            out.append(cent_ids[idx])
-        return pd.Series(out)
-
-    @F.pandas_udf(T.DoubleType())
+    @F.pandas_udf("double")
     def _adc(probe_id: pd.Series, code: pd.Series) -> pd.Series:
         pi = np.array([prow[int(p)] for p in probe_id], dtype=np.int64)
         codes = code.to_numpy(dtype=np.int64)
@@ -1422,52 +1382,45 @@ def ivfpq_topk(
         den = pnorm[pi] * np.sqrt(np.maximum(rsq, 1e-300))
         return pd.Series(dot / den)
 
-    coded = pq_encode(vectors, books, id_col=id_col, vec_col=vec_col).select(
-        id_col, "pq_code"
-    )
-    assigned = (
-        vectors.select(id_col, _bucket(F.col(vec_col)).alias("bucket"))
-        .join(coded, id_col)
-    )
-    routed = probes.select(
-        probe_id_col, F.explode(_route(F.col(probe_vec_col))).alias("bucket")
-    )
-    w_rerank = Window.partitionBy(probe_id_col).orderBy(
-        F.desc("adc"), F.asc(id_col)
-    )
+    w_rerank = Window.partitionBy("probe_id").orderBy(F.desc("adc"), F.asc("vec_id"))
     shortlist = (
-        routed.join(assigned, "bucket")
-        .filter(F.col(id_col) != F.col(probe_id_col))
-        .select(
-            probe_id_col, id_col,
-            _adc(F.col(probe_id_col), F.col("pq_code")).alias("adc"),
-        )
+        routed.join(codes(buckets), "bucket")
+        .filter(F.col("vec_id") != F.col("probe_id"))
+        .select("probe_id", "vec_id", _adc(F.col("probe_id"), F.col("pq_code")).alias("adc"))
         .withColumn("rn", F.row_number().over(w_rerank))
-        .filter(F.col("rn") <= rerank)
-        .select(probe_id_col, id_col)
+        .filter(F.col("rn") <= ANN_RERANK)
+        .select("probe_id", "vec_id")
     )
-    # Exact rerank: only |probes|·rerank ids come back for true vectors.
     # Exact rerank: the probe side pre-binds vector + norm (_bind_vec) but
-    # the CORPUS side stays raw — only |probes|·rerank rows survive the
+    # the CORPUS side stays raw — only |probes|·ANN_RERANK rows survive the
     # shortlist join, so the vector norm is evaluated per surviving pair
     # (bounded) instead of per corpus row (O(N) at 100 TB).
-    rv = _dbl(F.col(vec_col))
-    cos_pv = _dot(F.col("__rr_p"), rv) / (
-        F.col("__rr_pn") * F.sqrt(_sqnorm(rv))
-    )
-    w_topk = Window.partitionBy(probe_id_col).orderBy(F.desc("cos"), F.asc(id_col))
+    rv = _dbl(F.col("embedding"))
+    cos_pv = _dot(F.col("__rr_p"), rv) / (F.col("__rr_pn") * F.sqrt(_sqnorm(rv)))
+    w_topk = Window.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
-        shortlist.join(vectors.select(id_col, vec_col), id_col)
+        shortlist.join(vectors.select("vec_id", "embedding"), "vec_id")
         .join(
-            F.broadcast(
-                _bind_vec(probes, probe_vec_col, [probe_id_col], "__rr_p", "__rr_pn")
-            ),
-            probe_id_col,
+            F.broadcast(_bind_vec(probes, "p_emb", ["probe_id"], "__rr_p", "__rr_pn")),
+            "probe_id",
         )
-        .select(probe_id_col, id_col, cos_pv.alias("cos"))
+        .select("probe_id", "vec_id", cos_pv.alias("cos"))
         .withColumn("rn", F.row_number().over(w_topk))
         .filter(F.col("rn") <= k)
-        .select(probe_id_col, id_col, F.round("cos", 6).alias("cosine"))
+        .select("probe_id", "vec_id", F.round("cos", 6).alias("cosine"))
+    )
+
+
+def ivfpq_topk(vectors: DataFrame, probes: DataFrame, *, k: int, nprobe: int) -> DataFrame:
+    """IVF-PQ approximate top-k with ADC ranking and exact rerank (library
+    API) — the FAISS IVFPQ shape: the coarse quantizer routes, 4-bit PQ
+    codes rank, a small exact rerank restores precision.  The one-shot
+    batch form: the quantizer is fit on this call (_fit_quantizer) and the
+    whole corpus encoded in one pass (_encode); see _ivfpq_search for the
+    plan.  Recall vs brute force is asserted in tests/test_llm_ops.py."""
+    q = _fit_quantizer(vectors)
+    return _ivfpq_search(
+        vectors, probes, q, lambda _: _encode(vectors, q), k=k, nprobe=nprobe
     )
 
 
@@ -1481,7 +1434,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ codes ranked by asymmetric distance (ADC) + exact top-k rerank —
     the composition of sim_ann_ivf's coarse quantizer and
     sim_pq_quantize's codes into the memory-resident index layout used at
-    billion-vector scale. See ivfpq_topk for the plan.
+    billion-vector scale. See _ivfpq_search for the plan.
 
     Gate rendering: recall bound per probe + corpus aggregate (see
     _recall_gate; raw neighbors via the ``ivfpq_topk`` library API, exact
@@ -1590,97 +1543,55 @@ def embedding_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Persisted IVF-PQ index: build once, query many — the production serving
-# layout (ivfpq_topk above refits the quantizers on every call, which is
-# the right shape for a one-shot batch query but wrong for a serving
-# path: at 100 TB the index is built by a scheduled job and queried by
-# everything else).
+# layout.  ivfpq_topk fits and encodes on every call, the right shape for
+# a one-shot batch query but not for a serving path: at 100 TB the index
+# is built by a scheduled job and queried by everything else.  The build
+# and the appends write _encode's rows, bucket-partitioned, under the
+# quantizer _fit_quantizer fit; a query reads that quantizer back
+# (_load_quantizer) and hands _ivfpq_search the routed buckets' code rows
+# minus the tombstoned ones.
 # ---------------------------------------------------------------------------
 
 
-def ann_index_build(
-    spark: SparkSession,
-    vectors: DataFrame,
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    init_every: int = CENTROID_EVERY,
-) -> DataFrame:
-    """Build and PERSIST the IVF-PQ index at ``path``: quantizers are
-    sample-fit (bounded driver work, same contract as ivfpq_topk), then
-    ONE map-side pass encodes every vector to (id, pq_code) and writes it
-    as parquet PARTITIONED BY bucket — the on-disk inverted-list layout.
-    A routed query then reads only its nprobe bucket directories via
-    static partition pruning; the other ~98% of the index is never
-    opened (PartitionFilters, asserted in tests/test_llm_ops.py).
+def ann_index_build(spark: SparkSession, vectors: DataFrame, path: str) -> DataFrame:
+    """Build and PERSIST the IVF-PQ index at ``path``: the quantizer is
+    sample-fit (_fit_quantizer, bounded driver work), then ONE map-side
+    pass (_encode) writes every vector's (vec_id, pq_code) as parquet
+    PARTITIONED BY bucket — the on-disk inverted-list layout.  A routed
+    query then reads only its nprobe bucket directories via static
+    partition pruning; the other ~98% of the index is never opened
+    (PartitionFilters, asserted in tests/test_llm_ops.py).
 
     Persisted components: codes/ (bucket-partitioned), centroids/,
     codebooks/ (one row per (block j, centroid c) with the sub-vector).
     Returns the manifest (component, n_rows) the build job would log."""
-    from pyspark.sql import types as T
-
     import pyarrow as pa
     import pyarrow.parquet as papq
 
-    sample = train_sample(vectors, id_col=id_col, vec_col=vec_col)
-    books = pq_codebooks(vectors, id_col=id_col, vec_col=vec_col,
-                         sample_rows=sample)
-    if books is None:
+    q = _fit_quantizer(vectors)
+    if q is None:
         # Empty vector table: persist an empty-but-well-formed index
         # (codes dir with schema, no centroid/codebook rows) so a
         # subsequent ann_index_query degrades to zero results.
-        vectors.sparkSession.createDataFrame(
-            [], f"{id_col} bigint, bucket bigint, pq_code bigint"
-        ).write.mode("overwrite").parquet(os.path.join(path, "codes"))
-        os.makedirs(os.path.join(path, "centroids"), exist_ok=True)
-        papq.write_table(
-            pa.table({"cent_id": pa.array([], pa.int64()),
-                      "c_emb": pa.array([], pa.list_(pa.float64()))}),
-            os.path.join(path, "centroids", "part-0.parquet"),
-        )
-        os.makedirs(os.path.join(path, "codebooks"), exist_ok=True)
-        papq.write_table(
-            pa.table({"j": pa.array([], pa.int32()),
-                      "c": pa.array([], pa.int32()),
-                      "sub": pa.array([], pa.list_(pa.float64()))}),
-            os.path.join(path, "codebooks", "part-0.parquet"),
-        )
-        _ANN_STORE.commit(path)
-        return spark.createDataFrame(
-            [("codes", 0), ("centroids", 0), ("codebooks", 0)],
-            "component STRING, n_rows BIGINT",
-        )
-    m, kk, sub = books.shape
-    cent_ids, C = kmeans_centroids_np(
-        vectors, id_col=id_col, vec_col=vec_col, init_every=init_every,
-        sample_rows=sample,
-    )
-
-    @F.pandas_udf(T.LongType())
-    def _bucket(v: pd.Series) -> pd.Series:
-        V = np.array(list(v), dtype=np.float64)
-        return pd.Series(cent_ids[np.argmax(V @ C.T, axis=1)])
-
-    # One Arrow pass computes BOTH the PQ code and the IVF bucket per
-    # vector — no self-join of two derived projections (which cost an
-    # id-keyed shuffle of the whole vector set). repartition("bucket")
-    # before the partitioned write so each inverted list lands as one
-    # file per shuffle-partition-share instead of
-    # (shuffle partitions × buckets) small files.
-    coded = vectors.select(
-        F.col(id_col),
-        _bucket(F.col(vec_col)).alias("bucket"),
-        _pq_code_col(books)(F.col(vec_col)).alias("pq_code"),
-    )
-    coded.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(os.path.join(path, "codes"))
+        spark.createDataFrame([], _ANN_STORE.schemas["codes"]).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(path, "codes"))
+        books, cent_ids, C = np.empty((0, 0, 0)), np.empty(0, np.int64), np.empty((0, 0))
+    else:
+        books, cent_ids, C = q
+        # repartition("bucket") before the partitioned write so each
+        # inverted list lands as one file per shuffle-partition-share
+        # instead of (shuffle partitions × buckets) small files.
+        _encode(vectors, q).repartition("bucket").write.mode("overwrite").partitionBy(
+            "bucket"
+        ).parquet(os.path.join(path, "codes"))
     # The quantizer state is driver-resident and tiny (k×d centroids,
     # m×k×sub codebooks) — write it with pyarrow directly instead of
     # launching Spark write jobs: the createDataFrame → coalesce(1) →
     # write path cost ~4.7 s of a 6.6 s build at sf0.1 for 256 rows.
     # Spark reads pyarrow-written parquet identically (schema-checked in
     # tests via sim_index_query's bit-equality against inline IVF-PQ).
+    m, kk, _ = books.shape
     os.makedirs(os.path.join(path, "centroids"), exist_ok=True)
     papq.write_table(
         pa.table(
@@ -1707,18 +1618,13 @@ def ann_index_build(
     )
 
     _ANN_STORE.commit(path)
-    report = [
-        ("codes", _ANN_STORE.read(spark, path, "codes").count()),
-        ("centroids", len(cent_ids)),
-        ("codebooks", m * kk),
-    ]
+    n_codes = _ANN_STORE.read(spark, path, "codes").count() if q is not None else 0
+    report = [("codes", n_codes), ("centroids", len(cent_ids)), ("codebooks", m * kk)]
     return spark.createDataFrame(report, "component STRING, n_rows BIGINT")
 
 
-# codes/ is read with the schema its files carry (the id column is the
-# caller's id_col; the bucket partition type is inferred, as a directory
-# scan would); the quantizer relations are read with pyarrow
-# (_load_quantizer).  Tombstones always key on vec_id.
+# The quantizer relations are read with pyarrow (_load_quantizer); codes/
+# and the tombstones through the store.
 _ANN_STORE = gio.IndexStore(
     schemas={
         "codes": "vec_id bigint, bucket bigint, pq_code bigint",
@@ -1727,28 +1633,35 @@ _ANN_STORE = gio.IndexStore(
     },
     partitions={"codes": "bucket"},
     tombstone="vec_id long",
-    inferred=frozenset({"codes"}),
 )
 
 
-def ann_index_delete(ids: DataFrame, path: str, *, id_col: str = "vec_id") -> None:
+def ann_index_delete(ids: DataFrame, path: str) -> None:
     """Delete vectors from a persisted IVF-PQ index by TOMBSTONE — the
     GDPR-shape counterpart of minhash_index_delete (dedup.py) for the
     embedding store: the erased vector must stop being served as a
     neighbor immediately, without rewriting a 100 TB codes relation.
-    Appends one tiny parquet file of ids to ``tombstones/`` (new files
-    only — concurrent queries are never invalidated); ann_index_query
-    anti-joins candidates against it right after the pruned bucket scan,
-    which is exactly equivalent to physical removal since the quantizer
-    and every surviving code row are untouched.  ann_index_compact
-    physically drops tombstoned rows and clears the relation.  Contract:
-    vector ids are never reused."""
-    _ANN_STORE.delete(ids.select(id_col), path)
+    Appends one tiny parquet file of ``ids.vec_id`` to ``tombstones/``
+    (new files only — concurrent queries are never invalidated);
+    ann_index_query anti-joins candidates against it right after the
+    pruned bucket scan, which is exactly equivalent to physical removal
+    since the quantizer and every surviving code row are untouched.
+    ann_index_compact physically drops tombstoned rows and clears the
+    relation.  Contract: vector ids are never reused."""
+    _ANN_STORE.delete(ids.select("vec_id"), path)
 
 
-def ann_index_compact(
-    spark: SparkSession, path: str, dst: str, *, id_col: str = "vec_id"
-) -> None:
+def _live_codes(spark: SparkSession, path: str) -> DataFrame:
+    """The codes relation minus its tombstoned rows — an anti-join on the
+    tiny tombstone relation (broadcast-sized by contract), exactly
+    equivalent to physically removing those rows.  No tombstones → the
+    plain scan."""
+    codes = _ANN_STORE.read(spark, path, "codes")
+    tomb = _ANN_STORE.tombstones(spark, path)
+    return codes if tomb is None else codes.join(tomb, "vec_id", "left_anti")
+
+
+def ann_index_compact(spark: SparkSession, path: str, dst: str) -> None:
     """Rewrite an append-grown/tombstoned IVF-PQ index into a compacted
     copy at ``dst``: per-ingest appends leave one small file per touched
     bucket partition (the same small-file problem minhash_index_compact
@@ -1762,10 +1675,7 @@ def ann_index_compact(
     undisturbed."""
     import shutil
 
-    codes = _ANN_STORE.read(spark, path, "codes")
-    tomb = _ANN_STORE.tombstones(spark, path)
-    if tomb is not None:
-        codes = codes.join(tomb, codes[id_col] == tomb["vec_id"], "left_anti")
+    codes = _live_codes(spark, path)
     for rel in ("centroids", "codebooks"):
         shutil.copytree(os.path.join(path, rel), os.path.join(dst, rel))
     if codes.limit(1).count() == 0:
@@ -1787,114 +1697,23 @@ def ann_index_query(
     *,
     k: int,
     nprobe: int,
-    rerank: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    probe_vec_col: str = "p_emb",
 ) -> DataFrame:
-    """Query a persisted IVF-PQ index: route each probe to its nprobe
-    buckets driver-side (probes are bounded by contract — the same
-    assumption every probe-broadcast op here makes), read ONLY those
-    bucket partitions of the codes table (static IN-filter on the
-    partition column → directory-level pruning), ADC-rank the codes, and
-    exact-rerank the shortlist against the true vectors. Identical
-    result contract to ivfpq_topk; the difference is WHERE the quantizer
-    state comes from — parquet, not a per-call refit."""
-    from pyspark.sql import types as T
+    """Query a persisted IVF-PQ index: the inline search (_ivfpq_search,
+    same result contract as ivfpq_topk) over the index's frozen quantizer
+    (_load_quantizer, no Spark job) and its stored codes.  Only the
+    routed bucket partitions are read — the static IN-filter on the
+    partition column reaches the scan as a PartitionFilters entry — and
+    tombstoned vectors drop out right after that scan (_live_codes), so
+    an erased vector stops being served at once (pinned in
+    tests/test_llm_ops.py against ann_index_compact's physical rewrite)."""
 
-    q = _load_quantizer(path)
-    if q is None:  # index built over an empty corpus -> zero results
-        return spark.createDataFrame(
-            [], f"{probe_id_col} bigint, {id_col} bigint, cosine double"
-        )
-    books, cent_ids, C = q
-    m, kk, sub = books.shape
-    bsq = (books**2).sum(axis=2)
-
-    probe_rows = probes.select(probe_id_col, probe_vec_col).collect()
-    pids = np.array([r[0] for r in probe_rows], dtype=np.int64)
-    P = np.array([r[1] for r in probe_rows], dtype=np.float64)
-    pnorm = np.linalg.norm(P, axis=1)
-    DT = np.einsum("pjs,jcs->pjc", P.reshape(len(P), m, sub), books)
-    prow = {int(p): i for i, p in enumerate(pids)}
-
-    S = P @ C.T
-    routed_pairs = []
-    wanted: set = set()
-    for i, row in enumerate(S):
-        idx = np.lexsort((cent_ids, -row))[:nprobe]
-        for b in cent_ids[idx]:
-            routed_pairs.append((int(pids[i]), int(b)))
-            wanted.add(int(b))
-    routed = spark.createDataFrame(
-        routed_pairs, f"{probe_id_col} LONG, bucket LONG"
-    )
-
-    @F.pandas_udf(T.DoubleType())
-    def _adc(probe_id: pd.Series, code: pd.Series) -> pd.Series:
-        pi = np.array([prow[int(p)] for p in probe_id], dtype=np.int64)
-        codes = code.to_numpy(dtype=np.int64)
-        dot = np.zeros(len(codes))
-        rsq = np.zeros(len(codes))
-        for j in range(m):
-            cj = (codes >> (4 * j)) & (kk - 1)
-            dot += DT[pi, j, cj]
-            rsq += bsq[j, cj]
-        den = pnorm[pi] * np.sqrt(np.maximum(rsq, 1e-300))
-        return pd.Series(dot / den)
-
-    # Static partition pruning: the IN-list reaches the scan as a
-    # PartitionFilters entry, so only the routed bucket files are read.
-    codes = _ANN_STORE.read(spark, path, "codes").filter(
-        F.col("bucket").isin(sorted(wanted))
-    )
-    # Tombstone-aware serving (ann_index_delete): deleted vectors drop out
-    # of the candidate set right after the pruned scan — an anti-join on
-    # the tiny tombstone relation (broadcast-sized by contract), exactly
-    # equivalent to physically removing their code rows (same quantizer,
-    # same ADC ranking over the survivors; pinned in tests/test_llm_ops.py
-    # against ann_index_compact's physical rewrite).  No tombstones → the
-    # plan is byte-identical to pre-delete rounds.
-    tomb = _ANN_STORE.tombstones(spark, path)
-    if tomb is not None:
-        codes = codes.join(tomb, codes[id_col] == tomb["vec_id"], "left_anti")
-    w_rerank = Window.partitionBy(probe_id_col).orderBy(
-        F.desc("adc"), F.asc(id_col)
-    )
-    shortlist = (
-        routed.join(codes, "bucket")
-        .filter(F.col(id_col) != F.col(probe_id_col))
-        .select(
-            probe_id_col,
-            id_col,
-            _adc(F.col(probe_id_col), F.col("pq_code")).alias("adc"),
-        )
-        .withColumn("rn", F.row_number().over(w_rerank))
-        .filter(F.col("rn") <= rerank)
-        .select(probe_id_col, id_col)
-    )
-    # Exact rerank: the probe side pre-binds vector + norm (_bind_vec) but
-    # the CORPUS side stays raw — only |probes|·rerank rows survive the
-    # shortlist join, so the vector norm is evaluated per surviving pair
-    # (bounded) instead of per corpus row (O(N) at 100 TB).
-    rv = _dbl(F.col(vec_col))
-    cos_pv = _dot(F.col("__rr_p"), rv) / (
-        F.col("__rr_pn") * F.sqrt(_sqnorm(rv))
-    )
-    w_topk = Window.partitionBy(probe_id_col).orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        shortlist.join(vectors.select(id_col, vec_col), id_col)
-        .join(
-            F.broadcast(
-                _bind_vec(probes, probe_vec_col, [probe_id_col], "__rr_p", "__rr_pn")
-            ),
-            probe_id_col,
-        )
-        .select(probe_id_col, id_col, cos_pv.alias("cos"))
-        .withColumn("rn", F.row_number().over(w_topk))
-        .filter(F.col("rn") <= k)
-        .select(probe_id_col, id_col, F.round("cos", 6).alias("cosine"))
+    return _ivfpq_search(
+        vectors,
+        probes,
+        _load_quantizer(path),
+        lambda buckets: _live_codes(spark, path).filter(F.col("bucket").isin(buckets)),
+        k=k,
+        nprobe=nprobe,
     )
 
 
@@ -1930,8 +1749,6 @@ def ann_index_append(
     new_vectors: DataFrame,
     path: str,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     meta: "dict | None" = None,
 ) -> None:
     """Append a NEW vector batch into a persisted IVF-PQ index — the
@@ -1940,54 +1757,39 @@ def ann_index_append(
     re-fitting quantizers + re-encoding everything per ingest is a full
     index rebuild the serving path cannot afford.
 
-    The quantizer state is FROZEN: centroids and codebooks are read from
-    the index (tiny driver collect) and the batch is encoded against them
-    in one Arrow pass — bucket assignment + PQ code per vector — then
-    parquet-appended into the bucket-partitioned codes/ relation and
-    published by ONE atomic manifest commit (io.manifest_append): new
-    files only, no committed file rewritten, and a reader resolves the
-    previous snapshot until the publish lands — it sees the whole batch
-    or none of it, and a crashed append's files stay orphaned-but-
-    invisible (the retry commits only its own; ``meta`` carries e.g. the
-    epoch id for retried-writer idempotence).  Appending with a frozen
-    quantizer is exactly encoding the union corpus with the corpus-fit
-    quantizer, so append-then-query equals build-on-union-with-frozen-
-    state bit-for-bit (pinned in tests/test_llm_ops.py).
+    The quantizer state is FROZEN: it is read from the index
+    (_load_quantizer) and the batch is encoded against it in one Arrow
+    pass (_encode), then parquet-appended into the bucket-partitioned
+    codes/ relation and published by ONE atomic manifest commit
+    (io.manifest_append): new files only, no committed file rewritten,
+    and a reader resolves the previous snapshot until the publish lands —
+    it sees the whole batch or none of it, and a crashed append's files
+    stay orphaned-but-invisible (the retry commits only its own; ``meta``
+    carries e.g. the epoch id for retried-writer idempotence).  Appending
+    with a frozen quantizer is exactly encoding the union corpus with the
+    corpus-fit quantizer, so append-then-query equals
+    build-on-union-with-frozen-state bit-for-bit (pinned in
+    tests/test_llm_ops.py).
 
-    Re-train trigger (operational contract, not code): frozen quantizers
-    drift as the data distribution moves — production monitors encode
-    distortion (pq_encode's recon_cosine over a sample of each batch) and
-    schedules ann_index_build into a fresh generation when it degrades;
-    the immutable-generation layout (io.ensure_generation) makes that
-    rebuild invisible to in-flight queries.
+    Re-train trigger: frozen quantizers drift as the data distribution
+    moves; sim_index_retrain_check monitors encode distortion and flags
+    an ann_index_build into a fresh generation when it degrades (the
+    immutable-generation layout, io.ensure_generation, makes that rebuild
+    invisible to in-flight queries).
 
     Raises ValueError on an index with no quantizer state (built over an
     empty corpus): there is nothing sound to encode against — that case
     IS the rebuild trigger."""
-    from pyspark.sql import types as T
-
     q = _load_quantizer(path)
     if q is None:
         raise ValueError(
             "ann_index_append: index has no quantizer state (empty-corpus "
             "build) — rebuild with ann_index_build instead"
         )
-    books, cent_ids, C = q
-
-    @F.pandas_udf(T.LongType())
-    def _bucket(v: pd.Series) -> pd.Series:
-        V = np.array(list(v), dtype=np.float64)
-        return pd.Series(cent_ids[np.argmax(V @ C.T, axis=1)])
-
-    coded = new_vectors.select(
-        F.col(id_col),
-        _bucket(F.col(vec_col)).alias("bucket"),
-        _pq_code_col(books)(F.col(vec_col)).alias("pq_code"),
-    )
     with gio.manifest_append(path, ["codes"], meta=meta):
-        coded.repartition("bucket").write.mode("append").partitionBy("bucket").parquet(
-            os.path.join(path, "codes")
-        )
+        _encode(new_vectors, q).repartition("bucket").write.mode("append").partitionBy(
+            "bucket"
+        ).parquet(os.path.join(path, "codes"))
 
 
 def _ensure_index(spark: SparkSession, sf_dir: str, *, force: bool = False):
@@ -2331,20 +2133,9 @@ ANN_RETRAIN_TOL = 0.11
 
 
 def _recon_mean_np(books, V) -> float:
-    """Driver-side mirror of pq_encode's kernel (same argmin, same
-    cosine) for the bounded baseline sample: mean reconstruction cosine
-    of rows ``V`` under frozen codebooks."""
-    if len(V) == 0:
-        return 0.0
-    m, kk, sub = books.shape
-    recon = np.empty_like(V)
-    for j in range(m):
-        X = V[:, j * sub : (j + 1) * sub]
-        d2 = ((X[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-        recon[:, j * sub : (j + 1) * sub] = books[j][np.argmin(d2, axis=1)]
-    num = (V * recon).sum(axis=1)
-    den = np.linalg.norm(V, axis=1) * np.linalg.norm(recon, axis=1)
-    return float(np.mean(np.where(den > 0, num / np.maximum(den, 1e-300), 0.0)))
+    """Mean reconstruction cosine of rows ``V`` under frozen codebooks,
+    on the driver (pq_encode's kernel over the bounded baseline sample)."""
+    return float(np.mean(_pq_kernel(V, books)[1])) if len(V) else 0.0
 
 
 _RETRAIN_ORACLE = """

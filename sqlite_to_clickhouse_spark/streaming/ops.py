@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import itertools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -36,17 +35,18 @@ from sqlite_to_clickhouse_spark import io as gio
 from sqlite_to_clickhouse_spark.registry import register
 
 _MEM_COUNTER = itertools.count()
-_STAGE_DIRS: dict[str, str] = {}
 
 
 def _stage_dir(sf_dir: str) -> str:
-    """Temp dir containing a symlink to ``{sf_dir}/events.parquet`` — the
-    directory the file stream source monitors. One per sf_dir per process."""
-    if sf_dir not in _STAGE_DIRS:
-        d = tempfile.mkdtemp(prefix="events_stream_")
+    """A dir holding only a symlink to ``{sf_dir}/events.parquet`` — the
+    directory the file stream source monitors, staged once per version of
+    the events file (io.staged)."""
+
+    def write(d: str) -> None:
+        os.makedirs(d)
         os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), os.path.join(d, "events.parquet"))
-        _STAGE_DIRS[sf_dir] = d
-    return _STAGE_DIRS[sf_dir]
+
+    return gio.staged("stage_events", sf_dir, ("events",), "events", write)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,8 +60,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/events.parquet"
     schema = read_parquet(spark, path).schema
     # The file stream source wants a directory to monitor, and the fixture
-    # dir holds every table; stage a per-sf temp dir with a symlink to the
-    # one events file (no data copy) and stream that.
+    # dir holds every table; stage a dir with a symlink to the one events
+    # file (no data copy) and stream that.
     stage = _stage_dir(sf_dir)
     raw = spark.readStream.schema(schema).parquet(stage)
     return normalize_events_ts(raw)

@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import time
 
 import duckdb
 import pytest
@@ -34,3 +37,35 @@ def duck(sf_dir):
         )
     yield con
     con.close()
+
+
+# The marker groups a plain run deselects (pytest.ini).  A run that selects
+# any of them leaves one small JSON record of its outcome under
+# .heavy-runs/ (gitignored), so a claim that a heavy group passed can be
+# checked against the record of the run.
+_HEAVY_MARKERS = ("spark_heavy", "mutant_sweep", "mutant_keycol")
+_HEAVY_RUNS = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".heavy-runs")
+
+
+def pytest_sessionfinish(session, exitstatus):
+    if not any(i.get_closest_marker(m) for i in session.items for m in _HEAVY_MARKERS):
+        return
+    stats = session.config.pluginmanager.get_plugin("terminalreporter").stats
+    try:
+        head = subprocess.run(
+            ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
+            cwd=os.path.dirname(_HEAVY_RUNS), check=True,
+        ).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        head = None
+    record = {
+        "markexpr": session.config.option.markexpr,
+        **{k: len(stats.get(k, [])) for k in ("passed", "failed", "skipped", "error")},
+        "exitstatus": int(exitstatus),
+        "head": head,
+        "finished": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+    }
+    os.makedirs(_HEAVY_RUNS, exist_ok=True)
+    name = f"{record['finished'].replace(':', '')}-{os.getpid()}.json"
+    with open(os.path.join(_HEAVY_RUNS, name), "w") as fh:
+        json.dump(record, fh)

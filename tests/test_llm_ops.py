@@ -402,7 +402,7 @@ def test_ivf_learned_centroids_recall_on_skewed_clusters(spark):
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("p_emb")
     )
 
-    approx = ivf_topk(vecs, probes, k=5, nprobe=2, init_every=100, iters=2)
+    approx = ivf_topk(vecs, probes, k=5, nprobe=2)
     got = {(r.probe_id, r.vec_id) for r in approx.collect()}
 
     # Exact ground truth in numpy.
@@ -570,6 +570,29 @@ def test_index_query_prunes_bucket_partitions(spark, sf_dir):
         if "PartitionFilters" in l and "bucket" in l
     ]
     assert pf, "no PartitionFilters on bucket in the codes scan"
+
+
+def test_ann_searches_accept_an_empty_probe_set(spark, sf_dir):
+    """No probes, no neighbors: the shared driver-side router must not
+    crash on a zero-row probe matrix (the IVF-PQ searches once did)."""
+    from pyspark.sql import functions as _F
+
+    from sqlite_to_clickhouse_spark.io import table as _table
+    from sqlite_to_clickhouse_spark.operators.similarity import (
+        _ensure_index,
+        ann_index_query,
+        ivf_topk,
+        ivfpq_topk,
+    )
+
+    path, _ = _ensure_index(spark, sf_dir)
+    e = _table(spark, sf_dir, "embeddings")
+    probes = e.filter(_F.lit(False)).select(
+        _F.col("vec_id").alias("probe_id"), _F.col("embedding").alias("p_emb")
+    )
+    assert ivf_topk(e, probes, k=5, nprobe=2).count() == 0
+    assert ivfpq_topk(e, probes, k=5, nprobe=2).count() == 0
+    assert ann_index_query(spark, e, path, probes, k=5, nprobe=2).count() == 0
 
 
 def test_pca_basis_orthonormal_and_variance_ordered(spark, sf_dir):
