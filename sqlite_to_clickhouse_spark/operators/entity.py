@@ -23,6 +23,27 @@ Pipeline (each stage a registered, differentially-gated op):
    entity with explicit, deterministic merge rules (counts, price range,
    modal brand with a total tie-break).
 
+The ops, in-plan or over the persisted catalog index below, compose
+seven kernels, each written once:
+
+- ``_words(names)`` — distinct non-blank ``(nm, w)`` blocking words;
+- ``_df_cap(words)`` — the stop-key split into kept postings and the
+  keys the df cap drops;
+- ``_pairs(postings)`` — the blocked self-join, levenshtein-verified;
+- ``_best_match(batch, postings)`` — each batch name's nearest catalog
+  name (candidate join, banded ``_lev``, ``(d, cname)`` election);
+- ``_resolve(batch, best, entities)`` — batch names to
+  ``(name, matched_name, edit_dist, entity_id)``;
+- ``_entity_map(names, pairs)`` — names labeled by the connected
+  components of the pairs, unmatched names their own entity;
+- ``_survivorship(rows)`` — the golden record from
+  ``(entity_id, p_name, p_brand, cnt, mn, mx, ms)`` partials.
+
+The in-plan serving path (``_serving_state``) and the persisted one
+(``er_index_match``) are one candidate-and-verify procedure fed from two
+sources: postings and entity map computed in the plan, or read from the
+store.  A blocking or cap fix lands in every op at once.
+
 Scale notes (100 TB): the whole pipeline runs on DISTINCT names first —
 the exact-collapse trick from the MinHash family (dedup.py): a billion-row
 catalog has orders of magnitude fewer distinct names, and every
@@ -41,7 +62,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sqlite_to_clickhouse_spark import io as gio
@@ -100,7 +121,7 @@ _ER_IDX_CAT_WHERE = f"(p_name IS NULL OR {_ER_IDX_BUCKET_SQL} <> {_ER_IDX_BUCKET
 _ER_IDX_BAT_WHERE = f"{_ER_IDX_BUCKET_SQL} = {_ER_IDX_BUCKET_REM}"
 
 
-def _lev(a, b, bound: "int | None" = None):
+def _lev(a, b):
     """BYTE-edit levenshtein — the measure the whole ER family verifies
     with.  Spark's builtin counts CODEPOINT edits while DuckDB's (and
     ClickHouse editDistance's, the reference-adjacent spelling) count
@@ -110,18 +131,157 @@ def _lev(a, b, bound: "int | None" = None):
     codepoints ARE the bytes, making Spark's codepoint distance exactly
     the byte distance — a no-op on ASCII, engine-exact everywhere.
 
-    ``bound`` (r13, guide §1.2 per-task work): every verify site filters
-    d <= _ER_MAXDIST anyway, so pass the threshold down to Spark's
-    3-arg ``levenshtein(a, b, k)`` — the banded DP computes a k-wide
-    diagonal strip, O(k·max(len)) per pair instead of O(len_a·len_b),
-    which is the per-pair bound a 100 TB catalog's long names need.
-    Contract: returns the exact distance when d <= bound, -1 otherwise —
-    callers filter with ``>= 0`` / ``between(0, bound)``, never a bare
-    ``<= bound`` (-1 would pass)."""
+    Banded at the verify threshold: Spark's 3-arg ``levenshtein(a, b,
+    k)`` computes a k-wide diagonal strip, O(k·max(len)) per pair
+    instead of O(len_a·len_b), the per-pair bound long names need.  It
+    returns the exact distance when d <= ``_ER_MAXDIST`` and -1
+    otherwise, so every verify keeps ``>= 0``."""
     as_bytes = lambda c: F.decode(F.encode(c, "UTF-8"), "ISO-8859-1")  # noqa: E731
-    if bound is None:
-        return F.levenshtein(as_bytes(a), as_bytes(b))
-    return F.levenshtein(as_bytes(a), as_bytes(b), bound)
+    return F.levenshtein(as_bytes(a), as_bytes(b), _ER_MAXDIST)
+
+
+def _words(names: DataFrame) -> DataFrame:
+    """The blocking words of a ``nm`` relation: distinct non-blank
+    ``(nm, w)``.  Deduped so a word repeated within one name ("red red
+    widget") counts once, making the df cap a true distinct-name
+    document frequency (ADVICE r9)."""
+    return (
+        names.select("nm", F.explode(F.split(F.col("nm"), " ")).alias("w"))
+        .filter(F.col("w") != "")
+        .distinct()
+    )
+
+
+def _df_cap(words: DataFrame) -> "tuple[DataFrame, DataFrame]":
+    """The stop-key split of a catalog's ``_words``: ``(postings, stop)``
+    — the ``(w, nm)`` rows whose key is shared by at most
+    ``_ER_BLOCK_DF_CAP`` distinct names, and the keys the cap drops.
+    Every blocking join reads the postings, so one hot token ("inc",
+    "ltd") never goes O(df²).  A caller whose postings feed more than
+    one join persists them."""
+    dfc = words.groupBy("w").agg(F.count("*").alias("df"))
+    keys = dfc.filter(F.col("df") <= _ER_BLOCK_DF_CAP).select("w")
+    stop = dfc.filter(F.col("df") > _ER_BLOCK_DF_CAP).select("w")
+    return words.join(F.broadcast(keys), "w").select("w", "nm"), stop
+
+
+def _pairs(postings: DataFrame) -> DataFrame:
+    """The blocked self-join of a posting relation, verified:
+    ``(name_a, name_b, edit_dist)`` with ``name_a < name_b``, DISTINCT so
+    names sharing two keys pair once."""
+    a = postings.select(F.col("nm").alias("name_a"), "w")
+    b = postings.select(F.col("nm").alias("name_b"), "w")
+    return (
+        a.join(b, (a["w"] == b["w"]) & (F.col("name_a") < F.col("name_b")))
+        .select("name_a", "name_b")
+        .distinct()
+        .select("name_a", "name_b", _lev("name_a", "name_b").alias("edit_dist"))
+        .filter(F.col("edit_dist") >= 0)
+    )
+
+
+def _best_match(batch: DataFrame, postings: DataFrame) -> DataFrame:
+    """Each batch name's best catalog match: its words joined to the
+    catalog postings, verified, and the (distance, name) minimum elected
+    — a total order, so both engines pick the same catalog record.
+    Returns ``(bname, cname, d)``; names with no verified candidate are
+    absent."""
+    cand = (
+        _words(batch)
+        .select(F.col("nm").alias("bname"), "w")
+        .join(postings.select("w", F.col("nm").alias("cname")), "w")
+        .select("bname", "cname")
+        .distinct()
+    )
+    rk = Window.partitionBy("bname").orderBy(F.col("d").asc(), F.col("cname").asc())
+    return (
+        cand.select("bname", "cname", _lev("bname", "cname").alias("d"))
+        .filter(F.col("d") >= 0)
+        .withColumn("rk", F.row_number().over(rk))
+        .filter(F.col("rk") == 1)
+        .select("bname", "cname", "d")
+    )
+
+
+def _resolve(batch: DataFrame, best: DataFrame, entities: DataFrame) -> DataFrame:
+    """Batch names resolved through their best match to the catalog's
+    ``(nm, entity_id)`` map: ``(name, matched_name, edit_dist,
+    entity_id)``; a name with no match is its own entity.  No forced
+    broadcast on the map: it is distinct-names-sized, bounded by no
+    contract, so AQE broadcasts it while it is small."""
+    ents = entities.select(F.col("nm").alias("cname"), F.col("entity_id").alias("eid"))
+    return (
+        batch.join(best, batch["nm"] == best["bname"], "left")
+        .join(ents, "cname", "left")
+        .select(
+            F.col("nm").alias("name"),
+            F.col("cname").alias("matched_name"),
+            F.col("d").alias("edit_dist"),
+            F.when(F.col("cname").isNull(), F.col("nm"))
+            .otherwise(F.coalesce(F.col("eid"), F.col("cname")))
+            .alias("entity_id"),
+        )
+    )
+
+
+def _entity_map(names: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``names`` (an ``nm`` relation) labeled by connected components
+    over the verified ``(name_a, name_b)`` pairs — min-label propagation,
+    the MinHash dedup engine, which needs only least/min and so works
+    unchanged on string nodes — with unmatched names their own entity.
+    Returns ``(nm, entity_id, <names' other columns>)``."""
+    from sqlite_to_clickhouse_spark.operators.dedup import connected_components
+
+    comp = connected_components(
+        pairs.select(F.col("name_a").alias("src"), F.col("name_b").alias("dst"))
+    ).select(F.col("node").alias("nm"), F.col("component_id").alias("eid"))
+    return names.join(comp, "nm", "left").select(
+        "nm",
+        F.coalesce(F.col("eid"), F.col("nm")).alias("entity_id"),
+        *(c for c in names.columns if c != "nm"),
+    )
+
+
+def _survivorship(rows: DataFrame) -> DataFrame:
+    """The golden record of every entity from ``(entity_id, p_name,
+    p_brand, cnt, mn, mx, ms)`` partials (a part row is the partial with
+    cnt 1): counts add, price and size extremes fold, variants count
+    distinct names, and the MODAL brand wins on (votes DESC, brand ASC
+    NULLS LAST) — explicit NULLS LAST because Spark's ASC default is
+    nulls-first and DuckDB's nulls-last, so a votes tie would elect
+    different brands (caught by the nulls mutant).  Every rule is
+    associative, so partials of any grain merge exactly."""
+    votes = rows.groupBy("entity_id", "p_brand").agg(F.sum("cnt").alias("votes"))
+    rk = Window.partitionBy("entity_id").orderBy(
+        F.col("votes").desc(), F.col("p_brand").asc_nulls_last()
+    )
+    pick = (
+        votes.withColumn("rk", F.row_number().over(rk))
+        .filter(F.col("rk") == 1)
+        .select("entity_id", F.col("p_brand").alias("modal_brand"))
+    )
+    agg = rows.groupBy("entity_id").agg(
+        F.sum("cnt").alias("n_parts"),
+        F.countDistinct("p_name").alias("n_variants"),
+        F.round(F.min("mn"), 2).alias("min_price"),
+        F.round(F.max("mx"), 2).alias("max_price"),
+        F.max("ms").alias("max_size"),
+    )
+    return agg.join(pick, "entity_id").select(
+        "entity_id", "n_parts", "n_variants", "min_price", "max_price",
+        "max_size", "modal_brand",
+    )
+
+
+def _labeled(m: DataFrame, *extra) -> DataFrame:
+    """An ``(nm, entity_id)`` map as the registered ops return it:
+    ``(name, entity_id, is_canonical, *extra)``."""
+    return m.select(
+        F.col("nm").alias("name"),
+        "entity_id",
+        (F.col("nm") == F.col("entity_id")).alias("is_canonical"),
+        *extra,
+    )
 
 
 def _distinct_names(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -133,46 +293,12 @@ def _distinct_names(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def blocked_name_pairs(names: DataFrame) -> DataFrame:
-    """Token-blocked candidate pairs over a ``(nm, n_parts)`` relation,
-    verified by levenshtein <= ``_ER_MAXDIST``. Returns
-    ``(name_a, name_b, edit_dist)`` with ``name_a < name_b``.
-
-    The blocking keys (words) are df-capped before the self-join; the
-    pair relation is DISTINCT on (name_a, name_b) so names sharing two
-    words don't emit twice."""
-    # PERSISTED (r13, guide §1.2): three consumers — the df cap agg and
-    # BOTH sides of the blocked self-join — re-ran the names-scan +
-    # explode + distinct once each; the frame is (name, word) pairs,
-    # vocabulary-bounded.
-    words = gio.persist(
-        names.select("nm", F.explode(F.split(F.col("nm"), " ")).alias("w"))
-        .filter(F.col("w") != "")
-        # Dedupe (nm, w): a repeated word within one name ("red red
-        # widget") must count its tokens' df ONCE, so the stop-key cap is
-        # a true distinct-name document frequency (ADVICE r9).
-        .distinct()
-    )
-    # Stop-key filter: df over DISTINCT names (names is already distinct,
-    # and words is distinct on (nm, w)).
-    keys = (
-        words.groupBy("w")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= _ER_BLOCK_DF_CAP)
-        .select("w")
-    )
-    blocked = words.join(F.broadcast(keys), "w")
-    a = blocked.select(F.col("nm").alias("name_a"), "w")
-    b = blocked.select(F.col("nm").alias("name_b"), "w")
-    cand = (
-        a.join(b, (a["w"] == b["w"]) & (F.col("name_a") < F.col("name_b")))
-        .select("name_a", "name_b")
-        .distinct()
-    )
-    return cand.select(
-        "name_a",
-        "name_b",
-        _lev("name_a", "name_b", _ER_MAXDIST).alias("edit_dist"),
-    ).filter(F.col("edit_dist").between(0, _ER_MAXDIST))
+    """Token-blocked candidate pairs over a ``(nm, ...)`` relation of
+    distinct names, verified by levenshtein <= ``_ER_MAXDIST``. Returns
+    ``(name_a, name_b, edit_dist)`` with ``name_a < name_b``.  The
+    postings are persisted: both self-join sides read them."""
+    postings, _ = _df_cap(_words(names))
+    return _pairs(gio.persist(postings))
 
 
 _PAIRS_CTE = f"""
@@ -244,24 +370,11 @@ _CLUSTERS_ORACLE = f"""
 
 
 def er_entity_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """name -> entity_id map: connected components over the verified
-    pairs (min-label propagation — same engine as
-    dedup_connected_components, which works unchanged on string nodes
-    because it only needs least/min), singletons mapped to themselves."""
-    from sqlite_to_clickhouse_spark.operators.dedup import connected_components
-
+    """``(nm, entity_id, n_parts)``: every distinct part name labeled by
+    its component over the verified pairs, singletons mapped to
+    themselves."""
     names = _distinct_names(spark, sf_dir)
-    pairs = blocked_name_pairs(names).select(
-        F.col("name_a").alias("src"), F.col("name_b").alias("dst")
-    )
-    comp = connected_components(pairs).select(
-        F.col("node").alias("nm"), F.col("component_id").alias("eid")
-    )
-    return names.join(comp, "nm", "left").select(
-        "nm",
-        F.coalesce(F.col("eid"), F.col("nm")).alias("entity_id"),
-        "n_parts",
-    )
+    return _entity_map(names, blocked_name_pairs(names))
 
 
 @register("er_clusters", oracle=_CLUSTERS_ORACLE, tags=("llm", "entity"))
@@ -272,13 +385,7 @@ def er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a recursive-CTE transitive closure over the identical pair
     set — the same exact-oracle strategy dedup_connected_components
     pioneered for iterative algorithms."""
-    m = er_entity_map(spark, sf_dir)
-    return m.select(
-        F.col("nm").alias("name"),
-        "entity_id",
-        (F.col("nm") == F.col("entity_id")).alias("is_canonical"),
-        "n_parts",
-    )
+    return _labeled(er_entity_map(spark, sf_dir), "n_parts")
 
 
 _GOLDEN_ORACLE = f"""
@@ -336,48 +443,20 @@ def er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break so both engines elect the same winner.
 
     The name→entity map is tiny relative to the fact table (distinct
-    names, post-collapse), so Spark broadcasts it into the fact scan and
-    the only wide shuffle is the final entity_id aggregate."""
+    names, post-collapse), so Spark broadcasts it into the fact scan;
+    each part row enters the survivorship kernel as a unit partial."""
     parts = table(spark, sf_dir, "part")
     m = er_entity_map(spark, sf_dir).select("nm", "entity_id")
-    mapped = parts.join(
-        F.broadcast(m), parts["p_name"] == m["nm"], "left"
-    ).select(
-        F.coalesce(F.col("entity_id"), F.col("p_name")).alias("entity_id"),
-        "p_name",
-        "p_brand",
-        "p_size",
-        "p_retailprice",
-    )
-    votes = mapped.groupBy("entity_id", "p_brand").agg(F.count("*").alias("votes"))
-    from pyspark.sql import Window
-
-    # NULLS LAST explicitly: Spark's ASC default is nulls-first, DuckDB's
-    # is nulls-last — on a votes tie the two engines would elect different
-    # brands (caught by the nulls mutant in the adversarial sweep).
-    rk = Window.partitionBy("entity_id").orderBy(
-        F.col("votes").desc(), F.col("p_brand").asc_nulls_last()
-    )
-    pick = (
-        votes.withColumn("rk", F.row_number().over(rk))
-        .filter(F.col("rk") == 1)
-        .select("entity_id", F.col("p_brand").alias("modal_brand"))
-    )
-    agg = mapped.groupBy("entity_id").agg(
-        F.count("*").alias("n_parts"),
-        F.countDistinct("p_name").alias("n_variants"),
-        F.round(F.min("p_retailprice"), 2).alias("min_price"),
-        F.round(F.max("p_retailprice"), 2).alias("max_price"),
-        F.max("p_size").alias("max_size"),
-    )
-    return agg.join(pick, "entity_id").select(
-        "entity_id",
-        "n_parts",
-        "n_variants",
-        "min_price",
-        "max_price",
-        "max_size",
-        "modal_brand",
+    return _survivorship(
+        parts.join(F.broadcast(m), parts["p_name"] == m["nm"], "left").select(
+            F.coalesce(F.col("entity_id"), F.col("p_name")).alias("entity_id"),
+            "p_name",
+            "p_brand",
+            F.lit(1).alias("cnt"),
+            F.col("p_retailprice").alias("mn"),
+            F.col("p_retailprice").alias("mx"),
+            F.col("p_size").alias("ms"),
+        )
     )
 
 
@@ -453,90 +532,19 @@ _ER_IDX_INCR_ORACLE = (
 )
 
 
-def _serving_state(spark: SparkSession, sf_dir: str):
-    """Shared ER serving-path state: catalog/batch distinct-name sets,
-    the catalog entity components (ONE label-propagation run), and the
-    blocked batch best-match table. er_incremental_match and
-    er_golden_record_incremental both consume this, so the catalog is
-    clustered exactly once per plan family (pre-refactor the refresh op
-    ran the propagation loop twice: once itself, once inside the match
-    op it called)."""
-    from pyspark.sql import Window
-
-    from sqlite_to_clickhouse_spark.operators.dedup import connected_components
-
+def _serving_state(spark: SparkSession, sf_dir: str) -> "tuple[DataFrame, DataFrame]":
+    """The in-plan ER serving path over the partkey split: the catalog's
+    entity map (ONE label-propagation run) and the batch resolved against
+    it — ``(cat_map, matches)``, both fed from the catalog's one persisted
+    posting relation.  er_incremental_match and er_golden_record_incremental
+    both consume it; er_index_match is the same composition over the
+    persisted store."""
     parts = table(spark, sf_dir, "part")
-    cat = (
-        parts.filter(F.col("p_partkey") % 10 != 0)
-        .select(F.col("p_name").alias("nm"))
-        .distinct()
-        .withColumn("n_parts", F.lit(1))
-    )
-    bat = (
-        parts.filter(F.col("p_partkey") % 10 == 0)
-        .select(F.col("p_name").alias("nm"))
-        .distinct()
-    )
-    # Catalog word/key relations — computed ONCE and shared between the
-    # catalog pair graph and the batch candidate path (r13, guide §1.2:
-    # the previous spelling derived them twice — once inside
-    # blocked_name_pairs, once here — and the blocked self-join
-    # re-evaluated the explode+distinct per join side).  (nm, w) deduped
-    # so the df cap counts distinct names, not word occurrences
-    # (ADVICE r9).  Persisted: fanned into the keys agg, two self-join
-    # sides, and the batch cand join; name-vocabulary-sized.
-    cwords = gio.persist(
-        cat.select("nm", F.explode(F.split(F.col("nm"), " ")).alias("w"))
-        .filter(F.col("w") != "")
-        .distinct()
-    )
-    ckeys = (
-        cwords.groupBy("w")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= _ER_BLOCK_DF_CAP)
-        .select("w")
-    )
-    # Catalog entity map: verified pairs within the catalog → components
-    # (same construction as blocked_name_pairs, on the shared relations).
-    cblocked = cwords.join(F.broadcast(ckeys), "w")
-    ca = cblocked.select(F.col("nm").alias("name_a"), "w")
-    cb = cblocked.select(F.col("nm").alias("name_b"), "w")
-    cpairs = (
-        ca.join(cb, (ca["w"] == cb["w"]) & (F.col("name_a") < F.col("name_b")))
-        .select("name_a", "name_b")
-        .distinct()
-        .filter(_lev("name_a", "name_b", _ER_MAXDIST) >= 0)
-        .select(F.col("name_a").alias("src"), F.col("name_b").alias("dst"))
-    )
-    comp = connected_components(cpairs).select(
-        F.col("node").alias("cname"), F.col("component_id").alias("eid")
-    )
-    bwords = (
-        bat.select(
-            F.col("nm").alias("bname"), F.explode(F.split(F.col("nm"), " ")).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .distinct()
-    )
-    cand = (
-        bwords.join(F.broadcast(ckeys), "w")
-        .join(
-            cwords.select(F.col("nm").alias("cname"), "w"),
-            "w",
-        )
-        .select("bname", "cname")
-        .distinct()
-    )
-    scored = cand.select(
-        "bname", "cname", _lev("bname", "cname", _ER_MAXDIST).alias("d")
-    ).filter(F.col("d").between(0, _ER_MAXDIST))
-    rk = Window.partitionBy("bname").orderBy(F.col("d").asc(), F.col("cname").asc())
-    best = (
-        scored.withColumn("rk", F.row_number().over(rk))
-        .filter(F.col("rk") == 1)
-        .select("bname", "cname", "d")
-    )
-    return cat, bat, comp, best
+    cat = parts.filter(F.col("p_partkey") % 10 != 0).select(F.col("p_name").alias("nm")).distinct()
+    bat = parts.filter(F.col("p_partkey") % 10 == 0).select(F.col("p_name").alias("nm")).distinct()
+    postings = gio.persist(_df_cap(_words(cat))[0])
+    cat_map = _entity_map(cat, _pairs(postings))
+    return cat_map, _resolve(bat, _best_match(bat, postings), cat_map)
 
 
 @register("er_incremental_match", oracle=_INCR_ORACLE, tags=("llm", "entity"))
@@ -556,19 +564,7 @@ def er_incremental_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     is never re-paired. Differentially gated end-to-end: the oracle
     recomputes catalog clustering (recursive closure) AND the batch
     match."""
-    cat, bat, comp, best = _serving_state(spark, sf_dir)
-    return (
-        bat.join(best, bat["nm"] == best["bname"], "left")
-        .join(F.broadcast(comp), "cname", "left")
-        .select(
-            F.col("nm").alias("name"),
-            F.col("cname").alias("matched_name"),
-            F.col("d").alias("edit_dist"),
-            F.when(F.col("cname").isNull(), F.col("nm"))
-            .otherwise(F.coalesce(F.col("eid"), F.col("cname")))
-            .alias("entity_id"),
-        )
-    )
+    return _serving_state(spark, sf_dir)[1]
 
 
 _GOLDEN_INCR_ORACLE = f"""
@@ -636,29 +632,9 @@ def er_golden_record_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Differentially gated against a single-pass recompute under the SAME
     frozen mapping, so the merge algebra itself is what the hash
     verifies."""
-    from pyspark.sql import Window
-
     parts = table(spark, sf_dir, "part")
-    cat_rows = parts.filter(F.col("p_partkey") % 10 != 0)
-    bat_rows = parts.filter(F.col("p_partkey") % 10 == 0)
-
-    # ONE shared serving state: the catalog components from a single
-    # label-propagation run feed BOTH maps (pre-refactor this op ran the
-    # propagation twice — once directly, once inside the match op).
-    cat, bat, comp, best = _serving_state(spark, sf_dir)
-    cat_map = cat.join(comp, cat["nm"] == comp["cname"], "left").select(
-        cat["nm"], F.coalesce(F.col("eid"), cat["nm"]).alias("entity_id")
-    )
-    bat_map = (
-        bat.join(best, bat["nm"] == best["bname"], "left")
-        .join(F.broadcast(comp), "cname", "left")
-        .select(
-            bat["nm"],
-            F.when(F.col("cname").isNull(), bat["nm"])
-            .otherwise(F.coalesce(F.col("eid"), F.col("cname")))
-            .alias("entity_id"),
-        )
-    )
+    cat_map, matches = _serving_state(spark, sf_dir)
+    bat_map = matches.select(F.col("name").alias("nm"), "entity_id")
 
     def _partials(rows: DataFrame, mapping: DataFrame) -> DataFrame:
         """Per-(entity, name, brand) partials — the finest mergeable
@@ -674,13 +650,12 @@ def er_golden_record_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # "Stored" partials + the batch's partials, merged associatively.
-    # PERSISTED (r13): both downstream aggregations (brand votes, the
-    # entity rollup) re-evaluated the whole merge tree — serving state,
-    # two partial passes, the union — once each; the frame is
-    # (entity, name, brand)-grain scalars.
+    # Persisted: the survivorship kernel's two aggregations (brand votes,
+    # the entity rollup) would each re-run the whole merge tree; the
+    # frame is (entity, name, brand)-grain scalars.
     merged = gio.persist(
-        _partials(cat_rows, cat_map)
-        .unionAll(_partials(bat_rows, bat_map))
+        _partials(parts.filter(F.col("p_partkey") % 10 != 0), cat_map)
+        .unionAll(_partials(parts.filter(F.col("p_partkey") % 10 == 0), bat_map))
         .groupBy("entity_id", "p_name", "p_brand")
         .agg(
             F.sum("cnt").alias("cnt"),
@@ -689,40 +664,24 @@ def er_golden_record_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("ms").alias("ms"),
         )
     )
-    votes = merged.groupBy("entity_id", "p_brand").agg(F.sum("cnt").alias("votes"))
-    rk = Window.partitionBy("entity_id").orderBy(
-        F.col("votes").desc(), F.col("p_brand").asc_nulls_last()
-    )
-    pick = (
-        votes.withColumn("rk", F.row_number().over(rk))
-        .filter(F.col("rk") == 1)
-        .select("entity_id", F.col("p_brand").alias("modal_brand"))
-    )
-    agg = merged.groupBy("entity_id").agg(
-        F.sum("cnt").alias("n_parts"),
-        F.countDistinct("p_name").alias("n_variants"),
-        F.round(F.min("mn"), 2).alias("min_price"),
-        F.round(F.max("mx"), 2).alias("max_price"),
-        F.max("ms").alias("max_size"),
-    )
-    return agg.join(pick, "entity_id").select(
-        "entity_id", "n_parts", "n_variants", "min_price", "max_price",
-        "max_size", "modal_brand",
-    )
+    return _survivorship(merged)
 
 
 # ---------------------------------------------------------------------------
-# Persisted ER catalog index (r10, VERDICT r9 items 2-3).
+# Persisted ER catalog index.
 #
-# The missing artifact the r9 verdict named: er_incremental_match is
-# batch-bounded in PAIRING work but re-ran catalog clustering in-plan on
-# every call (that is why derived.er_incremental_vs_full read 1.21 — the
-# serving path cost more than the full recompute).  This store mirrors the
-# MinHash index (dedup.py) exactly: the catalog's entity map and blocking
-# posting lists are PERSISTED as partitioned parquet under an immutable
-# io.ensure_generation dir with manifest-committed snapshots (io.py
-# protocol); batch lookups JOIN the stored map, appends grow it
-# file-additively, deletes tombstone it.
+# The catalog's blocking postings and entity map, PERSISTED so the
+# serving path pays the clustering once per catalog instead of once per
+# call.  It mirrors the MinHash index (dedup.py): partitioned parquet
+# under an immutable io.ensure_generation dir with manifest-committed
+# snapshots (io.py protocol, declared once as ``_ER_STORE``); batch
+# lookups join the stored map, appends grow it file-additively, deletes
+# tombstone it.  The store ops compose the in-plan kernels above: the
+# build is ``_words`` → ``_df_cap`` → ``_pairs`` → ``_entity_map``
+# written out, a lookup is ``_best_match`` + ``_resolve`` over the
+# stored postings and entity map, an append blocks ``_words`` of its
+# batch against the stored postings, and a delete re-labels the
+# affected clusters with ``_entity_map`` over the stored edges.
 #
 # Relations:
 #   entities/   (nm, entity_id, gen)  — name → canonical entity.  Appends
@@ -772,35 +731,18 @@ def er_index_build(names: DataFrame, path: str) -> None:
     the entity map from ONE connected-components run — the clustering
     cost er_incremental_match used to pay per call, paid once here.
     Publishes the initial snapshot via one atomic manifest commit."""
-    from sqlite_to_clickhouse_spark.operators.dedup import connected_components
-
     names = names.select("nm").distinct()
     with gio.scope():
-        # The same plan as blocked_name_pairs' persisted words, so its
-        # persist is a cache hit on this frame; the scope releases both.
-        words = gio.persist(
-            names.select("nm", F.explode(F.split(F.col("nm"), " ")).alias("w"))
-            .filter(F.col("w") != "")
-            .distinct()
-        )
+        postings, stop = _df_cap(_words(names))
+        postings = gio.persist(postings)
         # The verified pair graph is the build's most expensive subtree
         # (blocking joins + per-candidate edit distance) and is consumed
         # TWICE — by the clustering below and by the edges/ write.  CC
         # persists only its derived undirected table and unpersists it
         # before returning, so without this persist the edges write would
         # re-run the whole blocking+verify pipeline from scratch.
-        pairs = gio.persist(blocked_name_pairs(names).select("name_a", "name_b"))
-        dfc = words.groupBy("w").agg(F.count("*").alias("df"))
-        stop = dfc.filter(F.col("df") > _ER_BLOCK_DF_CAP).select("w")
-        postings = words.join(F.broadcast(stop), "w", "left_anti").select("w", "nm")
-        comp = connected_components(
-            pairs.select(F.col("name_a").alias("src"), F.col("name_b").alias("dst"))
-        ).select(F.col("node").alias("nm"), F.col("component_id").alias("eid"))
-        entities = names.join(comp, "nm", "left").select(
-            "nm",
-            F.coalesce(F.col("eid"), F.col("nm")).alias("entity_id"),
-            F.lit(0).alias("gen"),
-        )
+        pairs = gio.persist(_pairs(postings).select("name_a", "name_b"))
+        entities = _entity_map(names, pairs).withColumn("gen", F.lit(0))
         # Independent relation writes, run concurrently.
         gio.run_jobs(
             lambda: entities.write.parquet(os.path.join(path, "entities")),
@@ -816,8 +758,6 @@ def er_index_entities(spark: SparkSession, path: str) -> DataFrame:
     name, tombstoned names dropped.  At 100 TB the entities relation
     would be bucketed by nm so this window never wide-shuffles; here it
     is one shuffle of a distinct-names-sized relation."""
-    from pyspark.sql import Window
-
     ent = _ER_STORE.read(spark, path, "entities")
     w = Window.partitionBy("nm").orderBy(F.col("gen").desc())
     cur = (
@@ -848,53 +788,12 @@ def er_index_match(
     (name, matched_name, edit_dist, entity_id); unmatched names become
     their own entity.  Tombstoned catalog names neither candidate nor
     resolve (anti-joined at the posting read)."""
-    from pyspark.sql import Window
-
     bat = batch_names.select("nm").distinct()
     postings = _ER_STORE.read(spark, path, "postings")
     tomb = _ER_STORE.tombstones(spark, path)
     if tomb is not None:
         postings = postings.join(tomb, "nm", "left_anti")
-    bwords = (
-        bat.select(F.col("nm").alias("bname"), F.explode(F.split("nm", " ")).alias("w"))
-        .filter(F.col("w") != "")
-        .distinct()
-    )
-    cand = (
-        bwords.join(postings.select("w", F.col("nm").alias("cname")), "w")
-        .select("bname", "cname")
-        .distinct()
-    )
-    scored = cand.select(
-        "bname", "cname", _lev("bname", "cname", _ER_MAXDIST).alias("d")
-    ).filter(F.col("d").between(0, _ER_MAXDIST))
-    rk = Window.partitionBy("bname").orderBy(F.col("d").asc(), F.col("cname").asc())
-    best = (
-        scored.withColumn("rk", F.row_number().over(rk))
-        .filter(F.col("rk") == 1)
-        .select("bname", "cname", "d")
-    )
-    ents = er_index_entities(spark, path)
-    # No forced broadcast on the entity map: it is distinct-names-sized
-    # (bounded only by the vocabulary, not by any contract), so the hint
-    # would be wrong at 100 TB — AQE broadcasts it anyway while it is
-    # actually small, and shuffle-joins it when it is not.
-    return (
-        bat.join(best, bat["nm"] == best["bname"], "left")
-        .join(
-            ents.select(F.col("nm").alias("cname"), "entity_id"),
-            "cname",
-            "left",
-        )
-        .select(
-            F.col("nm").alias("name"),
-            F.col("cname").alias("matched_name"),
-            F.col("d").alias("edit_dist"),
-            F.when(F.col("cname").isNull(), F.col("nm"))
-            .otherwise(F.coalesce(F.col("entity_id"), F.col("cname")))
-            .alias("entity_id"),
-        )
-    )
+    return _resolve(bat, _best_match(bat, postings), er_index_entities(spark, path))
 
 
 def er_index_append(
@@ -933,8 +832,6 @@ def er_index_append(
     nothing) and every nm-keyed join in the lifecycle (blocking,
     re-label, un-tombstone) would silently never match it, so admitting
     it would create an unreachable tombstone/entities row."""
-    from pyspark.sql import Window
-
     from sqlite_to_clickhouse_spark.operators.dedup import connected_components
 
     bat = new_names.select("nm").filter(F.col("nm").isNotNull()).distinct()
@@ -950,11 +847,7 @@ def er_index_append(
             postings = postings.join(tomb, "nm", "left_anti")
         stop = _ER_STORE.read(spark, path, "stopkeys")
 
-        bwords = (
-            bat.select("nm", F.explode(F.split("nm", " ")).alias("w"))
-            .filter(F.col("w") != "")
-            .distinct()
-        )
+        bwords = _words(bat)
         # Classify every batch word once: a STORED key stays a key; a
         # capped-out word stays out; a genuinely-new word (in no stored
         # posting and not capped out) is admitted at batch df <= cap
@@ -1001,7 +894,7 @@ def er_index_append(
                 F.greatest("bname", "cname").alias("name_b"),
             )
             .distinct()
-            .filter(_lev("name_a", "name_b", _ER_MAXDIST) >= 0)
+            .filter(_lev("name_a", "name_b") >= 0)
         )
         # Re-label on the CONTRACTED graph (r12, guide §1.2): only
         # components touched by a new edge can change, so instead of
@@ -1109,8 +1002,6 @@ def er_index_delete(spark: SparkSession, del_names: DataFrame, path: str) -> Non
     (tombstone-bounded, never catalog-bounded), and every survivor whose
     entity changed gets a fresh entities row at the next gen — all
     published in the same atomic commit as the tombstones."""
-    from sqlite_to_clickhouse_spark.operators.dedup import connected_components
-
     # NULL is not an entity name (same contract as er_index_append,
     # ADVICE r11): a NULL tombstone row would anti-join-mask nothing and
     # be un-tombstone-able forever — drop it at entry.
@@ -1137,12 +1028,7 @@ def er_index_delete(spark: SparkSession, del_names: DataFrame, path: str) -> Non
                 survivors.select(F.col("nm").alias("name_b")).distinct(), "name_b", "semi"
             )
         )
-        comp = connected_components(
-            sub_edges.select(F.col("name_a").alias("src"), F.col("name_b").alias("dst"))
-        ).select(F.col("node").alias("nm"), F.col("component_id").alias("eid"))
-        new_map = survivors.join(comp, "nm", "left").select(
-            "nm", F.coalesce(F.col("eid"), F.col("nm")).alias("entity_id")
-        )
+        new_map = _entity_map(survivors, sub_edges)
         gen = _er_next_gen(spark, path)
         changed = (
             new_map.alias("n")
@@ -1307,27 +1193,11 @@ def er_reordered_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ext = names.select("nm", variant.alias("variant"), ext_name.alias("ext_name"))
 
-    cwords = (
-        names.select("nm", F.explode(F.split(F.col("nm"), " ")).alias("w"))
-        .filter(F.col("w") != "")
-        .distinct()
-    )
-    ckeys = (
-        cwords.groupBy("w")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= _ER_BLOCK_DF_CAP)
-        .select("w")
-    )
-    ewords = (
-        ext.select("ext_name")
-        .distinct()
-        .select("ext_name", F.explode(F.split(F.col("ext_name"), " ")).alias("w"))
-        .filter(F.col("w") != "")
-        .distinct()
-    )
+    postings, _ = _df_cap(_words(names))
     cand = (
-        ewords.join(F.broadcast(ckeys), "w")
-        .join(cwords.select(F.col("nm").alias("cname"), "w"), "w")
+        _words(ext.select(F.col("ext_name").alias("nm")).distinct())
+        .select(F.col("nm").alias("ext_name"), "w")
+        .join(postings.select("w", F.col("nm").alias("cname")), "w")
         .select("ext_name", "cname")
         .distinct()
     )
@@ -1348,8 +1218,6 @@ def er_reordered_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             "jacc"
         ),
     ).filter(F.col("jacc") >= _ER_SETMATCH_T)
-    from pyspark.sql import Window
-
     rk = Window.partitionBy("ext_name").orderBy(F.col("jacc").desc(), F.col("cname").asc())
     best = (
         scored.withColumn("rk", F.row_number().over(rk))
@@ -1436,10 +1304,8 @@ def er_index_build_op(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("nm")
         .agg(F.count(F.lit(1)).alias("nw"))
     )
-    return ents.join(pw, "nm", "left").select(
-        F.col("nm").alias("name"),
-        "entity_id",
-        (F.col("nm") == F.col("entity_id")).alias("is_canonical"),
+    return _labeled(
+        ents.join(pw, "nm", "left"),
         F.coalesce(F.col("nw"), F.lit(0)).cast("long").alias("n_block_words"),
     )
 
@@ -1530,12 +1396,7 @@ def er_index_append_op(spark: SparkSession, sf_dir: str) -> DataFrame:
         er_index_entities(spark, idx).select("nm"), "nm", "left_anti"
     )
     er_index_append(spark, fresh, idx)
-    ents = er_index_entities(spark, idx)
-    return ents.select(
-        F.col("nm").alias("name"),
-        "entity_id",
-        (F.col("nm") == F.col("entity_id")).alias("is_canonical"),
-    )
+    return _labeled(er_index_entities(spark, idx))
 
 
 # Registered delete set: NAME-derived (md5 bucket), never partkey-derived
@@ -1588,12 +1449,7 @@ def er_index_delete_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_er_index.py."""
     idx = gio.clone_store(_er_index_path(spark, sf_dir), "er_idx_")
     er_index_delete(spark, _er_registered_dels(spark, sf_dir), idx)
-    ents = er_index_entities(spark, idx)
-    return ents.select(
-        F.col("nm").alias("name"),
-        "entity_id",
-        (F.col("nm") == F.col("entity_id")).alias("is_canonical"),
-    )
+    return _labeled(er_index_entities(spark, idx))
 
 
 _ER_IDX_DELC_ORACLE = f"""

@@ -25,6 +25,8 @@ Scale paths:
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
 
 import numpy as np
@@ -1930,6 +1932,17 @@ def _ensure_incr_ann_index(spark: SparkSession, sf_dir: str) -> str:
     return ensure_generation("ann_incr_idx", sf_dir, fp, _build)
 
 
+def _quantizer_digest(path: str) -> str:
+    """md5 over a store's centroid and codebook files: equal digests mean
+    a byte-identical (frozen) quantizer."""
+    h = hashlib.md5()
+    for rel in ("centroids", "codebooks"):
+        for f in sorted(glob.glob(os.path.join(path, rel, "*.parquet"))):
+            with open(f, "rb") as fh:
+                h.update(fh.read())
+    return h.hexdigest()
+
+
 @register(
     "sim_index_append",
     oracle="""
@@ -1958,22 +1971,11 @@ def sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     op performs the documented re-train trigger instead (ann_index_build
     over the batch) and the checks collapse to their build-time
     equivalents."""
-    import glob as _glob
-    import hashlib
-
-    def _state_digest(p: str) -> str:
-        h = hashlib.md5()
-        for rel in ("centroids", "codebooks"):
-            for f in sorted(_glob.glob(os.path.join(p, rel, "*.parquet"))):
-                with open(f, "rb") as fh:
-                    h.update(fh.read())
-        return h.hexdigest()
 
     def _code_files(p: str) -> set:
         return {
             os.path.relpath(f, p)
-            for f in _glob.glob(os.path.join(p, "codes", "**", "*.parquet"),
-                                recursive=True)
+            for f in glob.glob(os.path.join(p, "codes", "**", "*.parquet"), recursive=True)
         }
 
     e = table(spark, sf_dir, "embeddings")
@@ -1981,18 +1983,18 @@ def sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_all = e.count()
     idx = gio.clone_store(_ensure_incr_ann_index(spark, sf_dir), "ann_incr_idx_")
     pre_files = _code_files(idx)
-    pre_state = _state_digest(idx)
+    pre_state = _quantizer_digest(idx)
     if _load_quantizer(idx) is None:
         # Empty corpus: the append IS a rebuild (see docstring).
         ann_index_build(spark, batch, idx).collect()
         pre_files = set()  # a rebuild replaces the (empty) file set
-        pre_state = _state_digest(idx)
+        pre_state = _quantizer_digest(idx)
     elif batch.limit(1).count():
         ann_index_append(spark, batch, idx)
     post = _ANN_STORE.read(spark, idx, "codes").count() if n_all else 0
     checks = [
         ("codes_rows_eq_corpus_plus_batch", post == n_all),
-        ("quantizer_frozen", _state_digest(idx) == pre_state),
+        ("quantizer_frozen", _quantizer_digest(idx) == pre_state),
         ("append_added_files_only", pre_files <= _code_files(idx)),
     ]
     return spark.createDataFrame(checks, "component STRING, ok BOOLEAN")
@@ -2088,17 +2090,6 @@ def sim_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the tombstone relation must be gone.  Query bit-equality between
     the tombstoned and compacted copies is pinned in
     tests/test_llm_ops.py."""
-    import glob as _glob
-    import hashlib
-
-    def _state_digest(p: str) -> str:
-        h = hashlib.md5()
-        for rel in ("centroids", "codebooks"):
-            for f in sorted(_glob.glob(os.path.join(p, rel, "*.parquet"))):
-                with open(f, "rb") as fh:
-                    h.update(fh.read())
-        return h.hexdigest()
-
     idx = gio.clone_store(_ensure_index(spark, sf_dir)[0], "ann_del_idx_")
     e = table(spark, sf_dir, "embeddings")
     ann_index_delete(
@@ -2112,7 +2103,7 @@ def sim_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         [
             (
                 codes_rows,
-                _state_digest(compacted) == _state_digest(idx),
+                _quantizer_digest(compacted) == _quantizer_digest(idx),
                 # cleared = the compacted snapshot lists no tombstone
                 # relation (manifest-level, matching how readers resolve)
                 not gio.manifest_relation_files(compacted, "tombstones"),

@@ -174,16 +174,17 @@ def test_registered_append_batch_triggers_merges(spark, sf):
 
     if not os.path.isdir(sf):
         pytest.skip(f"fixture dir missing: {sf}")
-    idx = gio.clone_store(E._er_index_path(spark, sf), "er_idx_")
-    pre = E.er_index_entities(spark, idx).persist()
-    fresh = E._er_batch_names(spark, sf).join(pre.select("nm"), "nm", "left_anti")
-    E.er_index_append(spark, fresh, idx)
-    post = E.er_index_entities(spark, idx)
-    old_n = pre.select("entity_id").distinct().count()
-    new_n = (
-        post.join(pre.select("nm"), "nm").select("entity_id").distinct().count()
-    )
-    pre.unpersist()
+    with gio.scope():
+        idx = gio.clone_store(E._er_index_path(spark, sf), "er_idx_")
+        pre = E.er_index_entities(spark, idx).persist()
+        fresh = E._er_batch_names(spark, sf).join(pre.select("nm"), "nm", "left_anti")
+        E.er_index_append(spark, fresh, idx)
+        post = E.er_index_entities(spark, idx)
+        old_n = pre.select("entity_id").distinct().count()
+        new_n = (
+            post.join(pre.select("nm"), "nm").select("entity_id").distinct().count()
+        )
+        pre.unpersist()
     assert old_n - new_n >= 1, (
         f"registered append batch at {sf} merged no existing entities — "
         "the merge-relabel gate has gone vacuous; re-derive the batch "

@@ -104,17 +104,18 @@ def test_clone_is_a_valid_store_independent_of_its_source(spark, tmp_path, case)
     store, (rel, col) = case["store"], case["live"]
     src = str(tmp_path / "src")
     case["build"](src)
-    clone = gio.clone_store(src, "store_contract_")
-    assert gio.manifest_read(clone) == gio.manifest_read(src)
-    src_rows = sorted(store.read(spark, src, rel).select(col).collect())
-    assert sorted(store.read(spark, clone, rel).select(col).collect()) == src_rows
+    with gio.scope():
+        clone = gio.clone_store(src, "store_contract_")
+        assert gio.manifest_read(clone) == gio.manifest_read(src)
+        src_rows = sorted(store.read(spark, src, rel).select(col).collect())
+        assert sorted(store.read(spark, clone, rel).select(col).collect()) == src_rows
 
-    src_manifest = gio.manifest_read(src)
-    case["append"](clone, {"epoch": 1})
-    assert gio.manifest_read(src) == src_manifest
-    assert gio.manifest_versions(src) == [src_manifest["version"]]
-    assert gio.manifest_current(clone) != src_manifest["version"]
-    assert sorted(store.read(spark, src, rel).select(col).collect()) == src_rows
+        src_manifest = gio.manifest_read(src)
+        case["append"](clone, {"epoch": 1})
+        assert gio.manifest_read(src) == src_manifest
+        assert gio.manifest_versions(src) == [src_manifest["version"]]
+        assert gio.manifest_current(clone) != src_manifest["version"]
+        assert sorted(store.read(spark, src, rel).select(col).collect()) == src_rows
 
 
 def test_minhash_lookup_ignores_a_stray_hash_conf(spark, tmp_path):

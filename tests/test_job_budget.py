@@ -1,8 +1,9 @@
-"""Spark job budgets of the index serving ops on the sf0.001 fixture
-(500 docs, 500 vectors).  A job costs scheduling and a stage barrier
-whatever its size, and at batch scale these ops are bound by exactly that,
-so each pinned count is the op's current count plus 2: a change that adds
-jobs to the serving path fails here before it shows in the benchmark.
+"""Spark job budgets of the index serving ops and the ER registry ops on
+the sf0.001 fixture (500 docs, 500 vectors).  A job costs scheduling and
+a stage barrier whatever its size, and at batch scale these ops are bound
+by exactly that, so each pinned count is the op's current count plus 2: a
+change that adds jobs to the serving path fails here before it shows in
+the benchmark.  A failed budget reports the op's jobs by name.
 
 The same ops, and the registry ops that used to leave cached frames or
 temp dirs behind, run inside one io.scope and must leave no persisted RDD
@@ -10,6 +11,7 @@ and no new TMPDIR entry once it exits."""
 
 from __future__ import annotations
 
+import collections
 import os
 import tempfile
 
@@ -20,18 +22,23 @@ from sqlite_to_clickhouse_spark import io as gio
 from sqlite_to_clickhouse_spark.io import table
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs started by ``fn()`` (job ids are dense per context)."""
+def _jobs(spark, fn) -> collections.Counter:
+    """Spark jobs started by ``fn()`` (job ids are dense per context), by
+    the first word of the job's name (``collect``, ``count``, ...; AQE
+    stage jobs carry Spark's internal closure name), so a failed budget
+    shows which jobs grew."""
     tracker = spark.sparkContext.statusTracker()
-    bus = spark.sparkContext._jsc.sc().listenerBus()
+    sc = spark.sparkContext._jsc.sc()
 
     def last():
-        bus.waitUntilEmpty()
+        sc.listenerBus().waitUntilEmpty()
         return max(tracker.getJobIdsForGroup() or [-1])
 
     before = last()
     fn()
-    return last() - before
+    return collections.Counter(
+        sc.statusStore().job(j).name().split(" ")[0] for j in range(before + 1, last() + 1)
+    )
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -80,8 +87,8 @@ def test_minhash_lookup_and_append_job_budget(spark, sf_dir, tmp_path):
     append = _jobs(spark, lambda: minhash_index_append(batch, "doc_id", "tk", idx))
     # One persisted batch frame and one candidate join: 11 lookup jobs and
     # 8 cold-append jobs today (the three-frame plan took 25 and 13).
-    assert lookup <= 13, lookup
-    assert append <= 10, append
+    assert lookup.total() <= 13, dict(lookup)
+    assert append.total() <= 10, dict(append)
 
 
 def test_ivfpq_quantizer_loads_without_spark_jobs(spark, sf_dir, tmp_path):
@@ -94,7 +101,8 @@ def test_ivfpq_quantizer_loads_without_spark_jobs(spark, sf_dir, tmp_path):
     ann_index_build(spark, table(spark, sf_dir, "embeddings"), idx).collect()
     got = []
     # Read with pyarrow from the manifest's file lists (Spark took 4 jobs).
-    assert _jobs(spark, lambda: got.append(_load_quantizer(idx))) == 0
+    jobs = _jobs(spark, lambda: got.append(_load_quantizer(idx)))
+    assert jobs.total() == 0, dict(jobs)
     books, cent_ids, C = got[0]
     assert books.ndim == 3 and len(cent_ids) == len(C) > 0
 
@@ -110,7 +118,7 @@ def test_ivfpq_topk_job_budget(spark, sf_dir):
     jobs = _jobs(spark, lambda: S.ivfpq_topk(e, probes, k=S.TOP_K, nprobe=S.NPROBE).collect())
     # One sample collect feeds both fits and one projection encodes: 8
     # jobs today (the two-projection self-join plan took 11).
-    assert jobs <= 10, jobs
+    assert jobs.total() <= 10, dict(jobs)
 
 
 def test_cc_loop_checkpoints_released_by_scope(spark):
@@ -181,7 +189,7 @@ def test_lifecycle_op_job_budget(spark, sf_dir, built_stores, op):
         run = _lifecycle_op(spark, sf_dir, built_stores, op, store)
         spark.catalog.clearCache()
         jobs = _jobs(spark, run)
-    assert jobs <= budget, (op, jobs)
+    assert jobs.total() <= budget, (op, dict(jobs))
     assert _persisted(spark) - rdds == set(), op
     assert _tmp_entries(sf_dir) - entries == set(), op
 
@@ -226,6 +234,33 @@ def _lifecycle_op(spark, sf_dir, built_stores, op, store):
         "er_append": lambda: E.er_index_append(spark, E._er_batch_names(spark, sf_dir), idx),
         "stream_incremental_dedup": lambda: stream_incremental_dedup(spark, sf_dir).collect(),
     }[op]
+
+
+# Registry op -> jobs allowed on its second call (the first builds the
+# shared generations it reads), each its current count plus 2.  The ER
+# ops run on the shared kernels of entity.py.
+_REGISTRY_BUDGETS = {
+    "er_blocked_pairs": 12,
+    "er_clusters": 20,
+    "er_golden_record": 25,
+    "er_incremental_match": 26,
+    "er_golden_record_incremental": 35,
+    "er_reordered_match": 10,
+    "er_index_build": 27,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_REGISTRY_BUDGETS))
+def test_registry_op_job_budget(spark, sf_dir, name):
+    from sqlite_to_clickhouse_spark.registry import all_queries
+
+    fn = all_queries()[name].fn
+    with gio.scope():
+        fn(spark, sf_dir).count()
+    spark.catalog.clearCache()
+    with gio.scope():
+        jobs = _jobs(spark, lambda: fn(spark, sf_dir).count())
+    assert jobs.total() <= _REGISTRY_BUDGETS[name], (name, dict(jobs))
 
 
 # Registry ops that left cached frames behind before io.scope (the first

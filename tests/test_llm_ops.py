@@ -793,23 +793,23 @@ def test_ann_incremental_query_finds_appended_vectors(spark, sf_dir):
     Weaker but structural: the grown index's routed scan must contain
     batch ids at all."""
     import os
-    import tempfile
 
     from sqlite_to_clickhouse_spark.operators.similarity import (
         _ann_batch_pred,
         _ensure_incr_ann_index,
         ann_index_append,
     )
-    from sqlite_to_clickhouse_spark.io import clone_store, table
+    from sqlite_to_clickhouse_spark.io import clone_store, scope, table
 
     e = table(spark, sf_dir, "embeddings")
     batch = e.filter(_ann_batch_pred())
-    idx = clone_store(_ensure_incr_ann_index(spark, sf_dir), "ann_incr_idx_")
-    ann_index_append(spark, batch, idx)
-    got = {
-        r["vec_id"]
-        for r in spark.read.parquet(os.path.join(idx, "codes")).collect()
-    }
+    with scope():
+        idx = clone_store(_ensure_incr_ann_index(spark, sf_dir), "ann_incr_idx_")
+        ann_index_append(spark, batch, idx)
+        got = {
+            r["vec_id"]
+            for r in spark.read.parquet(os.path.join(idx, "codes")).collect()
+        }
     batch_ids = {r["vec_id"] for r in batch.select("vec_id").collect()}
     assert batch_ids and batch_ids <= got, "appended ids missing from codes"
 
@@ -856,7 +856,7 @@ def test_decode_payload_codec_branch_via_stub(monkeypatch):
     assert degraded == byte_fake  # falls back to the byte-derived features
 
 
-def test_ann_tombstoned_query_equals_compacted_query(spark, sf_dir):
+def test_ann_tombstoned_query_equals_compacted_query(spark, sf_dir, tmp_path):
     """ann_index_delete theorem: anti-joining tombstones at query time is
     EXACTLY physical removal — the tombstoned index and its compacted
     copy (ann_index_compact: codes minus tombstones, quantizer copied
@@ -864,7 +864,7 @@ def test_ann_tombstoned_query_equals_compacted_query(spark, sf_dir):
     a deleted id, and the compacted copy carries no tombstone relation."""
     import os
 
-    from sqlite_to_clickhouse_spark.io import clone_store, table
+    from sqlite_to_clickhouse_spark.io import clone_store, scope, table
     from sqlite_to_clickhouse_spark.operators.similarity import (
         ANN_DEL_MOD,
         ANN_DEL_REM,
@@ -876,16 +876,6 @@ def test_ann_tombstoned_query_equals_compacted_query(spark, sf_dir):
         ann_index_query,
     )
 
-    e, probes = _ann_probes(spark, sf_dir)
-    idx = clone_store(_ensure_index(spark, sf_dir)[0], "ann_del_idx_")
-    deleted = e.filter(F.col("vec_id") % ANN_DEL_MOD == ANN_DEL_REM)
-    ann_index_delete(deleted.select("vec_id"), idx)
-    import tempfile
-
-    compacted = os.path.join(tempfile.mkdtemp(prefix="ann_delc_t_"), "idx")
-    ann_index_compact(spark, idx, compacted)
-    assert not os.path.isdir(os.path.join(compacted, "tombstones"))
-
     def serve(p):
         return sorted(
             map(
@@ -896,8 +886,16 @@ def test_ann_tombstoned_query_equals_compacted_query(spark, sf_dir):
             )
         )
 
-    got_t = serve(idx)
-    got_c = serve(compacted)
+    e, probes = _ann_probes(spark, sf_dir)
+    deleted = e.filter(F.col("vec_id") % ANN_DEL_MOD == ANN_DEL_REM)
+    compacted = str(tmp_path / "idx")
+    with scope():
+        idx = clone_store(_ensure_index(spark, sf_dir)[0], "ann_del_idx_")
+        ann_index_delete(deleted.select("vec_id"), idx)
+        ann_index_compact(spark, idx, compacted)
+        assert not os.path.isdir(os.path.join(compacted, "tombstones"))
+        got_t = serve(idx)
+        got_c = serve(compacted)
     assert got_t == got_c and got_t, "tombstoned vs compacted serving diverged"
     deleted_ids = {r["vec_id"] for r in deleted.select("vec_id").collect()}
     assert deleted_ids, "delete split matched nothing — fixture too small"
@@ -915,7 +913,7 @@ def test_ann_tombstoned_query_keeps_pruning_and_broadcasts_antijoin(
     import contextlib
     import io as _io
 
-    from sqlite_to_clickhouse_spark.io import clone_store
+    from sqlite_to_clickhouse_spark.io import clone_store, scope
     from sqlite_to_clickhouse_spark.operators.similarity import (
         ANN_DEL_MOD,
         ANN_DEL_REM,
@@ -927,15 +925,16 @@ def test_ann_tombstoned_query_keeps_pruning_and_broadcasts_antijoin(
     )
 
     e, probes = _ann_probes(spark, sf_dir)
-    idx = clone_store(_ensure_index(spark, sf_dir)[0], "ann_del_idx_")
-    ann_index_delete(
-        e.filter(F.col("vec_id") % ANN_DEL_MOD == ANN_DEL_REM).select("vec_id"),
-        idx,
-    )
-    df = ann_index_query(spark, e, idx, probes, k=TOP_K, nprobe=NPROBE)
     buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
+    with scope():
+        idx = clone_store(_ensure_index(spark, sf_dir)[0], "ann_del_idx_")
+        ann_index_delete(
+            e.filter(F.col("vec_id") % ANN_DEL_MOD == ANN_DEL_REM).select("vec_id"),
+            idx,
+        )
+        df = ann_index_query(spark, e, idx, probes, k=TOP_K, nprobe=NPROBE)
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
     plan = buf.getvalue()
     assert any(
         "PartitionFilters" in l and "bucket" in l and "IN" in l.upper()
