@@ -55,7 +55,6 @@ def __getattr__(name):
         "manifest_versions": "sqlite_to_clickhouse_spark.io",
         "read_relation": "sqlite_to_clickhouse_spark.io",
         "topk_cosine": "sqlite_to_clickhouse_spark.operators.similarity",
-        "topk_cosine_blocked": "sqlite_to_clickhouse_spark.operators.similarity",
         "ivf_topk": "sqlite_to_clickhouse_spark.operators.similarity",
         "ivfpq_topk": "sqlite_to_clickhouse_spark.operators.similarity",
         "ann_index_build": "sqlite_to_clickhouse_spark.operators.similarity",

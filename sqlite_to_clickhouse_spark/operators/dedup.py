@@ -1071,22 +1071,30 @@ def _relation_counts(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_index_build",
-    oracle=f"""
+def _index_counts_oracle(*preds: str) -> str:
+    """DuckDB recount of a MinHash index's three relation sizes from the
+    raw documents passing ``preds``: every DISTINCT non-blank token set
+    holds N_BANDS band rows and one sets/ row, every non-blank doc one
+    tokens/ row."""
+    where = "".join(f"{p}\n        AND " for p in preds)
+    return f"""
     WITH sets AS (
       SELECT list_sort(list_distinct(list_transform(
                list_filter(string_split(text, ' '), t -> t <> ''),
                t -> CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT)))) AS s
       FROM documents
-      WHERE doc_id % {INCR_MOD} <> {INCR_REM}
-        AND len(list_filter(string_split(text, ' '), t -> t <> '')) > 0
+      WHERE {where}len(list_filter(string_split(text, ' '), t -> t <> '')) > 0
     )
     SELECT CAST({N_BANDS} * COUNT(DISTINCT s) AS BIGINT) AS band_rows,
            CAST(COUNT(*) AS BIGINT) AS token_rows,
            CAST(COUNT(DISTINCT s) AS BIGINT) AS set_rows
     FROM sets
-    """,
+    """
+
+
+@register(
+    "dedup_index_build",
+    oracle=_index_counts_oracle(f"doc_id % {INCR_MOD} <> {INCR_REM}"),
     tags=("llm", "dedup", "incremental"),
 )
 def dedup_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1171,19 +1179,7 @@ def minhash_index_compact(spark: SparkSession, path: str, dst: str) -> None:
 
 @register(
     "dedup_index_compact",
-    oracle=f"""
-    WITH sets AS (
-      SELECT list_sort(list_distinct(list_transform(
-               list_filter(string_split(text, ' '), t -> t <> ''),
-               t -> CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT)))) AS s
-      FROM documents
-      WHERE len(list_filter(string_split(text, ' '), t -> t <> '')) > 0
-    )
-    SELECT CAST({N_BANDS} * COUNT(DISTINCT s) AS BIGINT) AS band_rows,
-           CAST(COUNT(*) AS BIGINT) AS token_rows,
-           CAST(COUNT(DISTINCT s) AS BIGINT) AS set_rows
-    FROM sets
-    """,
+    oracle=_index_counts_oracle(),
     tags=("llm", "dedup", "incremental", "maintenance"),
 )
 def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1263,21 +1259,9 @@ def dedup_incremental_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_index_delete_compact",
-    oracle=f"""
-    WITH sets AS (
-      SELECT list_sort(list_distinct(list_transform(
-               list_filter(string_split(text, ' '), t -> t <> ''),
-               t -> CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT)))) AS s
-      FROM documents
-      WHERE doc_id % {INCR_MOD} <> {INCR_REM}
-        AND doc_id % {DEL_MOD} <> {DEL_REM}
-        AND len(list_filter(string_split(text, ' '), t -> t <> '')) > 0
-    )
-    SELECT CAST({N_BANDS} * COUNT(DISTINCT s) AS BIGINT) AS band_rows,
-           CAST(COUNT(*) AS BIGINT) AS token_rows,
-           CAST(COUNT(DISTINCT s) AS BIGINT) AS set_rows
-    FROM sets
-    """,
+    oracle=_index_counts_oracle(
+        f"doc_id % {INCR_MOD} <> {INCR_REM}", f"doc_id % {DEL_MOD} <> {DEL_REM}"
+    ),
     tags=("llm", "dedup", "incremental", "maintenance"),
 )
 def dedup_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:

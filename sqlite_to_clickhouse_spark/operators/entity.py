@@ -1014,10 +1014,14 @@ def er_index_delete(spark: SparkSession, del_names: DataFrame, path: str) -> Non
             .select(F.col("entity_id").alias("eid"))
             .distinct()
         )
-        survivors = (
+        # Materialized once, as a lineage-free leaf, because the subgraph
+        # below reads it three times: left a shared subtree, each reference
+        # plans and runs its own exchanges.
+        survivors = gio.checkpoint(
             cur.join(F.broadcast(hit_eids), cur["entity_id"] == hit_eids["eid"])
             .select("nm")
-            .join(dels, "nm", "left_anti")
+            .join(dels, "nm", "left_anti"),
+            eager=True,
         )
         edges = _ER_STORE.read(spark, path, "edges")
         sub_edges = (

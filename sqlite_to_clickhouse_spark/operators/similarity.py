@@ -131,39 +131,91 @@ def _cos_sql(a: str, b: str) -> str:
     )
 
 
-def topk_cosine(
-    vectors: DataFrame,
-    probes: DataFrame,
-    *,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    probe_vec_col: str = "p_emb",
-) -> DataFrame:
+def _fold_norm(X: np.ndarray) -> np.ndarray:
+    """Row L2 norms of ``X``, squares summed position by position."""
+    ss = np.zeros(len(X))
+    for i in range(X.shape[1]):
+        ss += X[:, i] * X[:, i]
+    return np.sqrt(ss)
+
+
+def _fold_cos(A: np.ndarray, B: np.ndarray, bn: np.ndarray):
+    """The numpy cosine kernel of the Arrow paths: yields ``(s, an, cos)``
+    per row block ``A[s:s+len(an)]`` — the block's norms and its cosines
+    against every row of ``B`` (norms ``bn``), blocks capped at ~4M cells
+    (32 MB) whatever the batch size.  Dots and norms accumulate
+    POSITION-BY-POSITION (an explicit dim loop, not np.dot's pairwise/SIMD
+    reassociation): the same left-to-right IEEE-double fold as F.aggregate
+    and DuckDB's list_aggregate, so every cosine is bit-identical to the
+    oracles'.  A zero norm gives a NaN or inf cosine, without a warning."""
+    block = max(1, 4_000_000 // max(len(B), 1))
+    for s in range(0, len(A), block):
+        a = A[s : s + block]
+        acc = np.zeros((len(a), len(B)))
+        for i in range(B.shape[1]):
+            acc += a[:, i : i + 1] * B[None, :, i]
+        an = _fold_norm(a)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            yield s, an, acc / (an[:, None] * bn[None, :])
+
+
+def _top_per_probe(df: DataFrame, score: str, n: int) -> DataFrame:
+    """The ``n`` best rows per ``probe_id`` by ``score`` descending, ties to
+    the lowest ``vec_id`` — the per-probe top-n every search here ends on
+    (window rank; each partition keeps at most n rows per probe)."""
+    w = Window.partitionBy("probe_id").orderBy(F.desc(score), F.asc("vec_id"))
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= n)
+
+
+def _bound_probes(probes: DataFrame) -> DataFrame:
+    """The broadcast probe side of an exact rerank: ``probe_id`` plus the
+    probe's double vector and norm, bound once per probe (_bind_vec)."""
+    return F.broadcast(_bind_vec(probes, "p_emb", ["probe_id"], "__p", "__pn"))
+
+
+def _exact_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact top-k of candidate pairs that carry the bound probe columns
+    (_bound_probes) and the candidate's raw ``embedding``: the candidate
+    norm is evaluated per surviving pair, never per corpus row, so the
+    searches call this after their candidate generation has cut the
+    corpus down.  Cosines round to 6 places."""
+    v = _dbl(F.col("embedding"))
+    cos = _dot(F.col("__p"), v) / (F.col("__pn") * F.sqrt(_sqnorm(v)))
+    return _top_per_probe(
+        pairs.select("probe_id", "vec_id", cos.alias("cos")), "cos", k
+    ).select("probe_id", "vec_id", F.round("cos", 6).alias("cosine"))
+
+
+def topk_cosine(vectors: DataFrame, probes: DataFrame, *, k: int) -> DataFrame:
     """Generic brute-force top-k cosine search (library API): for every
-    probe row, the k nearest vectors by cosine (excluding the probe's own
-    id), ties broken by ascending vector id.
+    ``(probe_id, p_emb)`` probe row, the k nearest ``(vec_id, embedding)``
+    vectors by cosine (excluding the probe's own id), ties broken by
+    ascending vector id.
 
     The probe set broadcasts; the vector table streams through once and is
     never shuffled — the only Exchange carries narrow (probe, id, cos)
     triples into the per-probe top-k window. Both sides pre-bind their
     double vector + norm (_bind_vec), so the per-pair work is one dot."""
-    v = _bind_vec(vectors, vec_col, [id_col], "__tkc_v", "__tkc_vn")
-    p = _bind_vec(probes, probe_vec_col, [probe_id_col], "__tkc_p", "__tkc_pn")
+    v = _bind_vec(vectors, "embedding", ["vec_id"], "__tkc_v", "__tkc_vn")
+    p = _bind_vec(probes, "p_emb", ["probe_id"], "__tkc_p", "__tkc_pn")
     cos = _dot(F.col("__tkc_p"), F.col("__tkc_v")) / (
         F.col("__tkc_pn") * F.col("__tkc_vn")
     )
     pairs = (
         v.crossJoin(F.broadcast(p))
-        .filter(F.col(id_col) != F.col(probe_id_col))
-        .select(probe_id_col, id_col, cos.alias("cos"))
+        .filter(F.col("vec_id") != F.col("probe_id"))
+        .select("probe_id", "vec_id", cos.alias("cos"))
     )
-    w = Window.partitionBy(probe_id_col).orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(probe_id_col, id_col, F.round("cos", 6).alias("cosine"))
+    return _top_per_probe(pairs, "cos", k).select(
+        "probe_id", "vec_id", F.round("cos", 6).alias("cosine")
+    )
+
+
+def _probes(vectors: DataFrame) -> DataFrame:
+    """The registered ops' probe set: the vectors with vec_id < N_PROBES,
+    as ``(probe_id, p_emb)``."""
+    return vectors.filter(F.col("vec_id") < N_PROBES).select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("p_emb")
     )
 
 
@@ -193,10 +245,11 @@ def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     place. The correct exact baseline an ANN path evaluates against.
     """
     e = table(spark, sf_dir, "embeddings")
-    probes = e.filter(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("p_emb")
-    )
-    return topk_cosine(e, probes, k=TOP_K)
+    return topk_cosine(e, _probes(e), k=TOP_K)
+
+
+# The pair kernels' output: one row per pair above COSINE_T, vec_a < vec_b.
+_PAIR_SCHEMA = "vec_a long, vec_b long, cos double"
 
 
 @register(
@@ -221,19 +274,16 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair enumeration runs as ONE Arrow-batched mapInPandas pass: each
     executor batch scores its rows against the closure-shipped matrix —
     no join, no shuffle, O(n²/batches) numpy work per task. The kernel
-    accumulates the dot and both squared norms POSITION-BY-POSITION
-    (explicit dim-loop, not np.dot's pairwise/SIMD reassociation), i.e.
-    the same left-to-right IEEE-double fold as F.aggregate and DuckDB's
-    list_aggregate — cosines stay bit-identical to the oracle. The
-    previous broadcast-nested-loop spelling evaluated interpreted array
-    lambdas per pair: 34 s → ~1 s at sf0.1 (n = 2000), same results.
+    (_fold_cos) folds in the oracle's order, so cosines stay bit-identical
+    to it. The previous broadcast-nested-loop spelling evaluated
+    interpreted array lambdas per pair: 34 s → ~1 s at sf0.1 (n = 2000),
+    same results.
     """
     e = table(spark, sf_dir, "embeddings")
     # Guard from the parquet FOOTER row count (zero Spark jobs) — an
     # e.count() would launch a full scan job per invocation just to
     # decide whether to run.
     import pyarrow.parquet as pq
-    from pyspark.sql import types as T
 
     n = pq.ParquetFile(f"{sf_dir}/embeddings.parquet").metadata.num_rows
     if n > 100_000:
@@ -251,41 +301,17 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     M = np.array([r[1] for r in rows], dtype=np.float64)  # exact float→double widen
 
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_a", T.LongType()),
-            T.StructField("vec_b", T.LongType()),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
-
     def _pairs(batches):
         if len(ids) == 0:
             return
-        # Fold-order norms of the closure matrix, computed once per task.
-        mnorm = np.zeros(len(ids))
-        for i in range(M.shape[1]):
-            mnorm += M[:, i] * M[:, i]
-        mnorm = np.sqrt(mnorm)
-        # Bound kernel memory: the (block × n) accumulator is capped at
-        # ~4M cells (32 MB) regardless of Arrow batch size or n.
-        block = max(1, 4_000_000 // max(len(ids), 1))
+        mnorm = _fold_norm(M)  # once per task
         for pdf in batches:
             sub = pdf[pdf["embedding"].notna()]
             if not len(sub):
                 continue
             aid_all = sub["vec_id"].to_numpy(dtype=np.int64)
-            A_all = np.array(list(sub["embedding"]), dtype=np.float64)
-            for s in range(0, len(aid_all), block):
-                aid = aid_all[s : s + block]
-                A = A_all[s : s + block]
-                acc = np.zeros((len(aid), len(ids)))
-                an = np.zeros(len(aid))
-                for i in range(A.shape[1]):
-                    acc += A[:, i : i + 1] * M[None, :, i]
-                    an += A[:, i] * A[:, i]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = acc / (np.sqrt(an)[:, None] * mnorm[None, :])
+            for s, an, cos in _fold_cos(_vectors(sub["embedding"]), M, mnorm):
+                aid = aid_all[s : s + len(an)]
                 keep = (aid[:, None] < ids[None, :]) & (cos >= COSINE_T)
                 ai, bj = np.nonzero(keep)
                 yield pd.DataFrame(
@@ -294,7 +320,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return (
         e.select("vec_id", "embedding")
-        .mapInPandas(_pairs, out_schema)
+        .mapInPandas(_pairs, _PAIR_SCHEMA)
         .select("vec_a", "vec_b", F.round("cos", 6).alias("cosine"))
     )
 
@@ -343,8 +369,6 @@ def dedup_embedding_bucketed(
     construction (assignment + bucket join + threshold), so the routing
     itself is differentially checked, not just the final cosines.
     """
-    from pyspark.sql import types as T
-
     e = table(spark, sf_dir, "embeddings")
     # Centroid assignment as a fold-exact Arrow kernel against the
     # closure-shipped centroid matrix (the dedup_embedding_cosine kernel
@@ -352,9 +376,8 @@ def dedup_embedding_bucketed(
     # + a per-pair interpreted dot — generates N×k pair ROWS before
     # reducing (k = n/CENTROID_EVERY here, so n²/100 interpreted lambda
     # evals: the 100× scale sweep measured it minutes-deep at 200 k
-    # vectors). The kernel does the identical n·k mult-adds as blocked
-    # numpy, map-side, zero shuffle, and accumulates POSITION-BY-POSITION
-    # (explicit dim loop) so every cosine is bit-identical to the
+    # vectors). The kernel (_fold_cos) does the identical n·k mult-adds
+    # as blocked numpy, map-side, zero shuffle, bit-identical to the
     # oracle's list_aggregate fold. Ties and degenerate rows mirror the
     # oracle's row_number() ORDER BY cos DESC, cid ASC exactly: argmax
     # takes the FIRST maximum over centroids sorted by cent_id, NaN
@@ -375,49 +398,27 @@ def dedup_embedding_bucketed(
     cids = np.array([r[0] for r in cent_rows], dtype=np.int64)
     C = np.array([r[1] for r in cent_rows], dtype=np.float64)
 
-    assign_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("__e", T.ArrayType(T.DoubleType())),
-            T.StructField("__en", T.DoubleType()),
-            T.StructField("bucket", T.LongType()),
-        ]
-    )
-
     def _assign_blocks(batches):
         """Shared centroid-assignment core: yields (vid, V, vn, buckets)
         numpy blocks.  Both kernels below wrap it, so the probe and the
         pair path can never disagree on an assignment."""
         if len(cids) == 0:
             return
-        cn = np.zeros(len(cids))
-        for i in range(C.shape[1]):
-            cn += C[:, i] * C[:, i]
-        cn = np.sqrt(cn)
-        block = max(1, 4_000_000 // len(cids))
+        cn = _fold_norm(C)
         for pdf in batches:
             sub = pdf[pdf["embedding"].notna()]
             if not len(sub):
                 continue
             vid_all = sub["vec_id"].to_numpy(dtype=np.int64)
-            V_all = np.array(list(sub["embedding"]), dtype=np.float64)
-            for s in range(0, len(vid_all), block):
-                vid = vid_all[s : s + block]
-                V = V_all[s : s + block]
-                acc = np.zeros((len(vid), len(cids)))
-                vn = np.zeros(len(vid))
-                for i in range(V.shape[1]):
-                    acc += V[:, i : i + 1] * C[None, :, i]
-                    vn += V[:, i] * V[:, i]
-                vn = np.sqrt(vn)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = acc / (vn[:, None] * cn[None, :])
+            V_all = _vectors(sub["embedding"])
+            for s, vn, cos in _fold_cos(V_all, C, cn):
                 # Both engines order NaN as GREATEST (Spark desc-first,
                 # DuckDB DESC-first), so a NaN cosine must WIN the argmax:
                 # map to +inf, ties still break to the lowest cent_id.
                 cos = np.where(np.isnan(cos), np.inf, cos)
                 best = np.argmax(cos, axis=1)  # first max = lowest cent_id
-                yield vid, V, vn, cids[best]
+                rows = slice(s, s + len(vn))
+                yield vid_all[rows], V_all[rows], vn, cids[best]
 
     def _assign(batches):
         for vid, V, vn, buckets in _assign_blocks(batches):
@@ -438,7 +439,9 @@ def dedup_embedding_bucketed(
             u, c = np.unique(buckets, return_counts=True)
             yield pd.DataFrame({"bucket": u, "n": c.astype(np.int64)})
 
-    assigned = e.select("vec_id", "embedding").mapInPandas(_assign, assign_schema)
+    assigned = e.select("vec_id", "embedding").mapInPandas(
+        _assign, "vec_id long, __e array<double>, __en double, bucket long"
+    )
 
     # Hot-bucket guard (VERDICT r6 item 6): a degenerate corpus where one
     # centroid wins everything would concentrate O(bucket²) pair work —
@@ -452,16 +455,10 @@ def dedup_embedding_bucketed(
     # map-side mult-adds — small next to the O(n²/k) pair stage it
     # bounds); balanced corpora see m=1 everywhere and the one-cell path
     # is the exact pre-split plan.
-    probe_schema = T.StructType(
-        [
-            T.StructField("bucket", T.LongType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
     sizes = {
         r["bucket"]: r["n"]
         for r in e.select("vec_id", "embedding")
-        .mapInPandas(_assign_counts, probe_schema)
+        .mapInPandas(_assign_counts, "bucket long, n long")
         .groupBy("bucket")
         .agg(F.sum("n").alias("n"))
         .collect()
@@ -512,55 +509,31 @@ def dedup_embedding_bucketed(
     # numpy pass over the group's own vectors — the self-join spelling
     # hauled the same rows through the identical exchange but then
     # evaluated an interpreted dot per pair (~10 M pairs at the 100×
-    # sweep). Same fold-order arithmetic as everywhere else; norms arrive
+    # sweep). The same kernel (_fold_cos); the B side's norms arrive
     # precomputed from the assignment kernel.
-    pair_schema = T.StructType(
-        [
-            T.StructField("vec_a", T.LongType()),
-            T.StructField("vec_b", T.LongType()),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
-
     def _bucket_pairs(pdf):
         empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []})
         if len(pdf) < 2:
             return empty
         ca, cb = int(pdf["__ca"].iloc[0]), int(pdf["__cb"].iloc[0])
-        if ca == cb:
-            # Diagonal cell (the only kind on balanced corpora): strict
-            # upper triangle over the group's vectors.
-            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            V = np.array(list(pdf["__e"]), dtype=np.float64)
-            vn = pdf["__en"].to_numpy(dtype=np.float64)
-            bvid, bV, bvn = vid, V, vn
-            pair_mask = lambda aid: aid[:, None] < bvid[None, :]  # noqa: E731
-        else:
-            # Off-diagonal cell pair: full cross of side ca × side cb
-            # (each unordered pair appears in exactly this one group).
-            sa = pdf[pdf["__g"] == ca]
-            sb = pdf[pdf["__g"] == cb]
-            if not len(sa) or not len(sb):
-                return empty
-            vid = sa["vec_id"].to_numpy(dtype=np.int64)
-            V = np.array(list(sa["__e"]), dtype=np.float64)
-            vn = sa["__en"].to_numpy(dtype=np.float64)
-            bvid = sb["vec_id"].to_numpy(dtype=np.int64)
-            bV = np.array(list(sb["__e"]), dtype=np.float64)
-            bvn = sb["__en"].to_numpy(dtype=np.float64)
-            pair_mask = lambda aid: np.ones(  # noqa: E731
-                (len(aid), len(bvid)), dtype=bool
-            )
+        # A diagonal cell (the only kind on balanced corpora) pairs the
+        # group's vectors in its strict upper triangle; an off-diagonal
+        # cell pair is the full cross of side ca × side cb (each unordered
+        # pair appears in exactly this one group).
+        sa, sb = (pdf, pdf) if ca == cb else (pdf[pdf["__g"] == ca], pdf[pdf["__g"] == cb])
+        if not len(sa) or not len(sb):
+            return empty
+        vid = sa["vec_id"].to_numpy(dtype=np.int64)
+        bvid = sb["vec_id"].to_numpy(dtype=np.int64)
+        bvn = sb["__en"].to_numpy(dtype=np.float64)
+        A = _vectors(sa["__e"])
+        B = A if ca == cb else _vectors(sb["__e"])
         out = []
-        block = max(1, 4_000_000 // max(len(bvid), 1))
-        for s in range(0, len(vid), block):
-            A, an, aid = V[s : s + block], vn[s : s + block], vid[s : s + block]
-            acc = np.zeros((len(aid), len(bvid)))
-            for i in range(bV.shape[1]):
-                acc += A[:, i : i + 1] * bV[None, :, i]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / (an[:, None] * bvn[None, :])
-            keep = pair_mask(aid) & (cos >= COSINE_T)
+        for s, an, cos in _fold_cos(A, B, bvn):
+            aid = vid[s : s + len(an)]
+            keep = cos >= COSINE_T
+            if ca == cb:
+                keep &= aid[:, None] < bvid[None, :]
             ai, bj = np.nonzero(keep)
             ia, ib = aid[ai], bvid[bj]
             out.append(
@@ -576,18 +549,13 @@ def dedup_embedding_bucketed(
 
     return (
         celled.groupBy("bucket", "__ca", "__cb")
-        .applyInPandas(_bucket_pairs, pair_schema)
+        .applyInPandas(_bucket_pairs, _PAIR_SCHEMA)
         .select("vec_a", "vec_b", F.round("cos", 6).alias("cosine"))
     )
 
 
 def train_sample(
-    vectors: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_cap: int = 50_000,
-    site: str = "train_sample",
+    vectors: DataFrame, *, train_cap: int = 50_000, site: str = "train_sample"
 ) -> list:
     """The shared quantizer-training sample: the ``train_cap`` rows with
     the smallest ``xxhash64(id)`` — deterministic, RNG-free, one
@@ -597,10 +565,10 @@ def train_sample(
     shares the cap: index builds previously paid this scan once per fit,
     which was the dominant cost of ann_index_build after the kernels
     went to numpy."""
-    _check_driver_fit(train_cap, _probe_dim(vectors, vec_col), site)
+    _check_driver_fit(train_cap, _probe_dim(vectors, "embedding"), site)
     return (
-        vectors.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
+        vectors.select("vec_id", "embedding")
+        .orderBy(F.xxhash64(F.col("vec_id")), F.col("vec_id"))
         .limit(train_cap)
         .collect()
     )
@@ -609,12 +577,9 @@ def train_sample(
 def kmeans_centroids(
     vectors: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     init_every: int = CENTROID_EVERY,
     iters: int = 2,
     train_cap: int = 50_000,
-    sample_rows: list | None = None,
 ) -> DataFrame:
     """Learned IVF coarse-quantizer centroids, trained on a bounded
     deterministic sample (the standard IVF recipe: FAISS/ScaNN train the
@@ -641,13 +606,7 @@ def kmeans_centroids(
     """
     spark = vectors.sparkSession
     cent_ids, C = kmeans_centroids_np(
-        vectors,
-        id_col=id_col,
-        vec_col=vec_col,
-        init_every=init_every,
-        iters=iters,
-        train_cap=train_cap,
-        sample_rows=sample_rows,
+        vectors, init_every=init_every, iters=iters, train_cap=train_cap
     )
     return spark.createDataFrame(
         [(int(cid), [float(x) for x in row]) for cid, row in zip(cent_ids, C)],
@@ -658,8 +617,6 @@ def kmeans_centroids(
 def kmeans_centroids_np(
     vectors: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     init_every: int = CENTROID_EVERY,
     iters: int = 2,
     train_cap: int = 50_000,
@@ -673,8 +630,7 @@ def kmeans_centroids_np(
     DataFrame wrapper above remains the query-facing API."""
     if sample_rows is None:
         sample_rows = train_sample(
-            vectors, id_col=id_col, vec_col=vec_col, train_cap=train_cap,
-            site="kmeans_centroids",
+            vectors, train_cap=train_cap, site="kmeans_centroids"
         )
     else:  # already on the driver: nothing left to budget-check
         sample_rows = sample_rows[:train_cap]
@@ -769,26 +725,14 @@ def ivf_topk(vectors: DataFrame, probes: DataFrame, *, k: int, nprobe: int) -> D
     assigned = vectors.select(
         "vec_id", "embedding", _bucket(cent_ids, C)(F.col("embedding")).alias("bucket")
     )
-    # The probe side pre-binds its double vector + norm (_bind_vec); the
-    # corpus side stays raw — only vectors in ROUTED buckets become
-    # candidates (n·nprobe/k of the corpus), so the vector norm is
-    # evaluated per candidate pair, not per corpus row. Per-pair lambda
-    # work drops ~2× vs the unbound _cosine (which re-derived the probe
-    # norm and both casts inside every pair).
-    bound = _bind_vec(probes, "p_emb", ["probe_id"], "__ivf_p", "__ivf_pn")
-    vd = _dbl(F.col("embedding"))
-    cos_pv = _dot(F.col("__ivf_p"), vd) / (
-        F.col("__ivf_pn") * F.sqrt(_sqnorm(vd))
-    )
-    w_topk = Window.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        routed.join(F.broadcast(bound), "probe_id")
+    # Only vectors in ROUTED buckets become candidates (n·nprobe/k of the
+    # corpus), so the exact rerank (_exact_topk) evaluates the vector norm
+    # per candidate pair, never per corpus row.
+    return _exact_topk(
+        routed.join(_bound_probes(probes), "probe_id")
         .join(assigned, "bucket")
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", "vec_id", cos_pv.alias("cos"))
-        .withColumn("rn", F.row_number().over(w_topk))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "vec_id", F.round("cos", 6).alias("cosine"))
+        .filter(F.col("vec_id") != F.col("probe_id")),
+        k,
     )
 
 
@@ -843,22 +787,20 @@ def _recall_gate(
     sf_dir: str,
     ann_fn,
     *,
-    per_floor: float = ANN_PER_PROBE_RECALL_FLOOR,
     agg_floor: float,
     cand_filter=None,
 ) -> DataFrame:
     """Run an ANN search and render it as the driver-gateable recall
     bound: per probe, the exact-top-k count (differential vs DuckDB) and
-    recall_ok = |ANN ∩ exact| / |exact| ≥ per_floor; plus one corpus row
-    (probe_id = −1) holding the aggregate floor.  ``ann_fn(e, probes)``
+    recall_ok = |ANN ∩ exact| / |exact| ≥ ANN_PER_PROBE_RECALL_FLOOR;
+    plus one corpus row (probe_id = −1) holding the aggregate floor.
+    ``ann_fn(e, probes)``
     returns (probe_id, vec_id, …) candidate rows.  The exact side is the
     already-oracle-certified brute force (topk_cosine) — probes broadcast,
     one scan, so the gate adds one narrow join on (probe_id, vec_id) to
     the ANN plan, never a second corpus shuffle."""
     e = table(spark, sf_dir, "embeddings")
-    probes = e.filter(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("p_emb")
-    )
+    probes = _probes(e)
     # ``cand_filter`` restricts the exact CANDIDATE side only (the delete
     # gate's live-vectors ground truth); probes stay the fixed set.
     e_exact = e.filter(cand_filter) if cand_filter is not None else e
@@ -877,7 +819,9 @@ def _recall_gate(
     per_rows = per.select(
         "probe_id",
         "n_exact",
-        (F.col("n_hit") / F.col("n_exact") >= per_floor).alias("recall_ok"),
+        (F.col("n_hit") / F.col("n_exact") >= ANN_PER_PROBE_RECALL_FLOOR).alias(
+            "recall_ok"
+        ),
     )
     agg_rows = per.agg(
         F.coalesce(F.sum("n_exact"), F.lit(0)).cast("long").alias("ne"),
@@ -921,80 +865,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def topk_cosine_blocked(
-    vectors: DataFrame,
-    probes: DataFrame,
-    *,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    probe_vec_col: str = "p_emb",
-) -> DataFrame:
-    """Arrow-vectorized exact top-k cosine (library API): one numpy matmul
-    per Arrow batch against the broadcast probe matrix, per-block top-k,
-    then a global top-k window.
-
-    This is the high-throughput sibling of topk_cosine: the JVM lambda
-    fold evaluates one multiply-add per expression-tree step, while the
-    matmul path does the same math as BLAS over the whole batch. Shuffle
-    volume is k rows per probe PER BLOCK (not per vector) — the partial
-    top-k is applied before anything crosses the wire. Results are exact;
-    summation order differs from the lambda fold only in the last ulp, so
-    this variant is equivalence-tested against topk_cosine rather than
-    hash-compared against the DuckDB oracle.
-
-    The probe set is collected to the driver (it is the small side by
-    contract — same assumption as the broadcast in topk_cosine)."""
-    from pyspark.sql import types as T
-
-    probe_rows = probes.select(probe_id_col, probe_vec_col).collect()
-    pids = np.array([r[0] for r in probe_rows], dtype=np.int64)
-    P = np.array([r[1] for r in probe_rows], dtype=np.float64)
-    Pn = P / np.linalg.norm(P, axis=1, keepdims=True)
-
-    out_schema = T.StructType(
-        [
-            T.StructField(probe_id_col, T.LongType()),
-            T.StructField(id_col, T.LongType()),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
-
-    def block_topk(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            S = Vn @ Pn.T  # block × probes
-            for j in range(len(pids)):
-                col = S[:, j]
-                mask = ids != pids[j]
-                cand_ids, cand = ids[mask], col[mask]
-                take = min(k, len(cand))
-                if take == 0:
-                    continue
-                # partial top-k inside the block: sort by (-cos, id)
-                order = np.lexsort((cand_ids, -cand))[:take]
-                yield pd.DataFrame(
-                    {
-                        probe_id_col: np.full(take, pids[j]),
-                        id_col: cand_ids[order],
-                        "cos": cand[order],
-                    }
-                )
-
-    partial = vectors.select(id_col, vec_col).mapInPandas(block_topk, out_schema)
-    w = Window.partitionBy(probe_id_col).orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(probe_id_col, id_col, F.round("cos", 6).alias("cosine"))
-    )
-
-
 @register(
     "sim_cosine_pairs",
     oracle="""
@@ -1014,17 +884,7 @@ def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rounded to 4 decimals: DuckDB's built-in accumulates in float32."""
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     a, b = e.alias("a"), e.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.embedding"), F.col("b.embedding"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v
-        )
-    )
-    cos = dot / (norm(F.col("a.embedding")) * norm(F.col("b.embedding")))
+    cos = _cosine(F.col("a.embedding"), F.col("b.embedding"))
     return a.join(b, F.col("b.vec_id") == F.col("a.vec_id") + 1).select(
         F.col("a.vec_id").alias("vec_id"), F.round(cos, 4).alias("cos_next")
     )
@@ -1044,11 +904,8 @@ PQ_RECON_FLOOR = 0.35  # per-vector recon-cosine gate bound; measured mins
 def pq_codebooks(
     vectors: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int = PQ_M,
     k: int = PQ_K,
-    iters: int = PQ_ITERS,
     train_cap: int = PQ_TRAIN_CAP,
     sample_rows: list | None = None,
 ):
@@ -1062,10 +919,7 @@ def pq_codebooks(
     their previous centroid so k stays fixed — codes must index a full
     codebook)."""
     if sample_rows is None:
-        rows = train_sample(
-            vectors, id_col=id_col, vec_col=vec_col, train_cap=train_cap,
-            site="pq_codebooks",
-        )
+        rows = train_sample(vectors, train_cap=train_cap, site="pq_codebooks")
     else:  # already on the driver: nothing left to budget-check
         rows = sample_rows[:train_cap]
     if not rows:
@@ -1081,7 +935,7 @@ def pq_codebooks(
     for j in range(m):
         X = V[:, j * sub : (j + 1) * sub]
         C = X[np.linspace(0, n - 1, k).astype(np.int64)].copy()
-        for _ in range(iters):
+        for _ in range(PQ_ITERS):
             d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             assign = np.argmin(d2, axis=1)
             for c in range(k):
@@ -1109,13 +963,7 @@ def _pq_kernel(V: np.ndarray, books):
     return codes, np.where(den > 0, num / np.maximum(den, 1e-300), 0.0)
 
 
-def pq_encode(
-    vectors: DataFrame,
-    books,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(vectors: DataFrame, books) -> DataFrame:
     """Encode every vector to its packed PQ code plus the reconstruction
     cosine (library API). The code packs m 4-bit sub-quantizer indices
     into one BIGINT — 64 floats become 4 bytes, a 64× compression that is
@@ -1124,7 +972,7 @@ def pq_encode(
     (_pq_kernel), map-side, zero shuffle."""
     if books is None:
         return vectors.sparkSession.createDataFrame(
-            [], f"{id_col} bigint, pq_code bigint, recon_cosine double"
+            [], "vec_id bigint, pq_code bigint, recon_cosine double"
         )
 
     @F.pandas_udf("pq_code long, recon_cosine double")
@@ -1132,9 +980,9 @@ def pq_encode(
         codes, cos = _pq_kernel(_vectors(v), books)
         return pd.DataFrame({"pq_code": codes, "recon_cosine": cos})
 
-    enc = _enc(F.col(vec_col)).alias("_pq")
-    return vectors.select(id_col, enc).select(
-        id_col, F.col("_pq.pq_code").alias("pq_code"),
+    enc = _enc(F.col("embedding")).alias("_pq")
+    return vectors.select("vec_id", enc).select(
+        "vec_id", F.col("_pq.pq_code").alias("pq_code"),
         F.col("_pq.recon_cosine").alias("recon_cosine"),
     )
 
@@ -1166,19 +1014,21 @@ def sim_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def l2_normalize(
-    df: DataFrame, *, vec_col: str = "embedding", out_col: str = "unit"
-) -> DataFrame:
-    """Library API: append a unit-norm copy of ``vec_col`` plus its
-    ``l2_norm`` — the prep step before any cosine-based dedup/search, done
-    once so every downstream distance is a plain dot product. All math is
-    Catalyst higher-order lambdas after a float→double widen; per-row
-    projection only, no shuffle, scan-bound at any scale."""
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    norm = F.sqrt(F.aggregate(emb, F.lit(0.0), lambda acc, x: acc + x * x))
-    return df.withColumn("l2_norm", norm).withColumn(
-        out_col, F.transform(emb, lambda x: x / F.col("l2_norm"))
-    )
+def l2_normalize(df: DataFrame) -> DataFrame:
+    """Library API: append a unit-norm copy of ``embedding`` as ``unit``
+    plus its ``l2_norm`` — the prep step before any cosine-based
+    dedup/search, done once so every downstream distance is a plain dot
+    product. All math is Catalyst higher-order lambdas after a
+    float→double widen, folding left-to-right like the oracles'
+    list_aggregate; per-row projection only, no shuffle, scan-bound at any
+    scale.  The vector and its norm are bound as columns (_bind_vec)
+    BEFORE the per-element division references them: an unbound
+    ``x / norm`` would inline the whole sum-of-squares aggregate into every
+    element's lambda — O(dim²) per row."""
+    bound = _bind_vec(df, "embedding", df.columns, "__e", "l2_norm")
+    return bound.withColumn(
+        "unit", F.transform("__e", lambda x: x / F.col("l2_norm"))
+    ).drop("__e")
 
 
 @register(
@@ -1206,8 +1056,7 @@ def l2_normalize(
 def embedding_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2-normalize the embedding column: per (vector, position) rows of
     the unit vector plus the norm itself — the prep step before any
-    cosine-based dedup/search (library form: ``l2_normalize``, which keeps
-    the array shape).
+    cosine-based dedup/search: ``l2_normalize``'s unit array, exploded.
 
     All math is Catalyst higher-order lambdas over the array after a
     float→double widen (exact), folding left-to-right exactly like the
@@ -1219,33 +1068,21 @@ def embedding_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan-bound at any scale. (A zero vector would yield IEEE NaN
     identically in both engines; the fixture has none, and callers that
     might see one should pre-filter on l2_norm > 0.)"""
-    e = table(spark, sf_dir, "embeddings")
-    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    ss = F.aggregate(emb, F.lit(0.0), lambda acc, x: acc + x * x)
-    norm = F.sqrt(ss)
-    # Bind emb and the norm BEFORE the per-element division references
-    # them (the interpreted-HOF CSE rule, see text_ngram_novelty): an
-    # unbound `x / norm` inlines the whole sum-of-squares aggregate into
-    # every element's lambda — O(dim²) per row.
-    bound = e.select(
-        "vec_id", "label", emb.alias("emb"), norm.alias("nrm")
-    )
-    return (
-        bound.select(
-            "vec_id",
-            "label",
-            F.round("nrm", 6).alias("l2_norm"),
-            F.posexplode(
-                F.transform(F.col("emb"), lambda x: F.round(x / F.col("nrm"), 6))
-            ),
-        )
-        .select(
-            "vec_id",
-            "label",
-            "l2_norm",
-            (F.col("pos") + 1).cast("long").alias("pos"),  # 1-based like SQL
-            F.col("col").alias("unit_val"),
-        )
+    unit = l2_normalize(table(spark, sf_dir, "embeddings"))
+    # Explode an expression, not the bare ``unit`` column: for an attribute
+    # Catalyst infers a size(unit) > 0 filter and pushes it below the
+    # projection, computing every unit vector twice.
+    return unit.select(
+        "vec_id",
+        "label",
+        F.round("l2_norm", 6).alias("l2_norm"),
+        F.posexplode(F.transform("unit", lambda x: F.round(x, 6))),
+    ).select(
+        "vec_id",
+        "label",
+        "l2_norm",
+        (F.col("pos") + 1).cast("long").alias("pos"),  # 1-based like SQL
+        F.col("col").alias("unit_val"),
     )
 
 
@@ -1384,32 +1221,20 @@ def _ivfpq_search(vectors: DataFrame, probes: DataFrame, q, codes, *, k: int, np
         den = pnorm[pi] * np.sqrt(np.maximum(rsq, 1e-300))
         return pd.Series(dot / den)
 
-    w_rerank = Window.partitionBy("probe_id").orderBy(F.desc("adc"), F.asc("vec_id"))
-    shortlist = (
+    shortlist = _top_per_probe(
         routed.join(codes(buckets), "bucket")
         .filter(F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", "vec_id", _adc(F.col("probe_id"), F.col("pq_code")).alias("adc"))
-        .withColumn("rn", F.row_number().over(w_rerank))
-        .filter(F.col("rn") <= ANN_RERANK)
-        .select("probe_id", "vec_id")
-    )
-    # Exact rerank: the probe side pre-binds vector + norm (_bind_vec) but
-    # the CORPUS side stays raw — only |probes|·ANN_RERANK rows survive the
-    # shortlist join, so the vector norm is evaluated per surviving pair
-    # (bounded) instead of per corpus row (O(N) at 100 TB).
-    rv = _dbl(F.col("embedding"))
-    cos_pv = _dot(F.col("__rr_p"), rv) / (F.col("__rr_pn") * F.sqrt(_sqnorm(rv)))
-    w_topk = Window.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        shortlist.join(vectors.select("vec_id", "embedding"), "vec_id")
-        .join(
-            F.broadcast(_bind_vec(probes, "p_emb", ["probe_id"], "__rr_p", "__rr_pn")),
-            "probe_id",
-        )
-        .select("probe_id", "vec_id", cos_pv.alias("cos"))
-        .withColumn("rn", F.row_number().over(w_topk))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "vec_id", F.round("cos", 6).alias("cosine"))
+        .select("probe_id", "vec_id", _adc(F.col("probe_id"), F.col("pq_code")).alias("adc")),
+        "adc",
+        ANN_RERANK,
+    ).select("probe_id", "vec_id")
+    # Exact rerank: only |probes|·ANN_RERANK rows survive the shortlist
+    # join, so the corpus side stays raw (see _exact_topk).
+    return _exact_topk(
+        shortlist.join(vectors.select("vec_id", "embedding"), "vec_id").join(
+            _bound_probes(probes), "probe_id"
+        ),
+        k,
     )
 
 
@@ -2207,23 +2032,15 @@ def sim_index_retrain_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PCA_K = 8
-_PCA_TRAIN_CAP = 50_000
 _PCA_ROUND = 6
 
 
-def pca_components(
-    vectors: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = _PCA_K,
-    train_cap: int = _PCA_TRAIN_CAP,
-):
-    """Sample-fit PCA basis: (mean vector, d×k component matrix).
+def pca_components(vectors: DataFrame):
+    """Sample-fit PCA basis: (mean vector, d×_PCA_K component matrix).
 
     Same bounded-driver-fit contract as kmeans_centroids / pq_codebooks
-    (the train_cap × dim × 8 B budget is asserted): the basis is learned
-    on the ``train_cap`` rows with smallest xxhash64(id) — a
+    (the cap × dim × 8 B budget is asserted): the basis is learned on
+    train_sample's rows, the 50 000 with smallest xxhash64(id) — a
     deterministic pseudo-random sample via one TakeOrdered pass — and
     everything downstream stays distributed.  Eigenvectors come from
     ``np.linalg.eigh`` of the sample covariance (symmetric, so eigh is
@@ -2231,10 +2048,7 @@ def pca_components(
     largest-|loading| coordinate positive, which removes the ±v
     ambiguity that would otherwise make results depend on LAPACK build.
     """
-    sample_rows = train_sample(
-        vectors, id_col=id_col, vec_col=vec_col, train_cap=train_cap,
-        site="pca_components",
-    )
+    sample_rows = train_sample(vectors, site="pca_components")
     if not sample_rows:
         return None, None  # empty vector table: nothing to fit
     V = np.array([r[1] for r in sample_rows], dtype=np.float64)
@@ -2242,7 +2056,7 @@ def pca_components(
     X = V - mean
     cov = (X.T @ X) / max(len(V) - 1, 1)
     vals, vecs = np.linalg.eigh(cov)  # ascending eigenvalues
-    order = np.argsort(vals)[::-1][:k]
+    order = np.argsort(vals)[::-1][:_PCA_K]
     W = vecs[:, order]  # d × k
     # Deterministic sign: the max-|loading| coordinate of each component
     # is made positive (ties broken by argmax's first-hit rule).
@@ -2270,7 +2084,7 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_correctness.py::test_ops_emit_scalar_columns_only now
     audits EVERY registered op, rows-only included.
 
-    Scale shape: tiny driver fit (≤ train_cap×d doubles, asserted), then
+    Scale shape: tiny driver fit (≤ 50 000×d doubles, asserted), then
     ONE narrow Arrow-batched pass over the corpus — (mean, W) ride into
     the pandas UDF closure as broadcast-sized constants and each batch is
     a single (B×d)@(d×k) BLAS matmul.  No shuffle anywhere; the explode
@@ -2459,10 +2273,7 @@ def embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _trunc_topk(d: int) -> DataFrame:
         trunc = e.select("vec_id", F.slice("embedding", 1, d).alias("embedding"))
-        probes = trunc.filter(F.col("vec_id") < N_PROBES).select(
-            F.col("vec_id").alias("probe_id"), F.col("embedding").alias("p_emb")
-        )
-        return topk_cosine(trunc, probes, k=TOP_K).select("probe_id", "vec_id")
+        return topk_cosine(trunc, _probes(trunc), k=TOP_K).select("probe_id", "vec_id")
 
     full = _trunc_topk(_MRL_DIMS[-1])
     out = None

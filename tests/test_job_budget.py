@@ -167,7 +167,7 @@ _LIFECYCLE_BUDGETS = {
     "ann_compact": ("similarity", 8),
     "ann_query": ("similarity", 8),
     "ann_append": ("similarity", 4),
-    "er_delete": ("entity", 45),
+    "er_delete": ("entity", 23),
     "er_compact": ("entity", 10),
     "er_match": ("entity", 10),
     "er_append": ("entity", 31),

@@ -298,36 +298,6 @@ def test_simhash_close_for_near_dupes(spark, sf_dir):
     assert mean_d <= 6, f"mean Hamming distance {mean_d} too high for near-dupes"
 
 
-def test_blocked_topk_equals_lambda_topk(spark, sf_dir):
-    """The Arrow/matmul top-k must produce the same neighbor sets as the
-    expression-tree top-k, with cosines equal to float tolerance (the two
-    paths sum in different orders, so bit-equality is not expected)."""
-    from pyspark.sql import functions as F
-
-    from sqlite_to_clickhouse_spark.io import table
-    from sqlite_to_clickhouse_spark.operators.similarity import (
-        N_PROBES,
-        TOP_K,
-        topk_cosine_blocked,
-    )
-
-    e = table(spark, sf_dir, "embeddings")
-    probes = e.filter(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("p_emb")
-    )
-    blocked = {
-        (r.probe_id, r.vec_id): r.cosine
-        for r in topk_cosine_blocked(e, probes, k=TOP_K).collect()
-    }
-    lam = {
-        (r.probe_id, r.vec_id): r.cosine
-        for r in _Q["sim_topk_cosine"].fn(spark, sf_dir).collect()
-    }
-    assert set(blocked) == set(lam)
-    for key, c in blocked.items():
-        assert abs(c - lam[key]) <= 1e-6
-
-
 def test_connected_components_library_api(spark):
     # Two chains and an isolated pair: components must collapse to the
     # smallest reachable id, independent of edge direction or order.

@@ -59,17 +59,12 @@ def _executions(spark):
     return out
 
 
-# The write node's argument when the sink is the ``noop`` format — the
-# harness's own consume step below, not a write the op ran.
-_NOOP_SINK = "Arguments: NoopWrite"
-
-
-def write_plans(spark, since_id: int) -> str:
-    """Concatenated executed plans of write-side jobs run after ``since_id``,
-    leaving out writes into the ``noop`` sink."""
+def write_plans(spark, since_id: int, until_id: int) -> str:
+    """Concatenated executed plans of write-side jobs run after ``since_id``
+    and before ``until_id``."""
     chunks = []
     for eid, desc, plan in _executions(spark):
-        if eid <= since_id or _NOOP_SINK in plan:
+        if not since_id < eid < until_id:
             continue
         if any(m in plan for m in _WRITE_MARKERS):
             chunks.append(
@@ -99,8 +94,11 @@ def main() -> None:
         if dump_writes:
             # Consume the op so lazy write-side work (none today, but
             # cheap insurance) lands in the status store before the read.
+            # The consuming save is itself a write execution, the last one
+            # recorded: the evidence stops short of it.
             df.write.format("noop").mode("overwrite").save()
-            body = write_plans(spark, last_id)
+            noop_id = max(e[0] for e in _executions(spark))
+            body = write_plans(spark, last_id, noop_id)
             wpath = os.path.join(outdir, f"{name}_{suffix}_writes.txt")
             with open(wpath, "w") as fh:
                 fh.write(body or "(no write-side executions recorded)\n")
