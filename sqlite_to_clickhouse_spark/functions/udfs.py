@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf, udf, udtf
 
 from sqlite_to_clickhouse_spark.io import table
+from sqlite_to_clickhouse_spark.operators.text import _tokens
 from sqlite_to_clickhouse_spark.registry import register
 
 
@@ -175,7 +176,7 @@ def udtf_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     — posexplode is a codegen'd generator, the fast path for ordinal
     flattening (CH arrayJoin + arrayEnumerate)."""
     d = table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
+    toks = _tokens(F.col("text"))
     return d.select(
         "doc_id", F.posexplode(toks).alias("pos0", "token")
     ).select("doc_id", "token", (F.col("pos0") + 1).alias("pos"))

@@ -16,6 +16,15 @@ Scale design:
   DuckDB, which is what lets the LSH pipeline be differentially tested
   end-to-end.
 
+Kernels, each written once: ``_doc_tokens`` (the doc-token frame, over
+text.py's ``_tokens``); ``_with_band_keys`` (MinHash signatures and band
+keys); ``_verify_jaccard`` (the exact-Jaccard verify every candidate
+generator feeds: band joins, index lookups, prefix-filtered joins);
+``_expand_reps`` (representative pairs to member pairs);
+``_doc_components`` (docs -> LSH pairs -> connected components) with its
+oracle prefix ``_REACH_SQL``; ``_simhash_fp`` (the SimHash vote kernel)
+with its SQL spelling ``_simhash_votes_sql``.
+
 MinHash/LSH parameters: 48 hash functions, 4 bands × 12 rows, Jaccard
 threshold 0.95. Band-collision probability is J¹², so a J=0.99 pair is
 caught with P = 1-(1-0.99¹²)⁴ ≈ 0.9998, a J=0.95 pair with ≈ 0.955,
@@ -41,6 +50,7 @@ from pyspark.sql import functions as F
 
 from sqlite_to_clickhouse_spark import io as gio
 from sqlite_to_clickhouse_spark.io import table
+from sqlite_to_clickhouse_spark.operators.text import _tokens
 from sqlite_to_clickhouse_spark.registry import register
 
 N_HASHES = 48
@@ -57,8 +67,12 @@ MERSENNE31 = 2_147_483_647
 AFFINE_MULT = 2_654_435_761  # Knuth's 2^32/phi multiplier for b_s spread
 
 
-def _tokens(col):
-    return F.filter(F.split(col, " "), lambda t: t != "")
+def _doc_tokens(d: DataFrame, *cols: str) -> DataFrame:
+    """(doc_id, *cols, tk): each document's distinct whitespace tokens --
+    the one doc-token frame every near-dup op starts from."""
+    return d.select(
+        "doc_id", *cols, F.array_distinct(_tokens(F.col("text"))).alias("tk")
+    )
 
 
 @register(
@@ -177,29 +191,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     remains the direct all-pairs enumeration (fine at toy scale) with no
     construction mirroring needed.
     """
-    d = table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        "lang",
-        F.array_distinct(_tokens(F.col("text"))).alias("tk"),
-    )
+    toks = _doc_tokens(table(spark, sf_dir, "documents"), "lang")
     cand = jaccard_prefix_candidates(toks, 19, 20)  # 19/20 == 0.95 exactly
-    ta = toks.select(F.col("doc_id").alias("doc_a"), F.col("tk").alias("tk_a"))
-    tb = toks.select(F.col("doc_id").alias("doc_b"), F.col("tk").alias("tk_b"))
-    n_inter = F.size(F.array_intersect("tk_a", "tk_b")).cast("long")
-    verified = (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .withColumn("n_inter", n_inter)
-        .withColumn("sz_a", F.size("tk_a").cast("long"))
-        .withColumn("sz_b", F.size("tk_b").cast("long"))
-    )
-    jac = F.col("n_inter").cast("double") / (
-        F.col("sz_a") + F.col("sz_b") - F.col("n_inter")
-    )
-    return (
-        verified.filter(jac >= JACCARD_T)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    tokh = toks.select(F.col("doc_id").alias("__id"), F.col("tk").alias("__tk32"))
+    return _verify_jaccard(cand.toDF("id_a", "id_b"), tokh, JACCARD_T).toDF(
+        "doc_a", "doc_b", "jaccard"
     )
 
 
@@ -300,13 +296,8 @@ def dedup_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate sets match bit-for-bit and the whole LSH path — not just
     the final Jaccard — is differentially tested.
     """
-    d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.array_distinct(_tokens(F.col("text"))).alias("tk"))
-    return minhash_lsh_pairs(toks, "doc_id", "tk").select(
-        F.col("id_a").alias("doc_a"),
-        F.col("id_b").alias("doc_b"),
-        "jaccard",
-    )
+    toks = _doc_tokens(table(spark, sf_dir, "documents"))
+    return minhash_lsh_pairs(toks, "doc_id", "tk").toDF("doc_a", "doc_b", "jaccard")
 
 
 def _base_hash(t):
@@ -492,15 +483,21 @@ def _verify_jaccard(
     tokh: DataFrame,
     threshold: float,
 ) -> DataFrame:
-    """Exact-Jaccard verification of a slim candidate list against the
-    (__id, __tk32) token store: join the candidates back to the tokens
-    (tiny vs. the raw collision list — the planner broadcasts it at bench
-    scale, and at cluster scale it degrades to a clean shuffle join on
-    doc id) and threshold on the exact token-set Jaccard.  Verifying on
-    31-bit int arrays (4 B/element) rather than longs halves the bytes
-    hauled through this join's shuffle — the one stage that spilled at
-    the 100× scale check (SURVEY §6.1).  The mask + distinct is mirrored
-    in the DuckDB oracle (hashed32 CTE)."""
+    """The one exact-Jaccard verifier: (id_a, id_b) candidates in,
+    (id_a, id_b, jaccard >= threshold) out, scored against the
+    (__id, __tk32) token store (any element type).  The candidates join
+    back to the tokens (tiny vs. the raw collision list — the planner
+    broadcasts it at bench scale, and at cluster scale it degrades to a
+    clean shuffle join on doc id) and are thresholded on the exact
+    token-set Jaccard.  Every
+    candidate generator calls it: the MinHash band join (one-shot and
+    index lookup) and the prefix-filtered exact joins
+    (dedup_ngram_jaccard over string tokens, dedup_lsh_recall).  The
+    MinHash paths verify on 31-bit int arrays (4 B/element) rather than
+    longs, which halves the bytes hauled through this join's shuffle —
+    the one stage that spilled at the 100× scale check (SURVEY §6.1);
+    the mask + distinct is mirrored in the DuckDB oracle (hashed32
+    CTE)."""
     ta, tb = tokh.alias("ta"), tokh.alias("tb")
     pairs = (
         cand.join(ta, F.col("id_a") == F.col("ta.__id"))
@@ -598,10 +595,19 @@ def minhash_lsh_pairs(
     bands, tokh = minhash_bands_tokens(rep_df, id_col, tokens_col)
     cand = _packed_distinct(_bucket_pairs(bands))
     rep_pairs = _verify_jaccard(cand, tokh, threshold)
+    return _expand_reps(rep_pairs, members, members, threshold)
 
-    # Expand representative pairs to member cross pairs (output-bound
-    # joins on 8-byte ids; clusters are disjoint so no duplicates), and
-    # emit within-cluster pairs analytically at J=1.0.
+
+def _expand_reps(
+    rep_pairs: DataFrame, members: DataFrame, within_of: DataFrame, threshold: float
+) -> DataFrame:
+    """Verified representative pairs expanded to member pairs: each rep
+    pair becomes every member cross pair with the same Jaccard
+    (output-bound joins on 8-byte ids through the (__id, __rep)
+    ``members``; clusters are disjoint, so no duplicates), plus the
+    within-cluster pairs of ``within_of`` analytically at J=1.0, via the
+    same one-pass bucket expansion as the band join (r13) -- members
+    bucketed by their rep instead of a two-legged self-join."""
     ma = members.select(F.col("__rep").alias("id_a"), F.col("__id").alias("__a"))
     mb = members.select(F.col("__rep").alias("id_b"), F.col("__id").alias("__b"))
     cross = (
@@ -613,11 +619,8 @@ def minhash_lsh_pairs(
             "jaccard",
         )
     )
-    # Within-cluster pairs via the same one-pass bucket expansion as the
-    # band join (r13): members bucketed by their rep instead of a
-    # two-legged self-join of the cached membership.
     within = _bucket_pairs(
-        members.select("__id", F.col("__rep").alias("bk"))
+        within_of.select("__id", F.col("__rep").alias("bk"))
     ).select("id_a", "id_b", F.lit(1.0).alias("jaccard")).filter(
         F.lit(1.0) >= F.lit(threshold)
     )
@@ -839,7 +842,7 @@ def minhash_index_append(
             )
 
 
-def minhash_index_delete(ids: DataFrame, path: str, *, id_col: str = "doc_id") -> None:
+def minhash_index_delete(ids: DataFrame, path: str) -> None:
     """Delete docs from the index by TOMBSTONE — the GDPR-shape
     counterpart of maintenance_delete_rows (etl.py) for the dedup index:
     a right-to-be-forgotten request must take effect immediately but
@@ -852,8 +855,9 @@ def minhash_index_delete(ids: DataFrame, path: str, *, id_col: str = "doc_id") -
     (pinned in tests/test_minhash_property.py).  The next compaction
     (minhash_index_compact) physically drops tombstoned rows and clears
     the tombstone relation.  Contract: doc ids are never reused — a
-    tombstone is forever until compaction."""
-    _IDX_STORE.delete(ids.select(id_col), path)
+    tombstone is forever until compaction.  ``ids`` carries a
+    ``doc_id`` column."""
+    _IDX_STORE.delete(ids.select("doc_id"), path)
 
 
 def minhash_index_dedup(
@@ -863,12 +867,11 @@ def minhash_index_dedup(
     tokens_col: str,
     path: str,
     *,
-    threshold: float = JACCARD_T,
     exclude_ids: "DataFrame | None" = None,
 ) -> DataFrame:
     """Near-dup pairs of a NEW batch against the persisted index plus
     within the batch itself — the incremental serving path.  Returns
-    (id_a, id_b, jaccard >= threshold), bit-identical to running
+    (id_a, id_b, jaccard >= JACCARD_T), bit-identical to running
     minhash_lsh_pairs over (index corpus ∪ batch) and keeping the pairs
     that involve >= 1 batch doc (pinned by the append-twice property
     test): banding is deterministic and shared, so the candidate set
@@ -1000,36 +1003,14 @@ def minhash_index_dedup(
             F.greatest("nb.__id", "ob.__id").alias("id_b"),
         )
     )
-    rep_pairs = _verify_jaccard(cand, rep_tok, threshold)
-
-    # Expansion: representative pairs -> member pairs (output-bound; clusters
-    # are disjoint, so no duplicates), plus within-cluster batch pairs
-    # analytically at J=1.0 (index×index pairs are never output).
-    ma = members.select(F.col("__rep").alias("id_a"), F.col("__id").alias("__a"))
-    mb = members.select(F.col("__rep").alias("id_b"), F.col("__id").alias("__b"))
-    out = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("__a", "__b").alias("id_a"),
-            F.greatest("__a", "__b").alias("id_b"),
-            "jaccard",
-        )
-    )
-    within = _bucket_pairs(
-        batch.select("__id", F.col("__rep").alias("bk"))
-    ).select("id_a", "id_b", F.lit(1.0).alias("jaccard")).filter(
-        F.lit(1.0) >= F.lit(threshold)
-    )
-    return out.unionByName(within)
+    rep_pairs = _verify_jaccard(cand, rep_tok, JACCARD_T)
+    # Index×index pairs are never output: only the batch's clusters
+    # expand within themselves.
+    return _expand_reps(rep_pairs, members, batch, JACCARD_T)
 
 
 def _incr_batch_pred():
     return F.col("doc_id") % INCR_MOD == INCR_REM
-
-
-def _doc_tokens(d: DataFrame) -> DataFrame:
-    return d.select("doc_id", F.array_distinct(_tokens(F.col("text"))).alias("tk"))
 
 
 def _incr_index_path(spark: SparkSession, sf_dir: str, *, force: bool = False) -> str:
@@ -1110,11 +1091,15 @@ def dedup_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _relation_counts(spark, path)
 
 
+# Ground truth of a batch lookup: the full-corpus pairs touching the batch.
+_INCR_ORACLE = _minhash_oracle(
+    pair_pred=f"doc_a % {INCR_MOD} = {INCR_REM} OR doc_b % {INCR_MOD} = {INCR_REM}"
+)
+
+
 @register(
     "dedup_incremental",
-    oracle=_minhash_oracle(
-        pair_pred=f"doc_a % {INCR_MOD} = {INCR_REM} OR doc_b % {INCR_MOD} = {INCR_REM}"
-    ),
+    oracle=_INCR_ORACLE,
     tags=("llm", "dedup", "incremental"),
 )
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1283,43 +1268,57 @@ def dedup_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _relation_counts(spark, compacted)
 
 
-def _simhash_expr(tokens_col):
-    """SimHash over SIMHASH_BITS bits of the 60-bit md5-derived token hash:
-    bit b of the fingerprint is the sign of sum over tokens of ±1 by that
-    token's hash bit. Entirely JVM-side expression tree."""
+def _simhash_fp(tkh, n_bits: int):
+    """The one SimHash kernel: an Arrow-batched fingerprint over a column
+    of base-hash arrays (_base_hash per token), bit b = the sign of the
+    sum over tokens of ±1 by that token's hash bit b.  One md5 per token
+    JVM-side and all n_bits votes in one numpy pass -- a per-bit JVM
+    expression tree re-hashes every token once per bit, interpreted.
+    Bit b depends only on bit b of each hash, so the SIMHASH_BITS
+    fingerprint is the low bits of the SIMHASH_NN_BITS one.  A NULL
+    array maps to 0, as the oracle's NULL votes do."""
+    from pyspark.sql import types as T
 
-    def _vote_merge(mask: int):
-        # Bound via factory: PySpark introspects lambda arity, so default
-        # args would be mistaken for extra lambda variables.
-        return lambda acc, t: acc + F.when(
-            _base_hash(t).bitwiseAND(F.lit(mask)) != 0, 1
-        ).otherwise(-1)
+    bits = np.arange(n_bits, dtype=np.int64)
 
-    fp = F.lit(0).cast("long")
-    for b in range(SIMHASH_BITS):
-        vote = F.aggregate(tokens_col, F.lit(0).cast("long"), _vote_merge(1 << b))
-        fp = fp + F.when(vote > 0, F.lit(1 << b)).otherwise(0)
-    return fp
+    @F.pandas_udf(T.LongType())
+    def _fp(col: pd.Series) -> pd.Series:
+        out = []
+        for arr in col:
+            if arr is None:
+                out.append(0)
+                continue
+            h = np.asarray(arr, dtype=np.int64)
+            b = (h[:, None] >> bits[None, :]) & 1
+            votes = (2 * b - 1).sum(axis=0)
+            out.append(int(((votes > 0).astype(np.int64) << bits).sum()))
+        return pd.Series(out)
+
+    return _fp(tkh)
 
 
-def _simhash_votes_sql() -> str:
-    h = "CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT)"
+def _simhash_votes_sql(n_bits: int, arr: str, var: str, h: str) -> str:
+    """DuckDB spelling of _simhash_fp over the list ``arr``, whose element
+    ``var`` has base hash ``h``."""
     return " + ".join(
-        f"(CASE WHEN list_aggregate(list_transform(tk, t -> "
+        f"(CASE WHEN list_aggregate(list_transform({arr}, {var} -> "
         f"CASE WHEN ({h} & {1 << b}) <> 0 THEN 1 ELSE -1 END), 'sum') > 0 "
         f"THEN {1 << b} ELSE 0 END)"
-        for b in range(SIMHASH_BITS)
+        for b in range(n_bits)
     )
 
 
 def _simhash_oracle() -> str:
+    votes = _simhash_votes_sql(
+        SIMHASH_BITS, "tk", "t", "CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT)"
+    )
     return f"""
     WITH toks AS (
       SELECT doc_id,
              list_distinct(list_filter(string_split(text, ' '), t -> t <> '')) AS tk
       FROM documents
     )
-    SELECT doc_id, CAST({_simhash_votes_sql()} AS BIGINT) AS simhash FROM toks
+    SELECT doc_id, CAST({votes} AS BIGINT) AS simhash FROM toks
     """
 
 
@@ -1328,10 +1327,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash fingerprint per document (24-bit, md5-derived, engine-
     portable). Near-dup docs land at small Hamming distance; downstream
     grouping by fingerprint (or by fingerprint bands) finds clusters with
-    one shuffle. Fingerprint computation itself is shuffle-free."""
-    d = table(spark, sf_dir, "documents")
-    toks = F.array_distinct(_tokens(F.col("text")))
-    return d.select("doc_id", _simhash_expr(toks).cast("long").alias("simhash"))
+    one shuffle. Fingerprint computation itself is shuffle-free: the
+    _simhash_fp kernel over each doc's token base hashes."""
+    toks = _doc_tokens(table(spark, sf_dir, "documents"))
+    tkh = F.transform("tk", _base_hash)
+    return toks.select("doc_id", _simhash_fp(tkh, SIMHASH_BITS).alias("simhash"))
 
 
 HAMMING_T = 3  # max differing simhash bits for a near-dup neighbor
@@ -1339,16 +1339,8 @@ SIMHASH_BANDS = 4  # must exceed HAMMING_T for lossless banding (pigeonhole)
 SIMHASH_NN_BITS = 48  # wide fingerprint for the NN op (bits 0..47 of the 60-bit hash)
 
 
-def _simhash_nn_votes_sql() -> str:
-    return " + ".join(
-        f"(CASE WHEN list_aggregate(list_transform(hh, h -> "
-        f"CASE WHEN (h & {1 << b}) <> 0 THEN 1 ELSE -1 END), 'sum') > 0 "
-        f"THEN {1 << b} ELSE 0 END)"
-        for b in range(SIMHASH_NN_BITS)
-    )
-
-
 def _simhash_nn_oracle() -> str:
+    votes = _simhash_votes_sql(SIMHASH_NN_BITS, "hh", "h", "h")
     return f"""
     WITH toks AS (
       SELECT doc_id,
@@ -1362,7 +1354,7 @@ def _simhash_nn_oracle() -> str:
       FROM toks WHERE len(tk) > 0
     ),
     fps AS (
-      SELECT doc_id, CAST({_simhash_nn_votes_sql()} AS BIGINT) AS fp FROM hs
+      SELECT doc_id, CAST({votes} AS BIGINT) AS fp FROM hs
     ),
     pairs AS (
       SELECT a.doc_id AS doc_id, b.doc_id AS nn_doc,
@@ -1400,10 +1392,8 @@ def dedup_simhash_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth and the banded plan must reproduce it bit-for-bit; recall is a
     theorem, precision comes from the exact popcount on every candidate.
 
-    Plan: one md5 per token JVM-side (the minhash __tkh spelling), then
-    the 48 bit-votes in ONE Arrow kernel pass (the per-bit expression
-    tree recomputes the token hash per bit — 48× the md5 work,
-    interpreted). Identical fingerprints are collapsed BEFORE banding:
+    Plan: the 48-bit _simhash_fp kernel (one md5 per token, all votes
+    in one Arrow pass). Identical fingerprints are collapsed BEFORE banding:
     a fingerprint cluster of size ≥ 2 answers its members' NN
     analytically (hamming 0, lowest other member — any cross-cluster
     distance is ≥ 1), and only one representative per DISTINCT
@@ -1418,28 +1408,11 @@ def dedup_simhash_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     giant cluster — the LSH blank-doc lesson, here handled by the same
     collapse that makes them cheap anyway).
     """
-    from pyspark.sql import types as T
-
-    d = table(spark, sf_dir, "documents")
-    toks = F.array_distinct(_tokens(F.col("text")))
-    base = d.where(F.size(toks) > 0).select(
+    toks = _doc_tokens(table(spark, sf_dir, "documents"))
+    fps = toks.where(F.size("tk") > 0).select(
         "doc_id",
-        F.transform(toks, _base_hash).alias("__tkh"),
+        _simhash_fp(F.transform("tk", _base_hash), SIMHASH_NN_BITS).alias("fp"),
     )
-
-    bits = np.arange(SIMHASH_NN_BITS, dtype=np.int64)
-
-    @F.pandas_udf(T.LongType())
-    def _fp(tkh: pd.Series) -> pd.Series:
-        out = []
-        for arr in tkh:
-            h = np.asarray(arr, dtype=np.int64)
-            b = (h[:, None] >> bits[None, :]) & 1
-            votes = (2 * b - 1).sum(axis=0)
-            out.append(int(((votes > 0).astype(np.int64) << bits).sum()))
-        return pd.Series(out)
-
-    fps = base.select("doc_id", _fp("__tkh").alias("fp"))
 
     # Collapse identical fingerprints: per-fp cluster size, lowest and
     # second-lowest member (one shuffle on fp, reused by every window).
@@ -1563,14 +1536,12 @@ _CC_JUMP_FROM = 3
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    driver_edge_cap: "int | None" = None,
+    edges: DataFrame, driver_edge_cap: "int | None" = None
 ) -> DataFrame:
     """Connected components by iterative min-label propagation (library
-    API): undirected edge list in, (node, component_id) out, where
-    component_id = the smallest node id reachable from the node.
+    API): undirected ``(src, dst)`` edge list in, (node, component_id)
+    out, where component_id = the smallest node id reachable from the
+    node.
 
     The Pregel-lite loop: every node starts labeled with itself; each
     round a node adopts min(own label, min of neighbors' labels); stop at
@@ -1607,7 +1578,7 @@ def connected_components(
       recursive-CTE oracles on dedup_connected_components/_corpus_apply/
       _keep_best and the ER cluster gates.
     """
-    fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    fwd = edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
     und = fwd.union(fwd.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
     # Driver fast path (r12, guide §1.2 — first-principles): the
     # distributed loop costs a fixed 3-8 driver-sequential rounds of
@@ -1707,8 +1678,9 @@ def connected_components(
     return labels.select("node", F.col("label").alias("component_id"))
 
 
-def _components_oracle() -> str:
-    return f"""
+# The recursive-closure prefix of the doc-cluster oracles: the MinHash
+# pairs, their undirected edges, and every node's reachable peers.
+_REACH_SQL = f"""
     WITH RECURSIVE pairs AS ({_minhash_oracle()}),
     edges AS (
         SELECT doc_a AS s, doc_b AS d FROM pairs
@@ -1719,13 +1691,45 @@ def _components_oracle() -> str:
         SELECT s AS node, d AS peer FROM edges
         UNION
         SELECT r.node, e.d FROM reach r JOIN edges e ON r.peer = e.s
-    )
+    )"""
+
+
+# The component CTE the labelled oracles add to _REACH_SQL.
+_COMP_SQL = """,
+    comp AS (
+        SELECT node AS doc_id, least(node, min(peer)) AS component_id
+        FROM reach GROUP BY node
+    )"""
+
+
+def _components_oracle() -> str:
+    return _REACH_SQL + """
     SELECT node AS doc_id,
            least(node, min(peer)) AS component_id,
            (node = least(node, min(peer))) AS is_canonical
     FROM reach
     GROUP BY node
     """
+
+
+def _doc_components(d: DataFrame) -> DataFrame:
+    """The one doc-cluster pipeline: documents -> MinHash-LSH pairs ->
+    connected components, as (doc_id, component_id) for every document
+    in some near-dup pair."""
+    pairs = minhash_lsh_pairs(_doc_tokens(d), "doc_id", "tk")
+    return connected_components(pairs.toDF("src", "dst", "jaccard")).toDF(
+        "doc_id", "component_id"
+    )
+
+
+def _doc_clusters(d: DataFrame, col: str) -> DataFrame:
+    """(doc_id, col, cluster_id) for EVERY document: its near-dup
+    component's min id, or itself when it is in no pair."""
+    return d.select("doc_id", col).join(_doc_components(d), "doc_id", "left").select(
+        "doc_id",
+        col,
+        F.coalesce(F.col("component_id"), F.col("doc_id")).alias("cluster_id"),
+    )
 
 
 @register("dedup_connected_components", oracle=_components_oracle(), tags=("llm", "dedup"))
@@ -1737,17 +1741,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE transitive closure over the identical pair set, so the
     clustering itself is differentially verified (a rare case of an
     iterative algorithm with an exact SQL oracle)."""
-    d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.array_distinct(_tokens(F.col("text"))).alias("tk"))
-    pairs = minhash_lsh_pairs(toks, "doc_id", "tk").select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    comp = connected_components(pairs)
-    return comp.select(
-        F.col("node").alias("doc_id"),
-        "component_id",
-        (F.col("node") == F.col("component_id")).alias("is_canonical"),
-    )
+    comp = _doc_components(table(spark, sf_dir, "documents"))
+    return comp.withColumn("is_canonical", F.col("doc_id") == F.col("component_id"))
 
 
 _CONTAINMENT_T = 0.9
@@ -1787,12 +1782,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the result stays exact — verification recomputes both directed
     ratios from the full token arrays, and the oracle remains the direct
     all-pairs enumeration."""
-    d = table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        "lang",
-        F.array_distinct(_tokens(F.col("text"))).alias("tk"),
-    )
+    toks = _doc_tokens(table(spark, sf_dir, "documents"), "lang")
     ranked = _ranked_postings(toks, 9, 10)  # 9/10 == 0.9 exactly
     small = ranked.filter(F.col("rank") <= F.col("sz") - F.col("o") + 1).alias("a")
     big = ranked.alias("b")
@@ -1885,22 +1875,7 @@ def dedup_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _corpus_apply_oracle() -> str:
-    return f"""
-    WITH RECURSIVE pairs AS ({_minhash_oracle()}),
-    edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM pairs
-        UNION
-        SELECT doc_b, doc_a FROM pairs
-    ),
-    reach AS (
-        SELECT s AS node, d AS peer FROM edges
-        UNION
-        SELECT r.node, e.d FROM reach r JOIN edges e ON r.peer = e.s
-    ),
-    comp AS (
-        SELECT node AS doc_id, least(node, min(peer)) AS component_id
-        FROM reach GROUP BY node
-    )
+    return _REACH_SQL + _COMP_SQL + """
     SELECT d.doc_id,
            d.lang,
            COALESCE(c.component_id, d.doc_id) AS cluster_id,
@@ -1926,42 +1901,12 @@ def dedup_corpus_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     otherwise. Differentially verified end-to-end against the
     recursive-CTE closure oracle over the identical pair set.
     """
-    d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.array_distinct(_tokens(F.col("text"))).alias("tk"))
-    pairs = minhash_lsh_pairs(toks, "doc_id", "tk").select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    comp = connected_components(pairs).select(
-        F.col("node").alias("doc_id"), "component_id"
-    )
-    return d.select("doc_id", "lang").join(comp, "doc_id", "left").select(
-        "doc_id",
-        "lang",
-        F.coalesce(F.col("component_id"), F.col("doc_id")).alias("cluster_id"),
-        (
-            F.col("component_id").isNull()
-            | (F.col("component_id") == F.col("doc_id"))
-        ).alias("keep"),
-    )
+    lab = _doc_clusters(table(spark, sf_dir, "documents"), "lang")
+    return lab.withColumn("keep", F.col("cluster_id") == F.col("doc_id"))
 
 
 def _keep_best_oracle() -> str:
-    return f"""
-    WITH RECURSIVE pairs AS ({_minhash_oracle()}),
-    edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM pairs
-        UNION
-        SELECT doc_b, doc_a FROM pairs
-    ),
-    reach AS (
-        SELECT s AS node, d AS peer FROM edges
-        UNION
-        SELECT r.node, e.d FROM reach r JOIN edges e ON r.peer = e.s
-    ),
-    comp AS (
-        SELECT node AS doc_id, least(node, min(peer)) AS component_id
-        FROM reach GROUP BY node
-    ),
+    return _REACH_SQL + _COMP_SQL + """,
     lab AS (
         SELECT d.doc_id, d.n_chars,
                COALESCE(c.component_id, d.doc_id) AS cluster_id
@@ -1987,19 +1932,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure, not corpus size — the window never sees a giant partition
     unless the corpus genuinely contains a giant dup cluster, which is
     exactly the case you want surfaced."""
-    d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.array_distinct(_tokens(F.col("text"))).alias("tk"))
-    pairs = minhash_lsh_pairs(toks, "doc_id", "tk").select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    comp = connected_components(pairs).select(
-        F.col("node").alias("doc_id"), "component_id"
-    )
-    lab = d.select("doc_id", "n_chars").join(comp, "doc_id", "left").select(
-        "doc_id",
-        "n_chars",
-        F.coalesce(F.col("component_id"), F.col("doc_id")).alias("cluster_id"),
-    )
+    lab = _doc_clusters(table(spark, sf_dir, "documents"), "n_chars")
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("n_chars").desc(), F.col("doc_id")
     )
@@ -2086,9 +2019,9 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # text_ngram_novelty, measured 7× there).  explode_outer over the
     # bound hash array + scalar NULL filter keeps
     # InferFiltersFromGenerate from re-evaluating the window transform.
-    toks = d.select(
-        "doc_id", F.filter(F.split(F.col("text"), " "), lambda t: t != "").alias("tk")
-    ).filter(F.size("tk") >= _SPAN_W)
+    toks = d.select("doc_id", _tokens(F.col("text")).alias("tk")).filter(
+        F.size("tk") >= _SPAN_W
+    )
     tk = F.col("tk")
     wins = F.transform(
         F.sequence(F.lit(1), F.size(tk) - F.lit(_SPAN_W - 1)),
@@ -2252,38 +2185,26 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold; this op says what actually happened.
 
     Scale shape: the exact side is the prefix-filtered plan (hot tokens
-    never enter prefixes — no posting-list blowup), the caught side is
+    never enter prefixes — no posting-list blowup) over the LSH verify
+    tokens (_tk32), scored by the same _verify_jaccard; the caught side is
     the collapsed LSH plan; two count aggregates cross-joined into one
     row.  md5 space on both sides by construction."""
-    d = table(spark, sf_dir, "documents")
-    toks = _doc_tokens(d)
-    t32 = toks.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.transform("tk", _base_hash),
-                lambda h: h.bitwiseAND(F.lit(MERSENNE31)),
-            )
-        ).alias("tk32"),
-    ).filter(F.size("tk32") > 0)
+    toks = _doc_tokens(table(spark, sf_dir, "documents"))
+    t32 = (
+        _hashed_tokens(toks, "doc_id", "tk")
+        .select("__id", _tk32().alias("__tk32"))
+        .filter(F.size("__tk32") > 0)
+    )
     # Prefix filtering runs on the masked hashes spelled as strings (the
     # machinery is token-type-agnostic; the total order just has to be
     # shared), one global shard.
     str_toks = t32.select(
-        "doc_id",
+        F.col("__id").alias("doc_id"),
         F.lit("all").alias("lang"),
-        F.transform("tk32", lambda h: h.cast("string")).alias("tk"),
+        F.transform("__tk32", lambda h: h.cast("string")).alias("tk"),
     )
     cand = jaccard_prefix_candidates(str_toks, 19, 20)  # 19/20 == 0.95
-    ta = t32.select(F.col("doc_id").alias("doc_a"), F.col("tk32").alias("tk_a"))
-    tb = t32.select(F.col("doc_id").alias("doc_b"), F.col("tk32").alias("tk_b"))
-    n_inter = F.size(F.array_intersect("tk_a", "tk_b")).cast("double")
-    jac = F.try_divide(
-        n_inter, F.size("tk_a") + F.size("tk_b") - n_inter
-    )
-    exact = (
-        cand.join(ta, "doc_a").join(tb, "doc_b").filter(jac >= JACCARD_T)
-    )
+    exact = _verify_jaccard(cand.toDF("id_a", "id_b"), t32, JACCARD_T)
     caught = minhash_lsh_pairs(toks, "doc_id", "tk")
     ex = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     ca = caught.agg(F.count(F.lit(1)).alias("n_caught"))

@@ -67,6 +67,7 @@ from pyspark.sql import functions as F
 
 from sqlite_to_clickhouse_spark import io as gio
 from sqlite_to_clickhouse_spark.io import table
+from sqlite_to_clickhouse_spark.operators.text import _tokens
 from sqlite_to_clickhouse_spark.registry import register
 
 # Verified-match threshold: edit distance <= 2 merges the fixture's
@@ -1184,7 +1185,7 @@ def er_reordered_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting-list blocking, never a cross join; Jaccard on the tiny
     per-candidate token arrays in codegen'd array expressions."""
     names = table(spark, sf_dir, "part").select(F.col("p_name").alias("nm")).distinct()
-    toks = F.filter(F.split(F.col("nm"), " "), lambda t: t != "")
+    toks = _tokens(F.col("nm"))
     variant = F.length("nm") % 3
     ext_name = (
         F.when(variant == 0, F.array_join(F.reverse(toks), " "))
@@ -1205,16 +1206,11 @@ def er_reordered_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("ext_name", "cname")
         .distinct()
     )
-    eset = F.array_distinct(F.filter(F.split(F.col("ext_name"), " "), lambda t: t != ""))
-    cset = F.array_distinct(F.filter(F.split(F.col("cname"), " "), lambda t: t != ""))
+    eset = F.array_distinct(_tokens(F.col("ext_name")))
+    cset = F.array_distinct(_tokens(F.col("cname")))
     # Union spelled as the oracle spells it: distinct tokens of the
     # concatenated string (identical construction -> identical counts).
-    uset = F.array_distinct(
-        F.filter(
-            F.split(F.concat_ws(" ", F.col("ext_name"), F.col("cname")), " "),
-            lambda t: t != "",
-        )
-    )
+    uset = F.array_distinct(_tokens(F.concat_ws(" ", F.col("ext_name"), F.col("cname"))))
     scored = cand.select(
         "ext_name",
         "cname",

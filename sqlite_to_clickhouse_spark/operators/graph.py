@@ -42,14 +42,10 @@ __all__ = ["pagerank", "triangle_stats"]
 
 _DAMPING = 0.85
 _ITERS = 3
+_ROUND_DP = 12
 
 
-def pagerank(
-    edges: DataFrame,
-    damping: float = _DAMPING,
-    iterations: int = _ITERS,
-    round_dp: int = 12,
-) -> DataFrame:
+def pagerank(edges: DataFrame) -> DataFrame:
     """Weighted PageRank over ``edges(src, dst, weight)``; returns
     ``(node, rank)``.
 
@@ -58,6 +54,8 @@ def pagerank(
 
         rank₀(v) = 1/N
         rankᵢ(v) = round((1-d)/N + d·Σ_{u→v} rankᵢ₋₁(u)·w(u,v)/out(u), dp)
+
+    with d = _DAMPING, _ITERS iterations and dp = _ROUND_DP.
 
     The per-iteration round is part of the algorithm's public semantics
     here, mirrored in the SQL oracle, so both engines iterate from
@@ -77,8 +75,8 @@ def pagerank(
     if n_nodes == 0:  # empty edge list: empty ranks, not a ZeroDivisionError
         return nodes.select("node", F.lit(0.0).alias("rank"))
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    base = (1.0 - damping) / n_nodes
-    for _ in range(iterations):
+    base = (1.0 - _DAMPING) / n_nodes
+    for _ in range(_ITERS):
         contrib = (
             norm.join(ranks, norm["src"] == ranks["node"])
             .groupBy("dst")
@@ -90,8 +88,8 @@ def pagerank(
                 "node",
                 F.round(
                     F.lit(base)
-                    + F.lit(damping) * F.coalesce("mass", F.lit(0.0)),
-                    round_dp,
+                    + F.lit(_DAMPING) * F.coalesce("mass", F.lit(0.0)),
+                    _ROUND_DP,
                 ).alias("rank"),
             )
         )

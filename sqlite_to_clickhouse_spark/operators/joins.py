@@ -229,19 +229,16 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("o_orderkey", "tier_name")
 
 
+_N_SALTS = 8
+
+
 def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    *,
-    n_salts: int = 8,
-    how: str = "inner",
+    fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str
 ) -> DataFrame:
-    """Skew-mitigating equi join: fact rows get a uniform salt in
-    [0, n_salts), the dim side is replicated once per salt, and the join
+    """Skew-mitigating inner equi join: fact rows get a uniform salt in
+    [0, _N_SALTS), the dim side is replicated once per salt, and the join
     key becomes (key, salt) — a pathological hot key's rows now land in
-    n_salts separate shuffle partitions instead of one straggler.
+    _N_SALTS separate shuffle partitions instead of one straggler.
 
     The salt value a fact row receives does not affect the result (every
     dim row exists under every salt), so seeded rand() is safe under task
@@ -250,16 +247,15 @@ def salted_join(
     size at runtime, salting pre-splits by design).
     """
     salted_fact = fact.withColumn(
-        "_salt", F.floor(F.rand(seed=42) * n_salts).cast("int")
+        "_salt", F.floor(F.rand(seed=42) * _N_SALTS).cast("int")
     )
     salted_dim = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(_N_SALTS - 1)))
     )
     joined = salted_fact.join(
         salted_dim,
         (salted_fact[fact_key] == salted_dim[dim_key])
         & (salted_fact["_salt"] == salted_dim["_salt"]),
-        how,
     )
     return joined.drop("_salt")
 

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sqlite_to_clickhouse_spark.io import table
+from sqlite_to_clickhouse_spark.operators.text import _tokens
 from sqlite_to_clickhouse_spark.registry import register
 
 # 204/256 = 79.7% train, 26/256 = 10.2% val, 26/256 = 10.2% test.
@@ -142,8 +143,6 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, and the split/stats ride a tiny 15-key aggregate. The
     near-dup collapse (minhash → connected components) runs as its own
     job upstream in a real pipeline; see dedup_connected_components."""
-    from sqlite_to_clickhouse_spark.operators.text import _tokens
-
     d = table(spark, sf_dir, "documents")
     toks = _tokens(F.col("text"))
     n_tok = F.size(toks)
@@ -238,8 +237,6 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-lang global order becomes per-(lang, shard-range) order — the
     window spec gains a second partition key, nothing else changes."""
     d = table(spark, sf_dir, "documents")
-    from sqlite_to_clickhouse_spark.operators.text import _tokens
-
     n_tok = F.size(_tokens(F.col("text")))
     w = (
         Window.partitionBy("lang")
@@ -666,7 +663,7 @@ def sample_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     One groupBy(source) shuffle over the corpus; everything after runs on
     the S-row plan relation (broadcast scalars, no driver collect)."""
     d = table(spark, sf_dir, "documents")
-    toks = F.size(F.filter(F.split(F.col("text"), " "), lambda t: t != ""))
+    toks = F.size(_tokens(F.col("text")))
     per_source = d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(toks).cast("long").alias("n_tokens"),
@@ -748,9 +745,7 @@ def sample_token_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = d.select(
         "doc_id",
         "source",
-        F.size(F.filter(F.split(F.col("text"), " "), lambda t: t != ""))
-        .cast("long")
-        .alias("n_tokens"),
+        F.size(_tokens(F.col("text"))).cast("long").alias("n_tokens"),
     )
     quota = sized.agg(
         F.expr("CAST(sum(n_tokens) AS BIGINT) div count(DISTINCT source)").alias(

@@ -2270,19 +2270,32 @@ def embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors, narrow triples into the per-probe window); at corpus scale
     you run it on a sampled probe set exactly as sim_topk_cosine does."""
     e = table(spark, sf_dir, "embeddings")
-
-    def _trunc_topk(d: int) -> DataFrame:
-        trunc = e.select("vec_id", F.slice("embedding", 1, d).alias("embedding"))
-        return topk_cosine(trunc, _probes(trunc), k=TOP_K).select("probe_id", "vec_id")
-
-    full = _trunc_topk(_MRL_DIMS[-1])
-    out = None
+    # Each dimension's top-k runs once, tagged with its dim, and no
+    # subtree is planned twice; a (probe, vec) pair the full-dimension
+    # search keeps is a hit for every dim that keeps it too.
+    tagged = None
     for d in _MRL_DIMS:
-        hits = _trunc_topk(d).join(full, ["probe_id", "vec_id"])
-        row = hits.agg(
-            F.lit(d).alias("dim"),
-            F.count(F.lit(1)).alias("n_hits"),
-            F.round(F.count(F.lit(1)) / F.lit(N_PROBES * TOP_K), 6).alias("recall"),
-        ).select("dim", "n_hits", "recall")
-        out = row if out is None else out.unionAll(row)
-    return out
+        trunc = e.select("vec_id", F.slice("embedding", 1, d).alias("embedding"))
+        t = topk_cosine(trunc, _probes(trunc), k=TOP_K).select(
+            "probe_id", "vec_id", F.lit(d).alias("dim")
+        )
+        tagged = t if tagged is None else tagged.unionAll(t)
+    kept = (
+        tagged.groupBy("probe_id", "vec_id")
+        .agg(F.collect_set("dim").alias("dims"))
+        .filter(F.array_contains("dims", _MRL_DIMS[-1]))
+    )
+    per_dim = F.array(
+        *[
+            F.struct(
+                F.lit(d).alias("dim"),
+                F.count_if(F.array_contains("dims", d)).alias("n_hits"),
+            )
+            for d in _MRL_DIMS
+        ]
+    )
+    return kept.agg(per_dim.alias("r")).select(F.explode("r").alias("r")).select(
+        "r.dim",
+        "r.n_hits",
+        F.round(F.col("r.n_hits") / F.lit(N_PROBES * TOP_K), 6).alias("recall"),
+    )

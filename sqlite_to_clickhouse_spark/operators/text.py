@@ -323,9 +323,7 @@ def text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     # tk bound first (interpreted-HOF CSE fix, see text_ngram_novelty):
     # unbound, each bigram's element_at re-tokenized the document.
-    toks = d.select(
-        "doc_id", F.filter(F.split(F.col("text"), " "), lambda t: t != "").alias("tk")
-    )
+    toks = d.select("doc_id", _tokens(F.col("text")).alias("tk"))
     tk = F.col("tk")
     # Guard: sequence(0, -1) runs DESCENDING in Spark, so a 0/1-token doc
     # would fabricate indices — emit an empty array instead.

@@ -32,6 +32,19 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sqlite_to_clickhouse_spark import io as gio
+from sqlite_to_clickhouse_spark.operators.dedup import (
+    DEL_MOD,
+    DEL_REM,
+    _INCR_ORACLE,
+    _deleted_ids,
+    _doc_tokens,
+    _incr_batch_pred,
+    _incr_index_path,
+    _minhash_oracle,
+    minhash_index_append,
+    minhash_index_dedup,
+    minhash_index_delete,
+)
 from sqlite_to_clickhouse_spark.registry import register
 
 _MEM_COUNTER = itertools.count()
@@ -551,7 +564,7 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_incremental_dedup",
-    oracle=None,  # replaced below: reuses the dedup_incremental oracle
+    oracle=_INCR_ORACLE,  # dedup_incremental's ground truth (see docstring)
     tags=("streaming", "llm", "dedup", "incremental"),
 )
 def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -580,13 +593,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     invocation builds its own index copy in a temp dir: appends mutate
     the index, so the shared cached generation (which dedup_incremental
     reuses) must never be the append target."""
-    from sqlite_to_clickhouse_spark.io import table as _table
-    from sqlite_to_clickhouse_spark.operators.dedup import (
-        _incr_batch_pred,
-        _incr_index_path,
-    )
-
-    docs = _table(spark, sf_dir, "documents")
+    docs = gio.table(spark, sf_dir, "documents")
     idx = gio.clone_store(_incr_index_path(spark, sf_dir), "stream_incr_idx_")
     batch = docs.filter(_incr_batch_pred())
     stage = os.path.join(gio.tempdir("stream_incr_stage_"), "in")
@@ -640,11 +647,6 @@ def _incr_dedup_handler(spark: SparkSession, idx: str, out: str):
     idempotence check is ONE JSON read however long the stream runs
     (pre-r11 it re-parsed every committed manifest per micro-batch)."""
     from sqlite_to_clickhouse_spark.io import manifest_applied_meta
-    from sqlite_to_clickhouse_spark.operators.dedup import (
-        _doc_tokens,
-        minhash_index_append,
-        minhash_index_dedup,
-    )
 
     def handle(bdf: DataFrame, epoch_id: int) -> None:
         toks = _doc_tokens(bdf)
@@ -717,29 +719,21 @@ def _read_epoch_pairs(spark: SparkSession, out: str) -> DataFrame:
     return spark.read.schema(_PAIR_SCHEMA).parquet(*parts)
 
 
-def _wire_stream_incremental_oracle() -> None:
-    # The oracle IS dedup_incremental's full-recompute ground truth (see
-    # docstring); registry entries are frozen dataclasses, so rebuild.
-    from dataclasses import replace
-
-    from sqlite_to_clickhouse_spark.operators.dedup import (
-        INCR_MOD,
-        INCR_REM,
-        _minhash_oracle,
-    )
-    from sqlite_to_clickhouse_spark.registry import _REGISTRY
-
-    _REGISTRY["stream_incremental_dedup"] = replace(
-        _REGISTRY["stream_incremental_dedup"],
-        oracle=_minhash_oracle(
-            pair_pred=f"doc_a % {INCR_MOD} = {INCR_REM} OR doc_b % {INCR_MOD} = {INCR_REM}"
-        ),
-    )
+# Epoch A: pairs touching batch A, other endpoint NOT in batch B (B did
+# not exist yet; deletes had not landed).  Epoch B: pairs touching batch B
+# with no deleted endpoint.  Disjoint by the B-endpoint test, so the union
+# is the row multiset the stream emits.
+_EP_A = "(doc_a % 20 = 7 OR doc_b % 20 = 7) AND doc_a % 20 <> 17 AND doc_b % 20 <> 17"
+_EP_B = (
+    f"(doc_a % 20 = 17 OR doc_b % 20 = 17) "
+    f"AND doc_a % {DEL_MOD} <> {DEL_REM} AND doc_b % {DEL_MOD} <> {DEL_REM}"
+)
 
 
 @register(
     "stream_incremental_dedup_deletes",
-    oracle=None,  # replaced below: composed epoch-A/epoch-B ground truth
+    # The composed epoch-A/epoch-B ground truth.
+    oracle=_minhash_oracle(pair_pred=f"({_EP_A}) OR ({_EP_B})"),
     tags=("streaming", "llm", "dedup", "incremental", "maintenance"),
 )
 def stream_incremental_dedup_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -760,16 +754,7 @@ def stream_incremental_dedup_deletes(spark: SparkSession, sf_dir: str) -> DataFr
     CHECKPOINT RECOVERY itself: if run 2 reprocessed batch A, the
     re-lookup would run against the now-tombstoned, A-appended index and
     overwrite epoch A's pairs with different ones, breaking the gate."""
-    from sqlite_to_clickhouse_spark.io import table as _table
-    from sqlite_to_clickhouse_spark.operators.dedup import (
-        DEL_MOD,
-        DEL_REM,
-        _incr_batch_pred,
-        _incr_index_path,
-        minhash_index_delete,
-    )
-
-    docs = _table(spark, sf_dir, "documents")
+    docs = gio.table(spark, sf_dir, "documents")
     idx = gio.clone_store(_incr_index_path(spark, sf_dir), "stream_incr_idx_")
     batch = docs.filter(_incr_batch_pred())
     stage = os.path.join(gio.tempdir("stream_incrdel_stage_"), "in")
@@ -794,12 +779,7 @@ def stream_incremental_dedup_deletes(spark: SparkSession, sf_dir: str) -> DataFr
     # jobs — overlap them (guide §2.6); both complete before run 2
     # starts, so run 2's lookup sees the committed delete either way.
     gio.run_jobs(
-        lambda: minhash_index_delete(
-            docs.filter(
-                ~_incr_batch_pred() & (F.col("doc_id") % DEL_MOD == DEL_REM)
-            ).select("doc_id"),
-            idx,
-        ),
+        lambda: minhash_index_delete(_deleted_ids(docs), idx),
         lambda: batch.filter(F.col("doc_id") % 20 == 17)
         .coalesce(1)
         .write.mode("append")
@@ -809,40 +789,6 @@ def stream_incremental_dedup_deletes(spark: SparkSession, sf_dir: str) -> DataFr
     # reprocessed (exactly-once across restarts) — and ingests batch B.
     _run_incr_stream(spark, batch.schema, stage, idx, out, ckpt)
     return _read_epoch_pairs(spark, out)
-
-
-def _wire_stream_incremental_deletes_oracle() -> None:
-    from dataclasses import replace
-
-    from sqlite_to_clickhouse_spark.operators.dedup import (
-        DEL_MOD,
-        DEL_REM,
-        _minhash_oracle,
-    )
-    from sqlite_to_clickhouse_spark.registry import _REGISTRY
-
-    # Epoch A: pairs touching batch A, other endpoint NOT in batch B
-    # (B did not exist yet; deletes had not landed).  Epoch B: pairs
-    # touching batch B with no deleted endpoint.  Disjoint by the
-    # B-endpoint test, so the union is the row multiset the stream emits.
-    ep_a = (
-        "(doc_a % 20 = 7 OR doc_b % 20 = 7) "
-        "AND doc_a % 20 <> 17 AND doc_b % 20 <> 17"
-    )
-    ep_b = (
-        f"(doc_a % 20 = 17 OR doc_b % 20 = 17) "
-        f"AND doc_a % {DEL_MOD} <> {DEL_REM} AND doc_b % {DEL_MOD} <> {DEL_REM}"
-    )
-    _REGISTRY["stream_incremental_dedup_deletes"] = replace(
-        _REGISTRY["stream_incremental_dedup_deletes"],
-        oracle=_minhash_oracle(pair_pred=f"({ep_a}) OR ({ep_b})"),
-    )
-
-
-_wire_stream_incremental_deletes_oracle()
-
-
-_wire_stream_incremental_oracle()
 
 
 @register(

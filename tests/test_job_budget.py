@@ -238,7 +238,10 @@ def _lifecycle_op(spark, sf_dir, built_stores, op, store):
 
 # Registry op -> jobs allowed on its second call (the first builds the
 # shared generations it reads), each its current count plus 2.  The ER
-# ops run on the shared kernels of entity.py.
+# ops run on the shared kernels of entity.py, the dedup ops on those of
+# dedup.py (one Jaccard verify, one doc-cluster pipeline, one SimHash
+# kernel).  embedding_matryoshka_recall plans each top-k once, which
+# keeps its count stable from run to run.
 _REGISTRY_BUDGETS = {
     "er_blocked_pairs": 12,
     "er_clusters": 20,
@@ -247,6 +250,15 @@ _REGISTRY_BUDGETS = {
     "er_golden_record_incremental": 35,
     "er_reordered_match": 10,
     "er_index_build": 27,
+    "dedup_fuzzy_minhash": 23,
+    "dedup_ngram_jaccard": 9,
+    "dedup_connected_components": 46,
+    "dedup_corpus_apply": 49,
+    "dedup_keep_best": 49,
+    "dedup_lsh_recall": 30,
+    "dedup_simhash": 4,
+    "dedup_simhash_nn": 11,
+    "embedding_matryoshka_recall": 12,
 }
 
 

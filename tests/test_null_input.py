@@ -150,6 +150,16 @@ _OPS = [
     "er_index_delete",
     "er_index_delete_compact",
     "sim_index_retrain_check",
+    # NULL text through the one doc-token frame and its consumers: the
+    # SimHash kernel maps a NULL token array to 0 like the oracle's NULL
+    # votes, the exact joins drop NULL-token docs, and the doc-cluster
+    # pipeline labels them their own cluster.
+    "dedup_simhash",
+    "dedup_ngram_jaccard",
+    "dedup_containment",
+    "dedup_connected_components",
+    "dedup_corpus_apply",
+    "dedup_keep_best",
 ]
 
 

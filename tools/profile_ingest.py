@@ -126,16 +126,13 @@ def _run(args, work: str) -> int:
     vecs = spark.read.parquet(os.path.join(cdir, "vectors.parquet"))
     names = spark.read.parquet(os.path.join(cdir, "names.parquet"))
 
-    def tokens(d):
-        return d.select("doc_id", F.array_distinct(F.filter(F.split("text", " "), lambda t: t != "")).alias("tk"))
-
     def in_range(df, col, lo, hi):
         return df.filter((F.col(col) >= lo) & (F.col(col) < hi))
 
     path = {s: os.path.join(work, s) for s in STORES}
     n0 = sz["corpus"]
     builds = {
-        "dedup": lambda: D.minhash_index_build(tokens(in_range(docs, "doc_id", 0, n0)), "doc_id", "tk", path["dedup"]),
+        "dedup": lambda: D.minhash_index_build(D._doc_tokens(in_range(docs, "doc_id", 0, n0)), "doc_id", "tk", path["dedup"]),
         "similarity": lambda: S.ann_index_build(spark, in_range(vecs, "vec_id", 0, n0), path["similarity"]).collect(),
         "entity": lambda: E.er_index_build(in_range(names, "name_id", 0, n0).select("nm"), path["entity"]),
     }
@@ -148,7 +145,7 @@ def _run(args, work: str) -> int:
 
     for b in range(min(args.ticks, sz["batches"])):
         ids = gen.batch_ids(b)
-        bdoc = tokens(in_range(docs, "doc_id", ids.start, ids.stop))
+        bdoc = D._doc_tokens(in_range(docs, "doc_id", ids.start, ids.stop))
         bvec = in_range(vecs, "vec_id", ids.start, ids.stop)
         probes = bvec.select(F.col("vec_id").alias("probe_id"), F.col("embedding").alias("p_emb"))
         bname = in_range(names, "name_id", ids.start, ids.stop).select("nm")
