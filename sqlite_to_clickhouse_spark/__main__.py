@@ -32,7 +32,7 @@ import sys
 
 from sqlite_to_clickhouse_spark.migrate import migrate_sqlite
 from sqlite_to_clickhouse_spark.session import get_spark
-from sqlite_to_clickhouse_spark.sources.sqlite import sqlite_catalog
+from sqlite_to_clickhouse_spark.sources.sqlite import rowid_bounds, sqlite_catalog
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -103,18 +103,11 @@ def main(argv=None) -> int:
         if args.num_partitions:
             num_partitions = args.num_partitions
         else:
-            # chunk-size → partition count: ceil(max_rows/chunk), capped so
-            # tiny tables stay single-partition and huge ones bounded.
-            import sqlite3
-
-            con = sqlite3.connect(args.sqlite)
-            try:
-                max_rows = max(
-                    con.execute(f"SELECT count(*) FROM {t}").fetchone()[0]
-                    for t in tables
-                )
-            finally:
-                con.close()
+            # chunk-size → partition count: ceil(max rowid span/chunk),
+            # capped so tiny tables stay single-partition and huge ones
+            # bounded. The span costs one rowid lookup per table, no scan.
+            bounds = (rowid_bounds(args.sqlite, t) for t in tables)
+            max_rows = max((hi - lo + 1 for lo, hi in bounds), default=0)
             num_partitions = max(1, min(64, -(-max_rows // args.chunk_size)))
         reports = migrate_sqlite(
             spark,

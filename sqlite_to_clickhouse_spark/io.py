@@ -66,9 +66,10 @@ def _fsync_dir(dirpath: str) -> None:
         os.close(fd)
 
 
-def run_jobs(*thunks) -> list:
+def run_jobs(*thunks, limit: int | None = None) -> list:
     """Run independent Spark ACTIONS concurrently from driver threads and
-    return their results in argument order.
+    return their results in argument order.  At most ``limit`` thunks run
+    at once, on at most ``limit`` threads (default: all of them).
 
     Spark's scheduler happily runs several jobs at once inside one
     application; actions are only sequential because driver code calls
@@ -79,29 +80,39 @@ def run_jobs(*thunks) -> list:
     FIFO scheduling keeps the first job prioritized, which is exactly
     the back-fill behaviour wanted.
 
-    Exceptions propagate (the first one raised, after all threads
-    finish) so a failed write inside a manifest_append body still aborts
-    the commit.  Shared cached frames are safe: concurrent first
-    materialization of a persisted partition is serialized by the block
-    manager (one task computes, the rest wait)."""
-    if len(thunks) == 1:
-        return [thunks[0]()]
+    Exceptions propagate (the first one in argument order, after the
+    thunks in flight finish) so a failed write inside a manifest_append
+    body still aborts the commit.  Once one thunk has failed, the thunks
+    still waiting for a thread never start.  Shared cached frames are
+    safe: concurrent first materialization of a persisted partition is
+    serialized by the block manager (one task computes, the rest wait)."""
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    import threading
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+    failed = threading.Event()
+
+    def guard(thunk):
+        def run():
+            if failed.is_set():
+                return None  # another thunk failed before this one started
+            try:
+                return thunk()
+            except BaseException:
+                failed.set()
+                raise
+
+        return run
+
+    with ThreadPoolExecutor(max_workers=min(limit or len(thunks), len(thunks))) as pool:
         # Each thunk runs in a copy of the caller's context, so what it
         # persists or makes lands in the caller's scope.
-        futures = [pool.submit(contextvars.copy_context().run, t) for t in thunks]
-        results, first_err = [], None
-        for f in futures:
-            try:
-                results.append(f.result())
-            except BaseException as ex:  # noqa: BLE001 — re-raised below
-                results.append(None)
-                first_err = first_err or ex
-        if first_err is not None:
-            raise first_err
-        return results
+        futures = [pool.submit(contextvars.copy_context().run, guard(t)) for t in thunks]
+    errors = [f.exception() for f in futures if f.exception() is not None]
+    if errors:
+        raise errors[0]
+    return [f.result() for f in futures]
 
 
 # The open scope's release list (see the module docstring).

@@ -10,11 +10,16 @@ the same shape as a JDBC partitionColumn/lowerBound/upperBound read. When a
 SQLite JDBC driver is on the Spark classpath we use ``spark.read.jdbc``
 with those options directly; otherwise (this container has no JDBC jar) a
 ``mapInPandas`` extractor opens the database *inside each task* and reads
-only its rowid slice — no driver-side collection, constant memory per task,
-executor-parallel. Values cross into Spark as raw strings and the normative
-cast battery (typemap.cast_battery, reference R5-R8) coerces them as one
-codegen'd projection — the same fetch-then-prepare split as the reference,
-minus the per-row Python loop.
+only its rowid slice. The slices are ``spark.range(0, n, 1, n)``: slice
+``i`` is partition ``i`` and looks its rowid bounds up in the extractor's
+closure, so extract, cast battery and sink run as one shuffle-free stage
+of n tasks. Each task streams its slice with ``fetchmany`` in the
+reference's 10 000-row chunks and yields one frame per chunk, so a task
+holds one chunk in memory however large its slice is. There is no
+driver-side collection. Values cross into Spark as raw strings and the
+normative cast battery (typemap.cast_battery, reference R5-R8) coerces
+them as one codegen'd projection — the same fetch-then-prepare split as
+the reference, minus the per-row Python loop.
 """
 
 from __future__ import annotations
@@ -31,6 +36,9 @@ from pyspark.sql import types as T
 from sqlite_to_clickhouse_spark.typemap import cast_battery, decl_type_to_spark
 
 ROWID = "_sqlite_rowid"
+# The reference's chunk size (main.py:106-116): rows per fetch of the
+# extractor and rowids per extract partition.
+_CHUNK_ROWS = 10_000
 
 
 def sqlite_catalog(db_path: str) -> List[str]:
@@ -57,6 +65,27 @@ def sqlite_schema(db_path: str, table: str) -> Tuple[Dict[str, T.DataType], List
     schema = {row[1]: decl_type_to_spark(row[2]) for row in info}
     pk = [row[1] for row in sorted((r for r in info if r[5]), key=lambda r: r[5])]
     return schema, pk
+
+
+def rowid_alias(db_path: str, table: str) -> bool:
+    """True when the table's primary key is SQLite's rowid alias: an
+    ``INTEGER PRIMARY KEY`` (column or table-constraint form) of a rowid
+    table, whose values are unique, non-NULL integers. Read from the
+    schema: every other primary key (``WITHOUT ROWID``, composite, a
+    non-INTEGER type, the column form with DESC) is backed by an index of
+    origin ``pk``, the alias by none."""
+    with sqlite3.connect(db_path) as con:
+        info = con.execute(f"PRAGMA table_info({_q(table)})").fetchall()
+        indexes = con.execute(f"PRAGMA index_list({_q(table)})").fetchall()
+    return sum(1 for r in info if r[5]) == 1 and all(r[3] != "pk" for r in indexes)
+
+
+def rowid_bounds(db_path: str, table: str) -> Tuple[int, int]:
+    """(MIN(rowid), MAX(rowid)) of the table — one rowid lookup each, no
+    scan; (0, -1) when it is empty."""
+    with sqlite3.connect(db_path) as con:
+        lo, hi = con.execute(f"SELECT MIN(rowid), MAX(rowid) FROM {_q(table)}").fetchone()
+    return (0, -1) if lo is None else (lo, hi)
 
 
 def _q(ident: str) -> str:
@@ -96,19 +125,14 @@ def read_sqlite(
     schema, _pk = sqlite_schema(db_path, table)
     cols = list(schema)
 
-    with sqlite3.connect(db_path) as con:
-        lo_hi = con.execute(
-            f"SELECT MIN(rowid), MAX(rowid) FROM {_q(table)}"
-        ).fetchone()
-    lo, hi = (lo_hi[0] or 0), (lo_hi[1] or 0)
+    lo, hi = rowid_bounds(db_path, table)
 
     # Row-aware partition count — the reference's 10 k-row chunk loop
     # (main.py:106-116) expressed as a partition floor: a 25-row dimension
     # table gets ONE ranged query, not num_partitions near-empty ones
     # (each costs a JDBC roundtrip + a task), while a table with
     # ≥ 10 k·num_partitions rowids keeps the full requested parallelism.
-    span = hi - lo + 1 if hi >= lo else 0
-    num_partitions = max(1, min(num_partitions, -(-span // 10_000)))
+    num_partitions = max(1, min(num_partitions, -(-(hi - lo + 1) // _CHUNK_ROWS)))
 
     if jdbc_available(spark):
         raw = (
@@ -122,7 +146,7 @@ def read_sqlite(
             .option("lowerBound", str(lo))
             .option("upperBound", str(hi + 1))
             .option("numPartitions", str(num_partitions))
-            .option("fetchsize", "10000")
+            .option("fetchsize", str(_CHUNK_ROWS))
             .load()
         )
         raw = raw.select(
@@ -149,16 +173,14 @@ def _mapinpandas_extract(
     hi: int,
     num_partitions: int,
 ) -> DataFrame:
-    """Executor-side ranged extract: each input row is one rowid range; the
-    task opens the db locally and reads only its slice. String-typed output;
-    coercion is the caller's columnar cast battery."""
+    """Executor-side ranged extract: partition ``i`` of a
+    ``spark.range(0, n, 1, n)`` reads rowid slice ``i`` from a connection
+    of its own. String-typed output; coercion is the caller's columnar
+    cast battery."""
     n = max(1, num_partitions)
     span = max(1, (hi - lo + n) // n)
     bounds = [(lo + i * span, min(hi, lo + (i + 1) * span - 1)) for i in range(n)]
     bounds = [(a, b) for a, b in bounds if a <= b] or [(0, -1)]
-    bounds_df = spark.createDataFrame(bounds, "range_lo: long, range_hi: long").repartition(
-        len(bounds)
-    )
 
     out_schema = T.StructType(
         [T.StructField(ROWID, T.LongType())]
@@ -169,15 +191,29 @@ def _mapinpandas_extract(
         f"SELECT rowid, {select_cols} FROM {_q(table)} "
         f"WHERE rowid BETWEEN ? AND ?"
     )
+    columns = [ROWID] + cols
+    chunk = _CHUNK_ROWS  # read here, so the closure carries the value
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         con = sqlite3.connect(db_path)
         try:
             for pdf in batches:
-                for a, b in zip(pdf["range_lo"], pdf["range_hi"]):
-                    rows = con.execute(query, (int(a), int(b))).fetchall()
-                    yield pd.DataFrame(rows, columns=[ROWID] + cols)
+                for i in pdf["id"]:
+                    yield from _read_slice(con, query, bounds[i], columns, chunk)
         finally:
             con.close()
 
-    return bounds_df.mapInPandas(extract, out_schema)
+    return spark.range(0, len(bounds), 1, len(bounds)).mapInPandas(extract, out_schema)
+
+
+def _read_slice(
+    con: sqlite3.Connection,
+    query: str,
+    bounds: Tuple[int, int],
+    columns: List[str],
+    chunk: int,
+) -> Iterator[pd.DataFrame]:
+    """One rowid slice as frames of at most ``chunk`` rows each."""
+    cur = con.execute(query, bounds)
+    while rows := cur.fetchmany(chunk):
+        yield pd.DataFrame(rows, columns=columns)

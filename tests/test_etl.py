@@ -12,10 +12,13 @@ import sqlite3
 import pytest
 from pyspark.sql import types as T
 
+from sqlite_to_clickhouse_spark import migrate
 from sqlite_to_clickhouse_spark.migrate import migrate_sqlite, replacing_dedup
+from sqlite_to_clickhouse_spark.sources import sqlite as src
 from sqlite_to_clickhouse_spark.sources.sinks import clickhouse_ddl, engine_clause
 from sqlite_to_clickhouse_spark.sources.sqlite import (
     read_sqlite,
+    rowid_alias,
     sqlite_catalog,
     sqlite_schema,
 )
@@ -149,6 +152,98 @@ def test_read_sqlite_partitioned_complete(spark, edge_db):
         assert sorted(r["rid"] for r in df.collect()) == [1, 2, 3, 4]
 
 
+def test_extract_streams_a_slice_in_chunks(spark, edge_db, monkeypatch):
+    """A slice is fetched in chunks of at most _CHUNK_ROWS rows, one frame
+    each, and the extract's rows do not depend on the chunk size."""
+    whole = sorted(tuple(r) for r in read_sqlite(spark, edge_db, "typemap_edge").collect())
+    monkeypatch.setattr(src, "_CHUNK_ROWS", 3)
+    df = read_sqlite(spark, edge_db, "typemap_edge", num_partitions=1)
+    assert sorted(tuple(r) for r in df.collect()) == whole
+
+    query = "SELECT rowid, c_text FROM typemap_edge WHERE rowid BETWEEN ? AND ?"
+    with sqlite3.connect(edge_db) as con:
+        frames = list(src._read_slice(con, query, (1, 4), ["rid", "c_text"], src._CHUNK_ROWS))
+    assert [len(f) for f in frames] == [3, 1]
+    assert [r for f in frames for r in f["rid"]] == [1, 2, 3, 4]
+
+
+def test_rowid_alias_is_read_from_the_schema(tmp_path):
+    """Only an INTEGER PRIMARY KEY of a rowid table is the rowid alias."""
+    path = str(tmp_path / "pk.db")
+    con = sqlite3.connect(path)
+    ddl = {
+        "col_form": "k INTEGER PRIMARY KEY, v TEXT",
+        "constraint_form": "k INTEGER, v TEXT, PRIMARY KEY (k DESC)",
+        "lower_case": "k integer primary key, v TEXT",
+        "int_type": "k INT PRIMARY KEY, v TEXT",
+        "col_form_desc": "k INTEGER PRIMARY KEY DESC, v TEXT",
+        "without_rowid": "k INTEGER PRIMARY KEY, v TEXT) WITHOUT ROWID; --",
+        "text_key": "k TEXT PRIMARY KEY, v TEXT",
+        "composite": "a INTEGER, b INTEGER, PRIMARY KEY (a, b)",
+        "no_key": "k INTEGER, v TEXT",
+    }
+    for t, cols in ddl.items():
+        con.execute(f"CREATE TABLE {t} ({cols})")
+    con.close()
+    got = {t for t in ddl if rowid_alias(path, t)}
+    assert got == {"col_form", "constraint_form", "lower_case"}
+
+
+def test_migrate_dedup_branches(spark, tmp_path, monkeypatch):
+    """One database, both dedup branches and the pk-less path: the
+    rowid-alias table skips the window and keeps every row; a DATETIME
+    key whose values collide after the cast keeps one row per key, the
+    highest rowid; the pk-less table is copied as-is."""
+    path = str(tmp_path / "branches.db")
+    con = sqlite3.connect(path)
+    con.execute("CREATE TABLE alias_t (k INTEGER PRIMARY KEY, v TEXT)")
+    con.executemany("INSERT INTO alias_t VALUES (?, ?)", [(i, f"v{i}") for i in range(1, 6)])
+    # Re-written rows: the latest write replaces the row in place.
+    con.executemany("INSERT OR REPLACE INTO alias_t VALUES (?, ?)", [(2, "new2"), (4, "new4")])
+    con.execute("CREATE TABLE dt_t (ts DATETIME PRIMARY KEY, v TEXT)")
+    con.executemany(
+        "INSERT INTO dt_t VALUES (?, ?)",
+        [
+            ("2024-01-01 00:00:00.100", "a-old"),
+            ("2024-01-01 00:00:00.200", "a-new"),
+            ("2024-01-02 00:00:00", "b"),
+            ("2024-01-03 00:00:00.5", "c-old"),
+            ("2024-01-03 00:00:00.25", "c-new"),
+        ],
+    )
+    con.execute("CREATE TABLE plain_t (k INTEGER, v TEXT)")
+    con.executemany("INSERT INTO plain_t VALUES (?, ?)", [(1, "x"), (1, "x"), (2, "y")])
+    con.commit()
+    con.close()
+
+    windowed = []
+
+    def spy(df, keys, version_col):
+        windowed.append(keys)
+        return replacing_dedup(df, keys, version_col)
+
+    monkeypatch.setattr(migrate, "replacing_dedup", spy)
+    reports = migrate_sqlite(spark, path, str(tmp_path / "out"))
+    assert list(reports) == ["alias_t", "dt_t", "plain_t"]
+    assert windowed == [["ts"]]
+    assert [(r.rows, r.pk, r.deduped) for r in reports.values()] == [
+        (5, ["k"], True),
+        (3, ["ts"], True),
+        (3, [], False),
+    ]
+
+    def rows(t):
+        return sorted(tuple(r) for r in spark.read.parquet(reports[t].target).collect())
+
+    assert rows("alias_t") == [(1, "v1"), (2, "new2"), (3, "v3"), (4, "new4"), (5, "v5")]
+    assert rows("dt_t") == [
+        (dt.datetime(2024, 1, 1), "a-new"),
+        (dt.datetime(2024, 1, 2), "b"),
+        (dt.datetime(2024, 1, 3), "c-new"),
+    ]
+    assert rows("plain_t") == [(1, "x"), (1, "x"), (2, "y")]
+
+
 def test_read_sqlite_empty_table(spark, tmp_path):
     """Zero-row tables must come back empty with the inferred schema (the
     reference migrates them too — README log shows 0-row tables)."""
@@ -240,6 +335,26 @@ def test_cli_flag_parity_and_migration(spark, sf_dir, tmp_path):
     assert got.count() == 25
     # The shared session must survive the CLI run.
     assert spark.sql("SELECT 1").collect()[0][0] == 1
+
+
+def test_cli_migrates_tables_with_keyword_and_spaced_names(spark, tmp_path):
+    """The CLI sizes its partitions from quoted rowid bounds, so tables
+    named like a keyword or with a space migrate."""
+    from sqlite_to_clickhouse_spark.__main__ import main
+
+    db = str(tmp_path / "names.db")
+    con = sqlite3.connect(db)
+    con.execute('CREATE TABLE "group" (id INTEGER PRIMARY KEY, name TEXT)')
+    con.executemany('INSERT INTO "group" VALUES (?, ?)', [(1, "a"), (2, "b")])
+    con.execute('CREATE TABLE "my table" (x INTEGER)')
+    con.execute('INSERT INTO "my table" VALUES (7)')
+    con.commit()
+    con.close()
+    out = str(tmp_path / "out")
+    assert main(["--sqlite", db, "--output-dir", out]) == 0
+    got = sorted(tuple(r) for r in spark.read.parquet(f"{out}/group").collect())
+    assert got == [(1, "a"), (2, "b")]
+    assert spark.read.parquet(f"{out}/my table").collect()[0]["x"] == 7
 
 
 def test_cli_requires_a_sink(capsys):

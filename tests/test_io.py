@@ -518,3 +518,65 @@ def test_scope_keeps_every_registration_from_concurrent_threads(tmp_path, monkey
         sys.setswitchinterval(interval)
     assert sum(len(m) for m in made) == 16 * 50
     assert os.listdir(tmp_path) == []
+
+
+def test_run_jobs_limit_bounds_threads_and_thunks_in_flight():
+    """More thunks than the limit: never more than ``limit`` run at once,
+    on no more than ``limit`` threads, and the results keep argument
+    order.  Each thunk waits at a 3-party barrier, so a limit below 3
+    breaks the barrier and one above 3 lets a fourth thunk in."""
+    import sys
+    import threading
+
+    lock = threading.Lock()
+    state = {"now": 0, "peak": 0}
+    threads = set()
+    barrier = threading.Barrier(3, timeout=10)
+
+    def thunk(i: int):
+        def run():
+            with lock:
+                state["now"] += 1
+                state["peak"] = max(state["peak"], state["now"])
+                threads.add(threading.get_ident())
+            barrier.wait()
+            with lock:
+                state["now"] -= 1
+            return i
+
+        return run
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        assert io.run_jobs(*[thunk(i) for i in range(12)], limit=3) == list(range(12))
+    finally:
+        sys.setswitchinterval(interval)
+    assert state["peak"] == 3
+    assert len(threads) == 3
+
+
+def test_run_jobs_failure_starts_no_further_thunk():
+    """A failed thunk is re-raised once the thunks in flight finish; the
+    ones still waiting for a thread never start."""
+    import functools
+    import threading
+
+    started, finished = [], []
+    gate = threading.Event()
+
+    def slow():
+        started.append("slow")
+        gate.wait(5)
+        finished.append("slow")
+
+    def boom():
+        started.append("boom")
+        raise ValueError("boom")
+
+    # `slow` holds one thread until `boom` has failed on the other.
+    threading.Timer(0.2, gate.set).start()
+    with pytest.raises(ValueError, match="boom"):
+        io.run_jobs(slow, boom, *[functools.partial(started.append, i) for i in range(10)], limit=2)
+    assert finished == ["slow"]
+    assert set(started) == {"slow", "boom"}

@@ -259,6 +259,9 @@ _REGISTRY_BUDGETS = {
     "dedup_simhash": 4,
     "dedup_simhash_nn": 11,
     "embedding_matryoshka_recall": 12,
+    # One shuffle-free write job per table (customer, nation), then the
+    # read-back: 5 jobs.
+    "migrate_sqlite_roundtrip": 7,
 }
 
 
