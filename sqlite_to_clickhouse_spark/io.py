@@ -16,8 +16,13 @@ clean up however they are called.  Functions that return a lazy frame
 never open one, because the frame may still read what they made; their
 caller wraps the call and the consumption of its result in one scope.
 With no scope open nothing is tracked.  Process-lifetime state (the
-``cache_base`` generations, staged fixture copies among them) stays on
-plain ``tempfile``.
+``cache_base`` generations) stays on plain ``tempfile``.
+
+Caches derived from the fixture (the persisted index stores, the bucketed
+join layout, the staged copies of tables in other formats) are immutable
+generations made by one helper, ``staged``: it alone decides which source
+files, which build parameters and which store format (``GEN_FORMAT``) a
+generation was built from, and so when it can be served again.
 """
 
 from __future__ import annotations
@@ -265,8 +270,8 @@ def ensure_generation(kind: str, key: str, fp: str, build, *, force: bool = Fals
     old rebuild-in-place protocol.  Old generations are GC'd lazily by
     age (``_gc_generations``), long after their readers are gone.
 
-    ``fp`` fingerprints the source data (size+mtime of the input parquet);
-    a regenerated fixture yields a new fingerprint, hence a new
+    ``fp`` fingerprints what the cache was built from (``staged`` builds
+    it); a regenerated fixture yields a new fingerprint, hence a new
     generation.  ``force=True`` builds a fresh generation even when a
     valid one exists (the "a build is a fresh build" gate ops) — the
     SERIAL file makes each forced build's directory name unique.
@@ -336,16 +341,39 @@ def ensure_generation(kind: str, key: str, fp: str, build, *, force: bool = Fals
     return gen
 
 
-def staged(kind: str, sf_dir: str, tables: "tuple[str, ...]", name: str, write) -> str:
-    """Path of a copy of fixture ``tables`` staged in another layout (a
-    SQLite db, a CSV or text dir, a stream source dir): ``write(path)``
-    makes it, once per version of the tables' parquet files, as ``name``
-    inside an ``ensure_generation`` generation.  A reader listing the
-    copy's directory never sees the generation marker, and a regenerated
-    fixture gets a fresh generation instead of the stale copy."""
-    fp = file_fingerprint(*(os.path.join(sf_dir, f"{t}.parquet") for t in tables))
-    gen = ensure_generation(kind, sf_dir, fp, lambda g: write(os.path.join(g, name)))
-    return os.path.join(gen, name)
+# Part of every fingerprint ``staged`` writes: bump it when the layout of a
+# cached generation changes, and every cache is rebuilt once instead of a
+# generation written by older code being served.
+GEN_FORMAT = "format-2"
+
+
+def staged(
+    kind: str,
+    sf_dir: str,
+    tables: "tuple[str, ...]",
+    name: "str | None",
+    build,
+    *,
+    params: tuple = (),
+    force: bool = False,
+) -> str:
+    """The cache of ``kind`` built from fixture ``tables``: an
+    ``ensure_generation`` generation keyed on the tables' parquet files,
+    the caller's build ``params`` and ``GEN_FORMAT``, so a regenerated
+    fixture, another split or cap, or another layout gets a fresh
+    generation instead of the stale one.
+
+    ``build(path)`` makes the cache at ``path`` and the path is returned.
+    With a ``name`` it is that entry inside the generation: a copy of the
+    tables staged in another layout (a SQLite db, a CSV or text dir, a
+    stream source dir), whose readers list its directory and so never see
+    the generation marker.  With ``name=None`` it is the generation dir
+    itself (an index store, the bucketed join layout).  ``force=True``
+    builds a fresh generation even when a valid one exists."""
+    files = (os.path.join(sf_dir, f"{t}.parquet") for t in tables)
+    fp = "|".join((file_fingerprint(*files), *map(str, params), GEN_FORMAT))
+    at = (lambda g: g) if name is None else (lambda g: os.path.join(g, name))
+    return at(ensure_generation(kind, sf_dir, fp, lambda g: build(at(g)), force=force))
 
 
 # ---------------------------------------------------------------------------
@@ -372,7 +400,11 @@ def staged(kind: str, sf_dir: str, tables: "tuple[str, ...]", name: str, write) 
 #     CURRENT); a crash between them leaves an ORPHAN version whose data
 #     is invisible AND whose epoch is un-applied — the retry re-appends
 #     fresh files and commits a later version, so neither the pre-r10
-#     double-append nor the ADVICE-r10 silent-drop window exists.
+#     double-append nor the ADVICE-r10 silent-drop window exists.  Every
+#     manifest carries that chain; one without it is not a store this
+#     protocol wrote (``GEN_FORMAT`` keeps older cached stores out of
+#     reach), and reading it raises ``KeyError`` rather than reporting an
+#     empty chain.
 #
 # File paths inside a manifest are RELATIVE to the store root, so a
 # file-level clone of the whole store (clone_store — how the lifecycle
@@ -471,9 +503,9 @@ def manifest_versions(root: str) -> "list[str]":
 
     Ordering is NUMERIC on the serial (ADVICE r11): the zero pad covers
     six digits, and past v999999 a lexicographic sort inverts
-    (``"v1000000" < "v999999"``), mis-ordering time travel, the orphan
-    cutoff in ``_applied_chain_scan``, and max-version recovery.  ~2
-    years of 1-minute micro-batches reaches the pad — cheap to be exact.
+    (``"v1000000" < "v999999"``), mis-ordering time travel and
+    max-version recovery.  ~2 years of 1-minute micro-batches reaches the
+    pad — cheap to be exact.
     """
     mdir = _manifest_dir(root)
     try:
@@ -548,41 +580,16 @@ def _retain_applied(vals: set) -> list:
     return sorted(vals, key=str)
 
 
-def _applied_chain_scan(root: str, upto: "str | None") -> "dict[str, set]":
-    """Legacy applied-value recovery: fold the scalar ``meta`` values of
-    every committed version ≤ ``upto`` into one key → value-set dict.
-    Versions NEWER than ``upto`` (the visible CURRENT) are orphans of a
-    crashed commit — their data never published, so their meta must not
-    count as applied (ADVICE r10 medium).  The cutoff compares SERIALS,
-    not names — lexicographic comparison inverts past the 6-digit pad
-    (ADVICE r11).  Only needed once per pre-r11 store: every r11+ commit
-    carries the cumulative chain forward in-manifest."""
-    chain: "dict[str, set]" = {}
-    for v in manifest_versions(root):
-        if upto is not None and _version_serial(v) > _version_serial(upto):
-            continue
-        m = manifest_read(root, v) or {}
-        for k, val in m.get("meta", {}).items():
-            if val is not None and isinstance(val, (str, int, float, bool)):
-                chain.setdefault(k, set()).add(val)
-    return chain
-
-
 def manifest_applied_chain(root: str) -> "dict[str, list]":
     """The VISIBLE applied chain of a store, as committed JSON shape
     ({key: sorted values}) — what a compaction passes as
     ``applied_seed`` so the fresh store remembers which epochs the
     source already applied (a stream swapped onto the compacted store
     must not double-append on retry)."""
-    cur = manifest_current(root)
-    if cur is None:
+    m = manifest_read(root)  # strict: corrupt CURRENT raises
+    if m is None:
         return {}
-    m = manifest_read(root) or {}  # strict: corrupt CURRENT raises
-    if "applied" in m:
-        return {k: list(v) for k, v in m["applied"].items()}
-    return {
-        k: sorted(v, key=str) for k, v in _applied_chain_scan(root, cur).items()
-    }
+    return {k: list(v) for k, v in m["applied"].items()}
 
 
 def manifest_commit(
@@ -627,14 +634,10 @@ def manifest_commit(
         target = os.path.join(mdir, f"{version}.json")
         if os.path.exists(target):  # unreachable after recovery; guard anyway
             raise FileExistsError(f"manifest version already committed: {target}")
-        cur = manifest_current(root)
         prev = manifest_read(root)  # strict: corrupt CURRENT raises, never seeds {}
-        if prev is None:
-            chain: "dict[str, set]" = {}
-        elif "applied" in prev:
-            chain = {k: set(v) for k, v in prev["applied"].items()}
-        else:  # pre-r11 store: seed the chain from the visible lineage once
-            chain = _applied_chain_scan(root, cur)
+        chain: "dict[str, set]" = (
+            {} if prev is None else {k: set(v) for k, v in prev["applied"].items()}
+        )
         for k, vals in (applied_seed or {}).items():
             # Cross-store inheritance (compaction: the fresh store must
             # remember the source's applied epochs or a stream swapped
@@ -716,15 +719,11 @@ def manifest_applied_meta(root: str, key: str) -> set:
     swinging CURRENT leaves that commit's data invisible, and treating
     its meta as applied would make the retry skip its re-append — the
     micro-batch silently lost (ADVICE r10 medium).  No CURRENT → nothing
-    applied.  Pre-r11 stores (no chain in CURRENT) fall back to scanning
-    versions ≤ CURRENT."""
-    cur = manifest_current(root)
-    if cur is None:
+    applied; a CURRENT manifest without the chain raises ``KeyError``."""
+    m = manifest_read(root)  # strict: corrupt CURRENT raises
+    if m is None:
         return set()
-    m = manifest_read(root) or {}  # strict: corrupt CURRENT raises
-    if "applied" in m:
-        return set(m["applied"].get(key, []))
-    return _applied_chain_scan(root, cur).get(key, set())
+    return set(m["applied"].get(key, []))
 
 
 @contextlib.contextmanager
@@ -919,12 +918,17 @@ def clone_store(src: str, prefix: str) -> str:
 
 
 def file_fingerprint(*paths: str) -> str:
-    """``size:mtime_ns`` of each file (``missing`` when absent), joined by
-    ``|`` — the generation key of a cache built from those files, so a
-    regenerated fixture builds a new generation instead of serving the
-    old one."""
+    """``size:mtime_ns`` of each file (``missing`` when absent; a directory
+    lists every file under it with its relative path), joined by ``|`` —
+    the key of whatever was derived from those files (a cached generation,
+    an inferred schema), so a rewritten file is read afresh."""
 
     def one(p: str) -> str:
+        if os.path.isdir(p):
+            return ",".join(
+                f"{os.path.relpath(f, p)}={one(f)}"
+                for f in sorted(os.path.join(d, n) for d, _, ns in os.walk(p) for n in ns)
+            )
         try:
             st = os.stat(p)
         except OSError:
@@ -1019,15 +1023,6 @@ _INFER_CONFS = (
 )
 
 
-def _files_signature(path: str) -> tuple:
-    """(path, size, mtime) of every file at or under a local path."""
-    if os.path.isfile(path):
-        files = [path]
-    else:
-        files = sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
-    return tuple((f, (st := os.stat(f)).st_size, st.st_mtime_ns) for f in files)
-
-
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that infers a local path's schema once
     per version of its files; other paths go straight to Spark."""
@@ -1036,7 +1031,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     key = (
         path,
         tuple(spark.conf.get(k, None) for k in _INFER_CONFS),
-        _files_signature(path),
+        file_fingerprint(path),
     )
     schema = _SCHEMAS.get(key)
     if schema is not None:

@@ -1014,28 +1014,20 @@ def _incr_batch_pred():
 
 
 def _incr_index_path(spark: SparkSession, sf_dir: str, *, force: bool = False) -> str:
-    """Valid persisted corpus index for the registered incremental ops,
-    built once per (documents fingerprint, split, schema version) into an
-    immutable generation dir (io.ensure_generation) and reused across
-    invocations — amortizing the build is the point of the index.  ``force=True``: a build is a fresh build (new generation,
+    """Valid persisted corpus index for the registered incremental ops:
+    a generation built once per (documents, split) by ``io.staged`` and
+    reused across invocations — amortizing the build is the point of the
+    index.  ``force=True``: a build is a fresh build (new generation,
     CURRENT swings, concurrent readers of the old one are untouched)."""
-    from sqlite_to_clickhouse_spark.io import ensure_generation
-
-    fp = gio.file_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    # "|md5": the hash family; a cached generation built with it keeps its
-    # fingerprint and is reused.
-    # "|m1": manifest-committed layout (r10) — a cached pre-manifest
-    # generation fingerprints differently and is rebuilt, never half-read.
-    # "|c1": pb-clustered bands layout (r12) — a cached generation built
-    # with the old map-side partitionBy write (tasks × 32 tiny files)
-    # rebuilds once into the compact layout every later scan assumes.
-    fp = f"{fp}|md5|mod{INCR_MOD}r{INCR_REM}|v2|m1|c1"
 
     def _build(gen: str) -> None:
         corpus = table(spark, sf_dir, "documents").filter(~_incr_batch_pred())
         minhash_index_build(_doc_tokens(corpus), "doc_id", "tk", gen)
 
-    return ensure_generation("minhash_idx", sf_dir, fp, _build, force=force)
+    return gio.staged(
+        "minhash_idx", sf_dir, ("documents",), None, _build,
+        params=(INCR_MOD, INCR_REM), force=force,
+    )
 
 
 def _relation_counts(spark: SparkSession, path: str) -> DataFrame:

@@ -674,7 +674,7 @@ def er_golden_record_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The catalog's blocking postings and entity map, PERSISTED so the
 # serving path pays the clustering once per catalog instead of once per
 # call.  It mirrors the MinHash index (dedup.py): partitioned parquet
-# under an immutable io.ensure_generation dir with manifest-committed
+# under an immutable io.staged generation with manifest-committed
 # snapshots (io.py protocol, declared once as ``_ER_STORE``); batch
 # lookups join the stored map, appends grow it file-additively, deletes
 # tombstone it.  The store ops compose the in-plan kernels above: the
@@ -1102,18 +1102,15 @@ def _er_index_path(spark: SparkSession, sf_dir: str, *, force: bool = False) -> 
     """Valid persisted catalog ER index (immutable generation, shared
     across invocations — amortizing the one clustering run is the whole
     point of the store)."""
-    from sqlite_to_clickhouse_spark.io import ensure_generation
-
-    fp = gio.file_fingerprint(os.path.join(sf_dir, "part.parquet"))
-    fp = (
-        f"{fp}|cap{_ER_BLOCK_DF_CAP}|d{_ER_MAXDIST}"
-        f"|nmb{_ER_IDX_BUCKET_MOD}r{_ER_IDX_BUCKET_REM}|v2"
-    )
 
     def _build(gen: str) -> None:
         er_index_build(_er_catalog_names(spark, sf_dir), gen)
 
-    return ensure_generation("er_idx", sf_dir, fp, _build, force=force)
+    return gio.staged(
+        "er_idx", sf_dir, ("part",), None, _build,
+        params=(_ER_BLOCK_DF_CAP, _ER_MAXDIST, _ER_IDX_BUCKET_MOD, _ER_IDX_BUCKET_REM),
+        force=force,
+    )
 
 
 _ER_SETMATCH_T = 0.5  # token-set Jaccard acceptance threshold

@@ -94,13 +94,10 @@ _CUSTOMER_ORACLE = """
 @register("scan_jdbc", oracle=_CUSTOMER_ORACLE, tags=("source", "etl"))
 def scan_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned SQLite extract (reference R3/R4) through the JDBC-shaped
-    ranged-read path + cast battery (R5-R8).
-
-    Uses spark.read.jdbc with partitionColumn=rowid when a SQLite JDBC
-    driver is on the classpath; otherwise the mapInPandas ranged extractor
-    issues the identical per-partition queries executor-side (this
-    container ships no JDBC jar). Either way: 8 concurrent range scans,
-    no driver-side collection, coercion in one codegen'd projection.
+    ranged read + cast battery (R5-R8): the mapInPandas extractor issues
+    one rowid-range query per partition executor-side. Up to 8 concurrent
+    range scans, no driver-side collection, coercion in one codegen'd
+    projection.
     """
     db = _stage_sqlite(sf_dir)
     return read_sqlite(spark, db, "customer", num_partitions=8)

@@ -868,7 +868,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     The layout is built ONCE per source-fixture generation and reused —
     that IS the bucketing contract (pay the shuffle at layout time,
     amortize over every query).  Each generation lives in an IMMUTABLE
-    fingerprint-keyed subdirectory (io.ensure_generation, ADVICE r7): a
+    fingerprint-keyed subdirectory (io.staged, ADVICE r7): a
     regenerated fixture builds a NEW directory and swings the CURRENT
     pointer, so a concurrent session mid-scan on the old layout is never
     rmtree'd out from under — the residual read race of the old
@@ -880,12 +880,8 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
-    from sqlite_to_clickhouse_spark.io import ensure_generation, file_fingerprint
+    from sqlite_to_clickhouse_spark.io import staged
     from sqlite_to_clickhouse_spark.sources.sinks import write_bucketed
-
-    fp = file_fingerprint(
-        *(os.path.join(sf_dir, f"{t}.parquet") for t in ("orders", "lineitem"))
-    )
 
     def _build(gen: str) -> None:
         gtag = os.path.basename(gen)[4:]  # strip "gen-"
@@ -898,7 +894,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
             sort_cols=["l_orderkey"], path=os.path.join(gen, "lineitem"),
         )
 
-    gen = ensure_generation("coloc", sf_dir, fp, _build)
+    gen = staged("coloc", sf_dir, ("orders", "lineitem"), None, _build)
     # Catalog names carry the GENERATION tag: table names are
     # session-global, so names keyed on anything coarser (sf_dir alone)
     # could satisfy tableExists while pointing at a different layout.

@@ -1621,21 +1621,14 @@ def ann_index_append(
 
 def _ensure_index(spark: SparkSession, sf_dir: str, *, force: bool = False):
     """Valid persisted IVF-PQ index path for ``sf_dir``, building a FRESH
-    immutable generation if none matches the source fingerprint
-    (io.ensure_generation — every build lands in a new subdirectory and
-    the CURRENT pointer swaps atomically, so a concurrent session
-    mid-scan on the previous index is never rmtree'd out from under it).
+    immutable generation (io.staged) if none matches the embeddings
+    fixture — every build lands in a new subdirectory and the CURRENT
+    pointer swaps atomically, so a concurrent session mid-scan on the
+    previous index is never rmtree'd out from under it.
 
     Returns ``(path, manifest)``: ``manifest`` is the component→row-count
     dict from the build that ran, or ``None`` when a cached generation
     was reused (no build, no manifest)."""
-    from sqlite_to_clickhouse_spark.io import ensure_generation
-
-    # The embeddings fixture regenerates while /tmp may persist: a stale
-    # index would serve neighbors of the previous corpus.  "|m1":
-    # manifest-committed layout (r10) — a cached pre-manifest generation
-    # fingerprints differently and is rebuilt, never half-read.
-    fp = gio.file_fingerprint(os.path.join(sf_dir, "embeddings.parquet")) + "|m1"
     manifest: dict = {}
 
     def _build(gen: str) -> None:
@@ -1647,7 +1640,7 @@ def _ensure_index(spark: SparkSession, sf_dir: str, *, force: bool = False):
             }
         )
 
-    path = ensure_generation("ann_index", sf_dir, fp, _build, force=force)
+    path = gio.staged("ann_index", sf_dir, ("embeddings",), None, _build, force=force)
     return path, (manifest or None)
 
 
@@ -1739,22 +1732,18 @@ def _ann_batch_pred():
 def _ensure_incr_ann_index(spark: SparkSession, sf_dir: str) -> str:
     """Valid persisted CORPUS-ONLY IVF-PQ index (vectors with
     vec_id % 10 != 7) for the registered incremental ANN ops, cached as
-    an immutable generation per (embeddings fingerprint, split) — the
-    dedup _incr_index_path pattern.  Registered ops CLONE it before
-    appending (appends mutate; the shared generation must stay
-    append-free)."""
-    from sqlite_to_clickhouse_spark.io import ensure_generation
-
-    fp = (
-        gio.file_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-        + f"|m1|annincr|mod{ANN_INCR_MOD}r{ANN_INCR_REM}"
-    )
+    an immutable generation per (embeddings, split) — the dedup
+    _incr_index_path pattern.  Registered ops CLONE it before appending
+    (appends mutate; the shared generation must stay append-free)."""
 
     def _build(gen: str) -> None:
         corpus = table(spark, sf_dir, "embeddings").filter(~_ann_batch_pred())
         ann_index_build(spark, corpus, gen).collect()
 
-    return ensure_generation("ann_incr_idx", sf_dir, fp, _build)
+    return gio.staged(
+        "ann_incr_idx", sf_dir, ("embeddings",), None, _build,
+        params=(ANN_INCR_MOD, ANN_INCR_REM),
+    )
 
 
 def _quantizer_digest(path: str) -> str:

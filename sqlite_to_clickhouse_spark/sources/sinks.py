@@ -53,20 +53,20 @@ def clickhouse_ddl(
     schema: T.StructType,
     *,
     order_by: Optional[Sequence[str]] = None,
-    database: str = "default",
 ) -> str:
     """CREATE TABLE DDL with the reference's engine clause (main.py:64-71).
 
     ``order_by=None`` reproduces the reference's ``ORDER BY tuple()``
     (it passes primary_key=None at main.py:164); passing the pk columns
-    gives ReplacingMergeTree a real dedup key.
+    gives ReplacingMergeTree a real dedup key. The table goes in the
+    ``default`` database.
     """
     cols = ",\n  ".join(
         f"`{f.name}` {clickhouse_type(f.dataType)}" for f in schema.fields
     )
     order = ", ".join(order_by) if order_by else "tuple()"
     return (
-        f"CREATE TABLE IF NOT EXISTS `{database}`.`{table}` (\n"
+        f"CREATE TABLE IF NOT EXISTS `default`.`{table}` (\n"
         f"  {cols}\n"
         f") ENGINE = ReplacingMergeTree()\nORDER BY ({order})"
     )
@@ -85,18 +85,18 @@ def write_clickhouse(
     table: str,
     *,
     order_by: Optional[Sequence[str]] = None,
-    mode: str = "append",
     batchsize: int = 100_000,
     properties: Optional[Dict[str, str]] = None,
 ) -> None:
-    """JDBC bulk load (reference R11): partition-parallel batched inserts.
+    """JDBC bulk load (reference R11): partition-parallel batched inserts,
+    appended to the table.
 
     Each Spark task inserts its partition with ``batchsize``-row prepared
     batches — the distributed analog of the reference's chunked
     client.execute loop (main.py:169-173, max_insert_block_size at
     main.py:14). Requires a ClickHouse JDBC driver on the classpath."""
     writer = (
-        df.write.mode(mode)
+        df.write.mode("append")
         .format("jdbc")
         .option("url", url)
         .option("dbtable", table)
@@ -113,12 +113,11 @@ def sink_parquet(
     df: DataFrame,
     path: str,
     *,
-    mode: str = "overwrite",
     partition_by: Optional[Sequence[str]] = None,
 ) -> None:
-    """Parquet batch sink. ``partition_by`` buys partition pruning for every
-    downstream scan of the written dataset."""
-    writer = df.write.mode(mode)
+    """Parquet batch sink, overwriting ``path``. ``partition_by`` buys
+    partition pruning for every downstream scan of the written dataset."""
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -131,7 +130,6 @@ def write_bucketed(
     n_buckets: int,
     *,
     sort_cols: Optional[Sequence[str]] = None,
-    mode: str = "overwrite",
     path: Optional[str] = None,
 ) -> None:
     """Bucketed warehouse table: rows hash-clustered (and optionally
@@ -146,13 +144,13 @@ def write_bucketed(
     ``path`` makes it an EXTERNAL bucketed table at that location instead
     of a managed table under the session warehouse dir. A fresh session's
     in-memory catalog does not know about a previous process's managed
-    table files, so ``mode="overwrite"`` cannot reclaim them and the
+    table files, so the overwrite cannot reclaim them and the
     write dies with LOCATION_ALREADY_EXISTS; a caller that re-creates
     its layout per run should pass a fresh ``path`` (and we drop any
     same-name catalog entry so the new location wins)."""
     if path is not None:
         df.sparkSession.sql(f"DROP TABLE IF EXISTS {table_name}")
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
+    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     if path is not None:

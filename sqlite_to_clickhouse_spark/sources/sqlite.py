@@ -6,11 +6,10 @@ in chunks, main.py:106-116, 167).
 
 Scale design: the reference streams one cursor single-threaded; here the
 extract is *partitioned by rowid range* so N partitions read concurrently —
-the same shape as a JDBC partitionColumn/lowerBound/upperBound read. When a
-SQLite JDBC driver is on the Spark classpath we use ``spark.read.jdbc``
-with those options directly; otherwise (this container has no JDBC jar) a
-``mapInPandas`` extractor opens the database *inside each task* and reads
-only its rowid slice. The slices are ``spark.range(0, n, 1, n)``: slice
+the same shape as a JDBC partitionColumn/lowerBound/upperBound read. A
+``mapInPandas`` extractor opens the database *inside each task* (so, like
+a JDBC read of a SQLite file, it needs the file on every executor) and
+reads only its rowid slice. The slices are ``spark.range(0, n, 1, n)``: slice
 ``i`` is partition ``i`` and looks its rowid bounds up in the extractor's
 closure, so extract, cast battery and sink run as one shuffle-free stage
 of n tasks. Each task streams its slice with ``fetchmany`` in the
@@ -92,15 +91,6 @@ def _q(ident: str) -> str:
     return '"' + ident.replace('"', '""') + '"'
 
 
-def jdbc_available(spark: SparkSession) -> bool:
-    """True if a SQLite JDBC driver is on the JVM classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.sqlite.JDBC")  # noqa: SLF001
-        return True
-    except Exception:
-        return False
-
-
 def read_sqlite(
     spark: SparkSession,
     db_path: str,
@@ -112,11 +102,9 @@ def read_sqlite(
 ) -> DataFrame:
     """Partitioned extract of one SQLite table with the cast battery applied.
 
-    JDBC path (driver jar present): ``spark.read.jdbc`` with
-    partitionColumn=rowid — Spark issues one ranged query per partition.
-    Fallback path: the same ranged queries, issued by a ``mapInPandas``
-    extractor running in the executors. Either way the logical result is
-    identical and the §1.2 coercions happen Spark-side.
+    One ranged rowid query per partition, issued by a ``mapInPandas``
+    extractor running in the executors; values arrive as strings and the
+    §1.2 coercions happen Spark-side.
 
     ``with_rowid`` exposes SQLite's rowid as ``_sqlite_rowid`` — the
     insertion-order version column the migration path uses for
@@ -130,31 +118,11 @@ def read_sqlite(
     # Row-aware partition count — the reference's 10 k-row chunk loop
     # (main.py:106-116) expressed as a partition floor: a 25-row dimension
     # table gets ONE ranged query, not num_partitions near-empty ones
-    # (each costs a JDBC roundtrip + a task), while a table with
+    # (each costs a task), while a table with
     # ≥ 10 k·num_partitions rowids keeps the full requested parallelism.
     num_partitions = max(1, min(num_partitions, -(-(hi - lo + 1) // _CHUNK_ROWS)))
 
-    if jdbc_available(spark):
-        raw = (
-            spark.read.format("jdbc")
-            .option("url", f"jdbc:sqlite:{db_path}")
-            .option(
-                "dbtable",
-                f"(SELECT rowid AS {ROWID}, * FROM {_q(table)}) AS t",
-            )
-            .option("partitionColumn", ROWID)
-            .option("lowerBound", str(lo))
-            .option("upperBound", str(hi + 1))
-            .option("numPartitions", str(num_partitions))
-            .option("fetchsize", str(_CHUNK_ROWS))
-            .load()
-        )
-        raw = raw.select(
-            F.col(ROWID).cast("long"),
-            *[F.col(c).cast("string").alias(c) for c in cols],
-        )
-    else:
-        raw = _mapinpandas_extract(spark, db_path, table, cols, lo, hi, num_partitions)
+    raw = _mapinpandas_extract(spark, db_path, table, cols, lo, hi, num_partitions)
 
     out = [F.col(ROWID)] if with_rowid else []
     out += [

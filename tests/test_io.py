@@ -580,3 +580,99 @@ def test_run_jobs_failure_starts_no_further_thunk():
         io.run_jobs(slow, boom, *[functools.partial(started.append, i) for i in range(10)], limit=2)
     assert finished == ["slow"]
     assert set(started) == {"slow", "boom"}
+
+
+def test_staged_never_serves_a_generation_of_another_format(tmp_path, monkeypatch):
+    """A cached generation is reused only while its fixture files, build
+    params and ``GEN_FORMAT`` all match: a generation whose marker carries
+    another format constant is rebuilt, never served."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "t.parquet").write_bytes(b"v1")
+    builds = []
+
+    def build(tag):
+        def _b(path):
+            builds.append(tag)
+            os.makedirs(path, exist_ok=True)
+            with open(os.path.join(path, "data"), "w") as fh:
+                fh.write(tag)
+        return _b
+
+    def stage(tag, **kw):
+        return io.staged("fmt", str(sf), ("t",), None, build(tag), **kw)
+
+    def marker(gen):
+        return io.read_marker(os.path.join(gen, io.GEN_MARKER))
+
+    fmt = io.GEN_FORMAT
+    g1 = stage("b1", params=(3, 7))
+    assert stage("b2", params=(3, 7)) == g1 and builds == ["b1"]
+    assert marker(g1).endswith(f"|3|7|{fmt}")
+    monkeypatch.setattr(io, "GEN_FORMAT", "older-format")
+    g2 = stage("b3", params=(3, 7))
+    assert g2 != g1 and builds == ["b1", "b3"]
+    assert marker(g2).endswith("|older-format")
+    monkeypatch.setattr(io, "GEN_FORMAT", fmt)
+    # CURRENT now names the other-format generation: it is rebuilt too.
+    g3 = stage("b4", params=(3, 7))
+    assert g3 not in (g1, g2) and builds == ["b1", "b3", "b4"]
+    assert open(os.path.join(g3, "data")).read() == "b4"
+    # Other params, a rewritten fixture and a forced build each rebuild;
+    # a named entry is made and returned inside the generation.
+    assert stage("b5", params=(3, 8)) not in (g1, g2, g3)
+    (sf / "t.parquet").write_bytes(b"v22")
+    path = io.staged("fmt", str(sf), ("t",), "copy", build("b6"))
+    assert os.path.basename(path) == "copy" and open(os.path.join(path, "data")).read() == "b6"
+    assert io.staged("fmt", str(sf), ("t",), "copy", build("b7")) == path
+    assert io.staged("fmt", str(sf), ("t",), "copy", build("b8"), force=True) != path
+    assert builds == ["b1", "b3", "b4", "b5", "b6", "b8"]
+
+
+def test_file_fingerprint_walks_a_directory(tmp_path):
+    """A directory's fingerprint covers every file under it, so the schema
+    cache of a partitioned table sees a new or rewritten part file."""
+    d = tmp_path / "t.parquet"
+    (d / "k=1").mkdir(parents=True)
+    (d / "k=1" / "a.parquet").write_bytes(b"x")
+    fp = io.file_fingerprint(str(d))
+    assert io.file_fingerprint(str(d)) == fp
+    (d / "k=2").mkdir()
+    (d / "k=2" / "b.parquet").write_bytes(b"y")
+    fp2 = io.file_fingerprint(str(d))
+    assert fp2 != fp
+    (d / "k=1" / "a.parquet").write_bytes(b"xx")
+    assert io.file_fingerprint(str(d)) not in (fp, fp2)
+    assert io.file_fingerprint(str(tmp_path / "gone")) == "missing"
+
+
+def test_only_io_derives_generation_keys():
+    """Only io.py calls ``ensure_generation`` or ``file_fingerprint``:
+    every other cache derived from fixture files goes through
+    ``io.staged``, so there is one rule for when a cached generation is
+    still valid."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(io.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pathlib.Path(io.__file__):
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            elif isinstance(node, ast.ImportFrom):
+                name = next(
+                    (a.name for a in node.names if a.name in ("ensure_generation", "file_fingerprint")),
+                    None,
+                )
+            else:
+                continue
+            if name in ("ensure_generation", "file_fingerprint"):
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert not offenders, offenders

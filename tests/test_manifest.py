@@ -172,33 +172,27 @@ def test_applied_chain_survives_expire(tmp_path):
     assert gio.manifest_applied_meta(root, "epoch") == {1, 2, 3}
 
 
-def test_legacy_store_without_chain_still_answers(tmp_path):
-    """Pre-r11 manifests carry no ``applied`` chain: the check falls
-    back to scanning versions ≤ CURRENT, and the first NEW commit seeds
-    the chain from that visible lineage (no applied epoch forgotten
-    across the protocol upgrade)."""
+def test_manifest_without_chain_fails_loudly(tmp_path):
+    """Every commit writes the cumulative ``applied`` chain.  A CURRENT
+    manifest without it was not written by this protocol: reading or
+    extending its chain raises instead of reporting nothing applied (a
+    retried writer would otherwise re-append an applied epoch)."""
     import json
 
     root = str(tmp_path)
     f1 = _touch(root, "r/a.parquet")
     mdir = os.path.join(root, gio.MANIFEST_DIRNAME)
     os.makedirs(mdir)
-    for i, epoch in ((1, 10), (2, 11), (3, 12)):
-        with open(os.path.join(mdir, f"v{i:06d}.json"), "w") as fh:
-            json.dump(
-                {"version": f"v{i:06d}", "relations": {"r": [f1]},
-                 "meta": {"epoch": epoch}},
-                fh,
-            )
-    gio.write_atomic(os.path.join(mdir, "CURRENT"), "v000002")
-    gio.write_atomic(os.path.join(mdir, "SERIAL"), "3")
-    # Fallback scan: versions ≤ CURRENT only — v000003 is an orphan.
-    assert gio.manifest_applied_meta(root, "epoch") == {10, 11}
-    # A new commit seeds the chain from the visible legacy lineage.
-    gio.manifest_commit(root, {"r": [f1]}, meta={"epoch": 13})
-    m = gio.manifest_read(root)
-    assert set(m["applied"]["epoch"]) == {10, 11, 13}
-    assert gio.manifest_applied_meta(root, "epoch") == {10, 11, 13}
+    with open(os.path.join(mdir, "v000001.json"), "w") as fh:
+        json.dump({"version": "v000001", "relations": {"r": [f1]}, "meta": {"epoch": 10}}, fh)
+    gio.write_atomic(os.path.join(mdir, "CURRENT"), "v000001")
+    with pytest.raises(KeyError):
+        gio.manifest_applied_meta(root, "epoch")
+    with pytest.raises(KeyError):
+        gio.manifest_applied_chain(root)
+    with pytest.raises(KeyError):
+        gio.manifest_commit(root, {"r": [f1]}, meta={"epoch": 11})
+    assert gio.manifest_current(root) == "v000001"
 
 
 def test_applied_chain_retention_bounds_manifest_growth(tmp_path, monkeypatch):
@@ -482,7 +476,7 @@ def test_applied_retention_orders_string_epochs_numerically(tmp_path, monkeypatc
 def test_version_ordering_is_numeric_past_the_pad(tmp_path, monkeypatch):
     """ADVICE r11: past serial 999999 the 6-digit pad stops protecting
     lexicographic order (v1000000 < v999999 as strings), inverting time
-    travel, the orphan cutoff, and GC's notion of 'latest'.  Pin numeric
+    travel and GC's notion of 'latest'.  Pin numeric
     ordering end-to-end by committing across the pad boundary."""
     root = str(tmp_path)
     f1 = _touch(root, "r/a.parquet")
@@ -493,11 +487,7 @@ def test_version_ordering_is_numeric_past_the_pad(tmp_path, monkeypatch):
     v2 = gio.manifest_commit(root, {"r": [f1]}, meta={"epoch": 2})
     assert (v1, v2) == ("v1000000", "v1000001")
     assert gio.manifest_versions(root) == [v1, v2]  # oldest first, numerically
-    # orphan cutoff: a crashed commit's version PAST CURRENT must not
-    # count as applied even across the pad boundary
     assert gio._version_serial("v1000000") > gio._version_serial("v999999")
-    chain = gio._applied_chain_scan(root, v1)
-    assert chain["epoch"] == {1}  # v1000001 correctly excluded as newer
 
 
 def test_applied_retention_deterministic_under_nan(monkeypatch):
