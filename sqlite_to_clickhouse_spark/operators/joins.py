@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sqlite_to_clickhouse_spark.io import table
+from sqlite_to_clickhouse_spark.io import staged, table
 from sqlite_to_clickhouse_spark.registry import register
 
 
@@ -880,7 +880,6 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
-    from sqlite_to_clickhouse_spark.io import staged
     from sqlite_to_clickhouse_spark.sources.sinks import write_bucketed
 
     def _build(gen: str) -> None:
