@@ -24,7 +24,7 @@ the reference, minus the per-row Python loop.
 from __future__ import annotations
 
 import sqlite3
-from typing import Dict, Iterator, List, Optional, Tuple
+from typing import Dict, Iterator, List, Tuple
 
 import pandas as pd
 
