@@ -75,7 +75,6 @@ def migrate_sqlite(
     num_partitions: int = 8,
     dedup: bool = True,
     clickhouse_url: Optional[str] = None,
-    compat_none_strings: bool = False,
 ) -> Dict[str, TableReport]:
     """Migrate every (or the given) SQLite table to parquet — or to
     ClickHouse over JDBC when ``clickhouse_url`` is given.
@@ -100,7 +99,6 @@ def migrate_sqlite(
             t,
             num_partitions=num_partitions,
             with_rowid=True,
-            compat_none_strings=compat_none_strings,
         )
         deduped = dedup and bool(pk)
         if deduped and not rowid_alias(db_path, t):

@@ -19,10 +19,11 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from sqlite_to_clickhouse_spark import io as gio
 from sqlite_to_clickhouse_spark.io import TABLES, table
-from sqlite_to_clickhouse_spark.migrate import migrate_sqlite
+from sqlite_to_clickhouse_spark.migrate import migrate_sqlite, replacing_dedup
 from sqlite_to_clickhouse_spark.registry import register
 from sqlite_to_clickhouse_spark.sources import sinks
 from sqlite_to_clickhouse_spark.sources.sqlite import read_sqlite
@@ -340,7 +341,8 @@ def sink_partition_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFr
     """Dynamic partition overwrite — the idempotent daily-backfill
     primitive at 100 TB: re-running one day's batch must replace exactly
     that day's partition directory and leave every sibling untouched.
-    With ``spark.sql.sources.partitionOverwriteMode=dynamic`` a
+    With the writer option ``partitionOverwriteMode=dynamic`` (set per
+    write: the session conf is shared by every ``io.run_jobs`` thread) a
     ``mode("overwrite")`` write replaces ONLY the partitions present in
     the incoming DataFrame (here the '1-URGENT' slice, restated with a
     +1000 price correction); under the default STATIC mode the same
@@ -357,12 +359,12 @@ def sink_partition_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFr
     corrected = o.filter(F.col("o_orderpriority") == "1-URGENT").withColumn(
         "o_totalprice", F.col("o_totalprice") + 1000
     )
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        corrected.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+    (
+        corrected.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("o_orderpriority")
+        .parquet(path)
+    )
     got = spark.read.schema(_PART_SCHEMA).parquet(path)
     return got.select(
         "o_orderkey",
@@ -388,7 +390,8 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC-style MERGE/upsert (the batch form of the reference's
     ReplacingMergeTree last-write-wins contract, main.py:65,178): a base
     table unioned with a ~10% update batch (deterministic md5 slice, price
-    bumped, higher version), then one row per key keeping the max version.
+    bumped, higher version), then one row per key keeping the max version
+    (``migrate.replacing_dedup``, the rule the SQLite migration applies).
     The union is shuffle-free; the only exchange is the per-key window —
     the same single-shuffle shape MERGE INTO compiles to on any engine.
     The oracle states the post-merge truth directly (updated keys carry
@@ -400,17 +403,10 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", (F.col("o_totalprice") + 1000).alias("o_totalprice"), F.lit(1).alias("v")
     )
     merged = base.unionByName(upd)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("o_orderkey").orderBy(F.desc("v"))
-    return (
-        merged.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "o_orderkey",
-            "o_totalprice",
-            F.when(F.col("v") == 1, "update").otherwise("base").alias("src"),
-        )
+    return replacing_dedup(merged, ["o_orderkey"], "v").select(
+        "o_orderkey",
+        "o_totalprice",
+        F.when(F.col("v") == 1, "update").otherwise("base").alias("src"),
     )
 
 
@@ -996,6 +992,51 @@ _TTL_KEEP_MONTHS = 12
 # maintenance_partition_compact: months newer than this stay uncompacted.
 _HOT_MONTHS = 6
 
+
+# The table-format ops below (time travel, vacuum, partition compaction,
+# shallow clone) keep one table per store root: its rows are the relation
+# ``data`` of the io.py manifest protocol, and every snapshot is published
+# by ``_append``.
+def _append(root: str, df: DataFrame, *, replace: bool = False, by: "str | None" = None) -> str:
+    """Write ``df`` into ``root/data`` and publish the new files as one
+    snapshot (``gio.manifest_append``); returns its version.  The files
+    join the current snapshot's, or with ``replace`` take their place (a
+    compaction).  ``by``: the partition column of the write."""
+    w = df.write.mode("append")
+    if by is not None:
+        w = w.partitionBy(by)
+    rel = ["data"]
+    with gio.manifest_append(root, [] if replace else rel, replace=rel if replace else ()):
+        w.parquet(os.path.join(root, "data"))
+    return gio.manifest_current(root)
+
+
+def _snapshot(
+    spark: SparkSession, root: str, version: str, schema: StructType, *, partitioned: bool = False
+) -> DataFrame:
+    """One committed version of ``root``'s table, read through its
+    manifest.  A snapshot of an empty table lists no files and reads as an
+    empty frame of ``schema``.  ``partitioned``: each row's partition
+    column comes from its file's ``key=value`` directory."""
+    df = gio.read_relation(spark, root, "data", schema, partitioned=partitioned, version=version)
+    return df if df is not None else spark.createDataFrame([], schema)
+
+
+def _order_totals(df: DataFrame, *keys: str) -> DataFrame:
+    """``n_orders`` and ``total_price`` of ``df`` per ``keys`` (one row for
+    the whole frame when there are none).  Money sums go through exact
+    integer cents in a decimal(38,0) accumulator, cast to double only at
+    the end: no overflow at ±1e17-cent extremes, and the total is
+    fold-order-free -- a raw double SUM diverged from DuckDB under the
+    extreme-numerics mutant (catastrophic absorption orders differently
+    across engines)."""
+    cents = F.round(F.col("o_totalprice") * 100).cast("decimal(38,0)")
+    return df.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.round(F.sum(cents).cast("double") / 100, 2).alias("total_price"),
+    )
+
+
 _TTL_ORACLE = f"""
     WITH mx AS (SELECT max(o_orderdate) AS m FROM orders),
     cutoff AS (
@@ -1056,13 +1097,7 @@ def maintenance_ttl_partition_drop(spark: SparkSession, sf_dir: str) -> DataFram
         if part == "__HIVE_DEFAULT_PARTITION__" or part < cutoff:
             shutil.rmtree(os.path.join(base, entry))
 
-    survivors = spark.read.parquet(base)
-    # Exact-integer-cents sum (fold-order-free; see sink_time_travel).
-    cents = F.round(F.col("o_totalprice") * 100).cast("decimal(38,0)")
-    return survivors.groupBy("ym").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.round(F.sum(cents).cast("double") / 100, 2).alias("total_price"),
-    )
+    return _order_totals(spark.read.parquet(base), "ym")
 
 
 _TIME_TRAVEL_ORACLE = """
@@ -1092,9 +1127,8 @@ def sink_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest — NEVER a directory listing — so a concurrent append can't
     tear its view and a crashed append (files written, manifest missing)
     is invisible rather than half-read. This is the transactional answer
-    that (since r10) also backs the MinHash/ANN index stores through
-    the io.py manifest library — one protocol for every persisted
-    multi-relation store.
+    that also backs the MinHash/ANN/ER index stores: one io.py manifest
+    protocol for every persisted multi-relation store.
 
     The op commits snapshot v1 (orders with o_orderkey % 3 <> 0), then
     APPENDS the remaining rows and commits v2 = v1's files + the new
@@ -1105,45 +1139,24 @@ def sink_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: manifests are O(files) metadata; snapshot reads are
     plain parquet scans over the listed files, so every Catalyst
-    optimization (pushdown, pruning) applies unchanged.  Since r10 the
-    commit/read protocol is the shared io.py library (manifest_commit /
-    read_relation) — the SAME code path the MinHash/ANN/ER index stores
-    publish through, not a parallel implementation."""
-
+    optimization (pushdown, pruning) applies unchanged.  Both commits go
+    through ``io.manifest_append`` and both reads through
+    ``io.read_relation`` — the SAME code path the index stores publish
+    and read through, not a parallel implementation."""
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    base = gio.tempdir("time_travel_")
-    d1 = os.path.join(base, "data", "add-0001")
-    d2 = os.path.join(base, "data", "add-0002")
-    o.filter(F.col("o_orderkey") % 3 != 0).write.parquet(d1)
-    f1 = gio.relation_data_files(base, "data")
-    o.filter(F.col("o_orderkey") % 3 == 0).write.parquet(d2)
-    f2 = sorted(set(gio.relation_data_files(base, "data")) - set(f1))
-
+    root = gio.tempdir("time_travel_")
     versions = {
-        "v1": gio.manifest_commit(base, {"data": f1}, meta={"label": "v1"}),
+        "v1": _append(root, o.filter(F.col("o_orderkey") % 3 != 0)),
         # append = old files + new files, never a rewrite
-        "v2": gio.manifest_commit(base, {"data": f1 + f2}, meta={"label": "v2"}),
+        "v2": _append(root, o.filter(F.col("o_orderkey") % 3 == 0)),
     }
-
-    def _read_snapshot(version: str) -> DataFrame:
-        df = gio.read_relation(spark, base, "data", version=versions[version])
-        # a snapshot of an empty table lists no files
-        return df if df is not None else spark.createDataFrame([], o.schema)
-
-    # Money sums go through exact integer cents (decimal accumulator, no
-    # overflow at ±1e17-cent extremes) so the total is fold-order-free —
-    # a raw double SUM diverged from DuckDB under the extreme-numerics
-    # mutant (catastrophic absorption orders differently across engines).
-    cents = F.round(F.col("o_totalprice") * 100).cast("decimal(38,0)")
-    out = None
-    for v in ("v1", "v2"):
-        agg = _read_snapshot(v).agg(
-            F.lit(v).alias("version"),
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum(cents).cast("double") / 100, 2).alias("total_price"),
-        ).select("version", "n_orders", "total_price")
-        out = agg if out is None else out.unionAll(agg)
-    return out
+    v1, v2 = (
+        _order_totals(_snapshot(spark, root, version, o.schema)).select(
+            F.lit(v).alias("version"), "n_orders", "total_price"
+        )
+        for v, version in versions.items()
+    )
+    return v1.unionAll(v2)
 
 
 _VACUUM_ORACLE = """
@@ -1163,9 +1176,10 @@ def maintenance_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-only layout grows forever. Full lifecycle under one gate:
 
       commit v1 → append-commit v2 → COMPACT into v3 (new files, same
-      rows — the manifest swap is the atomic publish; readers of v2 are
-      unaffected) → EXPIRE v1/v2 → VACUUM (delete every data file no
-      live manifest references) → read v3 through its manifest.
+      rows; a replace commit, so the manifest swap is the atomic
+      publish and readers of v2 are unaffected) → EXPIRE v1/v2 → VACUUM
+      (delete every data file no live manifest references) → read v3
+      through its manifest.
 
     The output row carries the post-vacuum read's aggregates (they must
     match the raw table — proving vacuum deleted only unreferenced
@@ -1176,65 +1190,31 @@ def maintenance_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: vacuum is set-difference over file LISTS (metadata,
     O(files)); compaction is the only data pass, and at 100 TB it runs
-    partition-scoped (compact cold partitions only), which the manifest
-    protocol supports unchanged — v3 would list rewritten files for the
-    compacted partitions and v2's originals for the rest."""
+    partition-scoped (maintenance_partition_compact)."""
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    base = gio.tempdir("snapshot_vacuum_")
-    ddir = os.path.join(base, "data")
-    d1 = os.path.join(ddir, "add-0001")
-    d2 = os.path.join(ddir, "add-0002")
-    d3 = os.path.join(ddir, "compact-0003")
-    o.filter(F.col("o_orderkey") % 3 != 0).write.parquet(d1)
-    f1 = gio.relation_data_files(base, "data")
-    o.filter(F.col("o_orderkey") % 3 == 0).write.parquet(d2)
-    f2 = sorted(set(gio.relation_data_files(base, "data")) - set(f1))
-
-    versions = {
-        "v1": gio.manifest_commit(base, {"data": f1}),
-        "v2": gio.manifest_commit(base, {"data": f1 + f2}),
-    }
-
-    def _read_manifest(version: str) -> DataFrame:
-        df = gio.read_relation(spark, base, "data", version=versions[version])
-        return df if df is not None else spark.createDataFrame([], o.schema)
-
+    root = gio.tempdir("snapshot_vacuum_")
+    v1 = _append(root, o.filter(F.col("o_orderkey") % 3 != 0))
+    v2 = _append(root, o.filter(F.col("o_orderkey") % 3 == 0))
     # Compaction: rewrite v2's rows into fresh files, publish v3.
-    _read_manifest("v2").coalesce(1).write.parquet(d3)
-    f3 = sorted(set(gio.relation_data_files(base, "data")) - set(f1) - set(f2))
-    versions["v3"] = gio.manifest_commit(base, {"data": f3})
+    v3 = _append(root, _snapshot(spark, root, v2, o.schema).coalesce(1), replace=True)
 
-    cents = F.round(F.col("o_totalprice") * 100).cast("decimal(38,0)")
+    def _totals():  # bounded: one aggregate row
+        return _order_totals(_snapshot(spark, root, v3, o.schema)).collect()[0]
 
-    def _agg(df: DataFrame):
-        return df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(cents).cast("double") / 100, 2).alias("t"),
-        ).collect()[0]
-
-    pre = _agg(_read_manifest("v3"))  # bounded: one aggregate row
+    pre = _totals()
 
     # Expire v1/v2 (library GC front half), then vacuum: delete every
     # data file no live manifest references (sweep over
     # manifest_live_files, the back half).
-    expired = gio.manifest_expire(base, keep=[versions["v3"]])
-    assert sorted(expired) == sorted([versions["v1"], versions["v2"]])
-    live = gio.manifest_live_files(base)
-    on_disk = set(gio.relation_data_files(base, "data"))
-    for orphan in sorted(on_disk - live):
-        os.remove(os.path.join(base, orphan))
+    expired = gio.manifest_expire(root, keep=[v3])
+    assert sorted(expired) == sorted([v1, v2])
+    live = gio.manifest_live_files(root)
+    for orphan in sorted(set(gio.relation_data_files(root, "data")) - live):
+        os.remove(os.path.join(root, orphan))
 
-    post = _agg(_read_manifest("v3"))
-    orphans_remaining = len(set(gio.relation_data_files(base, "data")) - live)
-    row = [
-        (
-            post["n"],
-            post["t"],
-            bool(pre["n"] == post["n"])
-            and ((pre["t"] is None and post["t"] is None) or pre["t"] == post["t"]),
-            orphans_remaining,
-        )
-    ]
+    post = _totals()
+    orphans_remaining = len(set(gio.relation_data_files(root, "data")) - live)
+    row = [(post["n_orders"], post["total_price"], pre == post, orphans_remaining)]
     return spark.createDataFrame(
         row, "n_orders long, total_price double, vacuum_safe boolean, orphans_remaining long"
     )
@@ -1252,106 +1232,50 @@ _PART_COMPACT_ORACLE = """
 
 @register("maintenance_partition_compact", oracle=_PART_COMPACT_ORACLE, tags=("etl", "maintenance"))
 def maintenance_partition_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-SCOPED compaction under a manifest that carries partition
-    values — Iceberg's ``rewrite_data_files(where=...)`` shape, and the
-    production answer sink_time_travel's vacuum op only documents: at
-    100 TB you never compact the whole table, you rewrite the COLD
-    partitions and leave the hot ones' files untouched, publishing one
-    manifest that mixes rewritten and original files.
+    """Partition-SCOPED compaction — Iceberg's
+    ``rewrite_data_files(where=...)`` shape, and the production answer
+    maintenance_snapshot_vacuum only points to: at 100 TB you never
+    re-cluster the whole table, only its COLD partitions, and the new
+    snapshot mixes them with the hot ones.
 
-    Protocol here (shared io.py manifest library since r10): the
-    manifest CARRIES the partition value Iceberg-style — each month is
-    a RELATION of the snapshot (``ym=<val>`` → file list), so a reader
-    never re-infers partitions from directory names → months older than
-    the newest _HOT_MONTHS compact to one file each (a
-    repartition-by-month rewrite of only the cold subset) → manifest v2
-    = compacted cold relations + ORIGINAL hot relations. The read-back
-    resolves v2, scans the raw files (the partition column is not in
-    the data), and re-attaches each row's month by joining
-    input_file_name() against the manifest's relation→files map
-    (broadcast, O(files)). Matching the raw-table oracle proves the
-    mixed manifest lost and duplicated nothing across the rewrite.
-    NULL-dated rows ride the default partition and compact like any
-    cold month."""
-    import glob as _glob
-
+    The table is one relation partitioned by month (``data/ym=<month>/``,
+    the layout of the index stores' ``pb=`` and ``bucket=`` relations),
+    read with ``read_relation(..., partitioned=True)``: each row's month
+    comes from its committed file's path, never from a directory
+    listing. v1 is the loaded table, one file per month. The compaction
+    re-clusters the months older than the newest _HOT_MONTHS (one
+    shuffle over the cold subset only) and carries the hot months' rows
+    through unshuffled, and ONE replace commit publishes both as v2, so
+    no reader ever sees a table holding only the cold months. The hot
+    rows are copied, not kept as v1's files: ``io.manifest_append``
+    replaces whole relations, and a commit that keeps some of a
+    relation's files while replacing others is outside that protocol.
+    Matching the raw-table oracle proves the mixed snapshot lost and
+    duplicated nothing across the rewrite. NULL-dated rows ride the
+    default partition and compact like any cold month."""
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice",
         F.date_format("o_orderdate", "yyyy-MM").alias("ym"),
     )
-    base = gio.tempdir("part_compact_")
-    orig = os.path.join(base, "orig")
-    comp = os.path.join(base, "comp")
+    root = gio.tempdir("part_compact_")
     # repartition on the partition key: the orders scan is one input
     # split, so the map-side partitionBy write had a single task creating
     # all ~80 month files serially; clustering by ym spreads the file
     # creation across tasks with the identical one-file-per-month layout.
-    o.repartition("ym").write.partitionBy("ym").parquet(orig)
-
-    def _relations(root: str) -> dict:
-        """{"ym=<part>": [root-relative files]} for one written layout."""
-        out: dict = {}
-        for d in sorted(_glob.glob(os.path.join(root, "ym=*"))):
-            rel = os.path.basename(d)
-            files = sorted(
-                os.path.relpath(f, base)
-                for f in _glob.glob(os.path.join(d, "part-*.parquet"))
-            )
-            if files:
-                out[rel] = files
-        return out
-
-    def _ym(rel: str) -> "str | None":
-        part = rel[3:]
-        return None if part == "__HIVE_DEFAULT_PARTITION__" else part
-
-    v1 = _relations(orig)
-    months = sorted(m for m in (_ym(r) for r in v1) if m is not None)
-    hot = set(months[-_HOT_MONTHS:])
-    cold_rels = {r: fs for r, fs in v1.items() if _ym(r) not in hot}
-    if cold_rels:
-        # Rewrite ONLY the cold subset, one file per month (repartition on
-        # the partition key -> each month lands in a single task's file).
-        cold_files = [os.path.join(base, f) for fs in cold_rels.values() for f in fs]
-        (
-            spark.read.option("basePath", orig)
-            .parquet(*cold_files)
-            .repartition("ym")
-            .write.partitionBy("ym")
-            .parquet(comp)
-        )
-        v2 = dict(_relations(comp))
-        v2.update({r: fs for r, fs in v1.items() if _ym(r) in hot})
-    else:
-        v2 = v1
-
-    if not v2:  # empty table: nothing written, nothing to read
-        return spark.createDataFrame(
-            [], "ym string, n_orders long, total_price double"
-        )
-    version = gio.manifest_commit(base, v2)
-    committed = (gio.manifest_read(base, version) or {}).get("relations", {})
-    path_map = spark.createDataFrame(
-        [
-            (os.path.join(base, f), _ym(rel))
-            for rel, fs in committed.items()
-            for f in fs
-        ],
-        "path string, ym string",
+    v1 = _append(root, o.repartition("ym"), by="ym")
+    # The months are the committed files' ``data/ym=<month>`` directories.
+    files = gio.manifest_read(root, v1)["relations"]["data"]
+    months = {f.split(os.sep)[1][len("ym="):] for f in files}
+    months.discard("__HIVE_DEFAULT_PARTITION__")
+    hot = F.coalesce(F.col("ym").isin(sorted(months)[-_HOT_MONTHS:]), F.lit(False))
+    snap = _snapshot(spark, root, v1, o.schema, partitioned=True)
+    v2 = _append(
+        root,
+        snap.filter(~hot).repartition("ym").unionByName(snap.filter(hot)),
+        replace=True,
+        by="ym",
     )
-    files = [os.path.join(base, f) for fs in committed.values() for f in fs]
-    cents = F.round(F.col("o_totalprice") * 100).cast("decimal(38,0)")
-    scanned = spark.read.parquet(*files).withColumn(
-        "path", F.regexp_replace(F.input_file_name(), "^file:/+", "/")
-    )
-    return (
-        scanned.join(F.broadcast(path_map), "path")
-        .groupBy("ym")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum(cents).cast("double") / 100, 2).alias("total_price"),
-        )
-    )
+    return _order_totals(_snapshot(spark, root, v2, o.schema, partitioned=True), "ym")
 
 
 _CLONE_ORACLE = """
@@ -1388,55 +1312,27 @@ def sink_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     still aggregate to exactly its own slice (writer isolation across
     tables sharing files), the clone to source + its append.
 
-    Library note (r10): each table is its own io.py manifest STORE; the
-    shared data files are committed by ABSOLUTE path (the object-store
+    Each table is its own io.py manifest store.  The clone's first
+    snapshot names the source's files by ABSOLUTE path (the object-store
     URI shape — manifest paths resolve relative to the store root only
     when relative), which is exactly how a production clone references
-    another table's files without copying them."""
-    import glob as _glob
-
+    another table's files without copying them; its own append lands
+    under its own root, root-relative."""
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     base = gio.tempdir("shallow_clone_")
-    d_src = os.path.join(base, "data", "src-0001")
-    d_cln = os.path.join(base, "data", "cln-0001")
-    t_src = os.path.join(base, "tbl_source")
-    t_cln = os.path.join(base, "tbl_clone")
-    o.filter(F.col("o_orderkey") % 3 != 0).write.parquet(d_src)
-    o.filter(F.col("o_orderkey") % 3 == 0).write.parquet(d_cln)
-
-    src_files = sorted(_glob.glob(os.path.join(d_src, "part-*.parquet")))
-    versions = {
-        ("source", "v1"): (t_src, gio.manifest_commit(t_src, {"data": src_files})),
-        # the clone: same files, new table (zero bytes copied)
-        ("clone", "v1"): (t_cln, gio.manifest_commit(t_cln, {"data": src_files})),
-    }
-    versions[("clone", "v2")] = (
-        t_cln,
-        gio.manifest_commit(
-            t_cln,
-            {
-                "data": src_files
-                + sorted(_glob.glob(os.path.join(d_cln, "part-*.parquet")))
-            },
-        ),
-    )
-
-    def _read(tbl: str, version: str) -> DataFrame:
-        root, v = versions[(tbl, version)]
-        df = gio.read_relation(spark, root, "data", version=v)
-        return df if df is not None else spark.createDataFrame([], o.schema)
-
-    cents = F.round(F.col("o_totalprice") * 100).cast("decimal(38,0)")
-
-    def _agg(tbl: str, version: str, label: str) -> DataFrame:
-        return _read(tbl, version).agg(
-            F.lit(label).alias("table_name"),
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum(cents).cast("double") / 100, 2).alias("total_price"),
-        ).select("table_name", "n_orders", "total_price")
-
+    src, cln = os.path.join(base, "source"), os.path.join(base, "clone")
+    src_v1 = _append(src, o.filter(F.col("o_orderkey") % 3 != 0))
+    # the clone: the source's files, a new table (zero bytes copied)
+    gio.manifest_commit(cln, {"data": gio.manifest_relation_files(src, "data", src_v1)})
+    cln_v2 = _append(cln, o.filter(F.col("o_orderkey") % 3 == 0))
     # Source read AFTER the clone diverged; clone at its evolved v2.
-    return _agg("source", "v1", "source").unionAll(_agg("clone", "v2", "clone"))
+    source, clone = (
+        _order_totals(_snapshot(spark, root, v, o.schema)).select(
+            F.lit(label).alias("table_name"), "n_orders", "total_price"
+        )
+        for label, root, v in (("source", src, src_v1), ("clone", cln, cln_v2))
+    )
+    return source.unionAll(clone)
 
 
 _CSV_PERMISSIVE_ORACLE = """

@@ -51,18 +51,25 @@ def pytest_sessionfinish(session, exitstatus):
     if not any(i.get_closest_marker(m) for i in session.items for m in _HEAVY_MARKERS):
         return
     stats = session.config.pluginmanager.get_plugin("terminalreporter").stats
-    try:
-        head = subprocess.run(
-            ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
-            cwd=os.path.dirname(_HEAVY_RUNS), check=True,
-        ).stdout.strip()
-    except (OSError, subprocess.CalledProcessError):
-        head = None
+
+    def git(*args: str) -> "str | None":
+        try:
+            return subprocess.run(
+                ["git", *args], capture_output=True, text=True,
+                cwd=os.path.dirname(_HEAVY_RUNS), check=True,
+            ).stdout.strip()
+        except (OSError, subprocess.CalledProcessError):
+            return None
+
+    # "dirty": tracked files differ from HEAD, so the run tested code that
+    # "head" does not name.
+    status = git("status", "--porcelain", "--untracked-files=no")
     record = {
         "markexpr": session.config.option.markexpr,
         **{k: len(stats.get(k, [])) for k in ("passed", "failed", "skipped", "error")},
         "exitstatus": int(exitstatus),
-        "head": head,
+        "head": git("rev-parse", "HEAD"),
+        "dirty": None if status is None else bool(status),
         "finished": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
     os.makedirs(_HEAVY_RUNS, exist_ok=True)

@@ -443,3 +443,43 @@ def test_ttl_partition_drop_expires_exactly(spark, tmp_path):
         expected.add(f"{y:04d}-{m:02d}")
     assert set(out) == expected
     assert all(v == 2 for v in out.values())
+
+
+def test_partition_compact_commits_only_whole_tables(spark, sf_dir, monkeypatch):
+    """Every snapshot maintenance_partition_compact commits reads back as
+    the whole orders table (row count and exact cents total).  Publishing
+    the compacted cold months and the hot months in two commits would let
+    a reader see the table with only the cold months.  The snapshot is
+    read from all the files its manifest lists, whatever the relations."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from sqlite_to_clickhouse_spark import io as gio
+    from sqlite_to_clickhouse_spark.io import table
+    from sqlite_to_clickhouse_spark.operators.etl import maintenance_partition_compact
+
+    roots = []
+    make = gio.tempdir
+
+    def tempdir(prefix: str) -> str:
+        roots.append(make(prefix))
+        return roots[-1]
+
+    monkeypatch.setattr(gio, "tempdir", tempdir)
+
+    def totals(df):
+        cents = F.round(F.col("o_totalprice") * 100).cast("decimal(38,0)")
+        return tuple(df.agg(F.count(F.lit(1)), F.sum(cents)).collect()[0])
+
+    want = totals(table(spark, sf_dir, "orders"))
+    assert want[0] > 0
+    with gio.scope():
+        maintenance_partition_compact(spark, sf_dir).collect()
+        [root] = roots
+        versions = gio.manifest_versions(root)
+        assert versions
+        for v in versions:
+            relations = gio.manifest_read(root, v)["relations"]
+            files = [os.path.join(root, f) for fs in relations.values() for f in fs]
+            assert totals(spark.read.parquet(*files)) == want, v

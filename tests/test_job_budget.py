@@ -262,6 +262,16 @@ _REGISTRY_BUDGETS = {
     # One shuffle-free write job per table (customer, nation), then the
     # read-back: 5 jobs.
     "migrate_sqlite_roundtrip": 7,
+    # The table-format ops publish each snapshot with one manifest_append
+    # and read it back with its schema given, so no read infers one: 5
+    # jobs for time travel and the clone, 9 for the vacuum (two in-band
+    # collects) and the partition compaction (two clustered writes); the
+    # TTL drop takes 8.
+    "sink_time_travel": 7,
+    "sink_shallow_clone": 7,
+    "maintenance_snapshot_vacuum": 11,
+    "maintenance_partition_compact": 11,
+    "maintenance_ttl_partition_drop": 10,
 }
 
 
@@ -308,6 +318,12 @@ _LEAK_OPS = [
     "sink_partitioned_parquet",
     "join_dynamic_partition_pruning",
     "stream_tumbling",
+    # Table-format ops, each on a manifest store in its own temp dir.
+    "sink_time_travel",
+    "sink_shallow_clone",
+    "maintenance_snapshot_vacuum",
+    "maintenance_partition_compact",
+    "maintenance_ttl_partition_drop",
 ]
 
 
